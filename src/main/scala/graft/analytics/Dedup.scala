@@ -275,8 +275,8 @@ object Dedup {
         (col("jaccard") >= JaccardThreshold).as("sym_dup"))
 
   /** d13 with the df-cap knob surfaced — cap = [[ShingleDfCap]] IS
-    * d13_containment (DedupSpec pins the equality). The DfCapProbe
-    * harness prices this knob at sf10 the way BandingProbe priced d10's r.
+    * d13_containment (DedupSpec pins the equality). BENCH_SF1.md records
+    * this knob's price at sf10, next to d10's banding r.
     */
   private[graft] def d13With(s: org.apache.spark.sql.SparkSession,
       dir: String, cap: Long): DataFrame =

@@ -264,7 +264,7 @@ object RedisTransport {
     // destination readback must hash-match one plain copy (AUTH on).
     // The dump uses the RECOMMENDED ship layout (`repartitionByKey` —
     // each destination key in exactly one part file, so sibling ship
-    // tasks never contend on shared WATCH keys; ShipLayoutProbe receipt:
+    // tasks never contend on shared WATCH keys; BENCH_LOCAL.md receipt:
     // disjoint 3.2 s vs interleaved 4.9 s per 1M frames). The
     // interleaved worst case stays pinned by SsEosShipSpec's shared-key
     // race law and the adaptive commit gate.

@@ -179,9 +179,10 @@ object Similarity {
     graft.functions.FloatVecArgmin.pkOf(emb, cs)
 
   /** Decode the winning id / 6-dp key from a [[rowArgminPk]] packed long
-    * (same decode as [[packedArgminKeyed]]). */
-  private def rowArgminId(pk: Column): Column =
-    pk.bitwiseAND(lit((1L << ArgminIdBits) - 1))
+    * (same decode as [[packedArgminKeyed]]); the id is NULL when no
+    * centroid qualified (empty or all-null centroid array). */
+  private[graft] def rowArgminId(pk: Column): Column =
+    graft.functions.FloatVecArgmin.idOf(pk)
   private def rowArgminKey(pk: Column): Column =
     shiftright(pk, ArgminIdBits).cast("double") / lit(ArgminKeyScale)
 
@@ -619,16 +620,6 @@ object Similarity {
     ivfWriteFrame(part, cents)
       .write.mode(mode).partitionBy("centroid_id")
       .parquet(path)
-
-  /** Dev-only (R20Probe/plan evidence): the s7 layout write frame for the
-    * standard 16-centroid build.
-    */
-  private[graft] def s7LayoutFrame(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables(s, dir).embeddings
-    val cents = broadcast(e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("cemb")))
-    ivfWriteFrame(e, cents)
-  }
 
   /** Probe the persisted index with DYNAMIC PARTITION PRUNING: the probe
     * list (2 centroids per query) broadcasts, and its values become a

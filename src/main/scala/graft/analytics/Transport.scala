@@ -373,37 +373,6 @@ object Transport {
     s.read.parquet(results)
   }
 
-  /** Dev-only probe twin of [[t21QueryServeStream]] (R20Probe): the SAME
-    * log write, source options and micro-batch cadence, but the
-    * foreachBatch body only materializes the batch — no serve plan, no
-    * result write. The delta between this and the full entry is the serve
-    * cost; this number is the Structured Streaming machinery floor the
-    * t-family per-trigger claims cite.
-    */
-  private[graft] def t21MachineryFloor(s: SparkSession, dir: String): Unit = {
-    val out = scratch(dir, "t21floorlog")
-    val n = Similarity.standardQueryCount.toLong
-    s.range(n).select(
-        lit("queries").as("stream_key"), lit(0L).as("shard_id"),
-        col("id").as("sequence"),
-        expr("timestamp'2026-01-01 00:00:00'").as("timestamp"),
-        to_json(struct(col("id").as("qid"))).cast("binary").as("payload"))
-      .write.format("ss").mode("overwrite").save(out)
-    val cap = math.max(1L, n / 4)
-    val src = s.readStream.format("ss")
-      .option("maxMessagesPerTrigger", cap.toString)
-      .load(out)
-      .select(from_json(col("payload").cast("string"),
-        org.apache.spark.sql.types.StructType.fromDDL("qid LONG")).as("j"))
-      .select(col("j.qid"))
-    val q = src.writeStream.outputMode("append")
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: java.lang.Long) =>
-        if (!b.isEmpty) { b.count(); () }
-      }.start()
-    try q.processAllAvailable() finally q.stop()
-  }
-
   /** t22 — the full streaming INGEST loop over the persisted dedup index:
     * t20 admits arriving documents against the stored index but never
     * grows it; production ingest does both — each micro-batch's verdicts

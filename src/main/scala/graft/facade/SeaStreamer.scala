@@ -770,7 +770,7 @@ object SeaStreamer {
                 "resume is checkpoint-based; group offsets don't anchor " +
                 "starts there) — use the wire driver or a checkpoint")
           val offs = endOffsetJson
-            .map(graft.kafka.spark.KafkaOffsetV2.fromJson(_).offs)
+            .map(graft.core.DenseOffset.fromJson(_).offs)
             .getOrElse(Map.empty)
           if (offs.nonEmpty) {
             val (host, port) = SeaStreamer.hostPort(nodeAddr, 9092)
@@ -904,20 +904,14 @@ object SeaStreamer {
   }
 
   /** Exactly-once relay between two connected backends — ONE surface over
-    * the four-engine matrix, dispatched on the (source, destination)
-    * scheme pair the way the reference's socket crate dispatches
-    * per-backend (sea-streamer-socket/src/streamer.rs:21-45):
-    *
-    *   - kafka→kafka: [[graft.kafka.KafkaEosRelay]] — resume point = the
-    *     consumer group's offsets, staged inside the destination
-    *     transaction (producer.rs:236-301);
-    *   - kafka→redis: [[graft.redis.RedisEosRelay]] — resume point = a
-    *     destination ledger key, atomic with the entries in one
-    *     WATCH-fenced MULTI/EXEC;
-    *   - redis→kafka: [[graft.kafka.KafkaEosIngest]] — the packed entry-id
-    *     cursor (message.rs:27-64) rides the group-offset staging;
-    *   - redis→redis: [[graft.redis.RedisEosPump]] — destination-ledger
-    *     cursor, the DR-mirror shape.
+    * the relay matrix: four sources (kafka, redis, iggy, a `.ss` file
+    * directory) × two destinations (a kafka transaction, a redis
+    * WATCH/MULTI ledger). The scheme pair builds a
+    * [[graft.eos.RelaySource]] and a [[graft.eos.RelayDestination]], and
+    * [[graft.eos.RelayDriver]] drains the one into the other; `.ss`
+    * directories plan through the same driver and ship through
+    * [[graft.ss.SsEosShip]]'s own body (one byte cursor per part file
+    * fans out to many destination keys).
     *
     * `anchor` names the durable resume point: on kafka destinations it is
     * the consumer group AND the transactional-id prefix (`anchor` /
@@ -931,16 +925,13 @@ object SeaStreamer {
     * 34-36); it is ignored for kafka sources, whose partitions come from
     * Metadata. Drains the source completely; returns records relayed.
     *
-    * Every seekable backend is a valid SOURCE: a `.ss` FILE directory
-    * ships via [[graft.ss.SsEosShip]] (log shipping: one frame-exact
-    * byte cursor per part file; pass `streams = Seq("*")` to ship
-    * everything, or name a subscription subset — skipped frames consume
-    * positions without shipping, like aborted slots on a kafka source),
-    * and an iggy endpoint relays via [[graft.iggy.IggyEosRelay]] (dense
-    * per-partition offsets, the default `graft` namespace stream). As a
-    * DESTINATION file/stdio/iggy stay refused — no transactional or
-    * compare-and-set primitive to anchor a resume point on — and
-    * multi-node (cluster) endpoints need the hash-slot-aware writer
+    * A file directory ships with `streams = Seq("*")` for everything, or
+    * a subscription subset — skipped frames consume positions without
+    * shipping, like aborted slots on a kafka source. An iggy endpoint
+    * relays the default `graft` namespace stream. As a DESTINATION
+    * file/stdio/iggy stay refused — no transactional or compare-and-set
+    * primitive to anchor a resume point on — and multi-node (cluster)
+    * endpoints need the hash-slot-aware writer
     * ([[graft.redis.RedisSource.writeExactlyOnceCluster]]): typed errors
     * rather than a silently downgraded exactly-once contract.
     */
@@ -956,38 +947,8 @@ object SeaStreamer {
         * `floorMod(shard_id, filePartitions)` — KafkaEosSink's rule;
         * broker sources carry their partition 1:1 instead). */
       filePartitions: Int = 4): Long = {
-    if (streams.isEmpty) throw SeaStreamErr.StreamKeyEmpty
-    streams.foreach { s =>
-      if (s != "*" && !Envelope.isValidStreamKey(s))
-        throw SeaStreamErr.InvalidStreamKey(s)
-    }
-    require(redisShards > 0, "redisShards must be positive")
-    val (ss, ds) = (source.relayScheme, destination.relayScheme)
-    if (ss != "kafka" && ss != "redis" && ss != "file" && ss != "iggy")
-      throw SeaStreamErr.Unsupported(
-        s"relayExactlyOnce source on the '$ss' backend — no anchored" +
-          " cursor space to resume from")
-    if (ds != "kafka" && ds != "redis")
-      throw SeaStreamErr.Unsupported(
-        s"relayExactlyOnce destination on the '$ds' backend — no " +
-          "transactional or compare-and-set primitive to anchor the " +
-          "resume point on")
-    Seq("source" -> source, "destination" -> destination).foreach {
-      case (end, c) =>
-        if (c.relayNodes.size != 1)
-          throw SeaStreamErr.Unsupported(
-            s"relayExactlyOnce $end must be a single node, got " +
-              s"${c.relayNodes.mkString(",")} (redis clusters relay via " +
-              "RedisSource.writeExactlyOnceCluster's hash-slot form)")
-    }
-    if (streams.contains("*") && ss != "file")
-      throw SeaStreamErr.Unsupported(
-        s"the '*' wildcard relays only from file directories (their part" +
-          s" files carry every stream); a '$ss' source needs explicit names")
-    if (streams.contains("*") && streams.size > 1)
-      throw SeaStreamErr.Unsupported(
-        "'*' mixed with named streams is ambiguous — it would read as a " +
-          "LITERAL stream key in the filter; pass '*' alone or only names")
+    val (ss, ds) = checkRelayEnds("relayExactlyOnce", source, destination,
+      streams, redisShards)
     // BEST-EFFORT endpoint identity: normalize each node by resolving its
     // host (so `localhost:6379` and `127.0.0.1:6379` compare EQUAL — a
     // literal string compare would let an aliased self-relay through, and
@@ -997,20 +958,14 @@ object SeaStreamer {
     // compare unequal — an exact guard needs a broker-identity probe
     // (kafka cluster id / redis run_id), which costs a connection here;
     // the guard is documented best-effort, not a safety invariant.
-    def normalizedNodes(c: Connection): Set[(String, Int)] = {
-      val defPort = c.relayScheme match {
-        case "kafka" => 9092
-        case "iggy" => 8090
-        case _ => 6379
-      }
+    def normalizedNodes(c: Connection): Set[(String, Int)] =
       c.relayNodes.map { n =>
-        val (h, p) = hostPort(n, defPort)
+        val (h, p) = hostPort(n, defaultPort(c.relayScheme))
         val addr =
           try java.net.InetAddress.getByName(h).getHostAddress
           catch { case _: java.net.UnknownHostException => h.toLowerCase }
         (addr, p)
       }.toSet
-    }
     val sameEndpoint = ss == ds && ss != "file" &&
       normalizedNodes(source) == normalizedNodes(destination)
     if (sameEndpoint) streams.foreach { s =>
@@ -1019,6 +974,11 @@ object SeaStreamer {
           s"relaying '$s' into itself on the same broker would chase its" +
             " own appends — rename must map it to a different name")
     }
+    if (ss == "kafka" && ds == "kafka" && !sameEndpoint)
+      throw SeaStreamErr.Unsupported(
+        "cross-cluster kafka→kafka relay is not supported: the group " +
+          "offsets staged in the transaction live on the SOURCE " +
+          "cluster, so both ends must be one cluster")
     // a redis DESTINATION keys entries by rename(stream):shard, one relay
     // task per source coordinate — a NON-injective rename would hand one
     // destination key to several concurrent writers (the multi-writer
@@ -1033,104 +993,116 @@ object SeaStreamer {
           "relayExactlyOnce onto redis needs an INJECTIVE rename (one " +
             "destination stream per source): " + dup.mkString("; "))
     }
-    val spark = source.relaySpark
-    val shardList = streams.flatMap(st =>
-      (0L until redisShards.toLong).map(sh => (st, sh)))
-    def ssPaths: Seq[String] = {
-      val dir = new java.io.File(source.relayNodes.head)
-      val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
-      if (parts.isEmpty) throw SeaStreamErr.Connect(
-        s"no .ss part files under ${dir.getPath}")
-      parts.map(_.getAbsolutePath).toSeq
+    val dst = relayDestination(destination, anchor, rename)
+    relaySource(source, streams, redisShards, cap, fileCapBytes) match {
+      case files: graft.eos.FileRelayTips =>
+        if (files.paths.isEmpty) throw SeaStreamErr.Connect(
+          s"no .ss part files under ${source.relayNodes.head}")
+        graft.ss.SsEosShip.shipAll(source.relaySpark, files, dst,
+          onlyStreams = if (streams == Seq("*")) None else Some(streams.toSet),
+          partitions = filePartitions)
+      case src: graft.eos.RelaySource =>
+        graft.eos.RelayDriver.all(source.relaySpark, src, dst)
     }
-    def ssFilter: Option[Set[String]] =
-      if (streams == Seq("*")) None else Some(streams.toSet)
-    (ss, ds) match {
-      case ("kafka", "kafka") =>
-        if (!sameEndpoint)
+  }
+
+  private def defaultPort(scheme: String): Int = scheme match {
+    case "kafka" => 9092
+    case "iggy" => 8090
+    case _ => 6379
+  }
+
+  /** The checks [[relayExactlyOnce]] and [[relayLag]] share: stream-key
+    * grammar, the matrix's schemes, single-node endpoints and the
+    * file-only `*` wildcard. Returns the (source, destination) schemes. */
+  private def checkRelayEnds(what: String, source: Connection,
+      destination: Connection, streams: Seq[String],
+      redisShards: Int): (String, String) = {
+    if (streams.isEmpty) throw SeaStreamErr.StreamKeyEmpty
+    streams.foreach { s =>
+      if (s != "*" && !Envelope.isValidStreamKey(s))
+        throw SeaStreamErr.InvalidStreamKey(s)
+    }
+    require(redisShards > 0, "redisShards must be positive")
+    val (ss, ds) = (source.relayScheme, destination.relayScheme)
+    if (ss != "kafka" && ss != "redis" && ss != "file" && ss != "iggy")
+      throw SeaStreamErr.Unsupported(
+        s"$what source on the '$ss' backend — no anchored cursor space " +
+          "to resume from")
+    if (ds != "kafka" && ds != "redis")
+      throw SeaStreamErr.Unsupported(
+        s"$what destination on the '$ds' backend — no transactional or " +
+          "compare-and-set primitive to anchor the resume point on")
+    Seq("source" -> source, "destination" -> destination).foreach {
+      case (end, c) =>
+        if (c.relayNodes.size != 1)
           throw SeaStreamErr.Unsupported(
-            "cross-cluster kafka→kafka relay is not supported: the group " +
-              "offsets staged in the transaction live on the SOURCE " +
-              "cluster, so both ends must be one cluster")
-        val (host, port) = hostPort(source.relayNodes.head, 9092)
-        val sec = source.relayKafkaSecurity
-        graft.kafka.KafkaEosRelay.relayAll(spark, host, port, streams,
-          rename, group = anchor, txnIdPrefix = s"$anchor-txn", cap = cap,
-          sasl = sec.sasl, saslMechanism = sec.saslMechanism, tls = sec.tls)
-      case ("kafka", "redis") =>
-        val (kh, kp) = hostPort(source.relayNodes.head, 9092)
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        val sec = source.relayKafkaSecurity
-        graft.redis.RedisEosRelay.relayAll(spark, kh, kp, streams, rename,
-          rh, rp, ledgerPrefix = anchor, cap = cap,
-          sasl = sec.sasl, saslMechanism = sec.saslMechanism,
-          kafkaTls = sec.tls, redisTls = destination.relayRedisTls,
-          redisAuth = destination.relayRedisAuth)
-      case ("redis", "kafka") =>
-        val (rh, rp) = hostPort(source.relayNodes.head, 6379)
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        graft.kafka.KafkaEosIngest.relayAll(spark, rh, rp, shardList,
-          rename, kh, kp, group = anchor, txnIdPrefix = s"$anchor-txn",
-          cap = cap, sasl = sec.sasl, saslMechanism = sec.saslMechanism,
-          kafkaTls = sec.tls, redisTls = source.relayRedisTls,
-          redisAuth = source.relayRedisAuth)
-      case ("redis", "redis") =>
-        val (ah, ap) = hostPort(source.relayNodes.head, 6379)
-        val (bh, bp) = hostPort(destination.relayNodes.head, 6379)
-        graft.redis.RedisEosPump.relayAll(spark, ah, ap, shardList,
-          rename, bh, bp, ledgerPrefix = anchor, cap = cap,
-          srcTls = source.relayRedisTls, srcAuth = source.relayRedisAuth,
-          dstTls = destination.relayRedisTls,
-          dstAuth = destination.relayRedisAuth)
-      case ("file", "kafka") =>
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        graft.ss.SsEosShip.shipKafkaAll(spark, ssPaths, rename, kh, kp,
-          group = anchor, txnIdPrefix = s"$anchor-txn",
-          capBytes = fileCapBytes, partitions = filePartitions,
-          onlyStreams = ssFilter, sasl = sec.sasl,
-          saslMechanism = sec.saslMechanism, tls = sec.tls)
-      case ("file", "redis") =>
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        graft.ss.SsEosShip.shipRedisAll(spark, ssPaths, rename, rh, rp,
-          ledgerPrefix = anchor, capBytes = fileCapBytes,
-          onlyStreams = ssFilter,
-          tls = destination.relayRedisTls,
-          auth = destination.relayRedisAuth)
-      case ("iggy", "kafka") =>
-        val (ih, ip) = hostPort(source.relayNodes.head, 8090)
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        graft.iggy.IggyEosRelay.relayKafkaAll(spark, ih, ip,
-          graft.iggy.IggySource.DefaultStream, streams, rename, kh, kp,
-          group = anchor, txnIdPrefix = s"$anchor-txn", cap = cap,
-          iggyAuth = source.relayIggyAuth, sasl = sec.sasl,
-          saslMechanism = sec.saslMechanism, tls = sec.tls)
-      case ("iggy", "redis") =>
-        val (ih, ip) = hostPort(source.relayNodes.head, 8090)
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        graft.iggy.IggyEosRelay.relayRedisAll(spark, ih, ip,
-          graft.iggy.IggySource.DefaultStream, streams, rename, rh, rp,
-          ledgerPrefix = anchor, cap = cap,
-          iggyAuth = source.relayIggyAuth,
-          tls = destination.relayRedisTls,
-          auth = destination.relayRedisAuth)
-      case other =>
-        throw SeaStreamErr.Unsupported(s"relayExactlyOnce $other")
+            s"$what $end must be a single node, got " +
+              s"${c.relayNodes.mkString(",")} (redis clusters relay via " +
+              "RedisSource.writeExactlyOnceCluster's hash-slot form)")
     }
+    if (streams.contains("*") && ss != "file")
+      throw SeaStreamErr.Unsupported(
+        s"the '*' wildcard relays only from file directories (their part" +
+          s" files carry every stream); a '$ss' source needs explicit names")
+    if (streams.contains("*") && streams.size > 1)
+      throw SeaStreamErr.Unsupported(
+        "'*' mixed with named streams is ambiguous — it would read as a " +
+          "LITERAL stream key in the filter; pass '*' alone or only names")
+    (ss, ds)
+  }
+
+  /** The source end of a checked relay pair; the caps bound each epoch
+    * (the defaults leave a file's tip unbounded — the lag view). */
+  private def relaySource(c: Connection, streams: Seq[String],
+      redisShards: Int, cap: Long = 100000L,
+      fileCapBytes: Long = Long.MaxValue): graft.eos.RelayTips = {
+    val (host, port) = hostPort(c.relayNodes.head, defaultPort(c.relayScheme))
+    c.relayScheme match {
+      case "kafka" =>
+        val sec = c.relayKafkaSecurity
+        graft.eos.KafkaRelaySource(host, port, streams, cap,
+          sasl = sec.sasl, saslMechanism = sec.saslMechanism, tls = sec.tls)
+      case "redis" =>
+        graft.eos.RedisRelaySource(host, port, streams.flatMap(st =>
+          (0L until redisShards.toLong).map(sh => (st, sh))), cap,
+          tls = c.relayRedisTls, auth = c.relayRedisAuth)
+      case "iggy" =>
+        graft.eos.IggyRelaySource(host, port,
+          graft.iggy.IggySource.DefaultStream, streams, cap,
+          auth = c.relayIggyAuth)
+      case _ =>
+        val parts = Option(new java.io.File(c.relayNodes.head).listFiles())
+          .getOrElse(Array.empty).filter(_.getName.endsWith(".ss"))
+          .sortBy(_.getName)
+        graft.eos.FileRelayTips(parts.map(_.getAbsolutePath).toSeq,
+          fileCapBytes)
+    }
+  }
+
+  /** The destination end of a checked relay pair, anchored at `anchor`. */
+  private def relayDestination(c: Connection, anchor: String,
+      rename: String => String): graft.eos.RelayDestination = {
+    val (host, port) = hostPort(c.relayNodes.head, defaultPort(c.relayScheme))
+    if (c.relayScheme == "kafka") {
+      val sec = c.relayKafkaSecurity
+      graft.eos.KafkaTxnDestination(host, port, group = anchor,
+        txnIdPrefix = s"$anchor-txn", topicOf = rename, sasl = sec.sasl,
+        saslMechanism = sec.saslMechanism, tls = sec.tls)
+    } else graft.eos.RedisLedgerDestination(host, port,
+      ledgerPrefix = anchor, streamOf = rename, tls = c.relayRedisTls,
+      auth = c.relayRedisAuth)
   }
 
   /** One coordinate's relay progress, from [[relayLag]]. `tip` and
     * `cursor` share the relay's own position space — dense offsets for a
-    * kafka source (tip = the LAST STABLE OFFSET: aborted and still-open
-    * transactions are not relayable and must not count as lag), packed
-    * entry ids (`(ms << 16) | sub_seq`) for a redis source; `cursor` is
-    * the next-unrelayed position from the anchor (0 when the relay has
-    * never run). `behindRecords` is the pending position count for kafka
-    * sources — offsets, exactly kafka's own lag metric: slots occupied
-    * by aborted transactions and control markers count (they are
+    * kafka or iggy source (a kafka tip is the LAST STABLE OFFSET: aborted
+    * and still-open transactions are not relayable and must not count as
+    * lag), packed entry ids (`(ms << 16) | sub_seq`) for a redis source;
+    * `cursor` is the next-unrelayed position from the anchor (0 when the
+    * relay has never run). `behindRecords` is the pending position count
+    * for dense sources — offsets, exactly kafka's own lag metric: slots
+    * occupied by aborted transactions and control markers count (they are
     * positions the relay must still traverse), while records of a
     * still-OPEN transaction never do (the tip is the LSO). Absent for
     * redis sources (entry ids are sparse; counting would scan the
@@ -1150,189 +1122,26 @@ object SeaStreamer {
   }
 
   /** Progress probe for an exactly-once relay — the operational
-    * consumer-lag metric over the [[relayExactlyOnce]] matrix, measured
-    * with the SAME O(#coordinates) planning RPCs and the same isolation
-    * rules the relay itself plans with (a kafka source's tip is the LSO,
-    * so poisoned/open transactions never read as lag; a redis source's
-    * tip is the `XREVRANGE … COUNT 1` probe). Driver-side only — no
-    * Spark job, no data movement. Same scheme/endpoint validation and
-    * `anchor` semantics as the relay; coordinates are (stream/topic,
+    * consumer-lag metric over the [[relayExactlyOnce]] matrix: the
+    * source's pinned tips against the destination's committed cursors,
+    * read by the SAME planner the relay plans its epochs with (so
+    * isolation rules match: a kafka tip is the LSO, a redis tip the
+    * `XREVRANGE … COUNT 1` probe). Driver-side only — no Spark job, no
+    * data movement. Same scheme/endpoint validation and `anchor`
+    * semantics as the relay; coordinates are (stream/topic,
     * shard/partition).
     */
   def relayLag(source: Connection, destination: Connection,
       streams: Seq[String], anchor: String,
       redisShards: Int = 4): Map[(String, Long), RelayLag] = {
-    if (streams.isEmpty) throw SeaStreamErr.StreamKeyEmpty
-    streams.foreach { s =>
-      if (s != "*" && !Envelope.isValidStreamKey(s))
-        throw SeaStreamErr.InvalidStreamKey(s)
-    }
-    require(redisShards > 0, "redisShards must be positive")
-    val (ss, ds) = (source.relayScheme, destination.relayScheme)
-    if (ss != "kafka" && ss != "redis" && ss != "file" && ss != "iggy")
-      throw SeaStreamErr.Unsupported(
-        s"relayLag source on the '$ss' backend — no anchored cursor " +
-          "space to measure")
-    if (ds != "kafka" && ds != "redis")
-      throw SeaStreamErr.Unsupported(
-        s"relayLag destination on the '$ds' backend — only the relay " +
-          "matrix's destinations carry the anchored resume point")
-    if (streams.contains("*") && ss != "file")
-      throw SeaStreamErr.Unsupported(
-        s"the '*' wildcard measures only file directories; a '$ss' " +
-          "source needs explicit names")
-    Seq("source" -> source, "destination" -> destination).foreach {
-      case (end, c) =>
-        if (c.relayNodes.size != 1)
-          throw SeaStreamErr.Unsupported(
-            s"relayLag $end must be a single node, got " +
-              c.relayNodes.mkString(","))
-    }
-    // the anchor side: where each coordinate's committed cursor lives
-    def cursors(coords: Seq[(String, Long)]): Map[(String, Long), Long] =
-      if (ds == "kafka") {
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        val c = new graft.kafka.KafkaClient(kh, kp, sasl = sec.sasl,
-          saslMechanism = sec.saslMechanism, tls = sec.tls)
-        try {
-          c.findCoordinator(anchor)
-          c.fetchOffsets(anchor, coords.groupBy(_._1).map {
-            case (st, ps) => st -> ps.map(_._2.toInt)
-          }).map { case ((t, p), off) => (t, p.toLong) -> off }
-        } finally c.close()
-      } else {
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        val c = new graft.redis.RedisClient(rh, rp,
-          tls = destination.relayRedisTls, auth = destination.relayRedisAuth)
-        try coords.flatMap { case (st, sh) =>
-          c.command(graft.redis.RedisStreams.get(s"$anchor:{$st/$sh}"): _*) match {
-            case graft.redis.Resp.Bulk(bs) =>
-              Some((st, sh) -> new String(bs, "UTF-8").toLong)
-            case _ => None
-          }
-        }.toMap finally c.close()
-      }
-    if (ss == "file") {
-      import graft.ss.SsOffsetWalk
-      val dir = new java.io.File(source.relayNodes.head)
-      val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
-      val coords = parts.map(f => (f.getName, 0L)).toSeq
-      // the shipper's redis ledger key is `anchor:{<file>}` (no shard
-      // suffix — a file is one coordinate); the kafka side shares the
-      // generic (name, 0) group-offset coordinate
-      val cur =
-        if (ds == "kafka") cursors(coords)
-        else {
-          val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-          val c = new graft.redis.RedisClient(rh, rp,
-            tls = destination.relayRedisTls,
-            auth = destination.relayRedisAuth)
-          try coords.flatMap { case (name, sh) =>
-            c.command(graft.redis.RedisStreams.get(s"$anchor:{$name}"): _*) match {
-              case graft.redis.Resp.Bulk(bs) =>
-                Some((name, sh) -> new String(bs, "UTF-8").toLong)
-              case _ => None
-            }
-          }.toMap finally c.close()
-        }
-      parts.map { f =>
-        // a never-shipped file's cursor reads 0, but the first frame
-        // starts AFTER the 128-byte container header — floor the pending
-        // computation there so behindBytes is frame bytes, not header
-        val at = math.max(cur.getOrElse((f.getName, 0L), 0L),
-          graft.ss.SsFormat.HeaderSize.toLong)
-        // safeEnd returns `at` itself when nothing new is readable, so a
-        // drained (or torn-tail-only) file reads tip == cursor
-        val tip = SsOffsetWalk.safeEnd(f.getAbsolutePath, at).offset
-        (f.getName, 0L) -> RelayLag(tip, at,
-          behindRecords = None, behindMs = None,
-          behindBytes = Some(math.max(0L, tip - at)))
-      }.toMap
-    } else if (ss == "iggy") {
-      val (ih, ip) = hostPort(source.relayNodes.head, 8090)
-      val c = new graft.iggy.IggyClient(ih, ip,
-        username = source.relayIggyAuth._1,
-        password = source.relayIggyAuth._2)
-      val tips = try streams.flatMap { t =>
-        c.topicTips(graft.iggy.IggySource.DefaultStream, t).toSeq
-          .flatMap(_.zipWithIndex.map { case (tip, p) =>
-            (t, p.toLong) -> tip
-          })
-      }.toMap finally c.close()
-      val cur = cursors(tips.keys.toSeq)
-      tips.map { case (coord, tip) =>
-        val at = cur.getOrElse(coord, 0L)
-        coord -> RelayLag(tip, at,
-          behindRecords = Some(math.max(0L, tip - at)), behindMs = None)
-      }
-    } else if (ss == "kafka") {
-      val (kh, kp) = hostPort(source.relayNodes.head, 9092)
-      val sec = source.relayKafkaSecurity
-      val c = new graft.kafka.KafkaClient(kh, kp, sasl = sec.sasl,
-        saslMechanism = sec.saslMechanism, tls = sec.tls)
-      val tips = try {
-        val meta = c.metadata(streams)
-        streams.flatMap { t =>
-          meta.getOrElse(t, Seq.empty).map { p =>
-            val hw = c.listOffset(t, p, graft.kafka.KafkaWire.Ts.Latest)
-              .getOrElse(0L)
-            val lso = c.fetchIso(t, p, hw, maxBytes = 1,
-              readCommitted = true)._1
-            (t, p.toLong) -> lso
-          }
-        }.toMap
-      } finally c.close()
-      val cur = cursors(tips.keys.toSeq)
-      tips.map { case (coord, tip) =>
-        val at = cur.getOrElse(coord, 0L)
-        coord -> RelayLag(tip, at,
-          behindRecords = Some(math.max(0L, tip - at)), behindMs = None)
-      }
-    } else {
-      import graft.redis.{RedisStreams, Resp}
-      val (rh, rp) = hostPort(source.relayNodes.head, 6379)
-      val coords = streams.flatMap(st =>
-        (0L until redisShards.toLong).map(sh => (st, sh)))
-      val cur = cursors(coords)
-      val c = new graft.redis.RedisClient(rh, rp,
-        tls = source.relayRedisTls, auth = source.relayRedisAuth)
-      try coords.map { case (st, sh) =>
-        val key = RedisStreams.shardedKey(st, sh, sharded = true)
-        val tipNext = c.command(RedisStreams.xrevrangeTip(key): _*) match {
-          case v: Resp.Arr =>
-            RedisStreams.decodeEntriesWithIds(v, st, sh).headOption
-              .map { case (rawId, _) =>
-                // the probe shares the relays' packed-cursor space, so it
-                // shares their 64k/ms saturation refusal (aliased packing
-                // would mis-report lag as drained)
-                RedisStreams.guardSubSeq(rawId)
-                val (ms, sub) = RedisStreams.parseEntryId(rawId)
-                RedisStreams.packSeqNo(ms, sub) + 1L
-              }.getOrElse(0L)
-          case _ => 0L
-        }
-        val at = cur.getOrElse((st, sh), 0L)
-        val behindMs =
-          if (at >= tipNext) 0L
-          else {
-            // oldest pending = first entry at/after the cursor; its ms to
-            // the tip's ms is the backlog's time span
-            val start = RedisStreams.entryId(at >>> 16, at & 0xFFFFL)
-            c.command(RedisStreams.xrange(key, start, "+", Some(1)): _*) match {
-              case v: Resp.Arr =>
-                RedisStreams.decodeEntriesWithIds(v, st, sh).headOption
-                  .map { case (rawId, _) =>
-                    ((tipNext - 1L) >>> 16) - RedisStreams.parseEntryId(rawId)._1
-                  }.getOrElse(0L)
-              case _ => 0L
-            }
-          }
-        (st, sh) -> RelayLag(tipNext, at,
-          behindRecords = None, behindMs = Some(behindMs))
-      }.toMap finally c.close()
-    }
+    checkRelayEnds("relayLag", source, destination, streams, redisShards)
+    val src = relaySource(source, streams, redisShards)
+    val points = src.tips(relayDestination(destination, anchor, identity)
+      .cursors(src))
+    points.zip(src.backlog(points)).map { case (p, b) =>
+      (p.coord._1, p.coord._2.toLong) ->
+        RelayLag(p.tip, p.cursor, b.records, b.ms, b.bytes)
+    }.toMap
   }
 
   final class Committer(opts: ConsumerOptions) {

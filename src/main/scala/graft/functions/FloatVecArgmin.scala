@@ -2,8 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StructType}
@@ -41,17 +44,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, Str
   * Double.toString per term), and an argmin needs the EXACT value only
   * for centroids that can win. Pass 1 scores every centroid with a plain
   * double sum (~ns/dim); pass 2 runs the exact decimal distance only for
-  * centroids within [[Margin]] of the approximate minimum (plus any
-  * centroid whose approximate pass looked numerically suspicious — huge
-  * or non-finite sums always re-check exactly). The margin argument: the
-  * exact and double sums differ by at most ~1e-7 even at the packing
-  * doc's worst-case magnitudes (64 terms × FP eps × the |d2r| < 2^42/10⁶
-  * bound, plus ≤ 5e-13 of decimal per-step rounding), and a centroid can
-  * only influence the result — win outright or steal the 6-dp-grid
+  * centroids that can still be within [[Margin]] of the approximate
+  * minimum once both sums are widened by their worst-case error
+  * ([[slack]]: the n-term double sum is off by at most ~n·2⁻⁵³·s, the
+  * decimal steps by ~n·1e-14), plus any centroid whose approximate pass
+  * looked numerically suspicious — non-finite sums, and sums at or above
+  * [[ExactAbove]], where the 6-dp key no longer fits the pack's high bits
+  * and the packed order stops following the distance order. A centroid
+  * can only influence the result — win outright or steal the 6-dp-grid
   * tie-break — if its exact distance is within 1e-6 of the exact
-  * minimum. Margin = 1e-5 leaves two orders of magnitude of headroom, so
-  * exclusion by the double pass can never change the answer; typically
-  * one centroid survives and the BigDecimal work drops ~k×.
+  * minimum, so exclusion by the double pass can never change the answer
+  * at any dimension or magnitude; typically one centroid survives and the
+  * BigDecimal work drops ~k×.
   */
 case class FloatVecArgmin(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -127,11 +131,18 @@ object FloatVecArgmin {
   val IdBits = 20
   val KeyScale = 1000000d
 
-  /** Exact-vs-double safety margin for the pass-1 prefilter (see the
-    * class doc's bound: true |exact − double| ≲ 1e-7; influence radius
-    * 1e-6; two extra orders of headroom).
-    */
+  /** Pass-1 prefilter margin over the error-widened sums (influence
+    * radius 1e-6, one extra order of headroom). */
   val Margin = 1e-5
+
+  /** Approximate sums at or above this always re-check exactly: half the
+    * distance whose 6-dp key overflows the pack's high bits. */
+  val ExactAbove: Double = (1L << (63 - IdBits)).toDouble / KeyScale / 2
+
+  /** Worst-case |double − exact| of an `n`-term squared-L2 sum `s`: the
+    * recursive double sum's error (≤ (n−1)·2⁻⁵³·s, taken as n·2⁻⁵²·s) plus
+    * the decimal path's per-term and per-step rounding. */
+  def slack(n: Int, s: Double): Double = n * (2.3e-16 * s + 1e-14)
 
   /** One row's argmin — shared verbatim by eval and codegen so the two
     * paths cannot drift. Returns the packed long; Long.MaxValue when no
@@ -171,7 +182,7 @@ object FloatVecArgmin {
               j += 1
             }
             if (ok) {
-              if (java.lang.Double.isNaN(s) || s >= 1e12)
+              if (java.lang.Double.isNaN(s) || s >= ExactAbove)
                 approx(i) = Double.NegativeInfinity // suspicious
               else {
                 approx(i) = s
@@ -184,11 +195,13 @@ object FloatVecArgmin {
       i += 1
     }
     // ---- pass 2: exact decimal only where it can matter ----
-    val thr = minA + Margin // +Inf min ⇒ +Inf thr ⇒ only NaN-marked skip
+    val thr = minA + slack(n, minA) + Margin // +Inf min ⇒ +Inf thr
     var best = Long.MaxValue
     i = 0
     while (i < k) {
-      if (approx(i) <= thr) { // NaN compares false ⇒ skipped
+      val a = approx(i)
+      // -Inf (suspicious) always re-checks; NaN (NULL) compares false
+      if (a == Double.NegativeInfinity || a - slack(n, a) <= thr) {
         val c = cs.getStruct(i, csFields)
         val d = dist2Exact(emb, c.getArray(1), n)
         if (!java.lang.Double.isNaN(d)) {
@@ -247,4 +260,40 @@ object FloatVecArgmin {
   def pkOf(emb: Column, cs: Column): Column =
     ColumnBridge.column(FloatVecArgmin(
       ColumnBridge.expression(emb), ColumnBridge.expression(cs)))
+
+  /** The winning id of a packed argmin; NULL for the no-centroid
+    * sentinel. */
+  def idOf(pk: Column): Column =
+    ColumnBridge.column(FloatVecArgminId(ColumnBridge.expression(pk)))
+}
+
+/** The id field of a [[FloatVecArgmin]] pack — NULL when no centroid
+  * qualified (the Long.MaxValue sentinel would otherwise decode to the
+  * phantom id 2^20 − 1). One expression so the pack, which is
+  * non-deterministic and so never common-subexpression-eliminated, is
+  * evaluated once per row.
+  */
+case class FloatVecArgminId(child: Expression) extends UnaryExpression {
+  private val mask = (1L << FloatVecArgmin.IdBits) - 1
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "sea_fargmin_id"
+
+  override def eval(input: InternalRow): Any = child.eval(input) match {
+    case null => null
+    case pk: Long => if (pk == Long.MaxValue) null else pk & mask
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val pk = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${pk.code}
+      boolean ${ev.isNull} = ${pk.isNull} || ${pk.value} == ${Long.MaxValue}L;
+      long ${ev.value} = ${ev.isNull} ? -1L : (${pk.value} & ${mask}L);""")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): FloatVecArgminId = copy(child = newChild)
 }

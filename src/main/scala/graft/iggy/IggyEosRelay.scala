@@ -2,48 +2,20 @@ package graft.iggy
 
 import org.apache.spark.sql.SparkSession
 
-import graft.kafka.{KafkaClient, KafkaEosIngest, KafkaTls, KafkaTxnProducer}
-import graft.redis.{RedisClient, RedisStreams, Resp}
-import IggyWire.PollStrategy
+import graft.eos.{IggyRelaySource, KafkaTxnDestination,
+  RedisLedgerDestination, RelayDriver}
+import graft.kafka.KafkaTls
+import graft.redis.RedisClient
 
-/** Exactly-once Iggy → broker relay — the last seekable backend joins
-  * the relay matrix as a SOURCE (kafka, redis, `.ss` files and now iggy
-  * can each drain into the two transactional destinations). Iggy's
-  * offsets are dense per (topic, partition) exactly like kafka's
-  * (sea-streamer-iggy/src/consumer.rs's offset polls), so the cursor is
-  * the next-unrelayed offset, DESTINATION-anchored like every other
-  * corner: staged under the consumer group inside the kafka transaction
-  * with the source (topic, partition) as the synthetic coordinate, or
-  * SET in a WATCH-fenced `prefix:{topic/part}` redis ledger atomically
-  * with the entries. No Spark checkpoint, no iggy-side state (the
-  * server's own group offsets stay untouched — the relay's resume point
-  * must survive the source broker's loss).
-  *
-  * One epoch plans per-(topic, partition) ranges on the driver
-  * (GetTopic tips + cursor reads — O(#partitions) RPCs, no data), pins
-  * the tip so a live producer never unbounds a transaction, then each
-  * partition relays in its own task with the matrix's rival-resolution
-  * protocol: kafka tasks fence-then-read and retry on
-  * INVALID_PRODUCER_EPOCH ([[KafkaEosIngest.retryFenced]]); redis tasks
-  * WATCH-then-read and re-run on a nil'd EXEC. `relayKafkaAll` /
-  * `relayRedisAll` drain until an epoch moves nothing.
+/** Exactly-once Iggy → broker relay: [[RelayDriver]] over an
+  * [[IggyRelaySource]] (dense per-partition offsets of one iggy namespace
+  * stream) into either transactional destination — staged under the
+  * consumer group inside a kafka transaction ([[KafkaTxnDestination]]),
+  * or SET in the WATCH-fenced `prefix:{topic/part}` redis ledger
+  * ([[RedisLedgerDestination]]). `relayKafkaAll` / `relayRedisAll` drain
+  * until an epoch plans nothing.
   */
 object IggyEosRelay {
-
-  /** Every (topic, partition, tip) the source currently holds — the
-    * epoch's pinned tips, cursor-agnostic (the caller filters).
-    */
-  private def tips(host: String, port: Int, iggyStream: String,
-      topics: Seq[String],
-      auth: (String, String)): Seq[(String, Int, Long)] = {
-    val c = new IggyClient(host, port, username = auth._1,
-      password = auth._2)
-    try topics.flatMap { t =>
-      c.topicTips(iggyStream, t).toSeq.flatMap(_.zipWithIndex.collect {
-        case (tip, p) if tip > 0L => (t, p, tip)
-      })
-    } finally c.close()
-  }
 
   /** One bounded exactly-once relay epoch into KAFKA; returns messages
     * relayed (0 = drained to the planned tips).
@@ -58,107 +30,11 @@ object IggyEosRelay {
       saslMechanism: String = "PLAIN",
       tls: Option[KafkaTls.Client] = None,
       crashBeforeCommit: Option[String] = None): Long =
-    relayKafkaEpoch(spark, iggyHost, iggyPort, iggyStream, topics, topicOf,
-      kafkaHost, kafkaPort, group, txnIdPrefix, cap, page, iggyAuth,
-      sasl, saslMechanism, tls, crashBeforeCommit)._2
-
-  /** [[relayKafkaOnce]] plus the epoch's PLANNED range count — drains
-    * loop on planned work, not messages moved (an advance-only epoch
-    * over a fully-expired range must not read as drained).
-    */
-  private[graft] def relayKafkaEpoch(spark: SparkSession,
-      iggyHost: String, iggyPort: Int, iggyStream: String,
-      topics: Seq[String], topicOf: String => String,
-      kafkaHost: String, kafkaPort: Int, group: String, txnIdPrefix: String,
-      cap: Long, page: Int,
-      iggyAuth: (String, String),
-      sasl: Option[(String, String)],
-      saslMechanism: String,
-      tls: Option[KafkaTls.Client],
-      crashBeforeCommit: Option[String]): (Int, Long) = {
-    require(cap > 0, "cap must be positive")
-    val all = tips(iggyHost, iggyPort, iggyStream, topics, iggyAuth)
-    val planner = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-      saslMechanism = saslMechanism, tls = tls)
-    val ranges = try {
-      planner.findCoordinator(group)
-      val committed =
-        if (all.isEmpty) Map.empty[(String, Int), Long]
-        else planner.fetchOffsets(group,
-          all.groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2) })
-      all.flatMap { case (t, p, tip) =>
-        val cur = committed.getOrElse((t, p), 0L)
-        if (tip > cur) Some((t, p, math.min(tip, cur + cap))) else None
-      }
-    } finally planner.close()
-    if (ranges.isEmpty) (0, 0L)
-    else (ranges.size, spark.sparkContext.parallelize(ranges, ranges.size)
-      .map { case (topic, part, tipNext) =>
-        val ic = new IggyClient(iggyHost, iggyPort,
-          username = iggyAuth._1, password = iggyAuth._2)
-        def attempt(): Long = {
-          val kc = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-            saslMechanism = saslMechanism, tls = tls)
-          try {
-            // fence FIRST, read the cursor second (the matrix's law)
-            val producer = new KafkaTxnProducer(kc,
-              s"$txnIdPrefix-$topic-$part").initTransactions()
-            kc.findCoordinator(group)
-            val committed = kc.fetchOffsets(group, Map(topic -> Seq(part)))
-              .getOrElse((topic, part), 0L)
-            if (committed >= tipNext) 0L
-            else {
-              val dst = topicOf(topic)
-              val dstParts = kc.metadata(Seq(dst)).getOrElse(dst, Seq.empty)
-              require(dstParts.size > part,
-                s"destination $dst lacks partition $part")
-              var next = committed
-              var n = 0L
-              while (next < tipNext) {
-                val want = math.min(page.toLong, tipNext - next).toInt
-                val (_, msgs) = ic.pollMessages(iggyStream, topic, part,
-                  PollStrategy.AtOffset(next), want)
-                val keep = msgs.takeWhile(_.offset < tipNext)
-                if (keep.isEmpty) {
-                  // message_expiry fast-forward (see the redis leg):
-                  // confirmed-trimmed positions are consumed; anything
-                  // else stays a loud stall
-                  val first = ic.pollMessages(iggyStream, topic, part,
-                    PollStrategy.First, 1)._2.headOption.map(_.offset)
-                  first match {
-                    case Some(f) if f > next => next = math.min(f, tipNext)
-                    case _ => throw new IllegalStateException(
-                      s"relay stalled: $topic/$part poll at $next below " +
-                        s"the planned tip $tipNext returned nothing and " +
-                        s"the log starts at ${first.getOrElse(-1L)}")
-                  }
-                } else {
-                  if (n == 0L) producer.begin()
-                  producer.send(dst, part,
-                    keep.map(m => (m.tsMs, null: Array[Byte], m.payload)))
-                  n += keep.length
-                  next = keep.last.offset + 1L
-                }
-              }
-              // a fully-expired range still advances the cursor FENCED —
-              // an offsets-only transaction (legal KIP-98), never a
-              // plain OffsetCommit a fenced zombie could rewind
-              if (n == 0L) producer.begin()
-              producer.sendOffsetsToTransaction(group,
-                Map((topic, part) -> next))
-              if (crashBeforeCommit.exists(graft.ops.Failpoints.fire))
-                throw new IllegalStateException(
-                  s"injected crash: relay $topic/$part produced + staged," +
-                    " not committed")
-              producer.commit()
-              n
-            }
-          } finally kc.close()
-        }
-        try KafkaEosIngest.retryFenced(s"iggy relay $topic/$part")(attempt())
-        finally ic.close()
-      }.sum().toLong)
-  }
+    RelayDriver.once(spark,
+      IggyRelaySource(iggyHost, iggyPort, iggyStream, topics, cap, page,
+        iggyAuth),
+      KafkaTxnDestination(kafkaHost, kafkaPort, group, txnIdPrefix, topicOf,
+        sasl, saslMechanism, tls, crashBeforeCommit))
 
   /** One bounded exactly-once relay epoch into REDIS (the WATCH-fenced
     * `ledgerPrefix:{topic/part}` cursor).
@@ -172,94 +48,13 @@ object IggyEosRelay {
       tls: Option[RedisClient.Tls] = None,
       auth: Option[RedisClient.Auth] = None,
       crashBeforeCommit: Option[String] = None): Long =
-    relayRedisEpoch(spark, iggyHost, iggyPort, iggyStream, topics, streamOf,
-      redisHost, redisPort, ledgerPrefix, cap, page, iggyAuth, tls, auth,
-      crashBeforeCommit)._2
+    RelayDriver.once(spark,
+      IggyRelaySource(iggyHost, iggyPort, iggyStream, topics, cap, page,
+        iggyAuth),
+      RedisLedgerDestination(redisHost, redisPort, ledgerPrefix, streamOf,
+        tls, auth, crashBeforeCommit))
 
-  /** [[relayRedisOnce]] plus the epoch's PLANNED range count. */
-  private[graft] def relayRedisEpoch(spark: SparkSession,
-      iggyHost: String, iggyPort: Int, iggyStream: String,
-      topics: Seq[String], streamOf: String => String,
-      redisHost: String, redisPort: Int, ledgerPrefix: String,
-      cap: Long, page: Int,
-      iggyAuth: (String, String),
-      tls: Option[RedisClient.Tls],
-      auth: Option[RedisClient.Auth],
-      crashBeforeCommit: Option[String]): (Int, Long) = {
-    require(cap > 0, "cap must be positive")
-    def ledgerKey(t: String, p: Int) = s"$ledgerPrefix:{$t/$p}"
-    def cursorOf(v: Resp.Value): Long = v match {
-      case Resp.Bulk(bs) => new String(bs, "UTF-8").toLong
-      case _ => 0L
-    }
-    val all = tips(iggyHost, iggyPort, iggyStream, topics, iggyAuth)
-    val ledgers = new RedisClient(redisHost, redisPort, tls = tls, auth = auth)
-    val ranges = try all.flatMap { case (t, p, tip) =>
-      val cur = cursorOf(
-        ledgers.command(RedisStreams.get(ledgerKey(t, p)): _*))
-      if (tip > cur) Some((t, p, math.min(tip, cur + cap))) else None
-    } finally ledgers.close()
-    if (ranges.isEmpty) (0, 0L)
-    else (ranges.size, spark.sparkContext.parallelize(ranges, ranges.size)
-      .map { case (topic, part, tipNext) =>
-        val ic = new IggyClient(iggyHost, iggyPort,
-          username = iggyAuth._1, password = iggyAuth._2)
-        val rc = new RedisClient(redisHost, redisPort, tls = tls, auth = auth)
-        val ledger = ledgerKey(topic, part)
-        val dstKey = RedisStreams.shardedKey(streamOf(topic),
-          part.toLong, sharded = true)
-        def plainCursor(): Long =
-          cursorOf(rc.command(RedisStreams.get(ledger): _*))
-        // Poll [from, tipNext) into a bounded buffer UNWATCHED: the
-        // paging is the slow phase, and holding the destination-key
-        // WATCH across it would let ANY foreign append on the
-        // destination nil the EXEC — relays into streams a plain
-        // producer also feeds must ride out contention, not livelock.
-        def readSource(from: Long): Vector[(Long, Long, Array[Byte])] = {
-          val out = Vector.newBuilder[(Long, Long, Array[Byte])]
-          var next = from
-          while (next < tipNext) {
-            val want = math.min(page.toLong, tipNext - next).toInt
-            val (_, msgs) = ic.pollMessages(iggyStream, topic, part,
-              PollStrategy.AtOffset(next), want)
-            val keep = msgs.takeWhile(_.offset < tipNext)
-            if (keep.isEmpty) {
-              // an empty poll below a pinned tip has one legitimate
-              // cause: message_expiry trimmed the range under us (iggy
-              // topics expire, IggyWire's retention). Confirm against
-              // the FIRST available offset before skipping — skipped
-              // positions are consumed, like kafka's truncation rule;
-              // any other cause stays a loud stall (a wedge here would
-              // otherwise be permanent: the cursor could never advance
-              // past the expired range)
-              val first = ic.pollMessages(iggyStream, topic, part,
-                PollStrategy.First, 1)._2.headOption.map(_.offset)
-              first match {
-                case Some(f) if f > next => next = math.min(f, tipNext)
-                case _ => throw new IllegalStateException(
-                  s"relay stalled: $topic/$part poll at $next below the" +
-                    s" planned tip $tipNext returned nothing and the " +
-                    s"log starts at ${first.getOrElse(-1L)}")
-              }
-            } else {
-              out ++= keep.map(m => (m.offset, m.tsMs, m.payload))
-              next = keep.last.offset + 1L
-            }
-          }
-          out.result()
-        }
-        try {
-          val from = plainCursor()
-          if (from >= tipNext) 0L
-          else graft.redis.EosCommit.commit(rc, ledger, dstKey,
-            readSource(from), finalCursor = tipNext,
-            label = s"iggy relay $topic/$part",
-            crashBeforeCommit = crashBeforeCommit)
-        } finally { ic.close(); rc.close() }
-      }.sum().toLong)
-  }
-
-  /** Drain the source completely: epochs until one moves nothing. */
+  /** Drain the source completely: epochs until one plans nothing. */
   def relayKafkaAll(spark: SparkSession,
       iggyHost: String, iggyPort: Int, iggyStream: String,
       topics: Seq[String], topicOf: String => String,
@@ -268,19 +63,12 @@ object IggyEosRelay {
       iggyAuth: (String, String) = ("iggy", "iggy"),
       sasl: Option[(String, String)] = None,
       saslMechanism: String = "PLAIN",
-      tls: Option[KafkaTls.Client] = None): Long = {
-    var total = 0L
-    var planned = -1
-    // loop on PLANNED ranges (advance-only epochs move zero messages)
-    while (planned != 0) {
-      val (p, moved) = relayKafkaEpoch(spark, iggyHost, iggyPort,
-        iggyStream, topics, topicOf, kafkaHost, kafkaPort, group,
-        txnIdPrefix, cap, page, iggyAuth, sasl, saslMechanism, tls, None)
-      planned = p
-      total += moved
-    }
-    total
-  }
+      tls: Option[KafkaTls.Client] = None): Long =
+    RelayDriver.all(spark,
+      IggyRelaySource(iggyHost, iggyPort, iggyStream, topics, cap, page,
+        iggyAuth),
+      KafkaTxnDestination(kafkaHost, kafkaPort, group, txnIdPrefix, topicOf,
+        sasl, saslMechanism, tls))
 
   /** Same drain for the redis destination. */
   def relayRedisAll(spark: SparkSession,
@@ -290,17 +78,10 @@ object IggyEosRelay {
       cap: Long = 100000L, page: Int = 1000,
       iggyAuth: (String, String) = ("iggy", "iggy"),
       tls: Option[RedisClient.Tls] = None,
-      auth: Option[RedisClient.Auth] = None): Long = {
-    var total = 0L
-    var planned = -1
-    // loop on PLANNED ranges (advance-only epochs move zero messages)
-    while (planned != 0) {
-      val (p, moved) = relayRedisEpoch(spark, iggyHost, iggyPort,
-        iggyStream, topics, streamOf, redisHost, redisPort, ledgerPrefix,
-        cap, page, iggyAuth, tls, auth, None)
-      planned = p
-      total += moved
-    }
-    total
-  }
+      auth: Option[RedisClient.Auth] = None): Long =
+    RelayDriver.all(spark,
+      IggyRelaySource(iggyHost, iggyPort, iggyStream, topics, cap, page,
+        iggyAuth),
+      RedisLedgerDestination(redisHost, redisPort, ledgerPrefix, streamOf,
+        tls, auth))
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{Envelope, SeaMessage}
+import graft.core.{DenseOffset, Envelope, SeaMessage, SourceOptions}
 import graft.iggy.{IggyClient, IggySource}
 import graft.iggy.IggyWire.PollStrategy
 import graft.ss.spark.SsRows
@@ -74,33 +74,6 @@ class IggyTable(options: CaseInsensitiveStringMap)
   }
 }
 
-/** `{"offs":{"<topic>/<partition>":<nextOffset>}}`. Topic names are valid
-  * stream keys (`[a-zA-Z0-9._-]`), so '/' and '"' never appear in them and
-  * the hand parser below is unambiguous.
-  */
-final case class IggyOffset(offs: Map[(String, Int), Long]) extends Offset {
-  override def json(): String =
-    offs.toSeq.sortBy { case ((t, p), _) => (t, p) }
-      .map { case ((t, p), o) => s""""$t/$p":$o""" }
-      .mkString("{\"offs\":{", ",", "}}")
-}
-
-object IggyOffset {
-  def fromJson(json: String): IggyOffset = {
-    val inner = json.trim.stripPrefix("{\"offs\":{").stripSuffix("}}")
-    if (inner.isEmpty) IggyOffset(Map.empty)
-    else IggyOffset(inner.split(',').map { pair =>
-      val sep = pair.indexOf("\":")
-      if (sep < 0)
-        throw new IllegalArgumentException(s"bad IggyOffset pair: $pair")
-      val key = pair.substring(0, sep).stripPrefix("\"")
-      val slash = key.lastIndexOf('/')
-      (key.substring(0, slash), key.substring(slash + 1).toInt) ->
-        pair.substring(sep + 2).toLong
-    }.toMap)
-  }
-}
-
 final case class IggyInputPartition(
     host: String, port: Int, stream: String, topic: String, partition: Int,
     from: Long, until: Long, batch: Int, group: Option[String],
@@ -131,16 +104,8 @@ class IggyMicroBatchStream(options: CaseInsensitiveStringMap)
   if (latest && startingTimestamp.isDefined)
     throw new IllegalArgumentException(
       "startingOffsets=latest conflicts with startingTimestamp")
-  private val maxMessagesPerTrigger: Option[Long] = {
-    val v = options.get("maxMessagesPerTrigger")
-    if (v == null || v.isEmpty) None
-    else {
-      val n = v.toLong
-      if (n <= 0) throw new IllegalArgumentException(
-        s"maxMessagesPerTrigger must be positive, got $n")
-      Some(n)
-    }
-  }
+  private val maxMessagesPerTrigger: Option[Long] =
+    SourceOptions.positive(options, "maxMessagesPerTrigger")
   private val group: Option[String] = {
     val v = options.get("group")
     if (v == null || v.isEmpty) None else Some(v)
@@ -150,15 +115,8 @@ class IggyMicroBatchStream(options: CaseInsensitiveStringMap)
     * pins the subscription — unassigned partitions are never tip-listed,
     * polled, or checkpointed (same pruning law as the kafka-wire stream).
     */
-  private val assign: Option[Set[(String, Int)]] = {
-    val v = options.get("assign")
-    if (v == null || v.isEmpty) None
-    else Some(v.split(',').map(_.trim).filter(_.nonEmpty).map { s =>
-      val i = s.lastIndexOf(':')
-      require(i > 0, s"assign entry '$s' must be topic:partition")
-      (s.substring(0, i), s.substring(i + 1).toInt)
-    }.toSet)
-  }
+  private val assign: Option[Set[(String, Int)]] =
+    SourceOptions.assign(options)
   private def keep(t: String, p: Int): Boolean =
     assign.forall(_.contains((t, p)))
 
@@ -221,7 +179,7 @@ class IggyMicroBatchStream(options: CaseInsensitiveStringMap)
         }
         ids
     }
-    IggyOffset(resolved)
+    DenseOffset(resolved)
   }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -233,7 +191,7 @@ class IggyMicroBatchStream(options: CaseInsensitiveStringMap)
     * the driver at all — O(#topics) metadata per trigger.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val after = start.asInstanceOf[IggyOffset].offs
+    val after = start.asInstanceOf[DenseOffset].offs
     val tip = tips()
     val ends = limit match {
       case r: ReadMaxRows =>
@@ -251,7 +209,7 @@ class IggyMicroBatchStream(options: CaseInsensitiveStringMap)
     }
     // a topic can vanish from the sweep — its committed position must
     // survive in the offset (same law as the redis source)
-    IggyOffset(after ++ ends)
+    DenseOffset(after ++ ends)
   }
 
   override def latestOffset(): Offset =
@@ -260,8 +218,8 @@ class IggyMicroBatchStream(options: CaseInsensitiveStringMap)
         "Spark calls latestOffset(start, limit)")
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[IggyOffset].offs
-    val e = end.asInstanceOf[IggyOffset].offs
+    val s = start.asInstanceOf[DenseOffset].offs
+    val e = end.asInstanceOf[DenseOffset].offs
     // plan the partitions the OFFSETS name (authoritative across restarts)
     (e.keySet ++ s.keySet).toSeq.sorted.flatMap { case (t, p) =>
       val from = s.getOrElse((t, p), 0L)
@@ -278,7 +236,7 @@ class IggyMicroBatchStream(options: CaseInsensitiveStringMap)
         new IggyPartitionReader(p.asInstanceOf[IggyInputPartition])
     }
 
-  override def deserializeOffset(json: String): Offset = IggyOffset.fromJson(json)
+  override def deserializeOffset(json: String): Offset = DenseOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }

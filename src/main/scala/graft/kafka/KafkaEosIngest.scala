@@ -2,57 +2,15 @@ package graft.kafka
 
 import org.apache.spark.sql.SparkSession
 
-import graft.redis.{RedisClient, RedisStreams, Resp}
+import graft.eos.{KafkaTxnDestination, RedisRelaySource, RelayDriver}
+import graft.redis.RedisClient
 
-/** Exactly-once Redis→Kafka ingest relay — the fourth corner of the EOS
-  * relay matrix ([[KafkaEosRelay]] kafka→kafka, [[graft.redis.RedisEosRelay]]
-  * kafka→redis, [[graft.redis.RedisEosPump]] redis→redis). The destination
-  * is transactional, so the resume point stays DESTINATION-anchored the
-  * way the reference's `send_offsets_to_transaction` intends
-  * (sea-streamer-kafka/src/producer.rs:236-301): the source cursor is
-  * staged INSIDE the kafka transaction and publishes atomically with the
-  * relayed data. The twist is that the source is a redis stream, whose
-  * positions are entry ids, not kafka offsets — but the reference's own
-  * id packing (sea-streamer-redis/src/message.rs:27-64: one SeqNo =
-  * `(ms << 16) | sub_seq`) makes the cursor a single i64 that rides the
-  * group-offset mechanism verbatim: the committed "offset" of synthetic
-  * coordinate (stream, shard) under `group` IS the packed id of the next
-  * unrelayed entry. No Spark checkpoint, no redis-side state — lose
-  * everything but the kafka cluster, restart anywhere, OffsetFetch says
-  * exactly what landed. (The group coordinator stores offsets by plain
-  * (group, topic, partition) key; the "topic" never has to exist as a
-  * log — the same property production consume-anything/produce-kafka
-  * pipelines lean on.)
-  *
-  * One epoch ([[relayOnce]]) plans per-(stream, shard) work on the driver
-  * (tip probe via `XREVRANGE key + - COUNT 1` + OffsetFetch — O(#shards)
-  * RPCs, no data), then each shard relays in its own task: init the
-  * transactional producer FIRST (the epoch bump fences any zombie of
-  * this slot, aborting its open txn), re-read the committed cursor AFTER
-  * the fence, page `XRANGE` from the unpacked cursor (inclusive — the
-  * stored value is last-relayed + 1 in packed space, which is exactly
-  * `idSuccessor`), produce to the destination topic at partition =
-  * shard, stage the advanced cursor under the group, commit. A crash
-  * anywhere before the commit leaves the data invisible (aborted at the
-  * next fence) and the cursor unmoved — the next epoch re-relays the
-  * same range. [[relayAll]] loops until an epoch moves nothing.
-  *
-  * Fence races resolve IN the task: a rival incarnation of this slot —
-  * typically a killed-but-still-running task of a failed prior epoch
-  * whose own init lands AFTER this task's — bumps the producer epoch,
-  * and this attempt's next transactional RPC dies with
-  * INVALID_PRODUCER_EPOCH. Nothing of the fenced attempt survives (its
-  * open txn aborted at the rival's init), so the task re-runs its whole
-  * body: a fresh init re-fences the rival, the post-fence cursor read
-  * absorbs anything the rival managed to commit, and the remainder
-  * relays. Retries are bounded (each rival incarnation can fence at most
-  * once — after OUR re-init its next RPC dies) and the bound fails loud.
-  *
-  * Scale shape: tasks are independent single-connection relays, one per
-  * (stream, shard) — data bytes never touch the driver; `cap` bounds the
-  * per-epoch transaction (the `transaction.timeout.ms` pressure valve),
-  * and the epoch's tip is pinned at plan time so a concurrently-growing
-  * source stream never turns an epoch into an unbounded chase.
+/** Exactly-once Redis→Kafka ingest relay: [[RelayDriver]] over a
+  * [[RedisRelaySource]] (the packed entry-id cursor of each (stream,
+  * shard)) and a [[KafkaTxnDestination]] (that cursor staged under the
+  * consumer group inside the kafka transaction). No Spark checkpoint, no
+  * redis-side state — lose everything but the kafka cluster, restart
+  * anywhere, OffsetFetch says exactly what landed.
   */
 object KafkaEosIngest {
 
@@ -75,169 +33,13 @@ object KafkaEosIngest {
       redisAuth: Option[RedisClient.Auth] = None,
       crashBeforeCommit: Option[String] = None,
       raceAfterFence: Option[String] = None): Long =
-    relayEpoch(spark, redisHost, redisPort, shards, topicOf, kafkaHost,
-      kafkaPort, group, txnIdPrefix, cap, page, sasl, saslMechanism,
-      kafkaTls, redisTls, redisAuth, crashBeforeCommit, raceAfterFence)._2
+    RelayDriver.once(spark,
+      RedisRelaySource(redisHost, redisPort, shards, cap, page, redisTls,
+        redisAuth),
+      KafkaTxnDestination(kafkaHost, kafkaPort, group, txnIdPrefix, topicOf,
+        sasl, saslMechanism, kafkaTls, crashBeforeCommit, raceAfterFence))
 
-  /** [[relayOnce]] plus the epoch's PLANNED range count — the drain
-    * loops on planned work, not entries moved.
-    */
-  private[graft] def relayEpoch(spark: SparkSession,
-      redisHost: String, redisPort: Int, shards: Seq[(String, Long)],
-      topicOf: String => String,
-      kafkaHost: String, kafkaPort: Int, group: String, txnIdPrefix: String,
-      cap: Long, page: Int,
-      sasl: Option[(String, String)],
-      saslMechanism: String,
-      kafkaTls: Option[KafkaTls.Client],
-      redisTls: Option[RedisClient.Tls],
-      redisAuth: Option[RedisClient.Auth],
-      crashBeforeCommit: Option[String],
-      raceAfterFence: Option[String]): (Int, Long) = {
-    require(cap > 0, "cap must be positive")
-    require(page > 0, "page must be positive")
-    val planner = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-      saslMechanism = saslMechanism, tls = kafkaTls)
-    val tips = new RedisClient(redisHost, redisPort,
-      tls = redisTls, auth = redisAuth)
-    val ranges = try {
-      planner.findCoordinator(group)
-      val committed = planner.fetchOffsets(group,
-        shards.groupBy(_._1).map { case (st, ss) =>
-          st -> ss.map(_._2.toInt)
-        })
-      shards.flatMap { case (stream, shard) =>
-        val key = RedisStreams.shardedKey(stream, shard, sharded = true)
-        // the epoch's tip: packed(last entry) + 1 in cursor space — pinned
-        // here so the epoch is bounded even against a live producer
-        tips.command(RedisStreams.xrevrangeTip(key): _*) match {
-          case v: Resp.Arr =>
-            RedisStreams.decodeEntriesWithIds(v, stream, shard)
-              .headOption.flatMap { case (rawId, _) =>
-                // the cursor rides the PACKED id: saturation aliases it
-                RedisStreams.guardSubSeq(rawId)
-                val (ms, sub) = RedisStreams.parseEntryId(rawId)
-                val tipNext = RedisStreams.packSeqNo(ms, sub) + 1L
-                val from = committed.getOrElse((stream, shard.toInt), 0L)
-                if (tipNext > from) Some((stream, shard, from, tipNext))
-                else None
-              }
-          case _ => None
-        }
-      }
-    } finally { planner.close(); tips.close() }
-    if (ranges.isEmpty) (0, 0L)
-    else (ranges.size, spark.sparkContext.parallelize(ranges, ranges.size)
-      .map { case (stream, shard, _, tipNext) =>
-        val rc = new RedisClient(redisHost, redisPort,
-          tls = redisTls, auth = redisAuth)
-        def attempt(): Long = {
-          val kc = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-            saslMechanism = saslMechanism, tls = kafkaTls)
-          try {
-            // fence FIRST, read the cursor second: after the epoch bump no
-            // zombie of this slot can commit a transaction (and with it a
-            // cursor move) this task would miss
-            val producer = new KafkaTxnProducer(kc,
-              s"$txnIdPrefix-$stream-$shard").initTransactions()
-            kc.findCoordinator(group)
-            val committed = kc.fetchOffsets(group, Map(stream -> Seq(shard.toInt)))
-              .getOrElse((stream, shard.toInt), 0L)
-            raceAfterFence.foreach(graft.ops.Failpoints.fireHook)
-            if (committed >= tipNext) 0L // range already landed — replay skip
-            else {
-              val topic = topicOf(stream)
-              val dstParts = kc.metadata(Seq(topic)).getOrElse(topic, Seq.empty)
-              require(dstParts.size > shard,
-                s"destination $topic lacks partition $shard")
-              val key = RedisStreams.shardedKey(stream, shard, sharded = true)
-              // exact BECAUSE of guardSubSeq: every entry that ever
-              // advanced this cursor had sub < 0xFFFF, where packing is
-              // bijective — reconstructing a wire id from a packed SeqNo
-              // is otherwise forbidden (packSeqNo's doc)
-              var start = RedisStreams.entryId(committed >>> 16, committed & 0xFFFFL)
-              var lastPacked = committed - 1L
-              var n = 0L
-              var drained = false
-              while (!drained && n < cap) {
-                val want = math.min(page.toLong, cap - n).toInt
-                val entries = RedisStreams.decodeEntriesWithIds(
-                  rc.command(RedisStreams.xrange(key, start, "+", Some(want)): _*),
-                  stream, shard)
-                // stop at the PLANNED tip: entries appended after planning
-                // belong to the next epoch (bounded-transaction law)
-                val keep = entries.takeWhile(_._2.sequence < tipNext)
-                // the 64k/ms/shard ceiling, checked on every RELAYED
-                // entry (the tip guard alone misses saturated mid-range
-                // ids)
-                keep.foreach { case (rawId, _) =>
-                  RedisStreams.guardSubSeq(rawId)
-                }
-                if (keep.nonEmpty) {
-                  if (n == 0L) producer.begin() // lazily — an XTRIMmed-empty
-                    // range must not open (then have to abort) a transaction
-                  producer.send(topic, shard.toInt,
-                    keep.map { case (rawId, m) =>
-                      (m.timestamp.getTime,
-                        rawId.getBytes("UTF-8"), m.payload)
-                    })
-                  n += keep.length
-                  lastPacked = keep.last._2.sequence
-                  start = RedisStreams.idSuccessor(keep.last._1)
-                }
-                drained = keep.length < want || keep.length < entries.length
-              }
-              if (n == 0L) 0L
-              else {
-                // the cursor stages INSIDE the transaction: entries and
-                // resume point publish atomically at commit, vanish on abort
-                producer.sendOffsetsToTransaction(group,
-                  Map((stream, shard.toInt) -> (lastPacked + 1L)))
-                if (crashBeforeCommit.exists(KafkaEosSink.fire))
-                  throw new IllegalStateException(
-                    s"injected crash: ingest $stream/$shard produced + " +
-                      "staged, not committed")
-                producer.commit()
-                n
-              }
-            }
-          } finally kc.close()
-        }
-        try retryFenced(s"ingest $stream/$shard")(attempt())
-        finally rc.close()
-      }.sum().toLong)
-  }
-
-  /** Run `body`; on INVALID_PRODUCER_EPOCH — a rival incarnation of the
-    * slot fenced this attempt mid-transaction, leaving nothing of it
-    * visible — back off and re-run (the fresh init re-fences the rival,
-    * the post-fence cursor read absorbs anything the rival committed).
-    * Each rival incarnation can fence at most once (after OUR re-init its
-    * next RPC dies), so the bound only trips under a genuinely contended
-    * slot — two live drivers relaying the same ranges — and then it
-    * fails LOUD.
-    */
-  private[graft] def retryFenced(what: String, maxRetries: Int = 5)(
-      body: => Long): Long = {
-    var attempts = 0
-    while (true) {
-      try return body
-      catch {
-        case e: KafkaClient#KafkaServerErr
-            if e.code == KafkaWire.Err.InvalidProducerEpoch =>
-          attempts += 1
-          if (attempts > maxRetries)
-            throw new IllegalStateException(
-              s"$what: fenced $attempts times — a live rival keeps " +
-                "re-initializing this transactional id (two concurrent " +
-                "relays of the same ranges?)", e)
-          Thread.sleep(100L * attempts)
-      }
-    }
-    -1L // unreachable
-  }
-
-  /** Drain the source completely: epochs until one moves nothing. */
+  /** Drain the source completely: epochs until one plans nothing. */
   def relayAll(spark: SparkSession,
       redisHost: String, redisPort: Int, shards: Seq[(String, Long)],
       topicOf: String => String,
@@ -247,17 +49,10 @@ object KafkaEosIngest {
       saslMechanism: String = "PLAIN",
       kafkaTls: Option[KafkaTls.Client] = None,
       redisTls: Option[RedisClient.Tls] = None,
-      redisAuth: Option[RedisClient.Auth] = None): Long = {
-    var total = 0L
-    var planned = -1
-    // loop on PLANNED ranges (advance-only epochs move zero entries)
-    while (planned != 0) {
-      val (p, moved) = relayEpoch(spark, redisHost, redisPort, shards,
-        topicOf, kafkaHost, kafkaPort, group, txnIdPrefix, cap, page,
-        sasl, saslMechanism, kafkaTls, redisTls, redisAuth, None, None)
-      planned = p
-      total += moved
-    }
-    total
-  }
+      redisAuth: Option[RedisClient.Auth] = None): Long =
+    RelayDriver.all(spark,
+      RedisRelaySource(redisHost, redisPort, shards, cap, page, redisTls,
+        redisAuth),
+      KafkaTxnDestination(kafkaHost, kafkaPort, group, txnIdPrefix, topicOf,
+        sasl, saslMechanism, kafkaTls))
 }

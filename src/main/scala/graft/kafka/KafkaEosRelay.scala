@@ -2,52 +2,38 @@ package graft.kafka
 
 import org.apache.spark.sql.SparkSession
 
+import graft.eos.{KafkaRelaySource, KafkaTxnDestination, RelayDriver}
+
 /** Exactly-once Kafka→Kafka relay — the reference's consume-transform-
-  * produce loop in its PUREST form (sea-streamer-kafka/src/producer.rs:
-  * 236-301, `send_offsets_to_transaction` staging the REAL source
-  * offsets): no Spark checkpoint anywhere — the resume point IS the
-  * consumer group's committed offset, and it publishes atomically with
-  * the relayed data because it is staged INSIDE the transaction.
-  *
-  * [[KafkaEosSink]] is the Spark-idiomatic half (foreachBatch epochs,
-  * Spark's offset WAL drives replay, the ledger makes replay idempotent);
-  * this is the broker-anchored half: kill the driver, lose the
-  * checkpoint directory entirely, restart anywhere — the group offsets
-  * say exactly what was relayed, and nothing else is needed.
-  *
-  * One epoch ([[relayOnce]]) plans per-(topic, partition) ranges
-  * [committed, min(tip, committed + cap)) on the driver (Metadata +
-  * OffsetFetch + ListOffsets — O(#partitions) RPCs, no data), then each
-  * range relays in its own task: init (fences the slot's previous
-  * incarnation, aborting any open txn), re-read the committed offset
-  * AFTER the fence (a zombie can no longer move it — skip if this range
-  * already landed), begin → fetch pages → produce to the destination
-  * topic at the SAME partition (order-preserving) → stage the range's
-  * end offset under the group → commit. A crash anywhere before the
-  * commit leaves data invisible (aborted at the next init) and the
-  * offset unmoved — the next epoch re-relays the same range.
-  * [[relayAll]] loops epochs until a pass moves nothing.
-  *
-  * Scale shape: tasks are independent single-connection relays, one per
-  * (topic, partition) — data bytes never touch the driver; `cap` bounds
-  * per-epoch transaction size (a real deployment's
-  * `transaction.timeout.ms` pressure valve).
-  *
-  * Fence races resolve IN the task ([[KafkaEosIngest.retryFenced]]): a
-  * rival incarnation of the slot — typically a killed-but-still-running
-  * task of a failed prior epoch whose init lands AFTER this task's —
-  * bumps the producer epoch and this attempt's next transactional RPC
-  * dies with INVALID_PRODUCER_EPOCH. Nothing of the fenced attempt
-  * survives, so the task re-runs its whole body: re-init (re-fencing the
-  * rival), re-read the committed offset (absorbing anything the rival
-  * committed), relay the remainder. Bounded, loud past the bound.
+  * produce loop in its purest form (sea-streamer-kafka/src/producer.rs:
+  * 236-301): the resume point IS the consumer group's committed offset,
+  * staged inside the destination transaction. [[KafkaEosSink]] is the
+  * Spark-idiomatic half (foreachBatch epochs, Spark's offset WAL drives
+  * replay); this is the broker-anchored half — lose the checkpoint
+  * directory entirely, restart anywhere, the group offsets say exactly
+  * what was relayed. Both ends are one cluster: [[RelayDriver]] over a
+  * [[KafkaRelaySource]] and a [[KafkaTxnDestination]].
   */
 object KafkaEosRelay {
 
+  private def ends(host: String, port: Int, topics: Seq[String],
+      dst: String => String, group: String, txnIdPrefix: String, cap: Long,
+      maxFetchBytes: Int, sasl: Option[(String, String)],
+      saslMechanism: String, tls: Option[KafkaTls.Client],
+      crashBeforeCommit: Option[String], raceAfterFence: Option[String]) = {
+    topics.foreach(t =>
+      require(dst(t) != t, s"relay destination of $t must differ"))
+    (KafkaRelaySource(host, port, topics, cap, maxFetchBytes, sasl,
+      saslMechanism, tls),
+      KafkaTxnDestination(host, port, group, txnIdPrefix, dst, sasl,
+        saslMechanism, tls, crashBeforeCommit, raceAfterFence))
+  }
+
   /** One bounded exactly-once relay epoch; returns rows relayed (0 =
-    * fully drained). `dst` maps source topic → destination topic (must
-    * differ). `crashBeforeCommit` is [[KafkaEosSink.arm]]'s failpoint —
-    * exactly one task dies after producing + staging, before commit.
+    * fully drained or an advance-only epoch). `dst` maps source topic →
+    * destination topic (must differ). `crashBeforeCommit` is
+    * [[KafkaEosSink.arm]]'s failpoint — exactly one task dies after
+    * producing + staging, before commit.
     */
   def relayOnce(spark: SparkSession, host: String, port: Int,
       topics: Seq[String], dst: String => String, group: String,
@@ -57,142 +43,22 @@ object KafkaEosRelay {
       saslMechanism: String = "PLAIN",
       tls: Option[KafkaTls.Client] = None,
       crashBeforeCommit: Option[String] = None,
-      raceAfterFence: Option[String] = None): Long =
-    relayEpoch(spark, host, port, topics, dst, group, txnIdPrefix, cap,
+      raceAfterFence: Option[String] = None): Long = {
+    val (s, d) = ends(host, port, topics, dst, group, txnIdPrefix, cap,
       maxFetchBytes, sasl, saslMechanism, tls, crashBeforeCommit,
-      raceAfterFence)._2
-
-  /** [[relayOnce]] plus the epoch's PLANNED range count — the drain
-    * loops on planned work, not on rows moved: an epoch that only
-    * ADVANCES cursors (an all-aborted or truncated cap-range commits
-    * its offsets but relays zero rows) must not read as "drained" while
-    * committed records still pend above it (round-16 self-review).
-    */
-  private[graft] def relayEpoch(spark: SparkSession, host: String, port: Int,
-      topics: Seq[String], dst: String => String, group: String,
-      txnIdPrefix: String, cap: Long,
-      maxFetchBytes: Int,
-      sasl: Option[(String, String)],
-      saslMechanism: String,
-      tls: Option[KafkaTls.Client],
-      crashBeforeCommit: Option[String],
-      raceAfterFence: Option[String]): (Int, Long) = {
-    require(cap > 0, "cap must be positive")
-    val planner = new KafkaClient(host, port, sasl = sasl,
-      saslMechanism = saslMechanism, tls = tls)
-    val ranges = try {
-      planner.findCoordinator(group)
-      val meta = planner.metadata(topics)
-      topics.flatMap { t =>
-        require(dst(t) != t, s"relay destination of $t must differ")
-        val parts = meta.getOrElse(t, Seq.empty)
-        val committed = if (parts.isEmpty) Map.empty[(String, Int), Long]
-          else planner.fetchOffsets(group, Map(t -> parts))
-        parts.map { p =>
-          // the relayable tip is the LAST STABLE OFFSET, not the high
-          // watermark: pointed at a transactional source (this repo's own
-          // KafkaEosSink output is the natural chain), a hw-planned range
-          // would page into open transactions; one empty read_committed
-          // fetch at the hw resolves the LSO (KafkaSource.planRanges'
-          // probe pattern)
-          val hw = planner.listOffset(t, p, KafkaWire.Ts.Latest)
-            .getOrElse(0L)
-          val tip = planner.fetchIso(t, p, hw, maxBytes = 1,
-            readCommitted = true)._1
-          val from = committed.getOrElse((t, p), 0L)
-          (t, p, from, math.min(tip, from + cap))
-        }
-      }.filter(r => r._4 > r._3)
-    } finally planner.close()
-    if (ranges.isEmpty) (0, 0L)
-    else (ranges.size, spark.sparkContext.parallelize(ranges, ranges.size)
-      .map { case (topic, part, from, until) =>
-        def attempt(): Long = {
-        val client = new KafkaClient(host, port, sasl = sasl,
-          saslMechanism = saslMechanism, tls = tls)
-        try {
-          // fence FIRST, read the resume point second: after the epoch
-          // bump no zombie commit can advance (or abort-drop) the offset
-          // this task is about to trust
-          val producer = new KafkaTxnProducer(client,
-            s"$txnIdPrefix-$topic-$part").initTransactions()
-          client.findCoordinator(group)
-          val committed = client.fetchOffsets(group, Map(topic -> Seq(part)))
-            .getOrElse((topic, part), 0L)
-          raceAfterFence.foreach(graft.ops.Failpoints.fireHook)
-          if (committed >= until) 0L // range already landed — replay skip
-          else {
-            val to = dst(topic)
-            val dstParts = client.metadata(Seq(to)).getOrElse(to, Seq.empty)
-            require(dstParts.size > part,
-              s"destination $to lacks partition $part")
-            producer.begin()
-            var next = math.max(from, committed)
-            var n = 0L
-            while (next < until) {
-              // read_committed: an exactly-once relay must never forward
-              // aborted or still-open transactions from its source; the
-              // nextOffset cursor (not record offsets) advances past
-              // all-aborted pages and control markers without stalling
-              val (_, page, recs) =
-                client.fetchIso(topic, part, next, maxFetchBytes,
-                  readCommitted = true)
-              if (page <= next) {
-                // an empty page below an LSO-capped `until` has exactly
-                // one legitimate cause: retention truncated the log under
-                // us. Confirm against the log-start offset before
-                // skipping — fast-forwarding for any OTHER cause would
-                // silently lose data while still committing the offset
-                val logStart = client
-                  .listOffset(topic, part, KafkaWire.Ts.Earliest)
-                  .getOrElse(0L)
-                if (logStart > next) next = math.min(logStart, until)
-                else throw new IllegalStateException(
-                  s"relay stalled: $topic/$part fetch at $next returned " +
-                    s"no progress (page=$page) but log starts at " +
-                    s"$logStart — refusing to skip unrelayed records")
-              } else {
-                val keep = recs.takeWhile(_.offset < until)
-                if (keep.nonEmpty) {
-                  producer.send(to, part,
-                    keep.map(r => (r.tsMs, r.key, r.value)))
-                  n += keep.length
-                }
-                next = math.min(page, until)
-              }
-            }
-            producer.sendOffsetsToTransaction(group,
-              Map((topic, part) -> until))
-            if (crashBeforeCommit.exists(KafkaEosSink.fire))
-              throw new IllegalStateException(
-                s"injected crash: relay $topic/$part [$from,$until) " +
-                  "produced + staged, not committed")
-            producer.commit()
-            n
-          }
-        } finally client.close()
-        }
-        KafkaEosIngest.retryFenced(s"relay $topic/$part")(attempt())
-      }.sum().toLong)
+      raceAfterFence)
+    RelayDriver.once(spark, s, d)
   }
 
-  /** Drain the source completely: epochs until one moves nothing. */
+  /** Drain the source completely: epochs until one plans nothing. */
   def relayAll(spark: SparkSession, host: String, port: Int,
       topics: Seq[String], dst: String => String, group: String,
       txnIdPrefix: String, cap: Long = 100000L,
       sasl: Option[(String, String)] = None,
       saslMechanism: String = "PLAIN",
       tls: Option[KafkaTls.Client] = None): Long = {
-    var total = 0L
-    var planned = -1
-    // loop on PLANNED ranges: an advance-only epoch (all-aborted or
-    // truncated cap-range) moves zero rows while records still pend
-    while (planned != 0) {
-      val (p, moved) = relayEpoch(spark, host, port, topics, dst, group,
-        txnIdPrefix, cap, 1 << 20, sasl, saslMechanism, tls, None, None)
-      planned = p
-      total += moved
-    }
-    total
+    val (s, d) = ends(host, port, topics, dst, group, txnIdPrefix, cap,
+      1 << 20, sasl, saslMechanism, tls, None, None)
+    RelayDriver.all(spark, s, d)
   }
 }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{AdmissionShares, Envelope, SeaMessage}
+import graft.core.{AdmissionShares, DenseOffset, Envelope, SeaMessage,
+  SourceOptions}
 import graft.kafka.{KafkaClient, KafkaWire}
 import graft.ss.spark.SsRows
 
@@ -69,32 +70,6 @@ class KafkaTable(options: CaseInsensitiveStringMap)
   }
 }
 
-/** `{"offs":{"<topic>/<partition>":<nextOffset>}}` — same shape as the iggy
-  * source (topic names are valid stream keys, so '/' and '"' never appear).
-  */
-final case class KafkaOffsetV2(offs: Map[(String, Int), Long]) extends Offset {
-  override def json(): String =
-    offs.toSeq.sortBy { case ((t, p), _) => (t, p) }
-      .map { case ((t, p), o) => s""""$t/$p":$o""" }
-      .mkString("{\"offs\":{", ",", "}}")
-}
-
-object KafkaOffsetV2 {
-  def fromJson(json: String): KafkaOffsetV2 = {
-    val inner = json.trim.stripPrefix("{\"offs\":{").stripSuffix("}}")
-    if (inner.isEmpty) KafkaOffsetV2(Map.empty)
-    else KafkaOffsetV2(inner.split(',').map { pair =>
-      val sep = pair.indexOf("\":")
-      if (sep < 0)
-        throw new IllegalArgumentException(s"bad KafkaOffsetV2 pair: $pair")
-      val key = pair.substring(0, sep).stripPrefix("\"")
-      val slash = key.lastIndexOf('/')
-      (key.substring(0, slash), key.substring(slash + 1).toInt) ->
-        pair.substring(sep + 2).toLong
-    }.toMap)
-  }
-}
-
 final case class KafkaInputPartition(
     host: String, port: Int, topic: String, partition: Int,
     from: Long, until: Long, maxFetchBytes: Int,
@@ -136,16 +111,8 @@ class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
   if (latest && startingTimestamp.isDefined)
     throw new IllegalArgumentException(
       "startingOffsets=latest conflicts with startingTimestamp")
-  private val maxOffsetsPerTrigger: Option[Long] = {
-    val v = options.get("maxOffsetsPerTrigger")
-    if (v == null || v.isEmpty) None
-    else {
-      val n = v.toLong
-      if (n <= 0) throw new IllegalArgumentException(
-        s"maxOffsetsPerTrigger must be positive, got $n")
-      Some(n)
-    }
-  }
+  private val maxOffsetsPerTrigger: Option[Long] =
+    SourceOptions.positive(options, "maxOffsetsPerTrigger")
   /** Consumer group (the builtin connector's `kafka.group.id` role): start
     * from the group's COMMITTED offsets when present (falling back to
     * startingOffsets/startingTimestamp per partition), and commit each
@@ -185,15 +152,8 @@ class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
     * to the broker the same way; at scale this is what makes a
     * two-consumer split read each byte once).
     */
-  private val assign: Option[Set[(String, Int)]] = {
-    val v = options.get("assign")
-    if (v == null || v.isEmpty) None
-    else Some(v.split(',').map(_.trim).filter(_.nonEmpty).map { s =>
-      val i = s.lastIndexOf(':')
-      require(i > 0, s"assign entry '$s' must be topic:partition")
-      (s.substring(0, i), s.substring(i + 1).toInt)
-    }.toSet)
-  }
+  private val assign: Option[Set[(String, Int)]] =
+    SourceOptions.assign(options)
   private def keep(t: String, p: Int): Boolean =
     assign.forall(_.contains((t, p)))
 
@@ -252,7 +212,7 @@ class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
         ids ++ committed.view.filterKeys(ids.contains).toMap
       }
     }
-    KafkaOffsetV2(resumed)
+    DenseOffset(resumed)
   }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -263,7 +223,7 @@ class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
     * on the driver, O(#partitions) metadata per trigger.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val after = start.asInstanceOf[KafkaOffsetV2].offs
+    val after = start.asInstanceOf[DenseOffset].offs
     val tip = tips()
     val ends = limit match {
       case r: ReadMaxRows =>
@@ -281,7 +241,7 @@ class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
     }
     // a topic can vanish from the sweep — its committed position must
     // survive in the offset (same law as the redis/iggy sources)
-    KafkaOffsetV2(after ++ ends)
+    DenseOffset(after ++ ends)
   }
 
   override def latestOffset(): Offset =
@@ -290,8 +250,8 @@ class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
         "Spark calls latestOffset(start, limit)")
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[KafkaOffsetV2].offs
-    val e = end.asInstanceOf[KafkaOffsetV2].offs
+    val s = start.asInstanceOf[DenseOffset].offs
+    val e = end.asInstanceOf[DenseOffset].offs
     (e.keySet ++ s.keySet).toSeq.sorted.flatMap { case (t, p) =>
       val from = s.getOrElse((t, p), 0L)
       val until = e.getOrElse((t, p), from)
@@ -308,14 +268,14 @@ class KafkaMicroBatchStream(options: CaseInsensitiveStringMap)
     }
 
   override def deserializeOffset(json: String): Offset =
-    KafkaOffsetV2.fromJson(json)
+    DenseOffset.fromJson(json)
 
   /** Epoch commit → OffsetCommit of the batch's end offsets (at-least-once
     * group progress; the checkpoint remains the within-query truth).
     */
   override def commit(end: Offset): Unit =
     group.foreach { g =>
-      val offs = end.asInstanceOf[KafkaOffsetV2].offs
+      val offs = end.asInstanceOf[DenseOffset].offs
       if (offs.nonEmpty) withClient(_.commitOffsets(g, offs))
     }
   override def stop(): Unit = ()

@@ -115,8 +115,8 @@ final class EmbeddedRedis(
     * key (a connection that dies pre-EXEC discards its queue, exactly
     * real redis's contract). An uncontended read lock is a CAS — measured
     * ~35% cheaper on the 20-connection producer path than a single
-    * exclusive lock (RedisLockProbe), while keeping the same atomicity
-    * guarantees; nothing in [[handle]] blocks while holding it. */
+    * exclusive lock (receipt in BENCH_LOCAL.md), while keeping the same
+    * atomicity guarantees; nothing in [[handle]] blocks while holding it. */
   private val txLock = new java.util.concurrent.locks.ReentrantReadWriteLock
   /** Per-key modification counter driving WATCH/EXEC optimistic locking:
     * bumped (under [[txLock]]) by every command that mutates the key, so

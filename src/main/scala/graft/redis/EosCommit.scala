@@ -1,9 +1,8 @@
 package graft.redis
 
 /** The ONE exactly-once commit protocol for every redis-DESTINATION
-  * relay engine ([[RedisEosPump]], [[RedisEosRelay]],
-  * [[graft.iggy.IggyEosRelay]]'s redis leg via [[commit]], and the file
-  * shipper [[graft.ss.SsEosShip]]'s multi-key sub-epochs via
+  * relay ([[graft.eos.RedisLedgerDestination]] via [[commit]], and the
+  * file shipper [[graft.ss.SsEosShip]]'s multi-key sub-epochs via
   * [[commitKeyed]]) — the round-16 self-review found the
   * WATCH/skip/filter/floor/MULTI/EXEC/retry machinery triplicated and
   * already drifting, and round 17 folded the shipper's last private
@@ -79,7 +78,7 @@ private[graft] object EosCommit {
     * pends — re-fence as advance-only (ledger WATCH alone). */
   private case object DropKeyWatch extends Outcome
 
-  /** Single-destination-key form — the pump/relay engines' shape. */
+  /** Single-destination-key form — the relay driver's shape. */
   def commit(rc: RedisClient, ledger: String, dstKey: String,
       entries: Vector[(Long, Long, Array[Byte])],
       finalCursor: Long, label: String,

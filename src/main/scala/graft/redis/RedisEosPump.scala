@@ -2,60 +2,18 @@ package graft.redis
 
 import org.apache.spark.sql.SparkSession
 
-/** Exactly-once Redis→Redis pump — the last corner of the EOS relay
-  * matrix ([[graft.kafka.KafkaEosRelay]] kafka→kafka,
-  * [[RedisEosRelay]] kafka→redis, [[graft.kafka.KafkaEosIngest]]
-  * redis→kafka). Both ends are redis streams, so the resume point is
-  * DESTINATION-anchored exactly as in [[RedisEosRelay]]: each source
-  * (stream, shard) keeps the packed id of its next unrelayed entry
-  * (sea-streamer-redis/src/message.rs:27-64's `(ms << 16) | sub_seq`
-  * SeqNo) in a destination-side ledger key `prefix:{<stream>/<shard>}`,
-  * and every relay transaction commits the shard's entries AND the
-  * advanced cursor in ONE WATCH-fenced MULTI/EXEC on the destination.
-  * Kill everything but the destination redis, restart anywhere — the
-  * ledger says exactly what landed. (Mirroring across redis instances —
-  * DR replicas, region moves, stream re-sharding — is precisely where
-  * this shape earns its keep: no third system holds the cursor.)
-  *
-  * One epoch ([[relayOnce]]) plans per-(stream, shard) ranges on the
-  * driver (source `XREVRANGE key + - COUNT 1` tip probes + destination
-  * ledger GETs — O(#shards) RPCs, no data), then each shard relays in
-  * its own task: page the source `XRANGE` into a bounded in-memory
-  * buffer FIRST (unwatched — the slow phase must not widen the watch
-  * window), then WATCH the ledger AND the destination key, re-read the
-  * cursor under the watch (a rival attempt — speculative task,
-  * stalled-but-alive zombie — can no longer win silently: the first
-  * EXEC moves a watched key, every other EXEC nils out, and a rival's
-  * PARTIAL commit filters frame-exactly from the buffer), read the
-  * destination tip-ms floor, queue every XADD plus the advanced-cursor
-  * SET in one MULTI, EXEC. A nil re-queues from memory with a fresh
-  * cursor and floor after a jittered sit-out (a foreign producer on
-  * the destination stream is legal and must not livelock the relay).
-  * A crash before EXEC takes the queue with it — nothing lands, the
-  * cursor holds, the next epoch re-relays the same range. [[relayAll]]
-  * loops until an epoch moves nothing.
-  *
-  * The ledger key hash-tags the braced `<stream>/<shard>` pair; on a
-  * destination CLUSTER the per-shard transaction must keep entries and
-  * ledger in one hash slot ([[RedisSource.writeExactlyOnceCluster]]'s
-  * per-key tag pattern) — this single-node form keeps the reference
-  * consumer's `stream:shard` destination key naming readable instead.
-  *
-  * Scale shape: tasks are independent single-connection relays, one per
-  * (stream, shard) — data bytes never touch the driver; `cap` bounds
-  * the per-epoch MULTI (redis holds the whole queue in memory until
-  * EXEC), and the tip is pinned at plan time so a live source producer
-  * never turns an epoch into an unbounded chase.
+import graft.eos.{RedisLedgerDestination, RedisRelaySource, RelayDriver}
+
+/** Exactly-once Redis→Redis pump: [[RelayDriver]] over a
+  * [[RedisRelaySource]] and a [[RedisLedgerDestination]] — each source
+  * (stream, shard) keeps the packed id of its next unrelayed entry in
+  * the destination-side ledger key `prefix:{<stream>/<shard>}`. Kill
+  * everything but the destination redis, restart anywhere — the ledger
+  * says exactly what landed. (Mirroring across redis instances — DR
+  * replicas, region moves, stream re-sharding — is where this shape
+  * earns its keep: no third system holds the cursor.)
   */
 object RedisEosPump {
-
-  private def ledgerKey(prefix: String, stream: String, shard: Long): String =
-    s"$prefix:{$stream/$shard}"
-
-  private def cursorOf(v: Resp.Value): Long = v match {
-    case Resp.Bulk(bs) => new String(bs, "UTF-8").toLong
-    case _ => 0L
-  }
 
   /** One bounded exactly-once pump epoch; returns entries relayed
     * (0 = drained to the planned tips). `streamOf` maps source stream →
@@ -81,134 +39,12 @@ object RedisEosPump {
         * destination key must nil the EXEC (it is WATCHed), never let
         * real redis refuse entries inside it. */
       raceBeforeExec: Option[String] = None): Long =
-    relayEpoch(spark, srcHost, srcPort, shards, streamOf, dstHost,
-      dstPort, ledgerPrefix, cap, page, srcTls, srcAuth, dstTls, dstAuth,
-      crashBeforeCommit, raceAfterRead, raceBeforeExec)._2
+    RelayDriver.once(spark,
+      RedisRelaySource(srcHost, srcPort, shards, cap, page, srcTls, srcAuth),
+      RedisLedgerDestination(dstHost, dstPort, ledgerPrefix, streamOf,
+        dstTls, dstAuth, crashBeforeCommit, raceAfterRead, raceBeforeExec))
 
-  /** [[relayOnce]] plus the epoch's PLANNED range count — the drain
-    * loops on planned work, not entries moved.
-    */
-  private[graft] def relayEpoch(spark: SparkSession,
-      srcHost: String, srcPort: Int, shards: Seq[(String, Long)],
-      streamOf: String => String,
-      dstHost: String, dstPort: Int, ledgerPrefix: String,
-      cap: Long, page: Int,
-      srcTls: Option[RedisClient.Tls],
-      srcAuth: Option[RedisClient.Auth],
-      dstTls: Option[RedisClient.Tls],
-      dstAuth: Option[RedisClient.Auth],
-      crashBeforeCommit: Option[String],
-      raceAfterRead: Option[String],
-      raceBeforeExec: Option[String]): (Int, Long) = {
-    require(cap > 0, "cap must be positive")
-    require(page > 0, "page must be positive")
-    val src = new RedisClient(srcHost, srcPort, tls = srcTls, auth = srcAuth)
-    val dst = new RedisClient(dstHost, dstPort, tls = dstTls, auth = dstAuth)
-    val ranges = try {
-      shards.flatMap { case (stream, shard) =>
-        val key = RedisStreams.shardedKey(stream, shard, sharded = true)
-        src.command(RedisStreams.xrevrangeTip(key): _*) match {
-          case v: Resp.Arr =>
-            RedisStreams.decodeEntriesWithIds(v, stream, shard)
-              .headOption.flatMap { case (rawId, _) =>
-                // the cursor rides the PACKED id: saturation aliases it
-                RedisStreams.guardSubSeq(rawId)
-                val (ms, sub) = RedisStreams.parseEntryId(rawId)
-                val tipNext = RedisStreams.packSeqNo(ms, sub) + 1L
-                val cursor = cursorOf(dst.command(
-                  RedisStreams.get(ledgerKey(ledgerPrefix, stream, shard)): _*))
-                if (tipNext > cursor) Some((stream, shard, tipNext))
-                else None
-              }
-          case _ => None
-        }
-      }
-    } finally { src.close(); dst.close() }
-    if (ranges.isEmpty) (0, 0L)
-    else (ranges.size, spark.sparkContext.parallelize(ranges, ranges.size)
-      .map { case (stream, shard, tipNext) =>
-        val sc = new RedisClient(srcHost, srcPort, tls = srcTls, auth = srcAuth)
-        val dc = new RedisClient(dstHost, dstPort, tls = dstTls, auth = dstAuth)
-        val ledger = ledgerKey(ledgerPrefix, stream, shard)
-        val srcKey = RedisStreams.shardedKey(stream, shard, sharded = true)
-        val dstKey = RedisStreams.shardedKey(streamOf(stream), shard,
-          sharded = true)
-        def plainCursor(): Long =
-          cursorOf(dc.command(RedisStreams.get(ledger): _*))
-        // Read the source range [from, tipNext) into a bounded buffer
-        // UNWATCHED: the cap/page XRANGE paging is the slow phase, and
-        // holding the destination-key WATCH across it would let ANY
-        // foreign append on the destination nil the EXEC — a relay into
-        // a stream a plain producer also feeds (legal; the tip-ms floor
-        // clamp exists for exactly that) must ride out contention, not
-        // livelock on a multi-second window.
-        def readSource(from: Long,
-            budget: Long): Vector[(String, graft.core.SeaMessage)] = {
-          val out = Vector.newBuilder[(String, graft.core.SeaMessage)]
-          // exact BECAUSE of guardSubSeq: every entry that ever advanced
-          // this cursor had sub < 0xFFFF, where packing is bijective —
-          // reconstructing a wire id from a packed SeqNo is otherwise
-          // forbidden (packSeqNo's doc)
-          var start = RedisStreams.entryId(from >>> 16, from & 0xFFFFL)
-          var n = 0L
-          var drained = false
-          while (!drained && n < budget) {
-            val want = math.min(page.toLong, budget - n).toInt
-            val entries = RedisStreams.decodeEntriesWithIds(
-              sc.command(RedisStreams.xrange(srcKey, start, "+", Some(want)): _*),
-              stream, shard)
-            val keep = entries.takeWhile(_._2.sequence < tipNext)
-            // the 64k/ms/shard ceiling, checked on every RELAYED entry
-            // (the tip guard alone misses saturated mid-range ids)
-            keep.foreach { case (rawId, _) => RedisStreams.guardSubSeq(rawId) }
-            if (keep.nonEmpty) {
-              out ++= keep
-              n += keep.length
-              start = RedisStreams.idSuccessor(keep.last._1)
-            }
-            drained = keep.length < want || keep.length < entries.length
-          }
-          out.result()
-        }
-        try {
-          var total = 0L
-          // the per-shard epoch budget counts CURSOR PROGRESS — source
-          // entries consumed from the planned start — not entries this
-          // task committed: EosCommit excludes a rival's share, so
-          // budgeting on the return value would let a rival-assisted
-          // epoch move more than `cap` entries for the shard and exceed
-          // the bounded-transaction law (ADVICE r16)
-          var consumed = 0L
-          var done = false
-          while (!done) {
-            val from = plainCursor()
-            if (from >= tipNext || consumed >= cap) done = true
-            else {
-              val buffer = readSource(from, cap - consumed)
-              if (buffer.isEmpty) done = true // trimmed/empty below tip
-              else {
-                consumed += buffer.length
-                total += EosCommit.commit(dc, ledger, dstKey,
-                  buffer.map { case (_, m) =>
-                    (m.sequence, m.timestamp.getTime, m.payload)
-                  },
-                  finalCursor = buffer.last._2.sequence + 1L,
-                  label = s"pump $stream/$shard",
-                  crashBeforeCommit = crashBeforeCommit,
-                  raceAfterRead = raceAfterRead,
-                  raceBeforeExec = raceBeforeExec)
-                // a rival covering the batch returns 0 — the loop
-                // re-reads the cursor and keeps draining toward the
-                // planned tip (within this epoch's consumed budget)
-              }
-            }
-          }
-          total
-        } finally { sc.close(); dc.close() }
-      }.sum().toLong)
-  }
-
-  /** Drain the source completely: epochs until one moves nothing. */
+  /** Drain the source completely: epochs until one plans nothing. */
   def relayAll(spark: SparkSession,
       srcHost: String, srcPort: Int, shards: Seq[(String, Long)],
       streamOf: String => String,
@@ -217,17 +53,9 @@ object RedisEosPump {
       srcTls: Option[RedisClient.Tls] = None,
       srcAuth: Option[RedisClient.Auth] = None,
       dstTls: Option[RedisClient.Tls] = None,
-      dstAuth: Option[RedisClient.Auth] = None): Long = {
-    var total = 0L
-    var planned = -1
-    // loop on PLANNED ranges (advance-only epochs move zero entries)
-    while (planned != 0) {
-      val (p, moved) = relayEpoch(spark, srcHost, srcPort, shards,
-        streamOf, dstHost, dstPort, ledgerPrefix, cap, page,
-        srcTls, srcAuth, dstTls, dstAuth, None, None, None)
-      planned = p
-      total += moved
-    }
-    total
-  }
+      dstAuth: Option[RedisClient.Auth] = None): Long =
+    RelayDriver.all(spark,
+      RedisRelaySource(srcHost, srcPort, shards, cap, page, srcTls, srcAuth),
+      RedisLedgerDestination(dstHost, dstPort, ledgerPrefix, streamOf,
+        dstTls, dstAuth))
 }

@@ -2,62 +2,24 @@ package graft.redis
 
 import org.apache.spark.sql.SparkSession
 
-import graft.kafka.{KafkaClient, KafkaTls, KafkaWire}
+import graft.eos.{KafkaRelaySource, RedisLedgerDestination, RelayDriver}
+import graft.kafka.KafkaTls
 
-/** Exactly-once Kafka→Redis relay — the DESTINATION-anchored twin of
-  * [[graft.kafka.KafkaEosRelay]]. The kafka relay stages source offsets
-  * inside the kafka transaction (sea-streamer-kafka/src/producer.rs:
-  * 236-301's send_offsets_to_transaction); when the destination is redis
-  * there is no kafka transaction to stage into, so the resume point
-  * moves INTO the destination store: each (topic, partition) keeps its
-  * committed source offset in a redis ledger key
-  * `prefix:{<topic>/<partition>}`, and every relay transaction commits
-  * the partition's entries AND the advanced offset in ONE WATCH-fenced
-  * MULTI/EXEC. This is the classic consume-kafka/write-store-with-
-  * offsets-in-store pattern: no Spark checkpoint, no kafka group — kill
-  * the driver, lose everything but redis, restart anywhere, and the
-  * ledger says exactly what landed.
-  *
-  * One epoch ([[relayOnce]]) plans per-(topic, partition) ranges
-  * [committed, min(LSO, committed + cap)) on the driver (Metadata +
-  * ledger GETs + one isolation-probe fetch — O(#partitions) RPCs, no
-  * data), then each range relays in its own task: fetch the
-  * read_committed pages into a bounded in-memory buffer FIRST
-  * (unwatched — the slow phase must not widen the watch window), then
-  * WATCH the ledger AND the destination key, re-read the committed
-  * offset under the watch (a rival attempt of the same range —
-  * speculative task, stalled-but-alive zombie — can no longer win
-  * silently: the first EXEC moves a watched key, every other EXEC nils
-  * out, and a rival's partial commit filters exactly by record
-  * offset), read the destination tip-ms floor, queue every XADD plus
-  * the advanced-offset SET in one MULTI, EXEC. A nil re-queues from
-  * memory with a fresh offset and floor after a jittered sit-out. A
-  * crash anywhere before EXEC takes the connection and its queue with
-  * it — no entries, no offset move, the next epoch re-relays the same
-  * range. [[relayAll]] loops epochs until a pass moves nothing.
-  *
-  * The ledger key hash-tags the braced `<topic>/<partition>` pair, and
-  * the destination stream key is `streamOf(topic):partition` — on a
-  * redis CLUSTER deployment the per-partition transaction must keep
-  * both in one hash slot, which [[RedisSource.writeExactlyOnceCluster]]
-  * demonstrates with per-key tags; this single-node form keeps the
-  * reference consumer's `stream:shard` key naming readable instead.
-  *
-  * Scale shape: tasks are independent single-connection relays, one per
-  * (topic, partition) — data bytes never touch the driver; `cap` bounds
-  * the per-epoch MULTI (redis holds the whole queue in memory until
-  * EXEC, so cap is the transaction-size pressure valve).
+/** Exactly-once Kafka→Redis relay: [[RelayDriver]] over a
+  * [[KafkaRelaySource]] and a [[RedisLedgerDestination]] — each (topic,
+  * partition) keeps its committed source offset in the destination
+  * ledger key `prefix:{<topic>/<partition>}`, committed with the
+  * partition's entries in one WATCH-fenced MULTI/EXEC (the classic
+  * consume-kafka/write-store-with-offsets-in-store pattern). The source
+  * partition becomes the destination shard.
   */
 object RedisEosRelay {
 
-  private def ledgerKey(prefix: String, topic: String, part: Int): String =
-    s"$prefix:{$topic/$part}"
-
   /** One bounded exactly-once relay epoch; returns records relayed
-    * (0 = fully drained). `streamOf` maps source topic → destination
-    * stream name; the source partition becomes the shard.
-    * `crashBeforeCommit` is [[graft.ops.Failpoints]]' one-shot token —
-    * the matching task dies with its MULTI queued, before EXEC.
+    * (0 = fully drained or an advance-only epoch). `streamOf` maps source
+    * topic → destination stream name. `crashBeforeCommit` is
+    * [[graft.ops.Failpoints]]' one-shot token — the matching task dies
+    * with its MULTI queued, before EXEC.
     */
   def relayOnce(spark: SparkSession,
       kafkaHost: String, kafkaPort: Int, topics: Seq[String],
@@ -71,114 +33,13 @@ object RedisEosRelay {
       redisAuth: Option[RedisClient.Auth] = None,
       crashBeforeCommit: Option[String] = None,
       raceAfterRead: Option[String] = None): Long =
-    relayEpoch(spark, kafkaHost, kafkaPort, topics, streamOf, redisHost,
-      redisPort, ledgerPrefix, cap, maxFetchBytes, sasl, saslMechanism,
-      kafkaTls, redisTls, redisAuth, crashBeforeCommit, raceAfterRead)._2
+    RelayDriver.once(spark,
+      KafkaRelaySource(kafkaHost, kafkaPort, topics, cap, maxFetchBytes, sasl,
+        saslMechanism, kafkaTls),
+      RedisLedgerDestination(redisHost, redisPort, ledgerPrefix, streamOf,
+        redisTls, redisAuth, crashBeforeCommit, raceAfterRead))
 
-  /** [[relayOnce]] plus the epoch's PLANNED range count — the drain
-    * loops on planned work, not rows moved (an advance-only epoch over
-    * an all-aborted/truncated range must not read as drained).
-    */
-  private[graft] def relayEpoch(spark: SparkSession,
-      kafkaHost: String, kafkaPort: Int, topics: Seq[String],
-      streamOf: String => String,
-      redisHost: String, redisPort: Int, ledgerPrefix: String,
-      cap: Long, maxFetchBytes: Int,
-      sasl: Option[(String, String)],
-      saslMechanism: String,
-      kafkaTls: Option[KafkaTls.Client],
-      redisTls: Option[RedisClient.Tls],
-      redisAuth: Option[RedisClient.Auth],
-      crashBeforeCommit: Option[String],
-      raceAfterRead: Option[String]): (Int, Long) = {
-    require(cap > 0, "cap must be positive")
-    val planner = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-      saslMechanism = saslMechanism, tls = kafkaTls)
-    val ledgers = new RedisClient(redisHost, redisPort,
-      tls = redisTls, auth = redisAuth)
-    val ranges = try {
-      val meta = planner.metadata(topics)
-      topics.flatMap { t =>
-        meta.getOrElse(t, Seq.empty).map { p =>
-          val committed =
-            ledgers.command(RedisStreams.get(ledgerKey(ledgerPrefix, t, p)): _*) match {
-              case Resp.Bulk(bs) => new String(bs, "UTF-8").toLong
-              case _ => 0L
-            }
-          // the relayable tip is the LSO (read_committed): aborted and
-          // still-open source transactions must never land in redis
-          val hw = planner.listOffset(t, p, KafkaWire.Ts.Latest).getOrElse(0L)
-          val lso = planner.fetchIso(t, p, hw, maxBytes = 1,
-            readCommitted = true)._1
-          (t, p, committed, math.min(lso, committed + cap))
-        }
-      }.filter(r => r._4 > r._3)
-    } finally { planner.close(); ledgers.close() }
-    if (ranges.isEmpty) (0, 0L)
-    else (ranges.size, spark.sparkContext.parallelize(ranges, ranges.size)
-      .map { case (topic, part, _, until) =>
-        val kc = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-          saslMechanism = saslMechanism, tls = kafkaTls)
-        val rc = new RedisClient(redisHost, redisPort,
-          tls = redisTls, auth = redisAuth)
-        val ledger = ledgerKey(ledgerPrefix, topic, part)
-        val stream = streamOf(topic)
-        val key = RedisStreams.shardedKey(stream, part.toLong,
-          sharded = true)
-        def plainCursor(): Long =
-          rc.command(RedisStreams.get(ledger): _*) match {
-            case Resp.Bulk(bs) => new String(bs, "UTF-8").toLong
-            case _ => 0L
-          }
-        // Fetch [from, until) into a bounded buffer UNWATCHED: the
-        // read_committed paging is the slow phase, and holding the
-        // destination-key WATCH across it would let ANY foreign append
-        // on the destination stream nil the EXEC — a relay into a
-        // stream a plain producer also feeds (legal; the tip-ms floor
-        // clamp exists for exactly that) must ride out contention, not
-        // livelock on a multi-second window.
-        def readSource(from: Long): Vector[(Long, Long, Array[Byte])] = {
-          val out = Vector.newBuilder[(Long, Long, Array[Byte])]
-          var next = from
-          while (next < until) {
-            val (_, page, recs) = kc.fetchIso(topic, part, next,
-              maxFetchBytes, readCommitted = true)
-            if (page <= next) {
-              // empty page below an LSO-capped until: only retention
-              // truncation may fast-forward (KafkaEosRelay's rule)
-              val logStart = kc
-                .listOffset(topic, part, KafkaWire.Ts.Earliest)
-                .getOrElse(0L)
-              if (logStart > next) next = math.min(logStart, until)
-              else throw new IllegalStateException(
-                s"relay stalled: $topic/$part fetch at $next returned " +
-                  s"no progress (page=$page) but log starts at $logStart")
-            } else {
-              out ++= recs.takeWhile(_.offset < until)
-                .map(r => (r.offset, r.tsMs, r.value))
-              next = math.min(page, until)
-            }
-          }
-          out.result()
-        }
-        try {
-          val from = plainCursor()
-          if (from >= until) 0L
-          else {
-            // an empty buffer (fully-truncated/aborted range) still
-            // advances the cursor under the same fence — consumed
-            // positions, committed as an advance-only transaction
-            EosCommit.commit(rc, ledger, key, readSource(from),
-              finalCursor = until,
-              label = s"relay $topic/$part",
-              crashBeforeCommit = crashBeforeCommit,
-              raceAfterRead = raceAfterRead)
-          }
-        } finally { kc.close(); rc.close() }
-      }.sum().toLong)
-  }
-
-  /** Drain the source completely: epochs until one moves nothing. */
+  /** Drain the source completely: epochs until one plans nothing. */
   def relayAll(spark: SparkSession,
       kafkaHost: String, kafkaPort: Int, topics: Seq[String],
       streamOf: String => String,
@@ -188,17 +49,10 @@ object RedisEosRelay {
       saslMechanism: String = "PLAIN",
       kafkaTls: Option[KafkaTls.Client] = None,
       redisTls: Option[RedisClient.Tls] = None,
-      redisAuth: Option[RedisClient.Auth] = None): Long = {
-    var total = 0L
-    var planned = -1
-    // loop on PLANNED ranges (advance-only epochs move zero rows)
-    while (planned != 0) {
-      val (p, moved) = relayEpoch(spark, kafkaHost, kafkaPort, topics,
-        streamOf, redisHost, redisPort, ledgerPrefix, cap, 1 << 20,
-        sasl, saslMechanism, kafkaTls, redisTls, redisAuth, None, None)
-      planned = p
-      total += moved
-    }
-    total
-  }
+      redisAuth: Option[RedisClient.Auth] = None): Long =
+    RelayDriver.all(spark,
+      KafkaRelaySource(kafkaHost, kafkaPort, topics, cap, sasl = sasl,
+        saslMechanism = saslMechanism, tls = kafkaTls),
+      RedisLedgerDestination(redisHost, redisPort, ledgerPrefix, streamOf,
+        redisTls, redisAuth))
 }

@@ -70,9 +70,9 @@ object RedisStreams {
     (timestampMs << 16) | (subSeq & 0xFFFFL)
 
   /** Refuse an entry id whose sub-sequence saturates the 16-bit packed
-    * field. A relay whose resume cursor rides a packed SeqNo (the
-    * group-offset staging in [[graft.kafka.KafkaEosIngest]], the
-    * destination ledgers in [[RedisEosPump]]) would alias past 0xFFFF:
+    * field. A relay whose resume cursor rides a packed SeqNo
+    * ([[graft.eos.RedisRelaySource]], into either destination's cursor
+    * slot) would alias past 0xFFFF:
     * the stored cursor could move BACKWARD in wire order (duplicates) and
     * the reconstructed XRANGE start could skip live entries (loss). The
     * reference shares the same 64k-entries-per-ms-per-shard ceiling

@@ -151,16 +151,8 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
   if (latest && startingTimestamp.isDefined)
     throw new IllegalArgumentException(
       "startingOffsets=latest conflicts with startingTimestamp")
-  private val maxEntriesPerTrigger: Option[Long] = {
-    val v = options.get("maxEntriesPerTrigger")
-    if (v == null || v.isEmpty) None
-    else {
-      val n = v.toLong
-      if (n <= 0) throw new IllegalArgumentException(
-        s"maxEntriesPerTrigger must be positive, got $n")
-      Some(n)
-    }
-  }
+  private val maxEntriesPerTrigger: Option[Long] =
+    graft.core.SourceOptions.positive(options, "maxEntriesPerTrigger")
   private val group: Option[String] = {
     val v = options.get("group")
     if (v == null || v.isEmpty) None else Some(v)

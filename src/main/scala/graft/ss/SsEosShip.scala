@@ -2,8 +2,10 @@ package graft.ss
 
 import org.apache.spark.sql.SparkSession
 
-import graft.kafka.{KafkaClient, KafkaEosIngest, KafkaTls, KafkaTxnProducer}
-import graft.redis.{RedisClient, RedisStreams, Resp}
+import graft.eos.{Coord, FileRelayTips, KafkaTxnDestination,
+  RedisLedgerDestination, RelayDestination, RelayDriver}
+import graft.kafka.KafkaTls
+import graft.redis.{EosCommit, RedisClient, RedisStreams}
 
 /** Exactly-once `.ss` file → broker shipper — the relay matrix extended
   * to the reference's file backend as a SOURCE (log shipping: the file
@@ -24,16 +26,18 @@ import graft.redis.{RedisClient, RedisStreams, Resp}
   * source-side state — the file itself never changes.
   *
   * One epoch ([[shipKafkaOnce]] / [[shipRedisOnce]]) plans per-file
-  * ranges on the driver ([[SsOffsetWalk.safeEnd]] caps the tip at the
-  * last COMPLETE frame — a live appender's torn tail is never shipped —
-  * and `capBytes` bounds the per-epoch transaction), then each file
-  * ships in its own task, sequentially reading `[cursor, until)` — the
-  * per-file sequential read IS the medium; parallelism comes from the
-  * file count, exactly how a `format("ss")` directory lays out one part
-  * file per writing partition. Kafka tasks fence-then-read like
-  * [[KafkaEosIngest]] (rival incarnations resolve in-task via
-  * [[KafkaEosIngest.retryFenced]]); redis tasks WATCH-then-read with
-  * the nil-means-rival retry. A fully-FILTERED range still advances its
+  * ranges through [[RelayDriver.plan]] over [[FileRelayTips]]
+  * ([[SsOffsetWalk.safeEnd]] caps the tip at the last COMPLETE frame — a
+  * live appender's torn tail is never shipped — and `capBytes` bounds
+  * the per-epoch transaction), then each file ships in its own task,
+  * sequentially reading `[cursor, until)` — the per-file sequential read
+  * IS the medium; parallelism comes from the file count, exactly how a
+  * `format("ss")` directory lays out one part file per writing
+  * partition. The ship body stays here because one byte cursor fans out
+  * to many destination partitions or keys. Kafka tasks run inside
+  * [[KafkaTxnDestination.transact]] (fence-then-read, rival
+  * incarnations resolve in-task); redis tasks WATCH-then-read with the
+  * nil-means-rival retry. A fully-FILTERED range still advances its
   * cursor under the same fencing (an offsets-only kafka transaction /
   * the same WATCH-fenced SET) — a plain unfenced commit could be
   * rewound by a fenced zombie.
@@ -130,20 +134,6 @@ object SsEosShip {
     }
   }
 
-  private def fileKey(path: String): String =
-    new java.io.File(path).getName
-
-  /** Cursor identity is the NAME — refuse aliasing loud at plan time. */
-  private def requireUniqueKeys(paths: Seq[String]): Unit = {
-    val dup = paths.map(fileKey).groupBy(identity).collect {
-      case (k, vs) if vs.size > 1 => k
-    }
-    require(dup.isEmpty,
-      s"cursor keys are file NAMES and these collide across the given " +
-        s"paths: ${dup.mkString(", ")} — rename the files or ship the " +
-        "directories under different anchors")
-  }
-
   /** Run `f` over the frames of `[from, until)` (stream-filtered), with
     * the reader closed either way — takeWhile stops short of exhausting
     * the underlying reader, so closure cannot ride iterator exhaustion.
@@ -170,94 +160,53 @@ object SsEosShip {
       sasl: Option[(String, String)] = None,
       saslMechanism: String = "PLAIN",
       tls: Option[KafkaTls.Client] = None,
-      crashBeforeCommit: Option[String] = None): Long =
-    runKafka(spark, planKafka(paths, kafkaHost, kafkaPort, group, capBytes,
-      sasl, saslMechanism, tls), topicOf, kafkaHost, kafkaPort, group,
-      txnIdPrefix, page, partitions, onlyStreams, sasl, saslMechanism, tls,
-      crashBeforeCommit)
-
-  private def planKafka(paths: Seq[String], kafkaHost: String,
-      kafkaPort: Int, group: String, capBytes: Long,
-      sasl: Option[(String, String)], saslMechanism: String,
-      tls: Option[KafkaTls.Client]): Seq[(String, Long)] = {
-    require(capBytes > 0, "capBytes must be positive")
-    requireUniqueKeys(paths)
-    val planner = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-      saslMechanism = saslMechanism, tls = tls)
-    try {
-      planner.findCoordinator(group)
-      val committed = planner.fetchOffsets(group,
-        paths.map(p => fileKey(p) -> Seq(0)).toMap)
-      paths.flatMap { p =>
-        val from = committed.getOrElse((fileKey(p), 0), 0L)
-        val until = SsOffsetWalk.safeEnd(p, from, capBytes).offset
-        if (until > from) Some((p, until)) else None
-      }
-    } finally planner.close()
+      crashBeforeCommit: Option[String] = None): Long = {
+    val files = FileRelayTips(paths, capBytes)
+    val dst = KafkaTxnDestination(kafkaHost, kafkaPort, group, txnIdPrefix,
+      topicOf, sasl, saslMechanism, tls, crashBeforeCommit)
+    runKafka(spark, files, dst, RelayDriver.plan(files, dst), page,
+      partitions, onlyStreams)
   }
 
-  private def runKafka(spark: SparkSession, ranges: Seq[(String, Long)],
-      topicOf: String => String, kafkaHost: String, kafkaPort: Int,
-      group: String, txnIdPrefix: String, page: Int, partitions: Int,
-      onlyStreams: Option[Set[String]], sasl: Option[(String, String)],
-      saslMechanism: String, tls: Option[KafkaTls.Client],
-      crashBeforeCommit: Option[String]): Long = {
+  /** Ship planned file ranges into kafka: each file's frames fan out to
+    * `(topicOf(stream_key), floorMod(shard_id, partitions))` inside the
+    * file's one fenced transaction ([[KafkaTxnDestination.transact]]). */
+  private[graft] def runKafka(spark: SparkSession, files: FileRelayTips,
+      dst: KafkaTxnDestination, ranges: Seq[(Coord, Long)],
+      page: Int, partitions: Int,
+      onlyStreams: Option[Set[String]]): Long =
     if (ranges.isEmpty) 0L
-    else spark.sparkContext.parallelize(ranges, ranges.size)
-      .map { case (path, until) =>
-        val key = fileKey(path)
-        def attempt(): Long = {
-          val kc = new KafkaClient(kafkaHost, kafkaPort, sasl = sasl,
-            saslMechanism = saslMechanism, tls = tls)
-          try {
-            // fence FIRST, read the cursor second (KafkaEosIngest's law)
-            val producer = new KafkaTxnProducer(kc,
-              s"$txnIdPrefix-$key").initTransactions()
-            kc.findCoordinator(group)
-            val committed = kc.fetchOffsets(group, Map(key -> Seq(0)))
-              .getOrElse((key, 0), 0L)
-            if (committed >= until) 0L // range already landed
-            else {
-              val known = scala.collection.mutable.Set.empty[String]
-              var n = 0L
-              producer.begin()
-              eachFrames(path, committed, until, onlyStreams)(_
-                .grouped(page).foreach { chunk =>
-                  chunk.groupBy(r => (topicOf(r.message.stream_key),
-                    math.floorMod(r.message.shard_id,
-                      partitions.toLong).toInt))
-                    .foreach { case ((topic, part), rs) =>
-                      if (known.add(topic)) {
-                        val parts = kc.metadata(Seq(topic))
-                          .getOrElse(topic, Seq.empty)
-                        require(parts.size >= partitions,
-                          s"topic $topic has ${parts.size} partitions, " +
-                            s"need $partitions")
-                      }
-                      producer.send(topic, part, rs.map(r =>
-                        (r.message.timestamp.getTime, null: Array[Byte],
-                          r.message.payload)))
-                      n += rs.length
-                    }
-                })
-              // the cursor advance stays FENCED even when every frame was
-              // filtered out: an offsets-only transaction (legal KIP-98)
-              // publishes it atomically — a plain OffsetCommit here could
-              // be rewound by a fenced zombie's late commit
-              producer.sendOffsetsToTransaction(group,
-                Map((key, 0) -> until))
-              if (crashBeforeCommit.exists(graft.ops.Failpoints.fire))
-                throw new IllegalStateException(
-                  s"injected crash: ship $key produced + staged, " +
-                    "not committed")
-              producer.commit()
-              n
-            }
-          } finally kc.close()
+    else spark.sparkContext.parallelize(
+        ranges.map { case (c, until) => (c, files.byName(c._1), until) },
+        ranges.size)
+      .map { case (coord, path, until) =>
+        dst.transact(files, coord, until) { (kc, producer, committed) =>
+          val known = scala.collection.mutable.Set.empty[String]
+          var n = 0L
+          eachFrames(path, committed, until, onlyStreams)(_
+            .grouped(page).foreach { chunk =>
+              chunk.groupBy(r => (dst.topicOf(r.message.stream_key),
+                math.floorMod(r.message.shard_id,
+                  partitions.toLong).toInt))
+                .foreach { case ((topic, part), rs) =>
+                  if (known.add(topic)) {
+                    val parts = kc.metadata(Seq(topic))
+                      .getOrElse(topic, Seq.empty)
+                    require(parts.size >= partitions,
+                      s"topic $topic has ${parts.size} partitions, " +
+                        s"need $partitions")
+                  }
+                  producer.send(topic, part, rs.map(r =>
+                    (r.message.timestamp.getTime, null: Array[Byte],
+                      r.message.payload)))
+                  n += rs.length
+                }
+            })
+          // the whole range is consumed even when every frame was
+          // filtered out: the cursor still advances, fenced
+          (until, n)
         }
-        KafkaEosIngest.retryFenced(s"ship $key")(attempt())
       }.sum().toLong
-  }
 
   /** One bounded exactly-once ship epoch into REDIS; same contract with
     * the WATCH-fenced `ledgerPrefix:{file}` cursor.
@@ -274,35 +223,17 @@ object SsEosShip {
         * fully queued, JUST before EXEC — the window where a rival file's
         * commit on a SHARED destination key must nil this EXEC (the key
         * set is WATCHed), never let real redis refuse frames inside it. */
-      raceBeforeExec: Option[String] = None): Long =
-    runRedis(spark, planRedis(paths, redisHost, redisPort, ledgerPrefix,
-      capBytes, tls, auth), streamOf, redisHost, redisPort, ledgerPrefix,
-      onlyStreams, tls, auth, crashBeforeCommit, raceBeforeExec)
-
-  private def planRedis(paths: Seq[String], redisHost: String,
-      redisPort: Int, ledgerPrefix: String, capBytes: Long,
-      tls: Option[RedisClient.Tls],
-      auth: Option[RedisClient.Auth]): Seq[(String, Long)] = {
-    require(capBytes > 0, "capBytes must be positive")
-    requireUniqueKeys(paths)
-    val ledgers = new RedisClient(redisHost, redisPort, tls = tls, auth = auth)
-    try paths.flatMap { p =>
-      val from = ledgers.command(
-        RedisStreams.get(s"$ledgerPrefix:{${fileKey(p)}}"): _*) match {
-        case Resp.Bulk(bs) => new String(bs, "UTF-8").toLong
-        case _ => 0L
-      }
-      val until = SsOffsetWalk.safeEnd(p, from, capBytes).offset
-      if (until > from) Some((p, until)) else None
-    } finally ledgers.close()
+      raceBeforeExec: Option[String] = None): Long = {
+    val files = FileRelayTips(paths, capBytes)
+    val dst = RedisLedgerDestination(redisHost, redisPort, ledgerPrefix,
+      streamOf, tls, auth, crashBeforeCommit,
+      raceBeforeExec = raceBeforeExec)
+    runRedis(spark, files, dst, RelayDriver.plan(files, dst), onlyStreams)
   }
 
-  private def runRedis(spark: SparkSession, ranges: Seq[(String, Long)],
-      streamOf: String => String, redisHost: String, redisPort: Int,
-      ledgerPrefix: String, onlyStreams: Option[Set[String]],
-      tls: Option[RedisClient.Tls], auth: Option[RedisClient.Auth],
-      crashBeforeCommit: Option[String],
-      raceBeforeExec: Option[String] = None): Long = {
+  private[graft] def runRedis(spark: SparkSession, files: FileRelayTips,
+      dst: RedisLedgerDestination, ranges: Seq[(Coord, Long)],
+      onlyStreams: Option[Set[String]]): Long = {
     if (ranges.isEmpty) 0L
     else {
       // a (stream_key, shard) routinely spans SEVERAL part files, so
@@ -321,11 +252,12 @@ object SsEosShip {
       // destination the cap is per-NODE concurrency, which a cluster
       // deployment multiplies by its master count.
       spark.sparkContext
-        .parallelize(ranges.sortBy(_._1),
-          math.min(ranges.size, RedisShipSlices))
-        .map { case (path, until) =>
-          val ledger = s"$ledgerPrefix:{${fileKey(path)}}"
-          val rc = new RedisClient(redisHost, redisPort, tls = tls, auth = auth)
+        .parallelize(ranges.map { case (c, until) =>
+            (c, files.byName(c._1), until)
+          }.sortBy(_._2), math.min(ranges.size, RedisShipSlices))
+        .map { case (coord, path, until) =>
+          val ledger = dst.ledger(files, coord)
+          val rc = dst.client()
           // The range ships as SUB-EPOCH transactions of at most TxnBytes
           // of frames, each committing its frames AND the advanced cursor
           // in one WATCH-fenced MULTI/EXEC over the ledger + the
@@ -347,19 +279,19 @@ object SsEosShip {
           // exactly `endOffset > cursor` (cursor values are always frame
           // boundaries), and a partial batch's `last pos + 1` resume
           // point is the frame-exact endOffset.
-          val gateKey = (redisHost, redisPort, ledgerPrefix)
+          val gateKey = (dst.host, dst.port, dst.ledgerPrefix)
           def commitSub(buf: Seq[SsRecord], subUntil: Long): Long =
-            graft.redis.EosCommit.commitKeyed(rc, ledger,
+            EosCommit.commitKeyed(rc, ledger,
               buf.iterator.map { r =>
                 (r.endOffset - 1L,
-                  RedisStreams.shardedKey(streamOf(r.message.stream_key),
+                  RedisStreams.shardedKey(dst.streamOf(r.message.stream_key),
                     r.message.shard_id, sharded = true),
                   r.message.timestamp.getTime, r.message.payload)
               }.toVector,
               finalCursor = subUntil,
-              label = s"ship ${fileKey(path)}",
-              crashBeforeCommit = crashBeforeCommit,
-              raceBeforeExec = raceBeforeExec,
+              label = s"ship ${coord._1}",
+              crashBeforeCommit = dst.crashBeforeCommit,
+              raceBeforeExec = dst.raceBeforeExec,
               maxNils = siblings + 5,
               nilHint = "more than the epoch's own sibling fan-out can " +
                 "explain; a live foreign writer keeps touching the " +
@@ -368,7 +300,7 @@ object SsEosShip {
               // writers — a short jittered sit-out suffices
               backoffStepMs = 20L, backoffCapMs = 100L,
               gate = Some(commitGates.computeIfAbsent(
-                (redisHost, redisPort), _ => new Object)),
+                (dst.host, dst.port), _ => new Object)),
               gated = () => isGateContended(gateKey),
               onNil = () => noteShipNil(gateKey),
               onApplied = () => noteShipApplied(gateKey))
@@ -376,13 +308,8 @@ object SsEosShip {
             // the plan's cursor read is advisory; commitSub re-reads it
             // under the watch, so starting from the planned `from` is
             // safe — frames below a rival's cursor filter out in-task
-            val from = {
-              val v = rc.command(RedisStreams.get(ledger): _*) match {
-                case Resp.Bulk(bs) => new String(bs, "UTF-8").toLong
-                case _ => 0L
-              }
-              math.max(v, SsFormat.HeaderSize.toLong)
-            }
+            val from = math.max(dst.cursor(rc, ledger).getOrElse(0L),
+              SsFormat.HeaderSize.toLong)
             var total = 0L
             val reader = SsReader.openAtOffset(path, from)
             try {
@@ -413,8 +340,7 @@ object SsEosShip {
 
   /** Drain to the files' current safe ends: epochs until the PLAN is
     * empty (frame counts can read 0 on a fully-filtered epoch while the
-    * cursor still advances, so the loop keys on planned ranges — one
-    * cursor sweep per epoch, shared with the epoch's own planning).
+    * cursor still advances, so the loop keys on planned ranges).
     */
   def shipKafkaAll(spark: SparkSession, paths: Seq[String],
       topicOf: String => String,
@@ -423,19 +349,10 @@ object SsEosShip {
       onlyStreams: Option[Set[String]] = None,
       sasl: Option[(String, String)] = None,
       saslMechanism: String = "PLAIN",
-      tls: Option[KafkaTls.Client] = None): Long = {
-    var total = 0L
-    var ranges = planKafka(paths, kafkaHost, kafkaPort, group, capBytes,
-      sasl, saslMechanism, tls)
-    while (ranges.nonEmpty) {
-      total += runKafka(spark, ranges, topicOf, kafkaHost, kafkaPort,
-        group, txnIdPrefix, page, partitions, onlyStreams,
-        sasl, saslMechanism, tls, crashBeforeCommit = None)
-      ranges = planKafka(paths, kafkaHost, kafkaPort, group, capBytes,
-        sasl, saslMechanism, tls)
-    }
-    total
-  }
+      tls: Option[KafkaTls.Client] = None): Long =
+    shipAll(spark, FileRelayTips(paths, capBytes),
+      KafkaTxnDestination(kafkaHost, kafkaPort, group, txnIdPrefix, topicOf,
+        sasl, saslMechanism, tls), onlyStreams, page, partitions)
 
   /** Same drain for the redis destination. */
   def shipRedisAll(spark: SparkSession, paths: Seq[String],
@@ -444,16 +361,22 @@ object SsEosShip {
       capBytes: Long = 64L << 20,
       onlyStreams: Option[Set[String]] = None,
       tls: Option[RedisClient.Tls] = None,
-      auth: Option[RedisClient.Auth] = None): Long = {
-    var total = 0L
-    var ranges = planRedis(paths, redisHost, redisPort, ledgerPrefix,
-      capBytes, tls, auth)
-    while (ranges.nonEmpty) {
-      total += runRedis(spark, ranges, streamOf, redisHost, redisPort,
-        ledgerPrefix, onlyStreams, tls, auth, crashBeforeCommit = None)
-      ranges = planRedis(paths, redisHost, redisPort, ledgerPrefix,
-        capBytes, tls, auth)
+      auth: Option[RedisClient.Auth] = None): Long =
+    shipAll(spark, FileRelayTips(paths, capBytes),
+      RedisLedgerDestination(redisHost, redisPort, ledgerPrefix, streamOf,
+        tls, auth), onlyStreams)
+
+  /** The file ship's drain over either destination: the relay driver's
+    * planning and drain loop, this object's per-range ship body. */
+  private[graft] def shipAll(spark: SparkSession, files: FileRelayTips,
+      dst: RelayDestination, onlyStreams: Option[Set[String]],
+      page: Int = 1000, partitions: Int = 4): Long =
+    RelayDriver.drain(RelayDriver.plan(files, dst)) { ranges =>
+      dst match {
+        case k: KafkaTxnDestination =>
+          runKafka(spark, files, k, ranges, page, partitions, onlyStreams)
+        case r: RedisLedgerDestination =>
+          runRedis(spark, files, r, ranges, onlyStreams)
+      }
     }
-    total
-  }
 }

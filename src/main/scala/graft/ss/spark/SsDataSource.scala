@@ -380,16 +380,8 @@ class SsMicroBatchStream(path: String, options: CaseInsensitiveStringMap)
     * a frame boundary, so it may overshoot by at most one frame. Unset =
     * unbounded (drain everything available, the previous behavior).
     */
-  private val maxBytesPerTrigger: Option[Long] = {
-    val v = options.get("maxBytesPerTrigger")
-    if (v == null || v.isEmpty) None
-    else {
-      val n = v.toLong
-      if (n <= 0) throw new IllegalArgumentException(
-        s"maxBytesPerTrigger must be positive, got $n")
-      Some(n)
-    }
-  }
+  private val maxBytesPerTrigger: Option[Long] =
+    graft.core.SourceOptions.positive(options, "maxBytesPerTrigger")
 
   /** Row-counted admission — Kafka's `maxOffsetsPerTrigger` semantics (the
     * cap the t14–t19 streaming operators and the redis/iggy/kafka sources
@@ -399,16 +391,11 @@ class SsMicroBatchStream(path: String, options: CaseInsensitiveStringMap)
     * `maxBytesPerTrigger`; mutually exclusive with it.
     */
   private val maxMessagesPerTrigger: Option[Long] = {
-    val v = options.get("maxMessagesPerTrigger")
-    if (v == null || v.isEmpty) None
-    else {
-      val n = v.toLong
-      if (n <= 0) throw new IllegalArgumentException(
-        s"maxMessagesPerTrigger must be positive, got $n")
-      if (maxBytesPerTrigger.isDefined) throw new IllegalArgumentException(
+    val n = graft.core.SourceOptions.positive(options, "maxMessagesPerTrigger")
+    if (n.isDefined && maxBytesPerTrigger.isDefined)
+      throw new IllegalArgumentException(
         "maxMessagesPerTrigger and maxBytesPerTrigger are mutually exclusive")
-      Some(n)
-    }
+    n
   }
 
   /** `startingOffsets`: `earliest` (default, replay whole file) or `latest`
@@ -534,7 +521,7 @@ class SsWriteBuilder(path: String, info: LogicalWriteInfo)
     * exactly ONE part file. This is the 100 TB ship layout: with the
     * default task-local layout every part file carries every key, so a
     * downstream exactly-once ship ([[graft.ss.SsEosShip]]) pays sibling
-    * WATCH conflicts on shared destination keys (ShipLayoutProbe: disjoint
+    * WATCH conflicts on shared destination keys (BENCH_LOCAL.md: disjoint
     * 3.2 s vs interleaved 4.9 s per 1M frames at the redis destination).
     * Off by default — a plain dump shouldn't pay a shuffle it may not
     * need; turn it on when the directory feeds a relay/ship.

@@ -61,7 +61,7 @@ class DedupSpec extends AnyFunSuite {
     // the d10With(r=1)≡d3 discipline applied to the df-cap family: the
     // parameterized path at the oracle-mirrored default must BE the d13
     // query, and halving the cap must not grow the co-occurring pair
-    // stream (the collision workload DfCapProbe prices at sf10)
+    // stream (the collision workload BENCH_SF1.md prices at sf10)
     val dir = graft.TestSession.sfDir
     val k = Seq("doc_inner", "doc_outer", "containment", "jaccard", "sym_dup")
     val a = Dedup.d13With(spark, dir, Dedup.ShingleDfCap)

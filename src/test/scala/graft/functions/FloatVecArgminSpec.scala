@@ -94,4 +94,61 @@ class FloatVecArgminSpec extends AnyFunSuite {
     assert((g & ((1L << FloatVecArgmin.IdBits) - 1)) == 5L,
       "the mismatched centroid must be skipped, not crash or win")
   }
+
+  test("large magnitudes at 64 and 128 dims stay bit-for-bit with the " +
+      "fold: the prefilter widens with n and s, and sums past the pack's " +
+      "key range always re-check exactly") {
+    // element spreads of 1e2..1e5 put squared distances at ~1e5..1e12:
+    // past ~8.8e6 the 6-dp key overflows the pack's high bits and the
+    // packed order stops following the distance order, and past ~1e9 a
+    // fixed 1e-5 margin is below the double sum's n·ε·s error. ANSI mode
+    // turns the fold's overflow into an error, so the fold is compared in
+    // a non-ANSI session, where both sides wrap identically.
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.ansi.enabled", "false")
+    import legacy.implicits._
+    val rnd = new scala.util.Random(11)
+    Seq(64, 128).foreach { dims =>
+      val rows = (0 until 60).map { i =>
+        val scale = math.pow(10, 2 + i % 4).toFloat
+        def vec(): Array[Float] =
+          Array.fill(dims)((rnd.nextFloat() - 0.5f) * scale)
+        (vec(), (0 until 16).map(j => (j.toLong, vec())))
+      }
+      val df = rows.toDF("emb", "cs")
+        .select($"emb", expr(
+          "transform(cs, c -> struct(c._1 AS id, c._2 AS vec))").as("cs"))
+      df.select(
+        FloatVecArgmin.pkOf($"emb", $"cs").as("g"),
+        foldPk($"emb", $"cs").as("w"))
+        .as[(Long, Long)].collect().foreach { case (g, w) =>
+          assert(g == w, s"$dims dims: prefilter pruned the fold's winner: " +
+            s"$g != $w")
+        }
+    }
+    // the widening itself grows with both n and s
+    assert(FloatVecArgmin.slack(128, 1e6) > FloatVecArgmin.slack(64, 1e6))
+    assert(FloatVecArgmin.slack(64, 1e6) > FloatVecArgmin.slack(64, 1.0))
+  }
+
+  test("the no-centroid sentinel decodes to a NULL id, never the phantom " +
+      "id 2^20 - 1") {
+    val emb = Array.fill(4)(1.0f)
+    val df = Seq(
+      (emb, Seq.empty[(Long, Array[Float])]),       // empty array
+      (emb, Seq((3L, null: Array[Float]))),          // all-null vectors
+      (emb, Seq((4L, Array.fill(2)(1.0f)))),         // all NULL distances
+      (emb, Seq((5L, Array.fill(4)(2.0f)))))         // a real winner
+      .toDF("emb", "cs")
+      .select($"emb", expr(
+        "transform(cs, c -> struct(c._1 AS id, c._2 AS vec))").as("cs"))
+    val ids = df.select(graft.analytics.Similarity.rowArgminId(
+      FloatVecArgmin.pkOf($"emb", $"cs")).as("id"))
+      .as[Option[Long]].collect().toSeq
+    assert(ids == Seq(None, None, None, Some(5L)), s"$ids")
+    // the interpreted path agrees with the codegen'd one
+    val pk = FloatVecArgminId(
+      org.apache.spark.sql.catalyst.expressions.Literal(Long.MaxValue))
+    assert(pk.eval(null) == null)
+  }
 }
