@@ -121,29 +121,17 @@ object IggyTransport {
           username = OracleAuth._1, password = OracleAuth._2)
         try {
           val g = (1, "g_oracle")
-          Transport.eventTypes.foreach { topic =>
-            c.createGroupIfAbsent(IggySource.DefaultStream, topic, "g_oracle")
-            val nParts = c.topicTips(IggySource.DefaultStream, topic)
-              .map(_.length).getOrElse(0)
-            (0 until nParts).foreach { p =>
-              // first offset with ts >= cutoff+1; its predecessor is the
-              // last delivered message of the "previous member"
-              val (_, first) = c.pollMessages(IggySource.DefaultStream,
-                topic, p, graft.iggy.IggyWire.PollStrategy
-                  .AtTimestamp(cutoff + 1), 1)
-              first.headOption.map(_.offset) match {
-                case Some(off) if off > 0 =>
-                  c.storeOffset(IggySource.DefaultStream, topic, p, g, off - 1)
-                case Some(_) => () // suffix starts at 0: nothing delivered
-                case None =>
-                  // whole partition precedes the cutoff: all delivered
-                  val tip = c.topicTips(IggySource.DefaultStream, topic)
-                    .map(_.apply(p)).getOrElse(0L)
-                  if (tip > 0) c.storeOffset(IggySource.DefaultStream,
-                    topic, p, g, tip - 1)
-              }
+          Transport.eventTypes.foreach(
+            c.createGroupIfAbsent(IggySource.DefaultStream, _, "g_oracle"))
+          IggySource.tips(c, IggySource.DefaultStream, Transport.eventTypes)
+            .foreach { case ((topic, p), tip) =>
+              // the seek's predecessor is the last delivered message of the
+              // "previous member" (none when the suffix starts at 0)
+              val start = IggySource.seek(c, IggySource.DefaultStream, topic,
+                p, cutoff, tip)
+              if (start > 0)
+                c.storeOffset(IggySource.DefaultStream, topic, p, g, start - 1)
             }
-          }
         } finally c.close()
         val q = Transport.aggregate(
           s.readStream.format("iggy-stream")

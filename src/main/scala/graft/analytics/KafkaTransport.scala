@@ -569,13 +569,10 @@ object KafkaTransport {
           sasl = Some(SaslCreds), saslMechanism = Mech, tls = Some(tlsClient))
         try {
           c.findCoordinator("g_oracle")
-          val meta = c.metadata(Transport.eventTypes)
-          val commits = Transport.eventTypes.flatMap { topic =>
-            meta.getOrElse(topic, Seq.empty).map { p =>
-              val tip = c.listOffset(topic, p,
-                graft.kafka.KafkaWire.Ts.Latest).getOrElse(0L)
-              (topic, p) -> c.listOffset(topic, p, cutoff + 1).getOrElse(tip)
-            }
+          val commits = KafkaSource.tips(c, Transport.eventTypes,
+            (_, _) => true, readCommitted = false).map {
+            case ((topic, p), tip) =>
+              (topic, p) -> KafkaSource.seek(c, topic, p, cutoff, tip)
           }.toMap
           c.commitOffsets("g_oracle", commits)
         } finally c.close()

@@ -1,8 +1,9 @@
 package graft.core
 
-/** Budget split for `maxMessagesPerTrigger`-style admission control, shared
-  * by the iggy and kafka micro-batch streams (the redis source uses a
-  * rotation scheme instead — its backlog sizes aren't known in advance).
+/** Budget split for `maxMessagesPerTrigger`-style admission control: the
+  * capped ends of [[DenseStream]], so of kafka-wire and iggy-stream (the
+  * redis source uses a rotation scheme instead — its backlog sizes aren't
+  * known in advance).
   */
 object AdmissionShares {
 

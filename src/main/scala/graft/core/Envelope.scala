@@ -1,6 +1,9 @@
 package graft.core
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's single data abstraction: a keyed, sharded, sequenced message.
   *
@@ -33,6 +36,23 @@ object Envelope {
     StructField("sequence", LongType, nullable = false),
     StructField("timestamp", TimestampType, nullable = false),
     StructField("payload", BinaryType, nullable = true)))
+
+  /** A message as a row of [[schema]] (timestamp in micros). */
+  def toInternalRow(m: SeaMessage): InternalRow =
+    new GenericInternalRow(Array[Any](
+      UTF8String.fromString(m.stream_key),
+      m.shard_id,
+      m.sequence,
+      m.timestamp.getTime * 1000L, // micros
+      m.payload))
+
+  def fromInternalRow(row: InternalRow): SeaMessage =
+    SeaMessage(
+      row.getUTF8String(0).toString,
+      row.getLong(1),
+      row.getLong(2),
+      new java.sql.Timestamp(row.getLong(3) / 1000L),
+      if (row.isNullAt(4)) Array.emptyByteArray else row.getBinary(4))
 
   /** Max stream-key length (sea-streamer-types/src/stream.rs:7). */
   val MaxStreamKeyLen = 249

@@ -1,8 +1,8 @@
 package graft.eos
 
-import graft.iggy.IggyClient
+import graft.iggy.{IggyClient, IggySource}
 import graft.iggy.IggyWire.PollStrategy
-import graft.kafka.{KafkaClient, KafkaTls, KafkaWire}
+import graft.kafka.{KafkaClient, KafkaSource, KafkaTls, KafkaWire}
 import graft.redis.{RedisClient, RedisStreams, Resp}
 import graft.ss.{SsFormat, SsOffsetWalk}
 
@@ -29,16 +29,12 @@ final case class KafkaRelaySource(host: String, port: Int,
 
   def tips(cursors: Seq[Coord] => Map[Coord, Long]): Seq[RelayPoint] = {
     val c = client()
-    try {
-      val meta = c.metadata(topics)
-      val coords = topics.flatMap(t => meta.getOrElse(t, Seq.empty).map(t -> _))
-      val cur = cursors(coords)
-      coords.map { case (t, p) =>
-        val hw = c.listOffset(t, p, KafkaWire.Ts.Latest).getOrElse(0L)
-        val lso = c.fetchIso(t, p, hw, maxBytes = 1, readCommitted = true)._1
-        RelayPoint((t, p), cur.getOrElse((t, p), 0L), lso)
-      }
-    } finally c.close()
+    val all = try KafkaSource.tips(c, topics, (_, _) => true,
+      readCommitted = true) finally c.close()
+    val cur = cursors(all.map(_._1))
+    all.map { case (coord, tip) =>
+      RelayPoint(coord, cur.getOrElse(coord, 0L), tip)
+    }
   }
 
   override def until(cursor: Long, tip: Long): Long =
@@ -203,11 +199,7 @@ final case class IggyRelaySource(host: String, port: Int,
 
   def tips(cursors: Seq[Coord] => Map[Coord, Long]): Seq[RelayPoint] = {
     val c = client()
-    val all = try topics.flatMap { t =>
-      c.topicTips(iggyStream, t).toSeq.flatMap(_.zipWithIndex.map {
-        case (tip, p) => ((t, p), tip)
-      })
-    } finally c.close()
+    val all = try IggySource.tips(c, iggyStream, topics) finally c.close()
     val cur = cursors(all.map(_._1))
     all.map { case (coord, tip) =>
       RelayPoint(coord, cur.getOrElse(coord, 0L), tip)

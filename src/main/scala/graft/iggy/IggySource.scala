@@ -34,23 +34,35 @@ object IggySource {
     * auto-commit a lost REPLY can skip the in-flight page — the inherent
     * at-most-once edge of server-side commit-on-poll, same as the
     * reference's auto_commit mode).
+    *
+    * With an `until` bound (a micro-batch slice below a planned tip) the
+    * scan stops before offset `until` and polls on past short pages; an
+    * open-ended scan ends at its first short page.
     */
   private[iggy] def pagedPoll(session: IggyClient.Session, stream: String,
       topic: String, part: Int, from: PollStrategy, batch: Int,
-      group: Option[String] = None): Iterator[SeaMessage] =
+      group: Option[String] = None,
+      until: Long = Long.MaxValue): Iterator[SeaMessage] =
     new Iterator[SeaMessage] {
       private val consumer = group.map((1, _)).getOrElse((0, ""))
       private var strategy = from
       private var page: Iterator[PolledMessage] = Iterator.empty
       private var exhausted = false
       private def fetch(): Unit = {
+        val want = strategy match {
+          case PollStrategy.AtOffset(o) =>
+            math.min(batch.toLong, until - o).toInt
+          case _ => batch
+        }
         val (_, msgs) = session.retrying("poll")(_.pollMessages(stream,
-          topic, part, strategy, batch, consumer,
+          topic, part, strategy, want, consumer,
           autoCommit = group.isDefined))
         if (msgs.isEmpty) exhausted = true
         else {
-          strategy = PollStrategy.AtOffset(msgs.last.offset + 1)
-          if (msgs.size < batch) exhausted = true
+          val next = msgs.last.offset + 1
+          strategy = PollStrategy.AtOffset(next)
+          exhausted = next >= until ||
+            (until == Long.MaxValue && msgs.size < batch)
           page = msgs.iterator
         }
       }
@@ -65,16 +77,27 @@ object IggySource {
       }
     }
 
-  /** Partition counts per topic, fetched once on the driver (metadata-only,
-    * like a Kafka metadata request).
+  /** The next offset per kept partition of `topics`: one GET_TOPIC per
+    * topic (metadata-only, like a Kafka metadata request). A topic missing
+    * on the server lists no partitions until it appears. The one tip probe
+    * of iggy-stream, bounded reads and the relay.
     */
-  private def topicParts(host: String, port: Int, stream: String,
-      topics: Seq[String], auth: (String, String)): Seq[(String, Int)] = {
-    val c = new IggyClient(host, port, username = auth._1,
-      password = auth._2)
-    try topics.map(t => (t, c.topicTips(stream, t).map(_.length).getOrElse(0)))
-    finally c.close()
-  }
+  private[graft] def tips(c: IggyClient, stream: String,
+      topics: Seq[String], keep: (String, Int) => Boolean = (_, _) => true)
+      : Seq[((String, Int), Long)] =
+    for {
+      t <- topics
+      (tip, p) <- c.topicTips(stream, t).toSeq.flatMap(_.zipWithIndex)
+      if keep(t, p)
+    } yield (t, p) -> tip
+
+  /** The first offset with timestamp > `ms` (the Timestamp strategy at
+    * `ms + 1`, one count-1 poll), `tip` when no such message exists yet.
+    */
+  private[graft] def seek(c: IggyClient, stream: String, topic: String,
+      part: Int, ms: Long, tip: Long): Long =
+    c.pollMessages(stream, topic, part, PollStrategy.AtTimestamp(ms + 1), 1)
+      ._2.headOption.map(_.offset).getOrElse(tip)
 
   /** Bounded read of whole topics: one task per (topic, partition).
     * `afterMs` pushes the facade seek into the server-side Timestamp
@@ -102,10 +125,13 @@ object IggySource {
         * user:pass (streamer.rs:51; iggy's bootstrap default). */
       auth: (String, String) = ("iggy", "iggy")): DataFrame = {
     import spark.implicits._
-    val parts = topicParts(host, port, stream, topics, auth)
-      .flatMap { case (t, n) => (0 until n).map(p => (t, p)) }
-      .filter { case (t, p) =>
-        assign.forall(_.exists(a => a._1 == t && a._2 == p.toLong)) }
+    val parts = {
+      val c = new IggyClient(host, port, username = auth._1,
+        password = auth._2)
+      try tips(c, stream, topics, (t, p) =>
+        assign.forall(_.exists(a => a._1 == t && a._2 == p.toLong))).map(_._1)
+      finally c.close()
+    }
     val start: PollStrategy = afterMs match {
       case Some(ms) => PollStrategy.AtTimestamp(ms + 1) // seek law: ts > ms
       case None if fromOffset.isDefined => PollStrategy.AtOffset(fromOffset.get)

@@ -56,6 +56,33 @@ object KafkaSource {
       }
     }
 
+  /** The next offset per kept partition of `topics`, in Metadata order:
+    * one Metadata, then one ListOffsets(latest) per partition. Under
+    * read_committed the readable tip is the LAST STABLE OFFSET, not the
+    * high watermark — with an OPEN transaction parked below the hw, a plan
+    * up to the hw would page forever at the LSO getting empty committed
+    * fetches — and one 1-byte read_committed fetch at the hw resolves it.
+    * The one tip probe of kafka-wire, bounded reads and the relay.
+    */
+  private[graft] def tips(c: KafkaClient, topics: Seq[String],
+      keep: (String, Int) => Boolean,
+      readCommitted: Boolean): Seq[((String, Int), Long)] = {
+    val meta = c.metadata(topics)
+    for (t <- topics; p <- meta.getOrElse(t, Seq.empty) if keep(t, p)) yield {
+      val hw = c.listOffset(t, p, KafkaWire.Ts.Latest).getOrElse(0L)
+      (t, p) -> (if (!readCommitted) hw
+        else c.fetchIso(t, p, hw, maxBytes = 1, readCommitted = true)._1)
+    }
+  }
+
+  /** The first offset with timestamp > `ms` (the seek law is strictly `>`:
+    * ListOffsets(ms + 1), the `offsets_for_times` seek of
+    * consumer.rs:464-494), `tip` when no such record exists yet.
+    */
+  private[graft] def seek(c: KafkaClient, topic: String, part: Int, ms: Long,
+      tip: Long): Long =
+    c.listOffset(topic, part, ms + 1).getOrElse(tip)
+
   /** Per-partition [start, end) ranges, resolved once on the driver
     * (Metadata + ListOffsets — the same planning calls a Kafka consumer
     * makes on assignment).
@@ -69,31 +96,14 @@ object KafkaSource {
       readCommitted: Boolean): Seq[(String, Int, Long, Long)] = {
     val c = new KafkaClient(host, port, sasl = sasl,
       saslMechanism = saslMechanism, tls = tls)
-    try {
-      val meta = c.metadata(topics)
-      topics.flatMap { t =>
-        meta.getOrElse(t, Seq.empty)
-          .filter(p => assign.forall(_.exists(a => a._1 == t && a._2 == p.toLong)))
-          .map { p =>
-          val hw = c.listOffset(t, p, KafkaWire.Ts.Latest).getOrElse(0L)
-          // Under read_committed the readable tip is the LAST STABLE
-          // OFFSET, not the high watermark: with an OPEN transaction
-          // parked below the hw, a [from, hw) plan would page forever at
-          // the LSO getting empty committed fetches and silently
-          // under-deliver. One empty fetch at the hw resolves the LSO
-          // (the tips() probe pattern in KafkaDataSource).
-          val until =
-            if (!readCommitted) hw
-            else c.fetchIso(t, p, hw, maxBytes = 1, readCommitted = true)._1
-          val from = afterMs match {
-            // seek law is strictly `>`: first offset with ts >= ms+1
-            // (consumer.rs:464-494 pushes the ms into offsets_for_times)
-            case Some(ms) => c.listOffset(t, p, ms + 1).getOrElse(until)
-            case None => fromOffset.getOrElse(0L)
-          }
-          (t, p, math.min(from, until), until)
-        }
+    val keep = (t: String, p: Int) =>
+      assign.forall(_.exists(a => a._1 == t && a._2 == p.toLong))
+    try tips(c, topics, keep, readCommitted).map { case ((t, p), until) =>
+      val from = afterMs match {
+        case Some(ms) => seek(c, t, p, ms, until)
+        case None => fromOffset.getOrElse(0L)
       }
+      (t, p, math.min(from, until), until)
     } finally c.close()
   }
 

@@ -1,19 +1,11 @@
 package graft.redis.spark
 
-import java.util
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{Envelope, SeaMessage}
+import graft.core.{BrokerStream, LiveSource, MessageReaders, SeaMessage}
 import graft.redis.{RedisClient, RedisClusterClient, RedisSecurity, RedisSlotMap, RedisSource, RedisStreams, Resp}
-import graft.ss.spark.SsRows
 
 /** `spark.readStream.format("redis-stream")` — live micro-batch consumer
   * over Redis Streams, the reference's XREAD loop re-expressed in Spark's
@@ -54,36 +46,8 @@ import graft.ss.spark.SsRows
   * ack/commit is the checkpointed epoch (SURVEY §2.6 mapping), plus real
   * XACKs when a `group` is set.
   */
-class RedisDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "redis-stream"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Envelope.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new RedisTable(new CaseInsensitiveStringMap(properties))
-  override def supportsExternalMetadata(): Boolean = true
-}
-
-class RedisTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String =
-    s"redis-stream:${options.get("host")}:${options.get("streams")}"
-  override def schema(): StructType = Envelope.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.putAll(opts.asCaseSensitiveMap())
-    val all = new CaseInsensitiveStringMap(merged)
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = Envelope.schema
-        override def toMicroBatchStream(loc: String): MicroBatchStream =
-          new RedisMicroBatchStream(all)
-      }
-    }
-  }
-}
+class RedisDataSource extends LiveSource("redis-stream", Seq("host", "streams"),
+  new RedisMicroBatchStream(_))
 
 /** `{"ids":{"<key>":"<ms>-<seq>"}}`; "0-0" = nothing delivered yet. */
 final case class RedisOffset(ids: Map[String, String]) extends Offset {
@@ -120,10 +84,9 @@ final case class RedisInputPartition(
     auth: Option[RedisClient.Auth] = None) extends InputPartition
 
 class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends BrokerStream[String, String](options, 6379,
+      "maxEntriesPerTrigger", RedisPartitionReader) {
 
-  private val host = Option(options.get("host")).getOrElse("127.0.0.1")
-  private val port = options.getInt("port", 6379)
   /** `assign` pins the consumer to EXPLICIT (stream, shard) keys — the
     * reference's `Consumer::assign` (sea-streamer-types/src/
     * consumer.rs:77-85). Entries are `stream:shard` (sharded key form) or a
@@ -142,21 +105,6 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
     .split(',').map(_.trim).filter(_.nonEmpty).toSeq
   private val shards = options.getInt("shards", 1)
   private val batch = options.getInt("batchSize", 1000)
-  private val latest = options.getOrDefault("startingOffsets", "earliest")
-    .equalsIgnoreCase("latest")
-  private val startingTimestamp: Option[Long] = {
-    val v = options.get("startingTimestamp")
-    if (v == null || v.isEmpty) None else Some(v.toLong)
-  }
-  if (latest && startingTimestamp.isDefined)
-    throw new IllegalArgumentException(
-      "startingOffsets=latest conflicts with startingTimestamp")
-  private val maxEntriesPerTrigger: Option[Long] =
-    graft.core.SourceOptions.positive(options, "maxEntriesPerTrigger")
-  private val group: Option[String] = {
-    val v = options.get("group")
-    if (v == null || v.isEmpty) None else Some(v)
-  }
   private val consumerName = options.getOrDefault("consumerName", "spark")
   // reference default: only entries idle >= 60 s are claimable, so a LIVE
   // sibling consumer's fresh deliveries are never stolen
@@ -421,34 +369,23 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
     }
   }
 
-  override def getDefaultReadLimit: ReadLimit =
-    maxEntriesPerTrigger.map(ReadLimit.maxRows)
-      .getOrElse(ReadLimit.allAvailable())
+  protected def positions(offset: Offset): Map[String, String] =
+    offset.asInstanceOf[RedisOffset].ids
+  protected def offset(positions: Map[String, String]): Offset =
+    RedisOffset(positions)
+  override def deserializeOffset(json: String): Offset = RedisOffset.fromJson(json)
 
-  /** `start` is Spark's committed/initial offset for this batch, so a
-    * restart can never plan an end behind the checkpoint. Uncapped: ends
-    * are the per-key tips (one metadata round trip per node). Capped: ends
-    * resolve via per-key `XRANGE (start + COUNT n` — the driver touches at
-    * most `maxEntriesPerTrigger` entries per trigger (its own batch bound).
+  /** Uncapped: ends are the per-key tips (one metadata round trip per
+    * node). Capped: [[cappedEnds]]. Each trigger first refreshes shard
+    * discovery and runs the failover claim sweep.
     */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+  protected def ends(after: Map[String, String],
+      maxRows: Option[Long]): Map[String, String] = {
     refreshDiscovery()
-    val after = start.asInstanceOf[RedisOffset].ids
     maybeClaim(after)
-    val ends = limit match {
-      case r: ReadMaxRows => cappedEnds(after, r.maxRows())
-      case _ => tips()
-    }
-    // a key can drop out of the sweep (deleted/renamed) — its committed
-    // position must survive in the offset, or a re-created key would
-    // restart from 0-0 and re-emit everything
-    RedisOffset(after ++ ends)
+    maxRows.fold(tips())(cappedEnds(after, _))
   }
 
-  /** The row budget splits across keys WITH BACKLOG (tip moved past the
-    * committed id) — an idle key must not eat a deep key's share, the same
-    * lag-aware apportioning Kafka's maxOffsetsPerTrigger does.
-    */
   /** Advances per trigger to rotate the capped-serve window across keys.
     * Driver-side, in-memory only — a restart resets it to 0, which only
     * restarts the rotation, never loses data (unserved keys keep their
@@ -456,6 +393,13 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
     */
   private var serveRotation = 0
 
+  /** Capped ends resolve via per-key `XRANGE (start + COUNT n` — the
+    * driver touches at most `maxEntriesPerTrigger` entries per trigger
+    * (its own batch bound). The row budget splits across keys WITH
+    * BACKLOG (tip moved past the committed id) — an idle key must not eat
+    * a deep key's share, the same lag-aware apportioning Kafka's
+    * maxOffsetsPerTrigger does.
+    */
   private def cappedEnds(after: Map[String, String],
       maxRows: Long): Map[String, String] = {
     val tip = tips()
@@ -502,11 +446,6 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
     }.toMap
   }
 
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "RedisMicroBatchStream implements SupportsAdmissionControl; " +
-        "Spark calls latestOffset(start, limit)")
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[RedisOffset].ids
     val e = end.asInstanceOf[RedisOffset].ids
@@ -546,21 +485,6 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
       }
     }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new RedisPartitionReader(p.asInstanceOf[RedisInputPartition])
-    }
-
-  override def deserializeOffset(json: String): Offset = RedisOffset.fromJson(json)
-
-  /** The epoch commit IS the offset commit; when a `group` is set the
-    * matching XACKs settle executor-side in the NEXT batch's readers (the
-    * Rolling-commit lag) — nothing to do on the driver.
-    */
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Reads one `(stream, shard)` key's slice of a micro-batch.
@@ -587,29 +511,26 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
   * acked unseen by the next batch; the offset-clamped XRANGE mode (no
   * `group`) has no such constraint, which is why it is the default.
   */
-class RedisPartitionReader(p: RedisInputPartition)
-    extends PartitionReader[InternalRow] {
+object RedisPartitionReader extends MessageReaders[RedisInputPartition] {
 
   // plain XRANGE mode rides a reconnecting session (cursor resume is
   // exactly-once); group mode stays on a bare client — its recovery
   // path is PEL redelivery across epochs, not an in-scan reconnect.
-  // Both lazy so each mode opens exactly one socket per partition.
-  private var bareOpened = false
-  private lazy val client = {
-    bareOpened = true; new RedisClient(p.host, p.port, tls = p.tls,
-      auth = p.auth)
-  }
-  private val session = new RedisClient.Session(
-    () => new RedisClient(p.host, p.port, tls = p.tls, auth = p.auth))
-  private var current: SeaMessage = _
+  // Either mode opens exactly one socket per partition.
+  def open(p: RedisInputPartition): (Iterator[SeaMessage], AutoCloseable) =
+    p.group match {
+      case Some(g) =>
+        val client = new RedisClient(p.host, p.port, tls = p.tls, auth = p.auth)
+        (groupScan(p, g, client), client)
+      case None =>
+        val session = new RedisClient.Session(
+          () => new RedisClient(p.host, p.port, tls = p.tls, auth = p.auth))
+        (RedisSource.pagedScan(session, p.key, p.stream, p.shard,
+          p.batch, p.untilId, p.afterId), session)
+    }
 
-  private val it: Iterator[SeaMessage] = p.group match {
-    case Some(g) => groupScan(g)
-    case None => RedisSource.pagedScan(session, p.key, p.stream, p.shard,
-      p.batch, p.untilId, p.afterId)
-  }
-
-  private def groupScan(g: String): Iterator[SeaMessage] =
+  private def groupScan(p: RedisInputPartition, g: String,
+      client: RedisClient): Iterator[SeaMessage] =
     new Iterator[SeaMessage] {
       private var phase = 0 // 0 = own PEL, 1 = new entries, 2 = done
       private var pelCursor = "0-0"
@@ -658,13 +579,4 @@ class RedisPartitionReader(p: RedisInputPartition)
       }
       def next(): SeaMessage = page.next()._2
     }
-
-  override def next(): Boolean =
-    if (it.hasNext) { current = it.next(); true } else false
-
-  override def get(): InternalRow = SsRows.toInternalRow(current)
-  override def close(): Unit = {
-    session.close()
-    if (bareOpened) client.close()
-  }
 }

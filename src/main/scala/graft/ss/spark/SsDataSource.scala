@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -17,7 +16,6 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Envelope, SeaMessage}
 import graft.ss.{SsFormat, SsOffsetWalk, SsReader, SsSurveyor, SsWriter}
@@ -269,31 +267,13 @@ class SsPartitionReader(p: SsInputPartition)
     case Some(rec) if rec.startOffset >= p.endOffset => false
     case Some(rec) =>
       if (p.keys.forall(_.contains(rec.message.stream_key))) {
-        row = SsRows.toInternalRow(rec.message); true
+        row = Envelope.toInternalRow(rec.message); true
       } else next()
     case None => false
   }
 
   override def get(): InternalRow = row
   override def close(): Unit = reader.close()
-}
-
-object SsRows {
-  def toInternalRow(m: SeaMessage): InternalRow =
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(m.stream_key),
-      m.shard_id,
-      m.sequence,
-      m.timestamp.getTime * 1000L, // micros
-      m.payload))
-
-  def fromInternalRow(row: InternalRow): SeaMessage =
-    SeaMessage(
-      row.getUTF8String(0).toString,
-      row.getLong(1),
-      row.getLong(2),
-      new java.sql.Timestamp(row.getLong(3) / 1000L),
-      if (row.isNullAt(4)) Array.emptyByteArray else row.getBinary(4))
 }
 
 // ----------------------------------------------------------- streaming read
@@ -735,7 +715,7 @@ class SsDataWriter(attemptFile: File, destFile: File, interval: Int,
       rotation += 1
       current = open(rotated(attemptFile), rotated(destFile))
     }
-    current.write(SsRows.fromInternalRow(row))
+    current.write(Envelope.fromInternalRow(row))
   }
 
   override def commit(): WriterCommitMessage = {

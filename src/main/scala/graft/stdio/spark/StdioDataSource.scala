@@ -1,19 +1,11 @@
 package graft.stdio.spark
 
-import java.util
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{Envelope, SeaMessage}
+import graft.core.{LiveSource, MessageReaders, SeaMessage}
 import graft.ops.StdioParser
-import graft.ss.spark.SsRows
 
 /** `spark.readStream.format("stdio-lines").load(path)` — the stdio
   * backend's LIVE consumer: tail a growing line file (the distributed
@@ -42,35 +34,8 @@ import graft.ss.spark.SsRows
   * process's stdin), so each micro-batch plans ONE partition; the
   * downstream shuffle distributes. Not a 100 TB ingest path by design.
   */
-class StdioDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "stdio-lines"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Envelope.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new StdioTable(new CaseInsensitiveStringMap(properties))
-  override def supportsExternalMetadata(): Boolean = true
-}
-
-class StdioTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"stdio-lines:${options.get("path")}"
-  override def schema(): StructType = Envelope.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = new util.HashMap[String, String](options.asCaseSensitiveMap())
-    merged.putAll(opts.asCaseSensitiveMap())
-    val all = new CaseInsensitiveStringMap(merged)
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = Envelope.schema
-        override def toMicroBatchStream(loc: String): MicroBatchStream =
-          new StdioMicroBatchStream(all)
-      }
-    }
-  }
-}
+class StdioDataSource extends LiveSource("stdio-lines", Seq("path"),
+  new StdioMicroBatchStream(_))
 
 /** `{"pos":<byte>,"line":<ordinal>}` — both advance only at '\n'. */
 final case class StdioOffset(pos: Long, line: Long) extends Offset {
@@ -173,10 +138,7 @@ class StdioMicroBatchStream(options: CaseInsensitiveStringMap)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new StdioPartitionReader(p.asInstanceOf[StdioInputPartition])
-    }
+    StdioPartitionReader
 
   override def deserializeOffset(json: String): Offset = {
     val o = StdioOffset.fromJson(json)
@@ -191,47 +153,33 @@ class StdioMicroBatchStream(options: CaseInsensitiveStringMap)
 }
 
 /** Parses `[fromPos, untilPos)` — all complete lines — into envelopes. */
-class StdioPartitionReader(p: StdioInputPartition)
-    extends PartitionReader[InternalRow] {
-
-  private val lines: Iterator[(String, Long)] = {
-    val in = new java.io.RandomAccessFile(p.path, "r")
-    try {
-      in.seek(p.fromPos)
-      val buf = new Array[Byte]((p.untilPos - p.fromPos).toInt)
-      in.readFully(buf)
-      val text = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      // untilPos sits just after a '\n', so the text ends with '\n' and the
-      // final split slice is always the "" artifact — drop exactly it.
-      // INTERIOR empty lines are real messages (the reference's flush sends
-      // an empty broadcast line, producer.rs:252).
-      text.split("\n", -1).dropRight(1).iterator.zipWithIndex
-        .map { case (l, i) => (l, p.fromLine + i) }
-        .toSeq.iterator
-    } finally in.close()
-  }
-
-  private var current: SeaMessage = _
-
-  override def next(): Boolean = {
-    while (lines.hasNext) {
-      val (line, ordinal) = lines.next()
-      StdioParser.parseMeta(line) match {
-        case Right((h, payload)) =>
-          current = SeaMessage(
-            h.streamKey.getOrElse("broadcast"),
-            h.shardId.getOrElse(0L),
-            h.sequence.getOrElse(ordinal),
-            h.timestamp.getOrElse(
-              new java.sql.Timestamp(System.currentTimeMillis())),
-            payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          return true
-        case Left(_) => // unparseable meta: skip, like the replay path
-      }
+object StdioPartitionReader extends MessageReaders[StdioInputPartition] {
+  def open(p: StdioInputPartition): (Iterator[SeaMessage], AutoCloseable) = {
+    val text = {
+      val in = new java.io.RandomAccessFile(p.path, "r")
+      try {
+        in.seek(p.fromPos)
+        val buf = new Array[Byte]((p.untilPos - p.fromPos).toInt)
+        in.readFully(buf)
+        new String(buf, java.nio.charset.StandardCharsets.UTF_8)
+      } finally in.close()
     }
-    false
+    // untilPos sits just after a '\n', so the text ends with '\n' and the
+    // final split slice is always the "" artifact — drop exactly it.
+    // INTERIOR empty lines are real messages (the reference's flush sends
+    // an empty broadcast line, producer.rs:252).
+    val lines = text.split("\n", -1).dropRight(1).iterator.zipWithIndex
+    (lines.flatMap { case (line, i) =>
+      // unparseable meta: skip, like the replay path
+      StdioParser.parseMeta(line).toOption.map { case (h, payload) =>
+        SeaMessage(
+          h.streamKey.getOrElse("broadcast"),
+          h.shardId.getOrElse(0L),
+          h.sequence.getOrElse(p.fromLine + i),
+          h.timestamp.getOrElse(
+            new java.sql.Timestamp(System.currentTimeMillis())),
+          payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+    }, () => ())
   }
-
-  override def get(): InternalRow = SsRows.toInternalRow(current)
-  override def close(): Unit = ()
 }
