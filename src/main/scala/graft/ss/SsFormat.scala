@@ -1,6 +1,5 @@
 package graft.ss
 
-import java.io.{ByteArrayOutputStream, DataOutputStream, EOFException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.core.SeaMessage
@@ -64,95 +63,128 @@ object SsFormat {
 
   // ---- encoding ---------------------------------------------------------
 
-  private def shortString(out: DataOutputStream, s: String): Unit = {
-    val bytes = s.getBytes(UTF_8)
-    require(bytes.length <= 255, s"String too long: ${bytes.length}")
-    out.writeByte(bytes.length)
-    out.write(bytes)
+  /** Growable big-endian byte sink. [[SsWriter]] keeps one and resets it
+    * per frame, so writing a frame allocates no stream, array or tuple.
+    */
+  final class Encoder(initial: Int = 512) {
+    private[ss] var bytes = new Array[Byte](initial)
+    private[ss] var length = 0
+    private var key: String = null
+    private var keyBytes: Array[Byte] = Array.emptyByteArray
+
+    def reset(): Unit = length = 0
+    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(bytes, length)
+
+    private def room(n: Int): Unit =
+      if (length + n > bytes.length)
+        bytes = java.util.Arrays.copyOf(bytes,
+          math.max(bytes.length * 2, length + n))
+
+    private def be(v: Long, n: Int): Unit = {
+      room(n)
+      var i = 0
+      while (i < n) { bytes(length + i) = (v >>> (8 * (n - 1 - i))).toByte; i += 1 }
+      length += n
+    }
+    def u8(v: Int): Unit = be(v, 1)
+    def u16(v: Int): Unit = be(v, 2)
+    def u32(v: Int): Unit = be(v, 4)
+    def u64(v: Long): Unit = be(v, 8)
+    def put(a: Array[Byte]): Unit = {
+      room(a.length)
+      System.arraycopy(a, 0, bytes, length, a.length)
+      length += a.length
+    }
+
+    /** u8 length + UTF-8 bytes; the last string's encoding is reused. */
+    def shortString(s: String): Unit = {
+      if (s != key) { keyBytes = s.getBytes(UTF_8); key = s }
+      require(keyBytes.length <= 255, s"String too long: ${keyBytes.length}")
+      u8(keyBytes.length)
+      put(keyBytes)
+    }
   }
 
   def encodeHeader(h: SsHeader): Array[Byte] = {
-    val buf = new ByteArrayOutputStream(HeaderSize)
-    val out = new DataOutputStream(buf)
-    out.writeByte(ByteMark0); out.writeByte(ByteMark1); out.writeByte(Version)
-    shortString(out, h.fileName)
-    out.writeLong(h.createdAtMillis)
-    out.writeInt(h.beaconInterval)
-    val padding = HeaderSize - buf.size()
+    val out = new Encoder(HeaderSize)
+    out.u8(ByteMark0); out.u8(ByteMark1); out.u8(Version)
+    out.shortString(h.fileName)
+    out.u64(h.createdAtMillis)
+    out.u32(h.beaconInterval)
+    val padding = HeaderSize - out.length
     require(padding >= 1, s"File name too long for header: ${h.fileName}")
-    var i = 0
-    while (i < padding - 1) { out.writeByte(0); i += 1 }
-    out.writeByte(Cr)
-    buf.toByteArray
+    while (out.length < HeaderSize - 1) out.u8(0)
+    out.u8(Cr)
+    out.toByteArray
   }
 
-  /** Message frame = header + u32 size + payload + u16 crc + 0x0D.
-    * Returns (frameBytes, payloadChecksum).
+  /** Appends one message frame (header + u32 size + payload + u16 crc +
+    * 0x0D) to `out`; returns the payload checksum.
     */
-  def encodeMessage(m: SeaMessage): (Array[Byte], Int) = {
+  def encodeMessage(out: Encoder, m: SeaMessage): Int = {
     val payload = if (m.payload == null) Array.emptyByteArray else m.payload
-    val buf = new ByteArrayOutputStream(64 + payload.length)
-    val out = new DataOutputStream(buf)
-    shortString(out, m.stream_key)
-    out.writeLong(m.shard_id)
-    out.writeLong(m.sequence)
-    out.writeLong(m.timestamp.getTime)
-    out.writeInt(payload.length)
-    out.write(payload)
+    out.shortString(m.stream_key)
+    out.u64(m.shard_id)
+    out.u64(m.sequence)
+    out.u64(m.timestamp.getTime)
+    out.u32(payload.length)
+    out.put(payload)
     val crc = Crc16Cdma2000(payload)
-    out.writeShort(crc)
-    out.writeByte(Cr)
-    (buf.toByteArray, crc)
+    out.u16(crc)
+    out.u8(Cr)
+    crc
+  }
+
+  /** One message frame as its own array, with its payload checksum. */
+  def encodeMessage(m: SeaMessage): (Array[Byte], Int) = {
+    val out = new Encoder(64 + (if (m.payload == null) 0 else m.payload.length))
+    val crc = encodeMessage(out, m)
+    (out.toByteArray, crc)
   }
 
   def encodeBeacon(b: Beacon): Array[Byte] = {
     require(b.items.length <= 255, "TooManyBeacon")
-    val buf = new ByteArrayOutputStream(b.size)
-    val out = new DataOutputStream(buf)
-    out.writeByte(Cr)
-    out.writeInt(b.remainingMessagesBytes)
-    out.writeByte(b.items.length)
+    val out = new Encoder(b.size)
+    out.u8(Cr)
+    out.u32(b.remainingMessagesBytes)
+    out.u8(b.items.length)
     b.items.foreach { m =>
-      shortString(out, m.streamKey)
-      out.writeLong(m.shardId)
-      out.writeLong(m.maxSeqNo)
-      out.writeLong(m.maxTimestampMillis)
-      out.writeShort(m.runningChecksum)
+      out.shortString(m.streamKey)
+      out.u64(m.shardId)
+      out.u64(m.maxSeqNo)
+      out.u64(m.maxTimestampMillis)
+      out.u16(m.runningChecksum)
     }
-    out.writeByte(Cr)
-    buf.toByteArray
+    out.u8(Cr)
+    out.toByteArray
   }
 
   // ---- decoding ---------------------------------------------------------
 
-  /** Byte-at-a-time decode primitives over an arbitrary `readByte`. Used by
-    * [[SsReader]], whose readByte transparently consumes beacons at interval
-    * boundaries (that is how spliced messages come back together).
+  /** Big-endian decode primitives. [[SsSource]] implements every one of
+    * them over its buffer — in place when the field lies wholly before the
+    * buffer end and the next beacon boundary, by block copy otherwise — and
+    * is what every file read goes through. An in-memory reader only has to
+    * supply `readByte`; the defaults compose the rest from it.
     */
   trait ByteReader {
     def readByte(): Int // 0..255, or throws EOFException
 
-    /** Skip n bytes; implementations may override with a bulk skip. */
     def skipFully(n: Int): Unit = {
       var i = 0
       while (i < n) { readByte(); i += 1 }
     }
-
-    final def readFully(n: Int): Array[Byte] = {
+    def readFully(n: Int): Array[Byte] = {
       val a = new Array[Byte](n)
       var i = 0
       while (i < n) { a(i) = readByte().toByte; i += 1 }
       a
     }
-    final def readU16(): Int = (readByte() << 8) | readByte()
-    final def readU32(): Int =
-      (readByte() << 24) | (readByte() << 16) | (readByte() << 8) | readByte()
-    final def readU64(): Long =
+    def readU16(): Int = (readByte() << 8) | readByte()
+    def readU32(): Int = (readU16() << 16) | readU16()
+    def readU64(): Long =
       (readU32().toLong << 32) | (readU32().toLong & 0xFFFFFFFFL)
-    final def readShortString(): String = {
-      val len = readByte()
-      new String(readFully(len), UTF_8)
-    }
+    def readShortString(): String = new String(readFully(readByte()), UTF_8)
   }
 
   def decodeHeader(bytes: Array[Byte]): SsHeader = {
@@ -160,21 +192,16 @@ object SsFormat {
     if ((bytes(0) & 0xFF) != ByteMark0 || (bytes(1) & 0xFF) != ByteMark1)
       throw FormatException("Byte mark mismatch")
     if ((bytes(2) & 0xFF) != Version) throw FormatException("Version mismatch")
-    val r = new ByteReader {
-      private var i = 3
-      def readByte(): Int = {
-        if (i >= bytes.length) throw new EOFException
-        val b = bytes(i) & 0xFF; i += 1; b
-      }
-    }
+    val r = SsSource.over(bytes)
+    r.skipFully(3)
     val name = r.readShortString()
-    SsHeader(name, r.readU64(), r.readU32().toInt)
+    SsHeader(name, r.readU64(), r.readU32())
   }
 
-  /** Reads one message frame (after any leading beacon has been consumed by
-    * the caller's ByteReader). Returns message + its stored checksum.
-    * With `skimPayload` the payload bytes are skipped, not materialized —
-    * for offset walks that only need frame boundaries.
+  /** Reads one message frame (a beacon in the way is the reader's to
+    * consume). Returns message + its stored checksum. With `skimPayload`
+    * the payload bytes are skipped, not materialized — for offset walks
+    * that only need frame boundaries.
     */
   def decodeMessage(r: ByteReader, skimPayload: Boolean = false): (SeaMessage, Int) = {
     val key = r.readShortString()
@@ -182,6 +209,9 @@ object SsFormat {
     val seq = r.readU64()
     val ts = r.readU64()
     val size = r.readU32()
+    // a u32 size past Int.MaxValue fits no array and no frame extent
+    if (size < 0)
+      throw FormatException(s"Frame size ${size & 0xFFFFFFFFL} exceeds ${Int.MaxValue}")
     // control frames (EOS) stay materialized even when skimming
     val payload =
       if (skimPayload && key != graft.core.Envelope.SeaStreamerInternal) {

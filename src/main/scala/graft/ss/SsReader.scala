@@ -1,9 +1,6 @@
 package graft.ss
 
-import java.io.{BufferedInputStream, EOFException, InputStream}
-import java.nio.ByteBuffer
-import java.nio.channels.{Channels, FileChannel}
-import java.nio.file.{Paths, StandardOpenOption}
+import java.io.EOFException
 
 import graft.core.{Envelope, SeaMessage}
 import graft.ss.SsFormat._
@@ -19,6 +16,12 @@ final case class SsRecord(
   * Beacon interleaved at every `beaconInterval` boundary — including beacons
   * that land mid-frame (spliced messages, format.rs:34-37).
   *
+  * Decoding is block-at-a-time: an [[SsSource]] fills a 64 KiB buffer from
+  * the file channel, header fields decode in place, payloads are copied in
+  * contiguous runs that stop at the next beacon boundary, skim mode skips
+  * payloads by moving the buffer or channel position, and a frame whose key
+  * bytes repeat the previous frame's reuses its `String`.
+  *
   * Can start either at the header or at the N-th beacon boundary
   * ([[SsReader.openAt]]); in the latter case the partial spliced message
   * under the beacon is skipped exactly like the reference's rewind
@@ -26,86 +29,39 @@ final case class SsRecord(
   * SPLITTABLE for parallel scan: split k reads messages whose frame *starts*
   * in [beacon_k, beacon_k+stride).
   */
-final class SsReader private[ss] (
-    in: InputStream,
+final class SsReader private (
+    src: SsSource,
     val header: SsHeader,
-    startOffset: Long,
     verifyChecksum: Boolean,
     /** Skip payload bytes (frames only carry header/extent) — for offset
       * walks. Incompatible with checksum verification.
       */
-    skimPayload: Boolean = false,
+    skimPayload: Boolean,
     /** Surface `SEA_STREAMER_INTERNAL` control frames instead of hiding
       * them — the decoder utility prints every frame including the
       * terminating EOS, like the reference's ss-decode
       * (sea-streamer-file/src/bin/decoder.rs:66-137). EOS still ends the
       * scan: the frame is returned once, then `next()` yields None.
       */
-    surfaceInternal: Boolean = false) extends AutoCloseable {
+    surfaceInternal: Boolean) extends AutoCloseable {
 
-  private val interval: Long = header.beaconInterval.toLong
-  private var offset: Long = startOffset
   private var eosSeen = false
   private var truncated = false
-  private var lastBeaconVar: Option[Beacon] = None
-
-  /** Raw reader: advances offset, no boundary interception (beacon bodies). */
-  private val raw: ByteReader = new ByteReader {
-    def readByte(): Int = {
-      val b = in.read()
-      if (b < 0) throw new EOFException
-      offset += 1
-      b
-    }
-  }
-
-  /** Boundary-aware reader: consumes any beacon sitting at an interval
-    * boundary before handing out the next message byte.
-    */
-  private val demux: ByteReader = new ByteReader {
-    def readByte(): Int = {
-      if (offset > 0 && offset % interval == 0) consumeBeacon()
-      raw.readByte()
-    }
-
-    /** Bulk skip that still consumes beacons at interval boundaries. */
-    override def skipFully(n: Int): Unit = {
-      var remaining = n.toLong
-      while (remaining > 0) {
-        if (offset > 0 && offset % interval == 0) consumeBeacon()
-        val chunk = math.min(remaining, interval - (offset % interval))
-        var done = 0L
-        while (done < chunk) {
-          val s = in.skip(chunk - done)
-          if (s > 0) { offset += s; done += s }
-          else { raw.readByte(); done += 1 } // advances offset; EOF throws
-        }
-        remaining -= chunk
-      }
-    }
-  }
-
-  private def consumeBeacon(): Unit =
-    lastBeaconVar = Some(decodeBeacon(raw))
+  private var eosStartVar: Option[Long] = None
 
   // Split start: drop the partial message spliced under the starting beacon.
   // Loop because a long frame can fully bridge an interval (rewind law,
   // messages.rs:144-173: skip min(remaining, interval - beaconSize)).
-  locally {
-    while (offset > 0 && offset % interval == 0 && !truncated) {
-      try {
-        val beacon = decodeBeacon(raw)
-        lastBeaconVar = Some(beacon)
-        val skip = math.min(
-          beacon.remainingMessagesBytes.toLong,
-          interval - beacon.size)
-        raw.readFully(skip.toInt)
-      } catch { case _: EOFException => truncated = true }
+  try {
+    while (src.atBoundary) {
+      val beacon = src.crossBoundary()
+      src.skipFully(math.min(beacon.remainingMessagesBytes.toLong,
+        header.beaconInterval.toLong - beacon.size).toInt)
     }
-  }
+  } catch { case _: EOFException => truncated = true }
 
-  def currentOffset: Long = offset
-  def lastBeacon: Option[Beacon] = lastBeaconVar
+  def currentOffset: Long = src.offset
+  def lastBeacon: Option[Beacon] = src.lastBeacon
   def isEos: Boolean = eosSeen
   def isTruncated: Boolean = truncated
 
@@ -116,22 +72,22 @@ final class SsReader private[ss] (
   @annotation.tailrec
   def next(): Option[SsRecord] = {
     if (eosSeen || truncated) return None
-    val start = offset
+    val start = src.offset
     val decoded =
       try {
-        val (msg, storedCrc) = decodeMessage(demux, skimPayload)
+        val (msg, storedCrc) = decodeMessage(src, skimPayload)
         if (verifyChecksum && !skimPayload) {
           val computed = Crc16Cdma2000(
             if (msg.payload == null) Array.emptyByteArray else msg.payload)
           if (computed != storedCrc)
             throw ChecksumException(storedCrc, computed)
         }
-        Some(SsRecord(msg, storedCrc, start, offset))
+        Some(SsRecord(msg, storedCrc, start, src.offset))
       } catch {
         case _: EOFException =>
           // clean EOF at frame start, or a truncated in-flight tail — both
           // end the scan (the tail becomes visible on the next micro-batch)
-          truncated = offset != start
+          truncated = src.offset != start
           None
       }
     decoded match {
@@ -145,8 +101,6 @@ final class SsReader private[ss] (
     }
   }
 
-  private var eosStartVar: Option[Long] = None
-
   /** Byte offset where the terminating EOS frame starts (for append-mode
     * EOS truncation, messages.rs:420-515).
     */
@@ -155,44 +109,47 @@ final class SsReader private[ss] (
   def iterator: Iterator[SsRecord] =
     Iterator.continually(next()).takeWhile(_.isDefined).map(_.get)
 
-  def close(): Unit = in.close()
+  def close(): Unit = src.close()
 }
 
 object SsReader {
 
-  /** Decode the beacon sitting at an exact interval boundary (split-pruning
-    * support: the beacon's markers carry prefix-max seq/ts per stream).
+  /** Opens `path` and decodes its header — the one header read behind
+    * every entry point.
     */
-  def readBeaconAt(path: String, offset: Long): Option[Beacon] = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      if (offset >= ch.size()) return None
-      ch.position(offset)
-      val in = new BufferedInputStream(Channels.newInputStream(ch), 1 << 14)
-      val r = new ByteReader {
-        def readByte(): Int = {
-          val b = in.read()
-          if (b < 0) throw new EOFException
-          b
-        }
-      }
-      try Some(decodeBeacon(r))
-      catch { case _: EOFException => None }
-    } finally ch.close()
+  private def withHeader(path: String, bufferSize: Int): (SsSource, SsHeader) = {
+    val src = SsSource.open(path, bufferSize)
+    try (src, decodeHeader(src.readFully(HeaderSize)))
+    catch {
+      case _: EOFException =>
+        src.close(); throw new EOFException(s"File shorter than header: $path")
+      case e: Throwable => src.close(); throw e
+    }
   }
 
-  def readHeader(path: String): SsHeader = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+  /** Decode the beacons sitting at exact interval boundaries, over one
+    * channel (split-pruning support: the beacon's markers carry prefix-max
+    * seq/ts per stream). None where the file ends before or inside one.
+    */
+  def readBeaconsAt(path: String, offsets: Seq[Long]): Seq[Option[Beacon]] = {
+    val src = SsSource.open(path, 1 << 14)
     try {
-      val buf = ByteBuffer.allocate(HeaderSize)
-      var n = 0
-      while (n < HeaderSize) {
-        val r = ch.read(buf)
-        if (r < 0) throw new EOFException(s"File shorter than header: $path")
-        n += r
-      }
-      decodeHeader(buf.array())
-    } finally ch.close()
+      val size = src.size
+      offsets.iterator.map { offset =>
+        if (offset >= size) None
+        else try Some(decodeBeacon(src.at(offset)))
+        catch { case _: EOFException => None }
+      }.toVector
+    } finally src.close()
+  }
+
+  def readBeaconAt(path: String, offset: Long): Option[Beacon] =
+    readBeaconsAt(path, Seq(offset)).head
+
+  def readHeader(path: String): SsHeader = {
+    val (src, header) = withHeader(path, HeaderSize)
+    src.close()
+    header
   }
 
   /** Sequential read from the start of the data. */
@@ -205,41 +162,23 @@ object SsReader {
     * frame-exact offsets). Offsets <= HeaderSize mean "from the header".
     */
   def openAtOffset(path: String, byteOffset: Long, verifyChecksum: Boolean = true,
-      skim: Boolean = false): SsReader = {
-    if (byteOffset <= HeaderSize) return open(path, verifyChecksum, skim)
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    val buf = ByteBuffer.allocate(HeaderSize)
-    var n = 0
-    while (n < HeaderSize) {
-      val r = ch.read(buf)
-      if (r < 0) { ch.close(); throw new EOFException(s"File shorter than header: $path") }
-      n += r
-    }
-    val header = decodeHeader(buf.array())
-    ch.position(byteOffset)
-    new SsReader(
-      new BufferedInputStream(Channels.newInputStream(ch), 1 << 16),
-      header, byteOffset, verifyChecksum, skim)
-  }
+      skim: Boolean = false): SsReader =
+    openFrom(path, _ => math.max(byteOffset, HeaderSize.toLong),
+      verifyChecksum, skim, surfaceInternal = false)
 
   /** Positioned read from the N-th beacon boundary (0 = right after header). */
   def openAt(path: String, nthBeacon: Long, verifyChecksum: Boolean = true,
-      skim: Boolean = false, surfaceInternal: Boolean = false): SsReader = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    val buf = ByteBuffer.allocate(HeaderSize)
-    var n = 0
-    while (n < HeaderSize) {
-      val r = ch.read(buf)
-      if (r < 0) { ch.close(); throw new EOFException(s"File shorter than header: $path") }
-      n += r
-    }
-    val header = decodeHeader(buf.array())
-    val start =
-      if (nthBeacon <= 0) HeaderSize.toLong
-      else nthBeacon * header.beaconInterval.toLong
-    ch.position(start)
-    new SsReader(
-      new BufferedInputStream(Channels.newInputStream(ch), 1 << 16),
-      header, start, verifyChecksum, skim, surfaceInternal)
+      skim: Boolean = false, surfaceInternal: Boolean = false): SsReader =
+    openFrom(path,
+      h => if (nthBeacon <= 0) HeaderSize.toLong
+      else nthBeacon * h.beaconInterval.toLong,
+      verifyChecksum, skim, surfaceInternal)
+
+  private def openFrom(path: String, start: SsHeader => Long,
+      verifyChecksum: Boolean, skim: Boolean, surfaceInternal: Boolean): SsReader = {
+    val (src, header) = withHeader(path, SsSource.BufferSize)
+    try new SsReader(src.at(start(header), header.beaconInterval.toLong),
+      header, verifyChecksum, skim, surfaceInternal)
+    catch { case e: Throwable => src.close(); throw e }
   }
 }

@@ -65,9 +65,15 @@ final class SsWriter(
   def offset: Long = offsetBytes
   def messageCount: Long = messages
 
+  // one frame buffer for the writer's life, reset per message
+  private val frameOut = new Encoder()
+
   /** Writes one message; returns its payload checksum. */
   def write(msg: SeaMessage): Int = {
-    val (frame, checksum) = encodeMessage(msg)
+    frameOut.reset()
+    val checksum = encodeMessage(frameOut, msg)
+    val frame = frameOut.bytes
+    val frameLength = frameOut.length
     val st = states.getOrElseUpdate((msg.stream_key, msg.shard_id),
       StreamState(msg.sequence, msg.timestamp.getTime, RunningChecksum()))
     st.maxSeqNo = math.max(st.maxSeqNo, msg.sequence)
@@ -75,14 +81,14 @@ final class SsWriter(
     st.checksum.update(checksum)
 
     var pos = 0
-    while (pos < frame.length) {
+    while (pos < frameLength) {
       val untilBoundary =
         (beaconInterval - (offsetBytes % beaconInterval)).toInt
-      val n = math.min(untilBoundary, frame.length - pos)
+      val n = math.min(untilBoundary, frameLength - pos)
       out.write(frame, pos, n)
       pos += n
       offsetBytes += n
-      if (offsetBytes % beaconInterval == 0) writeBeacon(frame.length - pos)
+      if (offsetBytes % beaconInterval == 0) writeBeacon(frameLength - pos)
     }
     messages += 1
     checksum
@@ -134,9 +140,9 @@ object SsWriter {
     * walk, and writing resumes beacon-consistently at the cut point.
     */
   def append(path: String): SsWriter = {
-    val header = SsReader.readHeader(path)
-    val interval = header.beaconInterval
     val r = SsReader.open(path, verifyChecksum = false, skim = true)
+    val header = r.header
+    val interval = header.beaconInterval
     val restored = mutable.TreeMap.empty[(String, Long), (Long, Long, RunningChecksum)]
     var end = HeaderSize.toLong
     var count = 0L
@@ -171,30 +177,11 @@ object SsWriter {
         java.nio.file.StandardOpenOption.WRITE)
       try ch.truncate(cut) finally ch.close()
 
-      // marker count across surviving beacons (rotation phase) — one
-      // channel, repositioned per boundary, not a reopen per beacon
-      var markers = 0L
-      val bch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(path),
-        java.nio.file.StandardOpenOption.READ)
-      try {
-        var k = 1L
-        while (k * interval < cut) {
-          bch.position(k * interval)
-          val in = new java.io.BufferedInputStream(
-            java.nio.channels.Channels.newInputStream(bch), 1 << 14)
-          val br = new ByteReader {
-            def readByte(): Int = {
-              val b = in.read()
-              if (b < 0) throw new java.io.EOFException
-              b
-            }
-          }
-          try markers += decodeBeacon(br).items.length
-          catch { case _: java.io.EOFException => () }
-          k += 1
-        }
-      } finally bch.close()
+      // marker count across surviving beacons (rotation phase), read over
+      // one channel
+      val markers = SsReader
+        .readBeaconsAt(path, (1L to (cut - 1) / interval).map(_ * interval))
+        .flatten.map(_.items.length.toLong).sum
       new SsWriter(
         new java.io.BufferedOutputStream(
           new java.io.FileOutputStream(path, true), 1 << 16),

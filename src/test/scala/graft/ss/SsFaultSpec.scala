@@ -145,4 +145,25 @@ class SsFaultSpec extends AnyFunSuite {
     val e2 = SsOffsetWalk.safeEnd(path, e.offset)
     assert(e2.offset == full.length.toLong)
   }
+
+  test("a frame size field >= 2^31 is a typed format error, read or skimmed") {
+    val dir = Files.createTempDirectory("ssfault4").toFile
+    val path = s"$dir/d.ss"
+    writeFile(path, 10)
+    // first frame: u8 key length + key "k" + shard, seq, ts (3 × u64), then
+    // the u32 size — set its top byte so the size reads as 2^31 + 36
+    val bytes = Files.readAllBytes(Paths.get(path))
+    val sizeAt = SsFormat.HeaderSize + 1 + 1 + 3 * 8
+    assert(bytes(sizeAt) == 0, "fixture frame size must fit in three bytes")
+    bytes(sizeAt) = 0x80.toByte
+    Files.write(Paths.get(path), bytes)
+
+    Seq(false, true).foreach { skim =>
+      val r = SsReader.open(path, verifyChecksum = !skim, skim = skim)
+      try intercept[SsFormat.FormatException](r.next())
+      finally r.close()
+    }
+    // the offset walk skims the same frame: it must not plan a bogus extent
+    intercept[SsFormat.FormatException](SsOffsetWalk.safeEnd(path, 0L))
+  }
 }
