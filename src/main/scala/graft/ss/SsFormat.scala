@@ -64,13 +64,11 @@ object SsFormat {
   // ---- encoding ---------------------------------------------------------
 
   /** Growable big-endian byte sink. [[SsWriter]] keeps one and resets it
-    * per frame, so writing a frame allocates no stream, array or tuple.
+    * per frame, so writing a frame allocates no stream, frame array or tuple.
     */
   final class Encoder(initial: Int = 512) {
     private[ss] var bytes = new Array[Byte](initial)
     private[ss] var length = 0
-    private var key: String = null
-    private var keyBytes: Array[Byte] = Array.emptyByteArray
 
     def reset(): Unit = length = 0
     def toByteArray: Array[Byte] = java.util.Arrays.copyOf(bytes, length)
@@ -96,12 +94,12 @@ object SsFormat {
       length += a.length
     }
 
-    /** u8 length + UTF-8 bytes; the last string's encoding is reused. */
+    /** u8 length + UTF-8 bytes. */
     def shortString(s: String): Unit = {
-      if (s != key) { keyBytes = s.getBytes(UTF_8); key = s }
-      require(keyBytes.length <= 255, s"String too long: ${keyBytes.length}")
-      u8(keyBytes.length)
-      put(keyBytes)
+      val b = s.getBytes(UTF_8)
+      require(b.length <= 255, s"String too long: ${b.length}")
+      u8(b.length)
+      put(b)
     }
   }
 
@@ -192,10 +190,11 @@ object SsFormat {
     if ((bytes(0) & 0xFF) != ByteMark0 || (bytes(1) & 0xFF) != ByteMark1)
       throw FormatException("Byte mark mismatch")
     if ((bytes(2) & 0xFF) != Version) throw FormatException("Version mismatch")
-    val r = SsSource.over(bytes)
-    r.skipFully(3)
-    val name = r.readShortString()
-    SsHeader(name, r.readU64(), r.readU32())
+    val len = bytes(3) & 0xFF
+    // the name leaves no room for the created-at and interval fields
+    if (4 + len + 8 + 4 > HeaderSize) throw new java.io.EOFException
+    val rest = java.nio.ByteBuffer.wrap(bytes, 4 + len, HeaderSize - 4 - len)
+    SsHeader(new String(bytes, 4, len, UTF_8), rest.getLong(), rest.getInt())
   }
 
   /** Reads one message frame (a beacon in the way is the reader's to

@@ -119,32 +119,41 @@ object SsReader {
     */
   private def withHeader(path: String, bufferSize: Int): (SsSource, SsHeader) = {
     val src = SsSource.open(path, bufferSize)
-    try (src, decodeHeader(src.readFully(HeaderSize)))
-    catch {
-      case _: EOFException =>
-        src.close(); throw new EOFException(s"File shorter than header: $path")
-      case e: Throwable => src.close(); throw e
-    }
+    try {
+      val bytes =
+        try src.readFully(HeaderSize)
+        catch { case _: EOFException => throw new EOFException(s"File shorter than header: $path") }
+      (src, decodeHeader(bytes))
+    } catch { case e: Throwable => src.close(); throw e }
   }
 
   /** Decode the beacons sitting at exact interval boundaries, over one
-    * channel (split-pruning support: the beacon's markers carry prefix-max
-    * seq/ts per stream). None where the file ends before or inside one.
+    * channel, handing each to `f` as it is read (split-pruning support: the
+    * beacon's markers carry prefix-max seq/ts per stream). Offsets where the
+    * file ends before or inside the beacon are passed over.
     */
-  def readBeaconsAt(path: String, offsets: Seq[Long]): Seq[Option[Beacon]] = {
+  def readBeaconsAt(path: String, offsets: Iterator[Long])(f: Beacon => Unit): Unit = {
     val src = SsSource.open(path, 1 << 14)
     try {
       val size = src.size
-      offsets.iterator.map { offset =>
-        if (offset >= size) None
-        else try Some(decodeBeacon(src.at(offset)))
-        catch { case _: EOFException => None }
-      }.toVector
+      offsets.foreach { offset =>
+        if (offset < size) {
+          val b = try Some(decodeBeacon(src.at(offset)))
+          catch { case _: EOFException => None }
+          b.foreach(f)
+        }
+      }
     } finally src.close()
   }
 
-  def readBeaconAt(path: String, offset: Long): Option[Beacon] =
-    readBeaconsAt(path, Seq(offset)).head
+  /** The beacon at one interval boundary; None where the file ends before
+    * or inside it.
+    */
+  def readBeaconAt(path: String, offset: Long): Option[Beacon] = {
+    var out: Option[Beacon] = None
+    readBeaconsAt(path, Iterator.single(offset))(b => out = Some(b))
+    out
+  }
 
   def readHeader(path: String): SsHeader = {
     val (src, header) = withHeader(path, HeaderSize)

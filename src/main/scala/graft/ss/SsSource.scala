@@ -16,21 +16,21 @@ import graft.ss.SsFormat._
   * every copy run ends there, and the beacon standing at the boundary is
   * decoded ([[crossBoundary]]) before the next data byte — which is how a
   * frame spliced across beacons comes back together. Without an interval
-  * it reads raw bytes (headers, single beacons).
+  * it reads raw bytes (headers, single beacons). A field split by the
+  * buffer end or a boundary is decoded a byte at a time.
   *
   * On end of file every buffered byte counts as consumed, so `offset` is
   * the file end when `EOFException` surfaces — a torn tail reads as
   * `offset != frame start`.
   */
-private[ss] final class SsSource private (
-    ch: FileChannel, buf: Array[Byte], filled: Int) extends ByteReader {
+private[ss] final class SsSource private (ch: FileChannel, buf: Array[Byte])
+    extends ByteReader {
 
   private val view = ByteBuffer.wrap(buf)
-  private val scratch = ByteBuffer.allocate(8)
   private var base = 0L // file offset of buf(0)
   private var pos = 0 // next unread index
-  private var lim = filled // end of the bytes read
-  private var stop = filled // min(lim, boundary index): in-place reads end here
+  private var lim = 0 // end of the bytes read
+  private var stop = 0 // min(lim, boundary index): in-place reads end here
   private var interval = 0L
   private var boundary = Long.MaxValue // next beacon boundary; MaxValue when raw
 
@@ -87,7 +87,6 @@ private[ss] final class SsSource private (
 
   private def fill(): Unit = {
     base += lim; pos = 0; lim = 0; stop = 0
-    if (ch == null) throw new EOFException
     view.clear()
     val n = ch.read(view)
     if (n < 0) throw new EOFException
@@ -107,10 +106,19 @@ private[ss] final class SsSource private (
     }
   }
 
-  /** The next `n` (≤ 8) bytes gathered into the scratch buffer. */
-  private def gather(n: Int): ByteBuffer = { copy(scratch.array, 0, n); scratch }
+  /** The next `n` (≤ 8) bytes as a big-endian number, a byte at a time —
+    * for a field split by the buffer end or a beacon boundary. Nothing is
+    * kept outside this call: crossing a boundary decodes a beacon, which
+    * can land here again.
+    */
+  private def slow(n: Int): Long = {
+    var v = 0L
+    var i = 0
+    while (i < n) { v = (v << 8) | readByte(); i += 1 }
+    v
+  }
 
-  def close(): Unit = if (ch != null) ch.close()
+  def close(): Unit = ch.close()
 
   override def readByte(): Int = {
     more()
@@ -121,15 +129,15 @@ private[ss] final class SsSource private (
 
   override def readU16(): Int =
     if (stop - pos >= 2) { val v = view.getShort(pos); pos += 2; v & 0xFFFF }
-    else gather(2).getShort(0) & 0xFFFF
+    else slow(2).toInt
 
   override def readU32(): Int =
     if (stop - pos >= 4) { val v = view.getInt(pos); pos += 4; v }
-    else gather(4).getInt(0)
+    else slow(4).toInt
 
   override def readU64(): Long =
     if (stop - pos >= 8) { val v = view.getLong(pos); pos += 8; v }
-    else gather(8).getLong(0)
+    else slow(8)
 
   override def readFully(n: Int): Array[Byte] = {
     val a = new Array[Byte](n)
@@ -150,9 +158,7 @@ private[ss] final class SsSource private (
       } else if (atBoundary) crossBoundary()
       else {
         val here = offset
-        val jump =
-          if (ch == null) 0L
-          else math.min(left, math.min(boundary, ch.size()) - here)
+        val jump = math.min(left, math.min(boundary, ch.size()) - here)
         if (jump <= 0) fill()
         else {
           base = here + jump; pos = 0; lim = 0; stop = 0
@@ -190,8 +196,5 @@ private[ss] object SsSource {
 
   def open(path: String, bufferSize: Int = BufferSize): SsSource =
     new SsSource(FileChannel.open(Paths.get(path), StandardOpenOption.READ),
-      new Array[Byte](bufferSize), 0)
-
-  /** Decodes from an in-memory array; its end is the end of file. */
-  def over(bytes: Array[Byte]): SsSource = new SsSource(null, bytes, bytes.length)
+      new Array[Byte](bufferSize))
 }

@@ -179,9 +179,10 @@ object SsWriter {
 
       // marker count across surviving beacons (rotation phase), read over
       // one channel
-      val markers = SsReader
-        .readBeaconsAt(path, (1L to (cut - 1) / interval).map(_ * interval))
-        .flatten.map(_.items.length.toLong).sum
+      var markers = 0L
+      SsReader.readBeaconsAt(path,
+        (1L to (cut - 1) / interval).iterator.map(_ * interval))(
+        b => markers += b.items.length)
       new SsWriter(
         new java.io.BufferedOutputStream(
           new java.io.FileOutputStream(path, true), 1 << 16),
