@@ -2,11 +2,15 @@ package graft.eos
 
 import org.apache.spark.sql.SparkSession
 
-/** One page of a source range: the records in the producer's shape —
-  * (event time ms, key, payload) — and each record's source position (the
-  * relay's cursor space). */
-final case class RelayPage(records: Seq[(Long, Array[Byte], Array[Byte])],
-    positions: Array[Long])
+/** One page of a source range, bound for one destination coordinate:
+  * `target` is (source stream/topic name, destination partition or
+  * shard) — kafka destinations send to `topicOf(name)` at that partition,
+  * redis destinations append to `streamOf(name):shard` with the u64
+  * shard id kept whole. The records are in the producer's shape — (event
+  * time ms, key, payload) — next to each record's source position (the
+  * relay's cursor space), ascending. */
+final case class RelayPage(target: (String, Long),
+    records: Seq[(Long, Array[Byte], Array[Byte])], positions: Array[Long])
 
 /** A coordinate's pinned tip next to its committed cursor. Coordinates are
   * (stream/topic/file name, shard/partition). */
@@ -18,12 +22,13 @@ final case class RelayPoint(coord: Coord, cursor: Long, tip: Long)
 final case class Backlog(records: Option[Long] = None,
     ms: Option[Long] = None, bytes: Option[Long] = None)
 
-/** The planning half of a relay source: where its coordinates stand.
-  * Everything here runs on the driver with O(#coordinates) RPCs and no
-  * data movement; [[graft.facade.SeaStreamer.relayLag]] is exactly this
-  * half against [[RelayDestination.cursors]].
+/** A relay source. The planning half ([[tips]], [[until]], [[backlog]])
+  * runs on the driver with O(#coordinates) RPCs and no data movement;
+  * [[graft.facade.SeaStreamer.relayLag]] is exactly that half against
+  * [[RelayDestination.cursors]]. The reading half ([[open]]) runs in the
+  * relay's tasks.
   */
-trait RelayTips extends Serializable {
+trait RelaySource extends Serializable {
 
   /** Every coordinate's pinned tip next to its committed cursor, which
     * `cursors` reads from the destination (absent = never relayed = 0).
@@ -32,7 +37,7 @@ trait RelayTips extends Serializable {
   def tips(cursors: Seq[Coord] => Map[Coord, Long]): Seq[RelayPoint]
 
   /** The end of the epoch's range at `cursor`: the per-epoch cap, in the
-    * source's own unit (sources with sparse positions cap in [[RelaySource.budget]]). */
+    * source's own unit (sources with sparse positions cap in [[budget]]). */
   def until(cursor: Long, tip: Long): Long = tip
 
   /** A coordinate's name inside the destination's anchor: the redis
@@ -43,11 +48,6 @@ trait RelayTips extends Serializable {
   /** Pending work at each point; dense positions count as records. */
   def backlog(points: Seq[RelayPoint]): Seq[Backlog] =
     points.map(p => Backlog(records = Some(math.max(0L, p.tip - p.cursor))))
-}
-
-/** A source the driver relays 1:1 — one source coordinate into one
-  * destination partition or key. */
-trait RelaySource extends RelayTips {
 
   /** Records one task may consume per epoch. */
   def budget: Long = Long.MaxValue
@@ -59,10 +59,13 @@ trait RelaySource extends RelayTips {
 trait RelayReader extends AutoCloseable {
 
   /** Read `[from, until)` of `c` in pages, at most `budget` records,
-    * handing each non-empty page to `f` in position order. Returns the
-    * cursor after the last position consumed — `from` when nothing was.
-    * Positions the source confirms gone (truncation, expiry) are
-    * consumed without records; any other gap fails loud.
+    * handing each non-empty page to `f`. Pages come in ascending order of
+    * their first position, so once a page starts above every position
+    * handed over so far, everything below it has been handed over.
+    * Returns the cursor after the last position consumed — `from` when
+    * nothing was. Positions the source confirms gone (truncation, expiry)
+    * or drops (unsubscribed streams) are consumed without records; any
+    * other gap fails loud.
     */
   def read(c: Coord, from: Long, until: Long, budget: Long)(
       f: RelayPage => Unit): Long
@@ -75,7 +78,8 @@ trait RelayReader extends AutoCloseable {
   *
   * An epoch plans `[cursor, until)` per coordinate on the driver, then
   * relays each range in its own task: one Spark job per epoch, one task
-  * per planned range, and data bytes never touch the driver. A drain
+  * per planned range (up to [[RelayDestination.tasks]]; ranges beyond it
+  * run in turn inside a task), and data bytes never touch the driver. A drain
   * loops epochs until one PLANS nothing — not until one moves nothing: an
   * advance-only epoch (an all-aborted, truncated or expired range commits
   * its cursor but relays zero records) must not read as drained while
@@ -85,19 +89,20 @@ object RelayDriver {
 
   /** The epoch's ranges: (coordinate, until) for every coordinate behind
     * its pinned tip. */
-  def plan(tips: RelayTips,
+  def plan(source: RelaySource,
       destination: RelayDestination): Seq[(Coord, Long)] =
-    tips.tips(destination.cursors(tips)).flatMap { p =>
-      val until = tips.until(p.cursor, p.tip)
+    source.tips(destination.cursors(source)).flatMap { p =>
+      val until = source.until(p.cursor, p.tip)
       if (until > p.cursor) Some(p.coord -> until) else None
     }
 
-  /** Relay planned ranges, one task each; returns records relayed. */
+  /** Relay planned ranges, one task each up to the destination's
+    * concurrency cap; returns records relayed. */
   def run(spark: SparkSession, source: RelaySource,
       destination: RelayDestination,
       ranges: Seq[(Coord, Long)]): Long =
     if (ranges.isEmpty) 0L
-    else spark.sparkContext.parallelize(ranges, ranges.size)
+    else spark.sparkContext.parallelize(ranges, destination.tasks(ranges.size))
       .map { case (c, until) => destination.relay(source, c, until) }
       .sum().toLong
 
@@ -109,16 +114,12 @@ object RelayDriver {
 
   /** Drain the source to its tips: epochs until the plan is empty. */
   def all(spark: SparkSession, source: RelaySource,
-      destination: RelayDestination): Long =
-    drain(plan(source, destination))(run(spark, source, destination, _))
-
-  /** The drain loop over any planner and ranged body. */
-  def drain[R](plan: => Seq[R])(run: Seq[R] => Long): Long = {
+      destination: RelayDestination): Long = {
     var total = 0L
-    var ranges = plan
+    var ranges = plan(source, destination)
     while (ranges.nonEmpty) {
-      total += run(ranges)
-      ranges = plan
+      total += run(spark, source, destination, ranges)
+      ranges = plan(source, destination)
     }
     total
   }

@@ -4,7 +4,7 @@ import graft.iggy.{IggyClient, IggySource}
 import graft.iggy.IggyWire.PollStrategy
 import graft.kafka.{KafkaClient, KafkaSource, KafkaTls, KafkaWire}
 import graft.redis.{RedisClient, RedisStreams, Resp}
-import graft.ss.{SsFormat, SsOffsetWalk}
+import graft.ss.{SsFormat, SsOffsetWalk, SsReader, SsRecord}
 
 /** A kafka source: dense offsets per (topic, partition). The tip is the
   * LAST STABLE OFFSET, not the high watermark — pointed at a
@@ -66,7 +66,8 @@ final case class KafkaRelaySource(host: String, port: Int,
         } else {
           val keep = recs.takeWhile(_.offset < until)
           if (keep.nonEmpty)
-            f(RelayPage(keep.map(r => (r.tsMs, r.key, r.value)),
+            f(RelayPage((topic, part.toLong),
+              keep.map(r => (r.tsMs, r.key, r.value)),
               keep.iterator.map(_.offset).toArray))
           next = math.min(page, until)
         }
@@ -165,7 +166,7 @@ final case class RedisRelaySource(host: String, port: Int,
         val keep = entries.takeWhile(_._2.sequence < until)
         keep.foreach { case (rawId, _) => RedisStreams.guardSubSeq(rawId) }
         if (keep.nonEmpty) {
-          f(RelayPage(keep.map { case (rawId, m) =>
+          f(RelayPage((stream, shard), keep.map { case (rawId, m) =>
               (m.timestamp.getTime, rawId.getBytes("UTF-8"), m.payload)
             }, keep.iterator.map(_._2.sequence).toArray))
           n += keep.length
@@ -231,7 +232,8 @@ final case class IggyRelaySource(host: String, port: Int,
                 s"at ${first.getOrElse(-1L)}")
           }
         } else {
-          f(RelayPage(keep.map(m => (m.tsMs, null: Array[Byte], m.payload)),
+          f(RelayPage((topic, part.toLong),
+            keep.map(m => (m.tsMs, null: Array[Byte], m.payload)),
             keep.iterator.map(_.offset).toArray))
           next = keep.last.offset + 1L
         }
@@ -241,20 +243,33 @@ final case class IggyRelaySource(host: String, port: Int,
   }
 }
 
-/** `.ss` part files as a relay's planning half: one coordinate per file,
+/** `.ss` part files as a relay source: one coordinate per file,
   * identified by file NAME (so a relocated directory resumes) at shard 0;
   * the cursor is the frame-exact byte offset after the last shipped
   * frame, and the tip is [[SsOffsetWalk.safeEnd]] — the last COMPLETE
   * frame, so a live appender's torn tail is never shipped nor counted as
-  * lag — capped at `capBytes` past the cursor. The ranges ship through
-  * [[graft.ss.SsEosShip]]'s own body: one byte cursor there fans out to
-  * many destination keys or partitions.
+  * lag — capped at `capBytes` past the cursor.
+  *
+  * One byte cursor fans out to many destination coordinates: the reader
+  * takes `[cursor, until)` of one file in chunks of at most `page` frames
+  * or [[PageBytes]] of payload, and splits each chunk by destination —
+  * `(stream_key, floorMod(shard_id, n))` when `partitions = Some(n)` (a
+  * kafka topic's partitions, the [[graft.kafka.KafkaEosSink]] mapping),
+  * `(stream_key, shard_id)` with the u64 shard id whole when `None` (redis
+  * `stream:shard` keys). A frame's position is its end offset minus one,
+  * so `last position + 1` is always a frame boundary. Frames of streams
+  * outside `onlyStreams` are dropped, but their positions still count as
+  * consumed, exactly like aborted slots on a kafka source.
   */
-final case class FileRelayTips(paths: Seq[String],
-    capBytes: Long = Long.MaxValue) extends RelayTips {
+final case class FileRelaySource(paths: Seq[String],
+    capBytes: Long = Long.MaxValue, partitions: Option[Int] = None,
+    onlyStreams: Option[Set[String]] = None, page: Int = 1000)
+    extends RelaySource {
   require(capBytes > 0, "capBytes must be positive")
+  require(page > 0, "page must be positive")
+  require(partitions.forall(_ > 0), "partitions must be positive")
 
-  val byName: Map[String, String] =
+  private val byName: Map[String, String] =
     paths.map(p => new java.io.File(p).getName -> p).toMap
 
   override def tag(c: Coord, sep: String): String = c._1
@@ -282,4 +297,56 @@ final case class FileRelayTips(paths: Seq[String],
 
   override def backlog(points: Seq[RelayPoint]): Seq[Backlog] =
     points.map(p => Backlog(bytes = Some(math.max(0L, p.tip - p.cursor))))
+
+  def open(): RelayReader = new RelayReader {
+    def close(): Unit = ()
+    def read(coord: Coord, from: Long, until: Long, budget: Long)(
+        f: RelayPage => Unit): Long = {
+      val reader = SsReader.openAtOffset(byName(coord._1),
+        math.max(from, SsFormat.HeaderSize.toLong))
+      try {
+        val frames = reader.iterator.takeWhile(_.endOffset <= until)
+        var end = from
+        var n = 0L
+        while (frames.hasNext && n < budget) {
+          val chunk = Vector.newBuilder[SsRecord]
+          var bytes = 0L
+          var k = 0
+          while (frames.hasNext && n < budget && k < page &&
+              bytes < FileRelaySource.PageBytes) {
+            val r = frames.next()
+            end = r.endOffset
+            n += 1
+            if (onlyStreams.forall(_.contains(r.message.stream_key))) {
+              chunk += r
+              bytes += r.message.payload.length
+              k += 1
+            }
+          }
+          // one page per destination, in order of its first frame
+          chunk.result().groupBy(target).values.toSeq
+            .sortBy(_.head.endOffset).foreach { rs =>
+              f(RelayPage(target(rs.head), rs.map(r =>
+                  (r.message.timestamp.getTime, null: Array[Byte],
+                    r.message.payload)),
+                rs.iterator.map(_.endOffset - 1L).toArray))
+            }
+        }
+        end
+      } finally reader.close()
+    }
+  }
+
+  private def target(r: SsRecord): (String, Long) = {
+    val shard = r.message.shard_id
+    (r.message.stream_key,
+      partitions.fold(shard)(n => math.floorMod(shard, n.toLong)))
+  }
+}
+
+object FileRelaySource {
+
+  /** Payload bytes per chunk: bounds a page next to its frame count, so
+    * large frames still reach the destination in ~1 MiB pages. */
+  val PageBytes: Long = 1L << 20
 }

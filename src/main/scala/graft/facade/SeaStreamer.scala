@@ -908,10 +908,9 @@ object SeaStreamer {
     * directory) × two destinations (a kafka transaction, a redis
     * WATCH/MULTI ledger). The scheme pair builds a
     * [[graft.eos.RelaySource]] and a [[graft.eos.RelayDestination]], and
-    * [[graft.eos.RelayDriver]] drains the one into the other; `.ss`
-    * directories plan through the same driver and ship through
-    * [[graft.ss.SsEosShip]]'s own body (one byte cursor per part file
-    * fans out to many destination keys).
+    * [[graft.eos.RelayDriver]] drains the one into the other — a `.ss`
+    * directory too ([[graft.eos.FileRelaySource]]: one byte cursor per
+    * part file, its frames fanned out to many destination keys).
     *
     * `anchor` names the durable resume point: on kafka destinations it is
     * the consumer group AND the transactional-id prefix (`anchor` /
@@ -982,8 +981,8 @@ object SeaStreamer {
     // a redis DESTINATION keys entries by rename(stream):shard, one relay
     // task per source coordinate — a NON-injective rename would hand one
     // destination key to several concurrent writers (the multi-writer
-    // hazard the file shipper defuses by WATCHing its key set); refuse at
-    // plan time instead of fencing forever
+    // hazard `.ss` part files sharing a key ride out on sub-epochs and
+    // the commit gate); refuse at plan time instead of fencing forever
     if (ds == "redis" && !streams.contains("*")) {
       val dup = streams.groupBy(rename).collect {
         case (d, srcs) if srcs.size > 1 => s"${srcs.mkString(" and ")} → '$d'"
@@ -993,17 +992,13 @@ object SeaStreamer {
           "relayExactlyOnce onto redis needs an INJECTIVE rename (one " +
             "destination stream per source): " + dup.mkString("; "))
     }
-    val dst = relayDestination(destination, anchor, rename)
-    relaySource(source, streams, redisShards, cap, fileCapBytes) match {
-      case files: graft.eos.FileRelayTips =>
-        if (files.paths.isEmpty) throw SeaStreamErr.Connect(
-          s"no .ss part files under ${source.relayNodes.head}")
-        graft.ss.SsEosShip.shipAll(source.relaySpark, files, dst,
-          onlyStreams = if (streams == Seq("*")) None else Some(streams.toSet),
-          partitions = filePartitions)
-      case src: graft.eos.RelaySource =>
-        graft.eos.RelayDriver.all(source.relaySpark, src, dst)
-    }
+    if (ss == "file" && partFiles(source).isEmpty)
+      throw SeaStreamErr.Connect(
+        s"no .ss part files under ${source.relayNodes.head}")
+    graft.eos.RelayDriver.all(source.relaySpark,
+      relaySource(source, streams, redisShards, cap, fileCapBytes,
+        if (ds == "kafka") Some(filePartitions) else None),
+      relayDestination(destination, anchor, rename))
   }
 
   private def defaultPort(scheme: String): Int = scheme match {
@@ -1052,11 +1047,20 @@ object SeaStreamer {
     (ss, ds)
   }
 
+  /** A file endpoint's `.ss` part files, by name. */
+  private def partFiles(c: Connection): Seq[java.io.File] =
+    Option(new java.io.File(c.relayNodes.head).listFiles())
+      .getOrElse(Array.empty).filter(_.getName.endsWith(".ss"))
+      .sortBy(_.getName).toSeq
+
   /** The source end of a checked relay pair; the caps bound each epoch
-    * (the defaults leave a file's tip unbounded — the lag view). */
+    * (the defaults leave a file's tip unbounded — the lag view), and
+    * `filePartitions` folds file shards into a kafka topic's partitions
+    * (None keeps them whole, as redis keys do). */
   private def relaySource(c: Connection, streams: Seq[String],
       redisShards: Int, cap: Long = 100000L,
-      fileCapBytes: Long = Long.MaxValue): graft.eos.RelayTips = {
+      fileCapBytes: Long = Long.MaxValue,
+      filePartitions: Option[Int] = None): graft.eos.RelaySource = {
     val (host, port) = hostPort(c.relayNodes.head, defaultPort(c.relayScheme))
     c.relayScheme match {
       case "kafka" =>
@@ -1072,11 +1076,9 @@ object SeaStreamer {
           graft.iggy.IggySource.DefaultStream, streams, cap,
           auth = c.relayIggyAuth)
       case _ =>
-        val parts = Option(new java.io.File(c.relayNodes.head).listFiles())
-          .getOrElse(Array.empty).filter(_.getName.endsWith(".ss"))
-          .sortBy(_.getName)
-        graft.eos.FileRelayTips(parts.map(_.getAbsolutePath).toSeq,
-          fileCapBytes)
+        graft.eos.FileRelaySource(partFiles(c).map(_.getAbsolutePath),
+          fileCapBytes, filePartitions,
+          if (streams == Seq("*")) None else Some(streams.toSet))
     }
   }
 

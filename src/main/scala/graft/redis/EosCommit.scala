@@ -1,9 +1,9 @@
 package graft.redis
 
 /** The ONE exactly-once commit protocol for every redis-DESTINATION
-  * relay ([[graft.eos.RedisLedgerDestination]] via [[commit]], and the
-  * file shipper [[graft.ss.SsEosShip]]'s multi-key sub-epochs via
-  * [[commitKeyed]]) — the round-16 self-review found the
+  * relay ([[graft.eos.RedisLedgerDestination]]'s multi-key sub-epochs via
+  * [[commitKeyed]]; [[commit]] is its single-key form) — the round-16
+  * self-review found the
   * WATCH/skip/filter/floor/MULTI/EXEC/retry machinery triplicated and
   * already drifting, and round 17 folded the shipper's last private
   * variant in (VERDICT r16 ask #4):
@@ -51,16 +51,16 @@ package graft.redis
   *
   * Entries are `(pos, dstKey, tsMs, payload)` ascending by `pos` — the
   * engine's cursor space (packed redis ids for the pump, kafka/iggy
-  * offsets for the relays, frame end-offsets minus one for the file
-  * shipper, whose cursor values are always frame boundaries). After the
+  * offsets for the relays, frame end-offsets minus one for `.ss` files,
+  * whose cursor values are always frame boundaries). After the
   * WHOLE batch lands the ledger reads `finalCursor` (≥ last pos + 1 —
   * engines use it to consume trailing aborted/expired positions); a
   * partial (shrunk) commit sets `last committed pos + 1` and loops for
   * the remainder. Returns the number of entries THIS call committed (a
   * rival's share is excluded).
   *
-  * The `gate`/`gated`/`onNil`/`onApplied` seam lets the file shipper
-  * serialize commit sections per destination node adaptively (one redis
+  * The `gate`/`gated`/`onNil`/`onApplied` seam lets the destination
+  * serialize commit sections per node adaptively (one redis
   * node applies every EXEC under a single mutation thread — overlapping
   * WATCH windows on shared keys only nil each other); the retry sleep
   * stays OUTSIDE the gated section either way.
@@ -78,7 +78,7 @@ private[graft] object EosCommit {
     * pends — re-fence as advance-only (ledger WATCH alone). */
   private case object DropKeyWatch extends Outcome
 
-  /** Single-destination-key form — the relay driver's shape. */
+  /** Single-destination-key form. */
   def commit(rc: RedisClient, ledger: String, dstKey: String,
       entries: Vector[(Long, Long, Array[Byte])],
       finalCursor: Long, label: String,
@@ -98,10 +98,6 @@ private[graft] object EosCommit {
       raceAfterRead: Option[String] = None,
       raceBeforeExec: Option[String] = None,
       maxNils: Int = 16,
-      nilHint: String = "a live rival or a foreign producer keeps " +
-        "touching the ledger/destination key even at single-entry " +
-        "transactions",
-      backoffStepMs: Long = 50L, backoffCapMs: Long = 400L,
       gate: Option[Object] = None,
       gated: () => Boolean = () => false,
       onNil: () => Unit = () => (),
@@ -222,12 +218,13 @@ private[graft] object EosCommit {
           onNil()
           attempts += 1
           require(attempts <= maxNils,
-            s"$label: EXEC nil'd $attempts times — $nilHint")
+            s"$label: EXEC nil'd $attempts times — a live rival or a " +
+              "foreign producer keeps touching the ledger/destination " +
+              "key even at single-entry transactions")
           limit = math.max(1, limit / 2)
           // the sit-out runs OUTSIDE any commit gate
           Thread.sleep(1L + java.util.concurrent.ThreadLocalRandom
-            .current().nextLong(math.min(backoffStepMs * attempts,
-              backoffCapMs)))
+            .current().nextLong(math.min(50L * attempts, 400L)))
       }
     }
     0L // unreachable

@@ -139,7 +139,14 @@ private[ss] final class SsSource private (ch: FileChannel, buf: Array[Byte])
     if (stop - pos >= 8) { val v = view.getLong(pos); pos += 8; v }
     else slow(8)
 
+  /** A size field past the file end (torn or corrupt) fails before the
+    * allocation: the file must hold at least the `n` bytes it frames. */
   override def readFully(n: Int): Array[Byte] = {
+    if (n > lim - pos && n > ch.size() - offset) {
+      base = ch.size(); pos = 0; lim = 0; stop = 0
+      ch.position(base)
+      throw new EOFException
+    }
     val a = new Array[Byte](n)
     copy(a, 0, n)
     a

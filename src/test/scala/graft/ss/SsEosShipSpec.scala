@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSession
 import graft.core.SeaMessage
+import graft.eos.RedisLedgerDestination
 import graft.kafka.{EmbeddedKafka, KafkaClient}
 import graft.redis.{EmbeddedRedis, RedisStreams}
 
@@ -282,23 +283,109 @@ class SsEosShipSpec extends AnyFunSuite {
       "nil-free commits, re-probing the ungated path (ADVICE r16)") {
     val keyA = ("gatehost", 1234, "jobA")
     val keyB = ("gatehost", 1234, "jobB")
-    SsEosShip.noteShipNil(keyA)
-    assert(SsEosShip.isGateContended(keyA), "a nil must gate its own job")
-    assert(!SsEosShip.isGateContended(keyB),
+    RedisLedgerDestination.noteShipNil(keyA)
+    assert(RedisLedgerDestination.isGateContended(keyA), "a nil must gate its own job")
+    assert(!RedisLedgerDestination.isGateContended(keyB),
       "a different ledgerPrefix on the same node must stay ungated")
     // decay: GateCalmCommits nil-free commits un-gate the destination
-    (1 until SsEosShip.GateCalmCommits).foreach { _ =>
-      SsEosShip.noteShipApplied(keyA)
-      assert(SsEosShip.isGateContended(keyA),
+    (1 until RedisLedgerDestination.GateCalmCommits).foreach { _ =>
+      RedisLedgerDestination.noteShipApplied(keyA)
+      assert(RedisLedgerDestination.isGateContended(keyA),
         "decay must take the FULL calm window")
     }
-    SsEosShip.noteShipApplied(keyA)
-    assert(!SsEosShip.isGateContended(keyA),
+    RedisLedgerDestination.noteShipApplied(keyA)
+    assert(!RedisLedgerDestination.isGateContended(keyA),
       "a calm window must un-gate the destination")
     // a fresh nil re-gates immediately and resets the calm counter
-    SsEosShip.noteShipNil(keyA)
-    SsEosShip.noteShipApplied(keyA)
-    assert(SsEosShip.isGateContended(keyA),
+    RedisLedgerDestination.noteShipNil(keyA)
+    RedisLedgerDestination.noteShipApplied(keyA)
+    assert(RedisLedgerDestination.isGateContended(keyA),
       "one applied commit after a nil must not un-gate")
+  }
+
+  test("file mappings: shards fold to floorMod(shard, partitions) in kafka " +
+      "in frame order, a topic lacking a target partition refuses the " +
+      "ship with nothing committed, and redis keeps the u64 shard whole") {
+    val dir = Files.createTempDirectory("ssmap").toFile.getAbsolutePath
+    val path = s"$dir/map.ss"
+    val w = new SsWriter(new FileOutputStream(path), "map.ss", 1024, 0L)
+    (0 until 24).foreach(i => w.write(SeaMessage("m", (i % 8).toLong,
+      i.toLong, ts(1000L + i), s"m$i".getBytes("UTF-8"))))
+    w.close()
+    val k = new EmbeddedKafka
+    val kc = new KafkaClient(k.host, k.port)
+    try {
+      assert(SsEosShip.shipKafkaAll(spark, Seq(path), _ + "_p4",
+        k.host, k.port, "g_map", "map", partitions = 4) == 24L)
+      (0 until 4).foreach { p =>
+        val got = kc.fetchIso("m_p4", p, 0L, readCommitted = true)._3
+          .map(r => new String(r.value, "UTF-8"))
+        val want = (0 until 24).filter(i => math.floorMod(i % 8, 4) == p)
+          .map("m" + _)
+        assert(got == want, s"partition $p: $got")
+      }
+    } finally { kc.close(); k.close() }
+    val k2 = new EmbeddedKafka(autoCreatePartitions = 2)
+    val kc2 = new KafkaClient(k2.host, k2.port)
+    try {
+      intercept[Exception](SsEosShip.shipKafkaAll(spark, Seq(path),
+        _ + "_p2", k2.host, k2.port, "g_map2", "map2", partitions = 4))
+      assert((0 until 2).forall(p =>
+        kc2.fetchIso("m_p2", p, 0L, readCommitted = true)._3.isEmpty),
+        "a refused ship must commit no frame")
+      assert(k2.committedOffset("g_map2", "map.ss", 0).isEmpty,
+        "a refused ship must not move the cursor")
+    } finally { kc2.close(); k2.close() }
+    val big = s"$dir/big.ss"
+    val w2 = new SsWriter(new FileOutputStream(big), "big.ss", 1024, 0L)
+    w2.write(SeaMessage("u", 3000000000L, 0L, ts(5L), "u0".getBytes("UTF-8")))
+    w2.close()
+    val r = new EmbeddedRedis
+    try {
+      assert(SsEosShip.shipRedisAll(spark, Seq(big), identity,
+        r.host, r.port, "mapled") == 1L)
+      assert(r.entries("u:3000000000").map(e =>
+        new String(e._2.head._2, "UTF-8")) == Seq("u0"))
+    } finally r.close()
+  }
+
+  test("redis sub-epochs under a crash: a range past TxnBytes commits in " +
+      "sub-epochs; a crash before the second EXEC leaves the ledger at a " +
+      "frame boundary inside the range over exactly the first sub-epoch's " +
+      "frames, and a re-run lands the rest once") {
+    val dir = Files.createTempDirectory("sssub").toFile.getAbsolutePath
+    val path = s"$dir/sub.ss"
+    val w = new SsWriter(new FileOutputStream(path), "sub.ss", 1 << 16, 0L)
+    val pad = "p" * (32 << 10)
+    (0 until 320).foreach(i => w.write(SeaMessage("s", 0L, i.toLong,
+      ts(1000L + i), s"$i:$pad".getBytes("UTF-8"))))
+    w.close()
+    val ends = {
+      val rd = SsReader.open(path, verifyChecksum = false, skim = true)
+      try rd.iterator.map(_.endOffset).toVector finally rd.close()
+    }
+    def values(r: EmbeddedRedis) = r.entries("s:0").map(e =>
+      new String(e._2.head._2, "UTF-8").takeWhile(_ != ':').toInt)
+    val r = new EmbeddedRedis
+    try {
+      graft.ops.Failpoints.armHook("sub-first-exec") { () =>
+        graft.ops.Failpoints.arm("sub-crash")
+      }
+      intercept[Exception](SsEosShip.shipRedisOnce(spark, Seq(path),
+        identity, r.host, r.port, "subled",
+        crashBeforeCommit = Some("sub-crash"),
+        raceBeforeExec = Some("sub-first-exec")))
+      val cursor = r.kvGet("subled:{sub.ss}").map(new String(_, "UTF-8").toLong)
+      assert(cursor.exists(c => c > SsFormat.HeaderSize && c < ends.last),
+        s"the first sub-epoch must land strictly inside the range: $cursor")
+      assert(ends.contains(cursor.get),
+        s"the ledger must hold a frame boundary: $cursor")
+      val landed = ends.count(_ <= cursor.get)
+      assert(values(r) == (0 until landed),
+        s"the destination must hold exactly the first sub-epoch's frames")
+      assert(SsEosShip.shipRedisAll(spark, Seq(path), identity,
+        r.host, r.port, "subled") == 320L - landed)
+      assert(values(r) == (0 until 320), "the re-run lost or duplicated")
+    } finally r.close()
   }
 }

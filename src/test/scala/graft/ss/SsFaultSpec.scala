@@ -166,4 +166,37 @@ class SsFaultSpec extends AnyFunSuite {
     // the offset walk skims the same frame: it must not plan a bogus extent
     intercept[SsFormat.FormatException](SsOffsetWalk.safeEnd(path, 0L))
   }
+
+  test("a size field past the file end reads as a torn tail without " +
+      "allocating the payload it claims") {
+    val dir = Files.createTempDirectory("ssfault5").toFile
+    val path = s"$dir/e.ss"
+    writeFile(path, 3)
+    val last = {
+      val r = SsReader.open(path)
+      try r.iterator.toVector.last.startOffset finally r.close()
+    }
+    // the last frame's u32 size (after u8 key length, key "k" and three
+    // u64s) gains 2^28: it claims 256 MiB in a file of a few hundred bytes
+    val bytes = Files.readAllBytes(Paths.get(path))
+    val sizeAt = last.toInt + 1 + 1 + 3 * 8
+    assert(bytes(sizeAt) == 0, "fixture frame size must fit in three bytes")
+    bytes(sizeAt) = 0x10.toByte
+    Files.write(Paths.get(path), bytes)
+
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val self = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(self)
+    val r = SsReader.open(path)
+    val seqs = try {
+      val s = r.iterator.map(_.message.sequence).toVector
+      assert(r.isTruncated, "an overlong size field must read as truncated")
+      s
+    } finally r.close()
+    val grown = mx.getThreadAllocatedBytes(self) - before
+    assert(seqs == Vector(0L, 1L), "the frames before it must still read")
+    assert(grown < (16L << 20),
+      s"the read allocated $grown bytes for a frame the file cannot hold")
+  }
 }
