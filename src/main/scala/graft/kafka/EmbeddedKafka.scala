@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
 
-import KafkaWire.{Api, Err, KRecord, Ts}
+import KafkaWire.{Api, Err, Ts}
 
 /** In-process Kafka-model broker speaking the REAL public wire protocol
   * ([[KafkaWire]]: v2 record batches + CRC32C, ApiVersions v0, Metadata v1,
@@ -56,19 +56,40 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
   /** node_id this single-broker cluster advertises in Metadata. */
   val nodeId: Int = 0
 
-  private final case class Stored(tsMs: Long, key: Array[Byte],
-      value: Array[Byte], control: Boolean = false)
+  /** Each log offset's timestamp and control bit — all ListOffsets'
+    * timestamp scan needs; the payloads live only in the stored batches.
+    */
+  private final class OffsetIndex {
+    private var ts = new Array[Long](64)
+    private val control = new java.util.BitSet
+    private var n = 0
+    def length: Long = n.toLong
+    def append(tsMs: Long, isControl: Boolean): Unit = {
+      if (n == ts.length) ts = java.util.Arrays.copyOf(ts, n * 2)
+      ts(n) = tsMs
+      if (isControl) control.set(n)
+      n += 1
+    }
+    /** (timestamp, offset) of the first DATA offset with a timestamp >=
+      * `wanted`; (-1, -1) when there is none yet. */
+    def seek(wanted: Long): (Long, Long) = {
+      var i = 0
+      while (i < n && (control.get(i) || ts(i) < wanted)) i += 1
+      if (i == n) (-1L, -1L) else (ts(i), i.toLong)
+    }
+  }
 
-  /** One partition: the decoded records (for ListOffsets' timestamp scan)
-    * AND the produced batches AS RECEIVED, re-encoded at their assigned
-    * base offsets. Fetch serves whole stored batches like a real broker's
-    * zero-copy path — so a batch can START BEFORE the asked offset and the
-    * client's prefix-trim is a live code path, not dead fidelity.
-    * Transaction markers occupy log offsets like any record (control rows
-    * in `records` keep the offset arithmetic dense).
+  /** One partition: per-offset timestamps (for ListOffsets' timestamp
+    * scan) AND the produced batches as received — the producer's own
+    * bytes with the assigned base offset patched in, as a real log
+    * segment holds them. Fetch serves whole stored batches like a real
+    * broker's zero-copy path — so a batch can START BEFORE the asked
+    * offset and the client's prefix-trim is a live code path, not dead
+    * fidelity. Transaction markers occupy log offsets like any record
+    * (control entries in `offsets` keep the offset arithmetic dense).
     */
   private final class Partition {
-    val records = mutable.ArrayBuffer.empty[Stored]
+    val offsets = new OffsetIndex
     /** (baseOffset, encoded v2 batch bytes). */
     val batches = mutable.ArrayBuffer.empty[(Long, Array[Byte])]
     /** producerId -> first offset of that pid's OPEN transaction here. */
@@ -93,7 +114,7 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
     /** Last stable offset: nothing at/after an open transaction's first
       * offset is stable (KIP-98's LSO law). */
     def lso: Long =
-      if (ongoingTxn.isEmpty) records.length.toLong
+      if (ongoingTxn.isEmpty) offsets.length
       else ongoingTxn.values.min
   }
 
@@ -185,7 +206,7 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
 
   def logSize(topic: String, partition: Int): Long =
     Option(topics.get(topic)).filter(partition < _.length)
-      .map(t => t(partition).synchronized(t(partition).records.length.toLong))
+      .map(t => t(partition).synchronized(t(partition).offsets.length))
       .getOrElse(0L)
 
   private def autoCreate(topic: String): Array[Partition] =
@@ -426,13 +447,12 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
   /** Append one transaction-marker batch to `part` under its lock and
     * settle the pid's open range: aborts index (pid, firstOffset) for the
     * read_committed fetch path; commits just close. The marker occupies a
-    * real log offset (a control Stored row).
+    * real log offset (a control entry in the offset index).
     */
   private def writeMarker(part: Partition, pid: Long, epoch: Int,
       commit: Boolean): Unit = part.synchronized {
-    val off = part.records.length.toLong
-    part.records += Stored(System.currentTimeMillis(), null, null,
-      control = true)
+    val off = part.offsets.length
+    part.offsets.append(System.currentTimeMillis(), isControl = true)
     part.batches += ((off,
       KafkaWire.encodeControlBatch(off, System.currentTimeMillis(), pid,
         epoch, commit)))
@@ -711,17 +731,12 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
           case Some(t) =>
             val part = t(p)
             val (ts, off) = part.synchronized {
-              val buf = part.records
               target match {
                 case Ts.Earliest => (-1L, 0L)
-                case Ts.Latest => (-1L, buf.length.toLong)
-                case wanted =>
-                  // markers occupy offsets but are not data — the seek law
-                  // resolves to the first DATA record at/after the ts
-                  buf.indexWhere(r => !r.control && r.tsMs >= wanted) match {
-                    case -1 => (-1L, -1L) // none: no offset for that ts yet
-                    case i => (buf(i).tsMs, i.toLong)
-                  }
+                case Ts.Latest => (-1L, part.offsets.length)
+                // markers occupy offsets but are not data — the seek law
+                // resolves to the first DATA record at/after the ts
+                case wanted => part.offsets.seek(wanted)
               }
             }
             www.i16(Err.None).i64(ts).i64(off)
@@ -767,7 +782,7 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
             // batch may begin before the asked offset — trimming that
             // prefix is the CLIENT's job (KafkaClient.fetch dropWhile)
             val (hw, lso, aborted, slices) = part.synchronized {
-              val len = part.records.length.toLong
+              val len = part.offsets.length
               val stable = part.lso
               val limit = if (readCommitted) stable else len
               if (fetchOffset < 0 || fetchOffset > len)
@@ -807,16 +822,13 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
               www.array(aborted) { case (w4, (pid, first)) =>
                 w4.i64(pid).i64(first)
               }
-              val rs = if (slices.isEmpty) null else slices.reduce(_ ++ _)
-              www.nullableBytes(
-                if (rs != null && takeFault(corruptFetches)) {
-                  // flip one bit of the last record's bytes — inside the
-                  // batch's CRC'd region, so the client's CRC32C check
-                  // must catch it
-                  val c = rs.clone()
-                  c(c.length - 1) = (c(c.length - 1) ^ 0x01).toByte
-                  c
-                } else rs)
+              val rs = if (slices.isEmpty) null else concat(slices)
+              if (rs != null && takeFault(corruptFetches))
+                // flip one bit of the last record's bytes — inside the
+                // batch's CRC'd region, so the client's CRC32C check
+                // must catch it (rs is a fresh copy, the log is intact)
+                rs(rs.length - 1) = (rs(rs.length - 1) ^ 0x01).toByte
+              www.nullableBytes(rs)
             }
         }
       }
@@ -824,15 +836,34 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
     w.result()
   }
 
+  /** Every record's offset delta is its index, and the header's last
+    * offset delta agrees. */
+  private def denseOffsets(bi: KafkaWire.BatchInfo): Boolean = {
+    var next = bi.baseOffset
+    bi.records.forall { r => val ok = r.offset == next; next += 1; ok } &&
+      (bi.records.isEmpty || bi.lastOffset == next - 1)
+  }
+
+  /** The served batches as one record set, each copied once. */
+  private def concat(slices: Seq[Array[Byte]]): Array[Byte] = {
+    val out = new Array[Byte](slices.iterator.map(_.length).sum)
+    var at = 0
+    slices.foreach { b => System.arraycopy(b, 0, out, at, b.length); at += b.length }
+    out
+  }
+
   /** Produce v3: decode each partition's record set (CRC-verified), append,
     * assign dense offsets, reply base_offset per partition. Batches store
-    * INDIVIDUALLY, each re-encoded at its assigned base offset with its
-    * OWN codec and producer fields (a multi-batch produce with mixed
-    * codecs keeps every batch's codec — real brokers never re-label under
-    * the first batch's attributes). Transactional batches are validated
-    * against the coordinator: stale epoch fences (47), a partition never
-    * added to the txn refuses (48), and the first accepted batch opens the
-    * pid's LSO-blocking range.
+    * INDIVIDUALLY as the producer's own bytes with the assigned base
+    * offset patched in (outside the CRC'd region, as a real broker does),
+    * so each keeps its OWN codec and producer fields (a multi-batch
+    * produce with mixed codecs keeps every batch's codec — real brokers
+    * never re-label under the first batch's attributes). A batch whose
+    * offset deltas are not 0..count-1 would store offsets the log did
+    * not assign, and is refused as CORRUPT_MESSAGE. Transactional batches
+    * are validated against the coordinator: stale epoch fences (47), a
+    * partition never added to the txn refuses (48), and the first
+    * accepted batch opens the pid's LSO-blocking range.
     */
   private def produceV3(body: Array[Byte]): Array[Byte] = {
     val r = new KafkaWire.Reader(body)
@@ -857,12 +888,13 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
           www.i16(failProduceCode).i64(-1L).i64(-1L)
         else {
           val decoded =
-            try Right(KafkaWire.decodeBatchesInfo(recordSet))
-            catch { case e: IllegalArgumentException => Left(e) }
+            try Some(KafkaWire.decodeBatchesInfo(recordSet))
+              .filter(_.forall(denseOffsets))
+            catch { case _: IllegalArgumentException => None }
           decoded match {
-            case Left(_) =>
+            case None =>
               www.i16(Err.CorruptMessage).i64(-1L).i64(-1L)
-            case Right(batches) =>
+            case Some(batches) =>
               // transactional validation BEFORE anything appends — a
               // produce is atomic per partition (all batches or none),
               // and EVERY transactional batch fences individually: a
@@ -898,6 +930,12 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
                 www.i16(txnErr).i64(-1L).i64(-1L)
               else {
                 val part = t(p)
+                // each batch's own bytes, copied out of the request only
+                // when it carries more than one batch
+                val wire = batches.map(bi =>
+                  if (bi.wireAt == 0 && bi.wireLength == recordSet.length) recordSet
+                  else java.util.Arrays.copyOfRange(recordSet, bi.wireAt,
+                    bi.wireAt + bi.wireLength))
                 val (seqErr, base) = part.synchronized {
                   // phase 1 — KIP-98 idempotence: validate every batch's
                   // sequence against a SIMULATED cursor so the partition
@@ -938,25 +976,21 @@ final class EmbeddedKafka(autoCreatePartitions: Int = 4,
                   if (err != 0) (err, -1L)
                   else {
                     var reply = -1L
-                    batches.zip(acts).foreach {
-                      case (bi, Some(cached)) =>
+                    batches.lazyZip(acts).lazyZip(wire).foreach {
+                      case (_, Some(cached), _) =>
                         if (reply < 0) reply = cached
-                      case (bi, None) =>
-                        val b = part.records.length.toLong
+                      case (bi, None, bytes) =>
+                        val b = part.offsets.length
                         if (reply < 0) reply = b
                         bi.records.foreach(rec =>
-                          part.records += Stored(rec.tsMs, rec.key, rec.value))
-                        // store each batch re-encoded at its ASSIGNED base
-                        // offset (what a real log segment holds); served
-                        // verbatim by Fetch, PRESERVING the producer's
-                        // compression codec and producer/txn fields —
+                          part.offsets.append(rec.tsMs, isControl = false))
+                        // store the batch at its ASSIGNED base offset
+                        // (what a real log segment holds); served verbatim
+                        // by Fetch, PRESERVING the producer's compression
+                        // codec and producer/txn fields —
                         // compression.type=producer semantics
                         if (bi.records.nonEmpty)
-                          part.batches += ((b, KafkaWire.encodeBatch(
-                            bi.records.zipWithIndex.map { case (rc, i) =>
-                              KRecord(b + i, rc.tsMs, rc.key, rc.value) },
-                            bi.codec, bi.producerId, bi.producerEpoch,
-                            bi.baseSequence, bi.transactional)))
+                          part.batches += ((b, KafkaWire.rebase(bytes, b)))
                         if (bi.producerId >= 0 && bi.baseSequence >= 0)
                           part.producerSeq(bi.producerId) =
                             ((bi.producerEpoch, bi.baseSequence,

@@ -100,12 +100,11 @@ final class KafkaClient(host: String, port: Int,
   private def fail(code: Int, what: String): Nothing =
     throw new KafkaServerErr(code, s"$what failed: kafka error $code")
 
-  private def call(apiKey: Int)(writeBody: KafkaWire.Writer => Unit): KafkaWire.Reader = {
+  private def call(apiKey: Int, sizeHint: Int = 256)(
+      writeBody: KafkaWire.Writer => Unit): KafkaWire.Reader = {
     val id = { correlation += 1; correlation }
-    val w = new KafkaWire.Writer
-    writeBody(w)
-    KafkaWire.writeRequest(out, apiKey, KafkaWire.Versions(apiKey).toInt, id,
-      clientId, w.result())
+    KafkaWire.writeRequestWith(out, apiKey, KafkaWire.Versions(apiKey).toInt,
+      id, clientId, sizeHint)(writeBody)
     out.flush()
     val (gotId, body) = KafkaWire.readResponse(in)
     require(gotId == id, s"kafka correlation mismatch: sent $id got $gotId")
@@ -394,7 +393,7 @@ final class KafkaClient(host: String, port: Int,
       case ((tsMs, key, value), i) => KRecord(i.toLong, tsMs, key, value)
     }, codec, producerId, producerEpoch, baseSequence,
       transactional = txnId != null)
-    val r = call(Api.Produce) { w =>
+    val r = call(Api.Produce, batch.length + 128) { w =>
       w.nullableStr(txnId)
       w.i16(-1)           // acks = all
       w.i32(30000)        // timeout_ms

@@ -333,42 +333,85 @@ object KafkaWire {
 
   // ---- primitives: big-endian, per the protocol's type system ----
 
-  final class Writer {
-    private val buf = new java.io.ByteArrayOutputStream()
-    def i8(v: Int): Writer = { buf.write(v & 0xff); this }
-    def i16(v: Int): Writer = { buf.write((v >>> 8) & 0xff); buf.write(v & 0xff); this }
-    def i32(v: Int): Writer = {
-      buf.write((v >>> 24) & 0xff); buf.write((v >>> 16) & 0xff)
-      buf.write((v >>> 8) & 0xff); buf.write(v & 0xff); this
+  /** Builds a frame in one growable, unsynchronized `byte[]`: each field
+    * is stored in place, and a whole batch or request is built in one
+    * buffer instead of a chain of per-part arrays copied into each other.
+    */
+  final class Writer(initialCapacity: Int = 256) {
+    private var buf = new Array[Byte](math.max(initialCapacity, 16))
+    private var pos = 0
+    private def room(n: Int): Unit = if (n > buf.length - pos) {
+      val need = pos.toLong + n
+      require(need <= MaxFrame, s"kafka frame past ${MaxFrame >> 20} MiB ($need bytes)")
+      buf = java.util.Arrays.copyOf(buf,
+        math.max(need, math.min(buf.length * 2L, MaxFrame)).toInt)
     }
-    def i64(v: Long): Writer = { i32((v >>> 32).toInt); i32(v.toInt); this }
+    private def put32(at: Int, v: Int): Unit = {
+      buf(at) = (v >>> 24).toByte; buf(at + 1) = (v >>> 16).toByte
+      buf(at + 2) = (v >>> 8).toByte; buf(at + 3) = v.toByte
+    }
+    def i8(v: Int): Writer = { room(1); buf(pos) = v.toByte; pos += 1; this }
+    def i16(v: Int): Writer = {
+      room(2); buf(pos) = (v >>> 8).toByte; buf(pos + 1) = v.toByte; pos += 2; this
+    }
+    def i32(v: Int): Writer = { room(4); put32(pos, v); pos += 4; this }
+    def i64(v: Long): Writer = { i32((v >>> 32).toInt); i32(v.toInt) }
     /** STRING: INT16 length + UTF-8. */
-    def str(s: String): Writer = {
-      val b = s.getBytes(UTF_8); i16(b.length); buf.write(b); this
-    }
+    def str(s: String): Writer = { val b = s.getBytes(UTF_8); i16(b.length); raw(b) }
     /** NULLABLE_STRING: length -1 = null. */
     def nullableStr(s: String): Writer =
       if (s == null) i16(-1) else str(s)
     /** NULLABLE_BYTES: INT32 length, -1 = null. */
     def nullableBytes(b: Array[Byte]): Writer =
-      if (b == null) i32(-1) else { i32(b.length); buf.write(b); this }
-    def raw(b: Array[Byte]): Writer = { buf.write(b); this }
+      if (b == null) i32(-1) else { i32(b.length); raw(b) }
+    def raw(b: Array[Byte]): Writer = raw(b, 0, b.length)
+    def raw(b: Array[Byte], off: Int, len: Int): Writer = {
+      room(len); System.arraycopy(b, off, buf, pos, len); pos += len; this
+    }
     /** ARRAY: INT32 count then elements (written by `each`). */
     def array[T](xs: Seq[T])(each: (Writer, T) => Unit): Writer = {
       i32(xs.length); xs.foreach(x => each(this, x)); this
     }
     /** VARINT: zigzag-encoded INT32, ULEB128 groups. */
-    def varint(v: Int): Writer = uvarlong(((v << 1) ^ (v >> 31)).toLong & 0xffffffffL)
+    def varint(v: Int): Writer = uvarlong(zigzag(v))
     /** VARLONG: zigzag-encoded INT64. */
-    def varlong(v: Long): Writer = uvarlong((v << 1) ^ (v >> 63))
+    def varlong(v: Long): Writer = uvarlong(zigzag(v))
     private def uvarlong(v0: Long): Writer = {
+      room(10)
       var v = v0
-      while ((v & ~0x7fL) != 0L) { buf.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      buf.write(v.toInt); this
+      while ((v & ~0x7fL) != 0L) { buf(pos) = ((v & 0x7f) | 0x80).toByte; pos += 1; v >>>= 7 }
+      buf(pos) = v.toByte; pos += 1; this
     }
-    def size: Int = buf.size()
-    def result(): Array[Byte] = buf.toByteArray
+    /** Overwrite the INT32 at `at` — a length or CRC known only once the
+      * bytes after it are written. */
+    private[kafka] def patchI32(at: Int, v: Int): Unit = put32(at, v)
+    /** CRC32C of the bytes from `from` to the end. */
+    private[kafka] def crc32c(from: Int): Int = {
+      val crc = new java.util.zip.CRC32C
+      crc.update(buf, from, pos - from)
+      crc.getValue.toInt
+    }
+    /** This buffer as the sink of a compressor. */
+    private[kafka] def stream: OutputStream = new OutputStream {
+      override def write(b: Int): Unit = i8(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = raw(b, off, len)
+    }
+    def writeTo(out: OutputStream): Unit = out.write(buf, 0, pos)
+    def size: Int = pos
+    /** The bytes written. A writer sized exactly hands over its buffer
+      * (any later write reallocates, so the result never changes). */
+    def result(): Array[Byte] =
+      if (pos == buf.length) buf else java.util.Arrays.copyOf(buf, pos)
   }
+
+  /** Largest frame a [[Writer]] builds (the array limit, rounded down). */
+  private val MaxFrame = Int.MaxValue - 15L
+
+  private def zigzag(v: Int): Long = ((v << 1) ^ (v >> 31)).toLong & 0xffffffffL
+  private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
+  /** Bytes of an unsigned LEB128 group sequence. */
+  private def uvarlongSize(v: Long): Int =
+    if (v == 0L) 1 else (63 - java.lang.Long.numberOfLeadingZeros(v)) / 7 + 1
 
   final class Reader(payload: Array[Byte], private var pos: Int = 0) {
     def remaining: Int = payload.length - pos
@@ -508,53 +551,76 @@ object KafkaWire {
       s"unsupported batch codec $codec (none/gzip/snappy/lz4/zstd)")
     val baseOffset = records.head.offset
     val baseTs = records.head.tsMs
-    val recs = new Writer // the records blob (the compressible region)
+    var maxTs = Long.MinValue
+    var lastOffset = baseOffset
+    var count = 0
+    var recordsSize = 0L
     records.foreach { r =>
-      val rec = new Writer
-      rec.i8(0) // record attributes
-      rec.varlong(r.tsMs - baseTs)
-      rec.varint((r.offset - baseOffset).toInt)
-      if (r.key == null) rec.varint(-1)
-      else { rec.varint(r.key.length); rec.raw(r.key) }
-      if (r.value == null) rec.varint(-1)
-      else { rec.varint(r.value.length); rec.raw(r.value) }
-      rec.varint(0) // headers
-      val recBytes = rec.result()
-      recs.varint(recBytes.length)
-      recs.raw(recBytes)
+      maxTs = math.max(maxTs, r.tsMs)
+      lastOffset = r.offset
+      count += 1
+      val n = recordSize(r, baseOffset, baseTs)
+      recordsSize += uvarlongSize(zigzag(n)) + n
     }
-    val recordBytes =
-      if (codec == Codec.None) recs.result()
-      else {
-        val bos = new java.io.ByteArrayOutputStream
-        val cs = Codec.wrap(codec, bos)
-        cs.write(recs.result()); cs.close()
-        bos.toByteArray
-      }
-    val body = new Writer // attributes .. records (the CRC'd region)
-    // attributes: codec bits 0-2, create-time timestamps, bit 4
-    // transactional, bit 5 control
-    body.i16(codec | (if (transactional) 0x10 else 0) |
-      (if (control) 0x20 else 0))
-    body.i32((records.last.offset - baseOffset).toInt) // lastOffsetDelta
-    body.i64(baseTs)
-    body.i64(records.map(_.tsMs).max)
-    body.i64(producerId)
-    body.i16(producerEpoch)
-    body.i32(baseSequence)
-    body.i32(records.length)
-    body.raw(recordBytes)
-    val crcRegion = body.result()
-    val crc = new java.util.zip.CRC32C
-    crc.update(crcRegion)
-    val w = new Writer
+    require(recordsSize <= MaxFrame - Batch.Overhead,
+      s"batch of $recordsSize record bytes past the frame limit")
+    val w = new Writer(Batch.Overhead +
+      (if (codec == Codec.None) recordsSize.toInt else 64))
     w.i64(baseOffset)
-    w.i32(crcRegion.length + 4 + 1 + 4) // batchLength: epoch+magic+crc+region
+    w.i32(0)  // batchLength, patched below: epoch+magic+crc+CRC'd region
     w.i32(-1) // partitionLeaderEpoch
     w.i8(2)   // magic
-    w.i32(crc.getValue.toInt) // UINT32
-    w.raw(crcRegion)
+    w.i32(0)  // CRC32C (UINT32) of [attributes, end), patched below
+    // attributes: codec bits 0-2, create-time timestamps, bit 4
+    // transactional, bit 5 control
+    w.i16(codec | (if (transactional) 0x10 else 0) |
+      (if (control) 0x20 else 0))
+    w.i32((lastOffset - baseOffset).toInt) // lastOffsetDelta
+    w.i64(baseTs)
+    w.i64(maxTs)
+    w.i64(producerId)
+    w.i16(producerEpoch)
+    w.i32(baseSequence)
+    w.i32(count)
+    if (codec == Codec.None) writeRecords(w, records, baseOffset, baseTs)
+    else {
+      val recs = new Writer(recordsSize.toInt) // the compressible region
+      writeRecords(recs, records, baseOffset, baseTs)
+      val cs = Codec.wrap(codec, w.stream)
+      recs.writeTo(cs); cs.close()
+    }
+    w.patchI32(Batch.Length, w.size - 12)
+    w.patchI32(Batch.Crc, w.crc32c(Batch.Attributes))
     w.result()
+  }
+
+  /** Body bytes of one record (everything after its length varint). */
+  private def recordSize(r: KRecord, baseOffset: Long, baseTs: Long): Int = {
+    def field(b: Array[Byte]) =
+      if (b == null) 1 else uvarlongSize(zigzag(b.length)) + b.length
+    1 + uvarlongSize(zigzag(r.tsMs - baseTs)) +
+      uvarlongSize(zigzag((r.offset - baseOffset).toInt)) +
+      field(r.key) + field(r.value) + 1
+  }
+
+  /** Each record as `[length][attributes 0][ts delta][offset delta][key]
+    * [value][0 headers]`, straight into `w`. */
+  private def writeRecords(w: Writer, records: Seq[KRecord], baseOffset: Long,
+      baseTs: Long): Unit = records.foreach { r =>
+    w.varint(recordSize(r, baseOffset, baseTs))
+    w.i8(0).varlong(r.tsMs - baseTs).varint((r.offset - baseOffset).toInt)
+    if (r.key == null) w.varint(-1) else w.varint(r.key.length).raw(r.key)
+    if (r.value == null) w.varint(-1) else w.varint(r.value.length).raw(r.value)
+    w.varint(0)
+  }
+
+  /** Set a batch's base offset in place and return it: the field lies
+    * outside the CRC'd region, so the batch stays valid — how a broker
+    * stores a producer's batch at the offset it assigns. */
+  def rebase(batch: Array[Byte], baseOffset: Long): Array[Byte] = {
+    var i = 0
+    while (i < 8) { batch(Batch.BaseOffset + i) = (baseOffset >>> (56 - 8 * i)).toByte; i += 1 }
+    batch
   }
 
   /** Control-record types (the KIP-98 transaction markers a broker writes
@@ -585,12 +651,13 @@ object KafkaWire {
     * read_committed filter and the broker's per-batch produce validation
     * need beyond the flat record view. `controlType` is
     * [[Control.Abort]]/[[Control.Commit]] for control batches, -1 for
-    * data.
+    * data. `wireAt`/`wireLength` locate the batch's own bytes in the
+    * decoded record set.
     */
   final case class BatchInfo(baseOffset: Long, lastOffset: Long,
       producerId: Long, producerEpoch: Int, baseSequence: Int,
       codec: Int, transactional: Boolean, control: Boolean,
-      controlType: Int, records: Seq[KRecord])
+      controlType: Int, wireAt: Int, wireLength: Int, records: Seq[KRecord])
 
   /** Decode a record set (zero or more concatenated v2 batches), verifying
     * magic and CRC32C of every batch. Throws on corruption — a silent skip
@@ -647,9 +714,8 @@ object KafkaWire {
       val rr =
         if (codec == Codec.None) r
         else {
-          val compressed = r.rawBytes(at + 12 + batchLength - r.position)
-          val cs = Codec.unwrap(codec,
-            new java.io.ByteArrayInputStream(compressed))
+          val cs = Codec.unwrap(codec, new java.io.ByteArrayInputStream(
+            bytes, r.position, at + 12 + batchLength - r.position))
           new Reader(cs.readAllBytes(), 0)
         }
       val recs = Seq.newBuilder[KRecord]
@@ -683,7 +749,7 @@ object KafkaWire {
         else new Reader(records.head.key, 2).i16v()
       out += BatchInfo(baseOffset, baseOffset + lastOffsetDelta,
         producerId, producerEpoch, baseSequence, codec, isTxn, isControl,
-        controlType, records)
+        controlType, at, 12 + batchLength, records)
       at += 12 + batchLength
     }
     out.result()
@@ -724,21 +790,28 @@ object KafkaWire {
 
   /** Write `[size][header v1][body]`. */
   def writeRequest(out: OutputStream, apiKey: Int, apiVersion: Int,
-      correlationId: Int, clientId: String, body: Array[Byte]): Unit = {
-    val h = new Writer
-    h.i16(apiKey).i16(apiVersion).i32(correlationId).nullableStr(clientId)
-    val header = h.result()
-    val w = new Writer
-    w.i32(header.length + body.length).raw(header).raw(body)
-    out.write(w.result())
+      correlationId: Int, clientId: String, body: Array[Byte]): Unit =
+    writeRequestWith(out, apiKey, apiVersion, correlationId, clientId,
+      body.length)(_.raw(body))
+
+  /** [[writeRequest]] with the body written by `body` straight into the
+    * frame's buffer (`sizeHint`: expected body bytes). */
+  def writeRequestWith(out: OutputStream, apiKey: Int, apiVersion: Int,
+      correlationId: Int, clientId: String, sizeHint: Int = 256)(
+      body: Writer => Unit): Unit = {
+    val w = new Writer(sizeHint + 64)
+    w.i32(0) // size, patched below
+    w.i16(apiKey).i16(apiVersion).i32(correlationId).nullableStr(clientId)
+    body(w)
+    w.patchI32(0, w.size - 4)
+    w.writeTo(out)
   }
 
   /** Write `[size][correlation_id][body]`. */
   def writeResponse(out: OutputStream, correlationId: Int,
       body: Array[Byte]): Unit = {
-    val w = new Writer
-    w.i32(body.length + 4).i32(correlationId).raw(body)
-    out.write(w.result())
+    out.write(new Writer(8).i32(body.length + 4).i32(correlationId).result())
+    out.write(body)
   }
 
   /** (apiKey, apiVersion, correlationId, clientId, body) or None on EOF. */

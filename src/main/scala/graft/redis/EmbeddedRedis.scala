@@ -281,7 +281,8 @@ final class EmbeddedRedis(
       out.write(Resp.encodeValue(reply))
       // flush only when the pipeline drained — one syscall per client
       // batch, not per command (a per-reply flush caps the whole server
-      // at socket-syscall rate)
+      // at socket-syscall rate); `available()` counts the commands
+      // `Resp.Input` has buffered but not parsed yet
       if (in.available() == 0) out.flush()
     } catch {
       case DropConn => // injected fault: deliver buffered replies, then cut
