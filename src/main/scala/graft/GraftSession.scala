@@ -23,6 +23,14 @@ import org.apache.spark.sql.SparkSession
   *     When per-executor state outgrows the heap — the 100 TB streaming
   *     shape — flip SPARK_GRAFT_STATE_STORE to RocksDBStateStoreProvider;
   *     changelog checkpointing is pre-wired so only deltas ship per batch.
+  *   - Checkpoint file manager pinned to `graft.core.CheckpointFiles`.
+  *     Without Hadoop's native IO, Spark's default manager makes every
+  *     offset-log, commit-log and state-store write on a `file:` path
+  *     start OS processes: `FileContext.rename` →
+  *     `RawLocalFileSystem.getFileLinkStatus` → `FileUtil.readLink` runs
+  *     `readlink`, and `RawLocalFileSystem.setPermission` runs `chmod` on
+  *     every create and mkdir: tens of fork/execs per trigger, most of
+  *     the per-trigger floor. Other schemes keep Spark's default manager.
   *   - AQE on: runtime coalescing + skew-join handling is the 100 TB story
   *   - nanosAsLong: events.parquet carries TIMESTAMP(NANOS) which the Spark 4
   *     parquet reader otherwise rejects (normalized in analytics.Tables)
@@ -50,6 +58,7 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
+      .config(graft.core.CheckpointFiles.ConfKey, classOf[graft.core.CheckpointFiles].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Driver testdata ships naive-micros timestamps (isAdjustedToUTC =
