@@ -495,16 +495,19 @@ object Bench {
         // kafka→redis (WATCH-fenced destination ledger) — the full EOS
         // machinery, not a bare forward, is what a production relay pays
         timed("xp_eos_relay_kafka_100k") {
-          val n = graft.kafka.KafkaEosRelay.relayAll(spark, srv.host,
-            srv.port, Seq("bench"), _ + "_out", "g_xp_relay", "xprelay")
+          val n = graft.eos.RelayDriver.all(spark,
+            graft.eos.KafkaRelaySource(srv.host, srv.port, Seq("bench")),
+            graft.eos.KafkaTxnDestination(srv.host, srv.port, "g_xp_relay",
+              "xprelay", _ + "_out"))
           require(n == 100000L, s"expected 100k relayed, got $n")
         }
         locally {
           val rsrv = new graft.redis.EmbeddedRedis
           try timed("xp_eos_relay_redis_100k") {
-            val n = graft.redis.RedisEosRelay.relayAll(spark, srv.host,
-              srv.port, Seq("bench"), _ => "bench_r", rsrv.host, rsrv.port,
-              "xprled")
+            val n = graft.eos.RelayDriver.all(spark,
+              graft.eos.KafkaRelaySource(srv.host, srv.port, Seq("bench")),
+              graft.eos.RedisLedgerDestination(rsrv.host, rsrv.port, "xprled",
+                _ => "bench_r"))
             require(n == 100000L, s"expected 100k relayed, got $n")
           } finally rsrv.close()
         }

@@ -2,7 +2,9 @@ package graft.analytics
 
 import org.apache.spark.sql.functions._
 
-import graft.iggy.{EmbeddedIggy, IggyEosRelay, IggySource}
+import graft.eos.{IggyRelaySource, KafkaTxnDestination,
+  RedisLedgerDestination, RelayDriver}
+import graft.iggy.{EmbeddedIggy, IggySource}
 
 /** Iggy-backend queries under the DuckDB oracle gate: each round-trips the
   * `events` table through the embedded iggy-model broker — batched
@@ -171,21 +173,20 @@ object IggyTransport {
           val tlsC = graft.kafka.KafkaTls.ephemeral._2
           val creds = Some(("graft", "graft-secret"))
           val mech = graft.kafka.KafkaWire.Scram.Sha256
+          val from = IggyRelaySource(srv.host, srv.port,
+            IggySource.DefaultStream, Transport.eventTypes, cap,
+            auth = OracleAuth)
+          val to = KafkaTxnDestination(ksrv.host, ksrv.port, "g_i5", "i5eos",
+            (t: String) => t, sasl = creds, saslMechanism = mech,
+            tls = Some(tlsC))
           graft.ops.Failpoints.arm("i5-relay-crash")
           val crashed = try {
-            IggyEosRelay.relayKafkaOnce(s, srv.host, srv.port,
-              IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-              ksrv.host, ksrv.port, "g_i5", "i5eos", cap,
-              iggyAuth = OracleAuth, sasl = creds, saslMechanism = mech,
-              tls = Some(tlsC), crashBeforeCommit = Some("i5-relay-crash"))
+            RelayDriver.once(s, from,
+              to.copy(crashBeforeCommit = Some("i5-relay-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed, "the injected mid-relay crash did not fire")
-          IggyEosRelay.relayKafkaAll(s, srv.host, srv.port,
-            IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-            ksrv.host, ksrv.port, "g_i5", "i5eos", cap,
-            iggyAuth = OracleAuth, sasl = creds, saslMechanism = mech,
-            tls = Some(tlsC))
+          RelayDriver.all(s, from, to)
           val replay = graft.kafka.KafkaSource.boundedRead(s, ksrv.host,
             ksrv.port, Transport.eventTypes, sasl = creds,
             saslMechanism = mech, tls = Some(tlsC),
@@ -208,19 +209,19 @@ object IggyTransport {
             auth = OracleAuth)
           val cap = math.max(20L, t.events.count() / 20 / 4)
           val rAuth = RedisTransport.OracleAuth
+          val from = IggyRelaySource(srv.host, srv.port,
+            IggySource.DefaultStream, Transport.eventTypes, cap,
+            auth = OracleAuth)
+          val to = RedisLedgerDestination(rsrv.host, rsrv.port, "i6eos",
+            (t: String) => t, auth = rAuth)
           graft.ops.Failpoints.arm("i6-relay-crash")
           val crashed = try {
-            IggyEosRelay.relayRedisOnce(s, srv.host, srv.port,
-              IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-              rsrv.host, rsrv.port, "i6eos", cap, iggyAuth = OracleAuth,
-              auth = rAuth, crashBeforeCommit = Some("i6-relay-crash"))
+            RelayDriver.once(s, from,
+              to.copy(crashBeforeCommit = Some("i6-relay-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed, "the injected mid-relay crash did not fire")
-          IggyEosRelay.relayRedisAll(s, srv.host, srv.port,
-            IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-            rsrv.host, rsrv.port, "i6eos", cap, iggyAuth = OracleAuth,
-            auth = rAuth)
+          RelayDriver.all(s, from, to)
           val shards = Transport.eventTypes
             .flatMap(st => (0L until 4L).map(sh => (st, sh)))
           val replay = graft.redis.RedisSource.boundedRead(s, rsrv.host,

@@ -2,6 +2,8 @@ package graft.analytics
 
 import org.apache.spark.sql.functions._
 
+import graft.eos.{FileRelaySource, KafkaRelaySource, KafkaTxnDestination,
+  RedisLedgerDestination, RedisRelaySource, RelayDriver}
 import graft.kafka.{EmbeddedKafka, KafkaSource}
 
 /** Kafka-backend queries under the DuckDB oracle gate: each round-trips the
@@ -335,24 +337,20 @@ object KafkaTransport {
             p.abort()
           } finally poison.close()
           val cap = math.max(20L, t.events.count() / 20 / 4)
+          val from = KafkaRelaySource(srv.host, srv.port, srcTopics, cap,
+            sasl = Some(SaslCreds), saslMechanism = Mech,
+            tls = Some(tlsClient))
+          val to = RedisLedgerDestination(redisSrv.host, redisSrv.port,
+            "r10eos", _.stripPrefix("src_"),
+            auth = RedisTransport.OracleAuth)
           graft.ops.Failpoints.arm("r10-relay-crash")
           val crashed = try {
-            graft.redis.RedisEosRelay.relayOnce(s, srv.host, srv.port,
-              srcTopics, _.stripPrefix("src_"),
-              redisSrv.host, redisSrv.port, "r10eos", cap,
-              sasl = Some(SaslCreds), saslMechanism = Mech,
-              kafkaTls = Some(tlsClient),
-              redisAuth = RedisTransport.OracleAuth,
-              crashBeforeCommit = Some("r10-relay-crash"))
+            RelayDriver.once(s, from,
+              to.copy(crashBeforeCommit = Some("r10-relay-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed, "the injected mid-relay crash did not fire")
-          graft.redis.RedisEosRelay.relayAll(s, srv.host, srv.port,
-            srcTopics, _.stripPrefix("src_"),
-            redisSrv.host, redisSrv.port, "r10eos", cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            kafkaTls = Some(tlsClient),
-            redisAuth = RedisTransport.OracleAuth)
+          RelayDriver.all(s, from, to)
           val shards = Transport.eventTypes
             .flatMap(st => (0L until 4L).map(sh => (st, sh)))
           val replay = graft.redis.RedisSource.boundedRead(s,
@@ -389,26 +387,21 @@ object KafkaTransport {
           val shards = Transport.eventTypes.map("src_" + _)
             .flatMap(st => (0L until 4L).map(sh => (st, sh)))
           val cap = math.max(20L, t.events.count() / 20 / 4)
+          val from = RedisRelaySource(redisSrv.host, redisSrv.port, shards,
+            cap, auth = RedisTransport.OracleAuth)
+          val to = KafkaTxnDestination(srv.host, srv.port, "g_k11_ingest",
+            "k11eos", _.stripPrefix("src_"), sasl = Some(SaslCreds),
+            saslMechanism = Mech, tls = Some(tlsClient))
           graft.kafka.KafkaEosSink.arm("k11-ingest-crash")
           val crashed = try {
-            graft.kafka.KafkaEosIngest.relayOnce(s,
-              redisSrv.host, redisSrv.port, shards, _.stripPrefix("src_"),
-              srv.host, srv.port, "g_k11_ingest", "k11eos", cap,
-              sasl = Some(SaslCreds), saslMechanism = Mech,
-              kafkaTls = Some(tlsClient),
-              redisAuth = RedisTransport.OracleAuth,
-              crashBeforeCommit = Some("k11-ingest-crash"))
+            RelayDriver.once(s, from,
+              to.copy(crashBeforeCommit = Some("k11-ingest-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed &&
             !graft.kafka.KafkaEosSink.armed("k11-ingest-crash"),
             "the injected mid-ingest crash did not fire")
-          graft.kafka.KafkaEosIngest.relayAll(s,
-            redisSrv.host, redisSrv.port, shards, _.stripPrefix("src_"),
-            srv.host, srv.port, "g_k11_ingest", "k11eos", cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            kafkaTls = Some(tlsClient),
-            redisAuth = RedisTransport.OracleAuth)
+          RelayDriver.all(s, from, to)
           val replay = KafkaSource.boundedRead(s, srv.host, srv.port,
             Transport.eventTypes, sasl = Some(SaslCreds),
             saslMechanism = Mech, tls = Some(tlsClient),
@@ -439,20 +432,18 @@ object KafkaTransport {
           .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
         val paths = files.map(_.getAbsolutePath).toSeq
         val cap = math.max(8192L, files.map(_.length()).max / 4)
+        val from = FileRelaySource(paths, cap, partitions = Some(4))
+        val to = KafkaTxnDestination(srv.host, srv.port, "g_k12_ship",
+          "k12ship", _.stripPrefix("src_"), sasl = Some(SaslCreds),
+          saslMechanism = Mech, tls = Some(tlsClient))
         graft.ops.Failpoints.arm("k12-ship-crash")
         val crashed = try {
-          graft.ss.SsEosShip.shipKafkaOnce(s, paths, _.stripPrefix("src_"),
-            srv.host, srv.port, "g_k12_ship", "k12ship", capBytes = cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            tls = Some(tlsClient),
-            crashBeforeCommit = Some("k12-ship-crash"))
+          RelayDriver.once(s, from,
+            to.copy(crashBeforeCommit = Some("k12-ship-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed, "the injected mid-ship crash did not fire")
-        graft.ss.SsEosShip.shipKafkaAll(s, paths, _.stripPrefix("src_"),
-          srv.host, srv.port, "g_k12_ship", "k12ship", capBytes = cap,
-          sasl = Some(SaslCreds), saslMechanism = Mech,
-          tls = Some(tlsClient))
+        RelayDriver.all(s, from, to)
         val replay = KafkaSource.boundedRead(s, srv.host, srv.port,
           Transport.eventTypes, sasl = Some(SaslCreds),
           saslMechanism = Mech, tls = Some(tlsClient),
@@ -502,19 +493,20 @@ object KafkaTransport {
                 .getBytes("UTF-8")))))
           p.abort()
         } finally poison.close()
+        val from = KafkaRelaySource(srv.host, srv.port, srcTopics, cap,
+          sasl = Some(SaslCreds), saslMechanism = Mech, tls = Some(tlsClient))
+        val to = KafkaTxnDestination(srv.host, srv.port, "g_k9_relay",
+          "k9eos", _.stripPrefix("src_"), sasl = Some(SaslCreds),
+          saslMechanism = Mech, tls = Some(tlsClient))
         graft.kafka.KafkaEosSink.arm("k9-relay-crash")
         val crashed = try {
-          graft.kafka.KafkaEosRelay.relayOnce(s, srv.host, srv.port,
-            srcTopics, _.stripPrefix("src_"), "g_k9_relay", "k9eos", cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            tls = Some(tlsClient), crashBeforeCommit = Some("k9-relay-crash"))
+          RelayDriver.once(s, from,
+            to.copy(crashBeforeCommit = Some("k9-relay-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed && !graft.kafka.KafkaEosSink.armed("k9-relay-crash"),
           "the injected mid-relay crash did not fire")
-        graft.kafka.KafkaEosRelay.relayAll(s, srv.host, srv.port,
-          srcTopics, _.stripPrefix("src_"), "g_k9_relay", "k9eos", cap,
-          sasl = Some(SaslCreds), saslMechanism = Mech, tls = Some(tlsClient))
+        RelayDriver.all(s, from, to)
         val replay = KafkaSource.boundedRead(s, srv.host, srv.port,
           Transport.eventTypes, sasl = Some(SaslCreds), saslMechanism = Mech,
           tls = Some(tlsClient), readCommitted = true).localCheckpoint(true)

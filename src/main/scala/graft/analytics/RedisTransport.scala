@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.eos.{FileRelaySource, RedisLedgerDestination, RedisRelaySource,
+  RelayDriver}
 import graft.redis.{EmbeddedRedis, RedisClient, RedisGroupConsumer, RedisSource}
 
 /** Redis-backend queries under the DuckDB oracle gate: each round-trips the
@@ -238,18 +240,18 @@ object RedisTransport {
         val shards = Transport.eventTypes.map("src_" + _)
           .flatMap(st => (0L until 4L).map(sh => (st, sh)))
         val cap = math.max(20L, t.events.count() / 20 / 4)
+        val from = RedisRelaySource(a.host, a.port, shards, cap,
+          auth = OracleAuth)
+        val to = RedisLedgerDestination(b.host, b.port, "r11eos",
+          _.stripPrefix("src_"), auth = OracleAuth)
         graft.ops.Failpoints.arm("r11-pump-crash")
         val crashed = try {
-          graft.redis.RedisEosPump.relayOnce(s, a.host, a.port, shards,
-            _.stripPrefix("src_"), b.host, b.port, "r11eos", cap,
-            srcAuth = OracleAuth, dstAuth = OracleAuth,
-            crashBeforeCommit = Some("r11-pump-crash"))
+          RelayDriver.once(s, from,
+            to.copy(crashBeforeCommit = Some("r11-pump-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed, "the injected mid-pump crash did not fire")
-        graft.redis.RedisEosPump.relayAll(s, a.host, a.port, shards,
-          _.stripPrefix("src_"), b.host, b.port, "r11eos", cap,
-          srcAuth = OracleAuth, dstAuth = OracleAuth)
+        RelayDriver.all(s, from, to)
         val replay = RedisSource.boundedRead(s, b.host, b.port,
           allShards(4), auth = OracleAuth).localCheckpoint(true)
         Transport.aggregate(replay, withDistinct = false)
@@ -266,8 +268,8 @@ object RedisTransport {
     // each destination key in exactly one part file, so sibling ship
     // tasks never contend on shared WATCH keys; BENCH_LOCAL.md receipt:
     // disjoint 3.2 s vs interleaved 4.9 s per 1M frames). The
-    // interleaved worst case stays pinned by SsEosShipSpec's shared-key
-    // race law and the adaptive commit gate.
+    // interleaved worst case stays pinned by the `.ss` relay spec's
+    // shared-key race law and the adaptive commit gate.
     "r12_ss_redis_eos" -> { (s, dir) =>
       withServer { srv =>
         val t = Tables(s, dir)
@@ -280,18 +282,17 @@ object RedisTransport {
           .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
         val paths = files.map(_.getAbsolutePath).toSeq
         val cap = math.max(8192L, files.map(_.length()).max / 4)
+        val from = FileRelaySource(paths, cap)
+        val to = RedisLedgerDestination(srv.host, srv.port, "r12ship",
+          _.stripPrefix("src_"), auth = OracleAuth)
         graft.ops.Failpoints.arm("r12-ship-crash")
         val crashed = try {
-          graft.ss.SsEosShip.shipRedisOnce(s, paths, _.stripPrefix("src_"),
-            srv.host, srv.port, "r12ship", capBytes = cap,
-            auth = OracleAuth,
-            crashBeforeCommit = Some("r12-ship-crash"))
+          RelayDriver.once(s, from,
+            to.copy(crashBeforeCommit = Some("r12-ship-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed, "the injected mid-ship crash did not fire")
-        graft.ss.SsEosShip.shipRedisAll(s, paths, _.stripPrefix("src_"),
-          srv.host, srv.port, "r12ship", capBytes = cap,
-          auth = OracleAuth)
+        RelayDriver.all(s, from, to)
         val replay = RedisSource.boundedRead(s, srv.host, srv.port,
           allShards(4), auth = OracleAuth).localCheckpoint(true)
         Transport.aggregate(replay, withDistinct = false)
@@ -326,9 +327,10 @@ object RedisTransport {
         val streams = Transport.eventTypes.map("lag_" + _)
         val shards = streams.flatMap(st => (0L until 4L).map(sh => (st, sh)))
         val cap = math.max(20L, t.events.count() / 80L)
-        graft.redis.RedisEosPump.relayOnce(s, a.host, a.port, shards,
-          identity, b.host, b.port, "r13lag", cap,
-          srcAuth = OracleAuth, dstAuth = OracleAuth)
+        RelayDriver.once(s,
+          RedisRelaySource(a.host, a.port, shards, cap, auth = OracleAuth),
+          RedisLedgerDestination(b.host, b.port, "r13lag", identity,
+            auth = OracleAuth))
         val sec = Map("redis.username" -> OracleUser,
           "redis.password" -> OraclePass)
         val ca = graft.facade.SeaStreamer.connect(

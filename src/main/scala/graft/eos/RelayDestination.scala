@@ -303,10 +303,10 @@ object RedisLedgerDestination {
 
   /** Adaptive gating: a destination starts UNGATED — relays whose
     * coordinates never share a destination key (every broker source,
-    * since the facade refuses non-injective renames, and `.ss` layouts
-    * written with `repartitionByKey`) never conflict, and gating them
-    * would forfeit the parallel queue/parse the server offers across
-    * connections. The FIRST nil proves the layout contended and flips
+    * since `RelayDriver`'s pair check refuses non-injective renames, and
+    * `.ss` layouts written with `repartitionByKey`) never conflict, and
+    * gating them would forfeit the parallel queue/parse the server offers
+    * across connections. The FIRST nil proves the layout contended and flips
     * the destination to gate-first: shared-key layouts then serialize
     * their commit sections, paying at most one wasted queue per
     * concurrent task to learn it. The flag is scoped per (host, port,

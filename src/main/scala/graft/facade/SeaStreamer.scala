@@ -918,7 +918,9 @@ object SeaStreamer {
     * the same anchor to resume; change it to restart from the beginning.
     * `rename` maps each source stream/topic to its destination name —
     * identity is refused when both ends share a broker (a relay into its
-    * own source would chase its own appends forever). `redisShards` is
+    * own source would chase its own appends forever;
+    * [[graft.eos.RelayDriver]] checks the pair, as it does cross-cluster
+    * kafka→kafka and a non-injective rename onto redis). `redisShards` is
     * the shard fan of redis SOURCES (redis shards live in key names, not
     * broker metadata — the consumer must name them, consumer/shard.rs:
     * 34-36); it is ignored for kafka sources, whose partitions come from
@@ -948,50 +950,6 @@ object SeaStreamer {
       filePartitions: Int = 4): Long = {
     val (ss, ds) = checkRelayEnds("relayExactlyOnce", source, destination,
       streams, redisShards)
-    // BEST-EFFORT endpoint identity: normalize each node by resolving its
-    // host (so `localhost:6379` and `127.0.0.1:6379` compare EQUAL — a
-    // literal string compare would let an aliased self-relay through, and
-    // the relay would then chase its own appends, duplicating the stream
-    // unboundedly per epoch) and by filling the scheme's default port.
-    // Two DNS names fronting one broker through different VIPs can still
-    // compare unequal — an exact guard needs a broker-identity probe
-    // (kafka cluster id / redis run_id), which costs a connection here;
-    // the guard is documented best-effort, not a safety invariant.
-    def normalizedNodes(c: Connection): Set[(String, Int)] =
-      c.relayNodes.map { n =>
-        val (h, p) = hostPort(n, defaultPort(c.relayScheme))
-        val addr =
-          try java.net.InetAddress.getByName(h).getHostAddress
-          catch { case _: java.net.UnknownHostException => h.toLowerCase }
-        (addr, p)
-      }.toSet
-    val sameEndpoint = ss == ds && ss != "file" &&
-      normalizedNodes(source) == normalizedNodes(destination)
-    if (sameEndpoint) streams.foreach { s =>
-      if (rename(s) == s)
-        throw SeaStreamErr.Unsupported(
-          s"relaying '$s' into itself on the same broker would chase its" +
-            " own appends — rename must map it to a different name")
-    }
-    if (ss == "kafka" && ds == "kafka" && !sameEndpoint)
-      throw SeaStreamErr.Unsupported(
-        "cross-cluster kafka→kafka relay is not supported: the group " +
-          "offsets staged in the transaction live on the SOURCE " +
-          "cluster, so both ends must be one cluster")
-    // a redis DESTINATION keys entries by rename(stream):shard, one relay
-    // task per source coordinate — a NON-injective rename would hand one
-    // destination key to several concurrent writers (the multi-writer
-    // hazard `.ss` part files sharing a key ride out on sub-epochs and
-    // the commit gate); refuse at plan time instead of fencing forever
-    if (ds == "redis" && !streams.contains("*")) {
-      val dup = streams.groupBy(rename).collect {
-        case (d, srcs) if srcs.size > 1 => s"${srcs.mkString(" and ")} → '$d'"
-      }
-      if (dup.nonEmpty)
-        throw SeaStreamErr.Unsupported(
-          "relayExactlyOnce onto redis needs an INJECTIVE rename (one " +
-            "destination stream per source): " + dup.mkString("; "))
-    }
     if (ss == "file" && partFiles(source).isEmpty)
       throw SeaStreamErr.Connect(
         s"no .ss part files under ${source.relayNodes.head}")

@@ -1,11 +1,11 @@
 package graft.ops
 
 /** Test-only crash injection shared by the exactly-once writers
-  * ([[graft.kafka.KafkaEosSink]], [[graft.kafka.KafkaEosRelay]],
-  * [[graft.redis.RedisSource.writeExactlyOnce]]): `arm(token)` then pass
-  * the token as the writer's `crashBeforeCommit` — exactly ONE task (the
-  * atomic winner of the `remove`) dies after staging its epoch but
-  * before the commit, simulating a mid-epoch crash. Single-JVM scope
+  * ([[graft.kafka.KafkaEosSink]], the relay destinations in
+  * [[graft.eos]], [[graft.redis.RedisSource.writeExactlyOnce]]):
+  * `arm(token)` then pass the token as the writer's `crashBeforeCommit`
+  * — exactly ONE task (the atomic winner of the `remove`) dies after
+  * staging its epoch but before the commit, simulating a mid-epoch crash. Single-JVM scope
   * (local mode / specs); production callers never arm anything.
   */
 object Failpoints {

@@ -33,10 +33,10 @@ object StreamJoin {
   /** Buffered queues per stream key (must be a Product for the encoder). */
   final case class FuseState(queues: Map[String, Seq[SeaMessage]])
 
-  /** The gating state machine for ONE alignment group, independent of which
-    * state API holds the queues: enqueue arrivals in deterministic
-    * (ts, key, seq) order, then pop the global min while every aligned
-    * stream has a buffered head. Returns (new queues, emitted).
+  /** The gating state machine for ONE alignment group: enqueue arrivals in
+    * deterministic (ts, key, seq) order, then pop the global min while
+    * every aligned stream has a buffered head. Returns (new queues,
+    * emitted).
     */
   private def gateCore(
       alignKeys: IndexedSeq[String],
@@ -160,81 +160,6 @@ object StreamJoin {
         (_: K, arrivals: Iterator[SeaMessage], state: GroupState[FuseState]) =>
           gateStep(alignKeys, evictAfter.map(_.toMillis))(arrivals, state)
       }
-  }
-
-  /** The same per-group gate as a [[StatefulProcessor]] for
-    * `transformWithState` — Spark 4's arbitrary-state operator. Identical
-    * emission law to [[gatedByKey]]; the TWS runtime adds per-state-variable
-    * schemas, TTL hooks and timer support, and REQUIRES the RocksDB state
-    * store provider, which is also the provider the 100 TB shape wants
-    * (state beyond executor heap, changelog checkpointing).
-    */
-  final class FuseGateProcessor(align: Seq[String], evictAfterMs: Long = 0L)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SeaMessage, SeaMessage] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimeMode}
-    import org.apache.spark.sql.streaming.ValueState
-    import org.apache.spark.sql.{Encoders, streaming => ss}
-
-    private val alignKeys = align.toIndexedSeq
-    @transient private var state: ValueState[FuseState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[FuseState](
-        "fuseQueues", Encoders.product[FuseState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[SeaMessage],
-        timerValues: ss.TimerValues): Iterator[SeaMessage] = {
-      val prior =
-        if (state.exists()) state.get().queues
-        else Map.empty[String, Seq[SeaMessage]]
-      val (queues, out) = gateCore(alignKeys, prior, rows)
-      state.update(FuseState(queues))
-      if (evictAfterMs > 0L) {
-        // refresh the idle timer: one live timer per group, re-armed on
-        // every arrival — it fires only after evictAfterMs of silence
-        getHandle.listTimers().toList.foreach(t => getHandle.deleteTimer(t))
-        getHandle.registerTimer(
-          timerValues.getCurrentProcessingTimeInMs() + evictAfterMs)
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(
-        key: Long,
-        timerValues: ss.TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[SeaMessage] = {
-      // idle eviction (same law as gateStep's timed-out branch): release
-      // the gate, drain buffered messages in end-of-stream order, drop the
-      // state — a later arrival rebuilds the group from empty
-      val queues =
-        if (state.exists()) state.get().queues
-        else Map.empty[String, Seq[SeaMessage]]
-      state.clear()
-      drainAll(queues).iterator
-    }
-  }
-
-  /** [[gatedByKey]] on the `transformWithState` runtime (RocksDB-backed).
-    * `evictAfter` arms a per-group idle timer (TWS timers + ProcessingTime
-    * mode) with the same release-drain-drop law as the
-    * flatMapGroupsWithState form; None (default) keeps strict reference
-    * parity — unbounded buffer, no timers.
-    */
-  def gatedByShardTws(
-      muxed: Dataset[SeaMessage],
-      align: Seq[String],
-      evictAfter: Option[java.time.Duration] = None): Dataset[SeaMessage] = {
-    import muxed.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val timeMode =
-      if (evictAfter.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    muxed
-      .groupByKey(_.shard_id)
-      .transformWithState(
-        new FuseGateProcessor(align, evictAfter.map(_.toMillis).getOrElse(0L)),
-        timeMode, OutputMode.Append())
   }
 
   /** Bounded gated merge driven to completion in-memory — reference law for

@@ -304,19 +304,24 @@ final class EmbeddedRedis(
     // String allocations per XADD on the producer hot path
     val name =
       if (args.isEmpty) "" else new String(args.head, UTF_8).toUpperCase
-    val out = handle0(name, args)
+    // and the first argument (most commands' key) once: the redirect
+    // checks, the handler and the version bump all read it
+    val key1 = if (args.length > 1) new String(args(1), UTF_8) else null
+    val out = handle0(name, key1, args)
     // a refused command (Err) mutated nothing; DropConn faults throw past
     // this point, so they bump nothing either
     if (!out.isInstanceOf[Resp.Err] && args.nonEmpty) {
       val idx = mutatedKeyIndex(name)
       if (idx > 0 && args.length > idx)
-        bumpVersion(new String(args(idx), UTF_8))
+        bumpVersion(if (idx == 1) key1 else new String(args(idx), UTF_8))
     }
     out
   }
 
-  private def handle0(name: String, args: Seq[Array[Byte]]): Resp.Value = {
-    def s(i: Int) = new String(args(i), UTF_8)
+  private def handle0(name: String, key1: String,
+      args: Seq[Array[Byte]]): Resp.Value = {
+    def s(i: Int) =
+      if (i == 1 && key1 != null) key1 else new String(args(i), UTF_8)
     if (args.length > 1 && redirects.contains(s(1)))
       return Resp.Err(s"MOVED 0 ${redirects(s(1))}")
     if (args.length > 1 && askRedirects.contains(s(1)))
@@ -372,9 +377,9 @@ final class EmbeddedRedis(
           return Resp.Err(
             "WRONGTYPE Operation against a key holding the wrong kind of value")
         val idArg = s(2)
-        val fields = args.drop(3).grouped(2).collect {
-          case Seq(f, v) => (new String(f, UTF_8), v)
-        }.toSeq
+        // (field, value) pairs; a trailing unpaired field is dropped
+        val fields = (3 until args.length - 1 by 2)
+          .map(i => (new String(args(i), UTF_8), args(i + 1)))
         val buf = streams.computeIfAbsent(key, _ => mutable.ArrayBuffer.empty)
         // id resolution, the monotonicity CHECK, the append, and the
         // last-id bump are one atomic step per key (real redis is

@@ -500,8 +500,9 @@ class SsWriteBuilder(path: String, info: LogicalWriteInfo)
     * inserts the shuffle/sort, and each destination key then lives in
     * exactly ONE part file. This is the 100 TB ship layout: with the
     * default task-local layout every part file carries every key, so a
-    * downstream exactly-once ship ([[graft.ss.SsEosShip]]) pays sibling
-    * WATCH conflicts on shared destination keys (BENCH_LOCAL.md: disjoint
+    * downstream exactly-once ship ([[graft.eos.FileRelaySource]] into
+    * redis) pays sibling WATCH conflicts on shared destination keys
+    * (BENCH_LOCAL.md: disjoint
     * 3.2 s vs interleaved 4.9 s per 1M frames at the redis destination).
     * Off by default — a plain dump shouldn't pay a shuffle it may not
     * need; turn it on when the directory feeds a relay/ship.

@@ -530,13 +530,15 @@ class LiveBrokerSpec extends AnyFunSuite {
       kc.metadata(Seq(topic))
       (0 until N).foreach(i => kc.produce(topic, 0,
         Seq((1700000000000L + i, null, s"r10-$i".getBytes("UTF-8")))))
-      val moved = redis.RedisEosRelay.relayAll(
-        graft.TestSession.spark, kh, kp, Seq(topic), _ => topic + "_dst",
-        rh, rp, prefix)
+      val moved = eos.RelayDriver.all(graft.TestSession.spark,
+        eos.KafkaRelaySource(kh, kp, Seq(topic)),
+        eos.RedisLedgerDestination(rh, rp, prefix, _ => topic + "_dst"))
       assert(moved == N, s"relayed $moved, want $N")
       // idempotent off the redis ledger alone
-      assert(redis.RedisEosRelay.relayAll(graft.TestSession.spark,
-        kh, kp, Seq(topic), _ => topic + "_dst", rh, rp, prefix) == 0L)
+      assert(eos.RelayDriver.all(graft.TestSession.spark,
+        eos.KafkaRelaySource(kh, kp, Seq(topic)),
+        eos.RedisLedgerDestination(rh, rp, prefix,
+          _ => topic + "_dst")) == 0L)
       val key = redis.RedisStreams
         .shardedKey(topic + "_dst", 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(key): _*) match {
@@ -568,14 +570,16 @@ class LiveBrokerSpec extends AnyFunSuite {
       (0 until N).foreach(i => rc.command(redis.RedisStreams.xadd(
         key, 1700000000000L + i, s"k11-$i".getBytes("UTF-8")): _*))
       kc.metadata(Seq(stream + "_dst")) // auto-create the destination
-      val moved = kafka.KafkaEosIngest.relayAll(graft.TestSession.spark,
-        rh, rp, Seq((stream, 0L)), _ => stream + "_dst",
-        kh, kp, group, uniqueKey("k11txn"))
+      val moved = eos.RelayDriver.all(graft.TestSession.spark,
+        eos.RedisRelaySource(rh, rp, Seq((stream, 0L))),
+        eos.KafkaTxnDestination(kh, kp, group, uniqueKey("k11txn"),
+          _ => stream + "_dst"))
       assert(moved == N, s"ingested $moved, want $N")
       // idempotent off the staged group offset alone
-      assert(kafka.KafkaEosIngest.relayAll(graft.TestSession.spark,
-        rh, rp, Seq((stream, 0L)), _ => stream + "_dst",
-        kh, kp, group, uniqueKey("k11txn2")) == 0L)
+      assert(eos.RelayDriver.all(graft.TestSession.spark,
+        eos.RedisRelaySource(rh, rp, Seq((stream, 0L))),
+        eos.KafkaTxnDestination(kh, kp, group, uniqueKey("k11txn2"),
+          _ => stream + "_dst")) == 0L)
       val got = kc.fetchIso(stream + "_dst", 0, 0L, readCommitted = true)._3
         .map(r => new String(r.value, "UTF-8"))
       assert(got == (0 until N).map(i => s"k11-$i"),
@@ -596,12 +600,14 @@ class LiveBrokerSpec extends AnyFunSuite {
       val srcKey = redis.RedisStreams.shardedKey(stream, 0L, sharded = true)
       (0 until N).foreach(i => rc.command(redis.RedisStreams.xadd(
         srcKey, 1700000000000L + i, s"r11-$i".getBytes("UTF-8")): _*))
-      val moved = redis.RedisEosPump.relayAll(graft.TestSession.spark,
-        host, port, Seq((stream, 0L)), _ + "_mirror", host, port, prefix)
+      val moved = eos.RelayDriver.all(graft.TestSession.spark,
+        eos.RedisRelaySource(host, port, Seq((stream, 0L))),
+        eos.RedisLedgerDestination(host, port, prefix, _ + "_mirror"))
       assert(moved == N, s"pumped $moved, want $N")
-      assert(redis.RedisEosPump.relayAll(graft.TestSession.spark,
-        host, port, Seq((stream, 0L)), _ + "_mirror", host, port,
-        prefix) == 0L, "a drained source must pump nothing")
+      assert(eos.RelayDriver.all(graft.TestSession.spark,
+        eos.RedisRelaySource(host, port, Seq((stream, 0L))),
+        eos.RedisLedgerDestination(host, port, prefix, _ + "_mirror")) == 0L,
+        "a drained source must pump nothing")
       val dstKey = redis.RedisStreams
         .shardedKey(stream + "_mirror", 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(dstKey): _*) match {
@@ -634,13 +640,15 @@ class LiveBrokerSpec extends AnyFunSuite {
     val kc = new kafka.KafkaClient(host, port)
     try {
       kc.metadata(Seq(stream + "_dst"))
-      val moved = ss.SsEosShip.shipKafkaAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), _ => stream + "_dst", host, port,
-        group, uniqueKey("k12txn"))
+      val moved = eos.RelayDriver.all(graft.TestSession.spark,
+        eos.FileRelaySource(Seq(s"$dir/live.ss"), 64L << 20, Some(4)),
+        eos.KafkaTxnDestination(host, port, group, uniqueKey("k12txn"),
+          _ => stream + "_dst"))
       assert(moved == N, s"shipped $moved, want $N")
-      assert(ss.SsEosShip.shipKafkaAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), _ => stream + "_dst", host, port,
-        group, uniqueKey("k12txn2")) == 0L,
+      assert(eos.RelayDriver.all(graft.TestSession.spark,
+        eos.FileRelaySource(Seq(s"$dir/live.ss"), 64L << 20, Some(4)),
+        eos.KafkaTxnDestination(host, port, group, uniqueKey("k12txn2"),
+          _ => stream + "_dst")) == 0L,
         "a drained file must ship nothing")
       val got = kc.fetchIso(stream + "_dst", 0, 0L, readCommitted = true)._3
         .map(r => new String(r.value, "UTF-8"))
@@ -666,11 +674,13 @@ class LiveBrokerSpec extends AnyFunSuite {
     w.close()
     val rc = new redis.RedisClient(host, port)
     try {
-      val moved = ss.SsEosShip.shipRedisAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), identity, host, port, prefix)
+      val moved = eos.RelayDriver.all(graft.TestSession.spark,
+        eos.FileRelaySource(Seq(s"$dir/live.ss"), 64L << 20),
+        eos.RedisLedgerDestination(host, port, prefix, identity))
       assert(moved == N, s"shipped $moved, want $N")
-      assert(ss.SsEosShip.shipRedisAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), identity, host, port, prefix) == 0L)
+      assert(eos.RelayDriver.all(graft.TestSession.spark,
+        eos.FileRelaySource(Seq(s"$dir/live.ss"), 64L << 20),
+        eos.RedisLedgerDestination(host, port, prefix, identity)) == 0L)
       val key = redis.RedisStreams.shardedKey(stream, 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(key): _*) match {
         case redis.Resp.Arr(items) => items
@@ -704,13 +714,15 @@ class LiveBrokerSpec extends AnyFunSuite {
         iggy.IggyWire.Partitioning.PartitionId(0),
         Seq((1700000000000L + i, s"i5-$i".getBytes("UTF-8")))))
       kc.metadata(Seq(topic + "_dst"))
-      val moved = iggy.IggyEosRelay.relayKafkaAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ + "_dst", kh, kp, group,
-        uniqueKey("i5txn"), iggyAuth = (iu, ipw))
+      val moved = eos.RelayDriver.all(graft.TestSession.spark,
+        eos.IggyRelaySource(ih, ip, "graft", Seq(topic), auth = (iu, ipw)),
+        eos.KafkaTxnDestination(kh, kp, group, uniqueKey("i5txn"),
+          _ + "_dst"))
       assert(moved == N, s"relayed $moved, want $N")
-      assert(iggy.IggyEosRelay.relayKafkaAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ + "_dst", kh, kp, group,
-        uniqueKey("i5txn2"), iggyAuth = (iu, ipw)) == 0L)
+      assert(eos.RelayDriver.all(graft.TestSession.spark,
+        eos.IggyRelaySource(ih, ip, "graft", Seq(topic), auth = (iu, ipw)),
+        eos.KafkaTxnDestination(kh, kp, group, uniqueKey("i5txn2"),
+          _ + "_dst")) == 0L)
       val got = kc.fetchIso(topic + "_dst", 0, 0L, readCommitted = true)._3
         .map(r => new String(r.value, "UTF-8"))
       assert(got == (0 until N).map(i => s"i5-$i"),
@@ -738,13 +750,13 @@ class LiveBrokerSpec extends AnyFunSuite {
       (0 until N).foreach(i => ic.sendMessages("graft", topic,
         iggy.IggyWire.Partitioning.PartitionId(0),
         Seq((1700000000000L + i, s"i6-$i".getBytes("UTF-8")))))
-      val moved = iggy.IggyEosRelay.relayRedisAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ => topic, rh, rp, prefix,
-        iggyAuth = (iu, ipw))
+      val moved = eos.RelayDriver.all(graft.TestSession.spark,
+        eos.IggyRelaySource(ih, ip, "graft", Seq(topic), auth = (iu, ipw)),
+        eos.RedisLedgerDestination(rh, rp, prefix, _ => topic))
       assert(moved == N, s"relayed $moved, want $N")
-      assert(iggy.IggyEosRelay.relayRedisAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ => topic, rh, rp, prefix,
-        iggyAuth = (iu, ipw)) == 0L)
+      assert(eos.RelayDriver.all(graft.TestSession.spark,
+        eos.IggyRelaySource(ih, ip, "graft", Seq(topic), auth = (iu, ipw)),
+        eos.RedisLedgerDestination(rh, rp, prefix, _ => topic)) == 0L)
       val key = redis.RedisStreams.shardedKey(topic, 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(key): _*) match {
         case redis.Resp.Arr(items) => items

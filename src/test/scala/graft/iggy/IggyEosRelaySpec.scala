@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
 
 import IggyWire.Partitioning
+import graft.eos.{IggyRelaySource, KafkaTxnDestination,
+  RedisLedgerDestination, RelayDriver}
 import graft.kafka.{EmbeddedKafka, KafkaClient}
 import graft.redis.{EmbeddedRedis, RedisStreams}
 
@@ -42,9 +44,10 @@ class IggyEosRelaySpec extends AnyFunSuite {
       kc.metadata(Seq("it_out"))
       val spark0 = spark
       def relay(crash: Option[String] = None) =
-        IggyEosRelay.relayKafkaOnce(spark0, ig.host, ig.port, "s",
-          Seq("it"), _ + "_out", k.host, k.port, "g_ik", "ik", cap = 4L,
-          crashBeforeCommit = crash)
+        RelayDriver.once(spark0,
+          IggyRelaySource(ig.host, ig.port, "s", Seq("it"), cap = 4L),
+          KafkaTxnDestination(k.host, k.port, "g_ik", "ik", _ + "_out",
+            crashBeforeCommit = crash))
       assert(relay() == 8L, "cap must bound each partition's epoch at 4")
       graft.ops.Failpoints.arm("ik-crash")
       intercept[Exception](relay(Some("ik-crash")))
@@ -57,8 +60,9 @@ class IggyEosRelaySpec extends AnyFunSuite {
           s"partition $p not a clean prefix after the crash: $vals")
       }
       val mid = (0 until 2).map(committedValues(kc, "it_out", _).length).sum
-      val moved = IggyEosRelay.relayKafkaAll(spark0, ig.host, ig.port,
-        "s", Seq("it"), _ + "_out", k.host, k.port, "g_ik", "ik", cap = 4L)
+      val moved = RelayDriver.all(spark0,
+        IggyRelaySource(ig.host, ig.port, "s", Seq("it"), cap = 4L),
+        KafkaTxnDestination(k.host, k.port, "g_ik", "ik", _ + "_out"))
       assert(moved == 20L - mid, s"drain relayed $moved, expected ${20 - mid}")
       assert(relay() == 0L, "a drained source must relay nothing")
       (0 until 2).foreach(p =>
@@ -77,9 +81,10 @@ class IggyEosRelaySpec extends AnyFunSuite {
       seed(ic, "rt", parts = 1, perPart = 10)
       val spark0 = spark
       def relay(crash: Option[String] = None) =
-        IggyEosRelay.relayRedisOnce(spark0, ig.host, ig.port, "s",
-          Seq("rt"), identity, r.host, r.port, "irl", cap = 4L,
-          crashBeforeCommit = crash)
+        RelayDriver.once(spark0,
+          IggyRelaySource(ig.host, ig.port, "s", Seq("rt"), cap = 4L),
+          RedisLedgerDestination(r.host, r.port, "irl", identity,
+            crashBeforeCommit = crash))
       assert(relay() == 4L)
       def ledger = r.kvGet("irl:{rt/0}").map(new String(_, "UTF-8"))
       assert(ledger.contains("4"), s"cursor must publish with entries: $ledger")
@@ -88,8 +93,9 @@ class IggyEosRelaySpec extends AnyFunSuite {
       assert(ledger.contains("4") &&
         r.entries(RedisStreams.shardedKey("rt", 0L, true)).length == 4,
         "a crashed epoch moved the ledger or leaked entries")
-      val moved = IggyEosRelay.relayRedisAll(spark0, ig.host, ig.port,
-        "s", Seq("rt"), identity, r.host, r.port, "irl", cap = 4L)
+      val moved = RelayDriver.all(spark0,
+        IggyRelaySource(ig.host, ig.port, "s", Seq("rt"), cap = 4L),
+        RedisLedgerDestination(r.host, r.port, "irl", identity))
       assert(moved == 6L, s"drain relayed $moved, expected 6")
       assert(relay() == 0L)
       val got = r.entries(RedisStreams.shardedKey("rt", 0L, true))

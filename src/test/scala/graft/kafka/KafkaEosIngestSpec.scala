@@ -2,6 +2,8 @@ package graft.kafka
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.eos.{KafkaRelaySource, KafkaTxnDestination, RedisRelaySource,
+  RelayDriver}
 import graft.redis.{EmbeddedRedis, RedisClient, RedisStreams}
 
 /** Laws of the exactly-once Redis→Kafka ingest relay: the source cursor
@@ -38,9 +40,10 @@ class KafkaEosIngestSpec extends AnyFunSuite {
       }
       val spark0 = spark
       def ingest(crash: Option[String]) =
-        KafkaEosIngest.relayOnce(spark0, r.host, r.port, Seq(("src", 0L)),
-          _ => "dst", k.host, k.port, "g_ing", "ing", cap = 6L,
-          crashBeforeCommit = crash)
+        RelayDriver.once(spark0,
+          RedisRelaySource(r.host, r.port, Seq(("src", 0L)), cap = 6L),
+          KafkaTxnDestination(k.host, k.port, "g_ing", "ing", _ => "dst",
+            crashBeforeCommit = crash))
       // epoch 1: capped at 6; the staged cursor is packed(last)+1 and
       // publishes WITH the entries (it is only readable post-commit)
       assert(ingest(None) == 6L, "cap must bound the epoch")
@@ -61,9 +64,9 @@ class KafkaEosIngestSpec extends AnyFunSuite {
         "a crashed epoch leaked records past the LSO")
       // drain resumes off the cursor alone: the crashed range re-relays,
       // then the rest; a further pass moves nothing
-      val moved = KafkaEosIngest.relayAll(spark0, r.host, r.port,
-        Seq(("src", 0L)), _ => "dst", k.host, k.port, "g_ing", "ing",
-        cap = 6L)
+      val moved = RelayDriver.all(spark0,
+        RedisRelaySource(r.host, r.port, Seq(("src", 0L)), cap = 6L),
+        KafkaTxnDestination(k.host, k.port, "g_ing", "ing", _ => "dst"))
       assert(moved == 14L, s"drain relayed $moved, expected 14")
       assert(ingest(None) == 0L, "a drained source must relay nothing")
       assert(committedValues(kc, "dst") == vals,
@@ -103,18 +106,19 @@ class KafkaEosIngestSpec extends AnyFunSuite {
         finally zc.close()
       }
       kc.metadata(Seq("rz_dst"))
-      val moved = KafkaEosIngest.relayOnce(graft.TestSession.spark,
-        r.host, r.port, Seq(("rz", 0L)), _ => "rz_dst",
-        k.host, k.port, "g_rz", "rz-txn",
-        raceAfterFence = Some("rz-race"))
+      val moved = RelayDriver.once(graft.TestSession.spark,
+        RedisRelaySource(r.host, r.port, Seq(("rz", 0L))),
+        KafkaTxnDestination(k.host, k.port, "g_rz", "rz-txn", _ => "rz_dst",
+          raceAfterFence = Some("rz-race")))
       assert(moved == 5L,
         s"the fenced attempt must retry in-task and land, moved $moved")
       assert(committedValues(kc, "rz_dst") == (0 until 5).map("z" + _),
         "the fence race duplicated or lost records")
       // the cursor landed with the retry's transaction
-      assert(KafkaEosIngest.relayOnce(graft.TestSession.spark,
-        r.host, r.port, Seq(("rz", 0L)), _ => "rz_dst",
-        k.host, k.port, "g_rz", "rz-txn") == 0L)
+      assert(RelayDriver.once(graft.TestSession.spark,
+        RedisRelaySource(r.host, r.port, Seq(("rz", 0L))),
+        KafkaTxnDestination(k.host, k.port, "g_rz", "rz-txn",
+          _ => "rz_dst")) == 0L)
     } finally { kc.close(); rc.close(); k.close(); r.close() }
   }
 
@@ -131,14 +135,17 @@ class KafkaEosIngestSpec extends AnyFunSuite {
         try { new KafkaTxnProducer(zc, "rr-txn-rr-0").initTransactions(); () }
         finally zc.close()
       }
-      val moved = KafkaEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("rr"), _ + "_dst", "g_rr", "rr-txn",
-        raceAfterFence = Some("rr-race"))
+      val moved = RelayDriver.once(graft.TestSession.spark,
+        KafkaRelaySource(k.host, k.port, Seq("rr")),
+        KafkaTxnDestination(k.host, k.port, "g_rr", "rr-txn", _ + "_dst",
+          raceAfterFence = Some("rr-race")))
       assert(moved == 6L,
         s"the fenced relay must retry in-task and land, moved $moved")
       assert(committedValues(kc, "rr_dst") == (0 until 6).map("r" + _))
-      assert(KafkaEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("rr"), _ + "_dst", "g_rr", "rr-txn") == 0L)
+      assert(RelayDriver.once(graft.TestSession.spark,
+        KafkaRelaySource(k.host, k.port, Seq("rr")),
+        KafkaTxnDestination(k.host, k.port, "g_rr", "rr-txn",
+          _ + "_dst")) == 0L)
     } finally { kc.close(); k.close() }
   }
 
@@ -153,18 +160,21 @@ class KafkaEosIngestSpec extends AnyFunSuite {
       (0 until 4).foreach(i => rc.command(
         RedisStreams.xadd(key, 2000L + i, s"v$i".getBytes("UTF-8")): _*))
       val spark0 = spark
-      assert(KafkaEosIngest.relayOnce(spark0, r.host, r.port,
-        Seq(("s2", 0L)), _ => "d2", k.host, k.port, "g2", "i2") == 4L)
+      assert(RelayDriver.once(spark0,
+        RedisRelaySource(r.host, r.port, Seq(("s2", 0L))),
+        KafkaTxnDestination(k.host, k.port, "g2", "i2", _ => "d2")) == 4L)
       // same epoch re-run (a restarted driver re-plans the same tip):
       // the post-fence cursor read sees the landed range and skips
-      assert(KafkaEosIngest.relayOnce(spark0, r.host, r.port,
-        Seq(("s2", 0L)), _ => "d2", k.host, k.port, "g2", "i2") == 0L)
+      assert(RelayDriver.once(spark0,
+        RedisRelaySource(r.host, r.port, Seq(("s2", 0L))),
+        KafkaTxnDestination(k.host, k.port, "g2", "i2", _ => "d2")) == 0L)
       assert(committedValues(kc, "d2") == Seq("v0", "v1", "v2", "v3"),
         "replay duplicated records")
       // new source entries relay from the cursor, not from scratch
       rc.command(RedisStreams.xadd(key, 3000L, "v4".getBytes("UTF-8")): _*)
-      assert(KafkaEosIngest.relayOnce(spark0, r.host, r.port,
-        Seq(("s2", 0L)), _ => "d2", k.host, k.port, "g2", "i2") == 1L)
+      assert(RelayDriver.once(spark0,
+        RedisRelaySource(r.host, r.port, Seq(("s2", 0L))),
+        KafkaTxnDestination(k.host, k.port, "g2", "i2", _ => "d2")) == 1L)
       assert(committedValues(kc, "d2") ==
         Seq("v0", "v1", "v2", "v3", "v4"))
     } finally { kc.close(); rc.close(); k.close(); r.close() }

@@ -2,6 +2,8 @@ package graft.kafka
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.eos.{KafkaRelaySource, KafkaTxnDestination, RelayDriver}
+
 /** Laws of the exactly-once Spark→Kafka sink (VERDICT r13 #1 — the
   * reference's consume-transform-produce loop,
   * sea-streamer-kafka/src/producer.rs:236-301, composed into foreachBatch):
@@ -97,9 +99,10 @@ class KafkaEosSinkSpec extends AnyFunSuite {
         c.produce("src", 0, Seq((1000L + i, null, v.getBytes("UTF-8"))))
       }
       val relay = (crash: Option[String]) =>
-        KafkaEosRelay.relayOnce(spark, srv.host, srv.port, Seq("src"),
-          _ => "dst", "g_relay", "rel", cap = 6L,
-          crashBeforeCommit = crash)
+        RelayDriver.once(spark,
+          KafkaRelaySource(srv.host, srv.port, Seq("src"), cap = 6L),
+          KafkaTxnDestination(srv.host, srv.port, "g_relay", "rel",
+            _ => "dst", crashBeforeCommit = crash))
       // epoch 1: capped at 6
       assert(relay(None) == 6L, "cap must bound the epoch")
       assert(c.fetchOffsets("g_relay", Map("src" -> Seq(0)))
@@ -226,9 +229,10 @@ class KafkaEosSinkSpec extends AnyFunSuite {
         val tok = s"rstorm-$guard"
         if (crash) { KafkaEosSink.arm(tok); crashes += 1 }
         try {
-          val moved = KafkaEosRelay.relayOnce(spark, srv.host, srv.port,
-            Seq("src"), _ => "dst", "g_storm", "rstorm", cap = 7L,
-            crashBeforeCommit = if (crash) Some(tok) else None)
+          val moved = RelayDriver.once(spark,
+            KafkaRelaySource(srv.host, srv.port, Seq("src"), cap = 7L),
+            KafkaTxnDestination(srv.host, srv.port, "g_storm", "rstorm",
+              _ => "dst", crashBeforeCommit = if (crash) Some(tok) else None))
           if (moved == 0L) drained = true
         } catch { case _: Exception => () }
       }

@@ -118,35 +118,6 @@ class StreamJoinSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState gate matches the flatMapGroupsWithState law") {
-    val spark = TestSession.spark
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-
-    // TWS requires the RocksDB provider; restore the session default after
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[SeaMessage]
-      val q = StreamJoin.gatedByShardTws(input.toDS(), align = Seq("a", "b"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("fuse_tws_test").start()
-      try {
-        input.addData(seq("a", Seq(1, 3, 5)))
-        q.processAllAvailable()
-        assert(spark.table("fuse_tws_test").count() == 0, "gate must hold")
-        input.addData(seq("b", Seq(2, 4)))
-        q.processAllAvailable()
-        val got = spark.table("fuse_tws_test")
-          .select("stream_key", "sequence").as[(String, Long)].collect().toSeq
-        assert(got == Seq("a" -> 1L, "b" -> 2L, "a" -> 3L, "b" -> 4L))
-      } finally q.stop()
-    } finally spark.conf.set(key, prev)
-  }
-
   // NOTE on harness: with eviction on, the state operator reports
   // shouldRunAnotherBatch=true whenever the batch timestamp advances
   // (processing-time timers must get a chance to fire), so the engine never
@@ -264,47 +235,6 @@ class StreamJoinSpec extends AnyFunSuite {
           s"shard $sh drain diverges from gatedBounded's prediction")
       }
     } finally q.stop()
-  }
-
-  test("TWS idle eviction matches the flatMapGroupsWithState eviction law") {
-    val spark = TestSession.spark
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-
-    def sh(key: String, shard: Long, items: Seq[Long]): Seq[SeaMessage] =
-      items.map(i => SeaMessage(key, shard, i,
-        new java.sql.Timestamp(i * 1000), Array.emptyByteArray))
-
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[SeaMessage]
-      val q = StreamJoin
-        .gatedByShardTws(input.toDS(), align = Seq("a", "b"),
-          evictAfter = Some(java.time.Duration.ofSeconds(2)))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("fuse_tws_evict_test").start()
-      def rows() = spark.table("fuse_tws_evict_test")
-        .select("shard_id", "stream_key", "sequence")
-        .as[(Long, String, Long)].collect().toSeq
-      try {
-        val t0 = System.currentTimeMillis()
-        input.addData(sh("a", 0, Seq(1, 3)))
-        Thread.sleep(300)
-        if (System.currentTimeMillis() - t0 < 1500)
-          assert(rows().isEmpty, "gate must hold before the idle timeout")
-        pollUntil(30000)(rows().count(_._1 == 0L) == 2)
-        assert(rows().filter(_._1 == 0L) == Seq((0L, "a", 1L), (0L, "a", 3L)),
-          s"TWS evicted group must drain in order, got ${rows()}")
-        // live after eviction
-        input.addData(sh("a", 7, Seq(10)) ++ sh("b", 7, Seq(11)))
-        pollUntil(30000)(rows().exists(_._1 == 7L))
-        assert(rows().filter(_._1 == 7L) == Seq((7L, "a", 10L)))
-      } finally q.stop()
-    } finally spark.conf.set(key, prev)
   }
 
   test("batch merge equals global (ts, key, seq) order") {

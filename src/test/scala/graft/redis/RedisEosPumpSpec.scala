@@ -2,6 +2,8 @@ package graft.redis
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.eos.{RedisLedgerDestination, RedisRelaySource, RelayDriver}
+
 /** Laws of the exactly-once Redis→Redis pump: destination-anchored
   * cursor (packed source entry id in a destination ledger key), entries
   * + cursor atomic in one WATCH-fenced MULTI/EXEC, crash-before-EXEC
@@ -39,9 +41,10 @@ class RedisEosPumpSpec extends AnyFunSuite {
       })
       val spark0 = spark
       def pump(crash: Option[String]) =
-        RedisEosPump.relayOnce(spark0, a.host, a.port, Seq(("s", 0L)),
-          _ => "d", b.host, b.port, "pmp", cap = 6L,
-          crashBeforeCommit = crash)
+        RelayDriver.once(spark0,
+          RedisRelaySource(a.host, a.port, Seq(("s", 0L)), cap = 6L),
+          RedisLedgerDestination(b.host, b.port, "pmp", _ => "d",
+            crashBeforeCommit = crash))
       def ledger = b.kvGet("pmp:{s/0}").map(new String(_, "UTF-8").toLong)
       assert(pump(None) == 6L, "cap must bound the epoch")
       assert(ledger.contains(RedisStreams.packSeqNo(1000L, 5L) + 1L),
@@ -54,8 +57,9 @@ class RedisEosPumpSpec extends AnyFunSuite {
       assert(values(b, "d", 0L) == vals.take(6) &&
         ledger.contains(RedisStreams.packSeqNo(1000L, 5L) + 1L),
         "a crashed epoch moved the ledger or leaked entries")
-      val moved = RedisEosPump.relayAll(spark0, a.host, a.port,
-        Seq(("s", 0L)), _ => "d", b.host, b.port, "pmp", cap = 6L)
+      val moved = RelayDriver.all(spark0,
+        RedisRelaySource(a.host, a.port, Seq(("s", 0L)), cap = 6L),
+        RedisLedgerDestination(b.host, b.port, "pmp", _ => "d"))
       assert(moved == 14L, s"drain pumped $moved, expected 14")
       assert(pump(None) == 0L, "a drained source must pump nothing")
       assert(values(b, "d", 0L) == vals,
@@ -92,16 +96,18 @@ class RedisEosPumpSpec extends AnyFunSuite {
       zombie.command(RedisStreams.set(ledger,
         (RedisStreams.packSeqNo(5000L, 0L) + 1L).toString): _*)
       // the retry runs the whole protocol and commits
-      assert(RedisEosPump.relayOnce(spark0, a.host, a.port, Seq(("z", 0L)),
-        _ => "zd", b.host, b.port, "zp") == 1L)
+      assert(RelayDriver.once(spark0,
+        RedisRelaySource(a.host, a.port, Seq(("z", 0L))),
+        RedisLedgerDestination(b.host, b.port, "zp", _ => "zd")) == 1L)
       // the zombie's EXEC nils out — the watched ledger moved
       assert(zombie.command(RedisStreams.exec: _*) == Resp.NullArr,
         "the rival's EXEC must nil out against the moved ledger")
       assert(values(b, "zd", 0L) == Seq("only"),
         "fencing leaked a duplicate copy")
       // and a replay pass skips off the committed cursor
-      assert(RedisEosPump.relayOnce(spark0, a.host, a.port, Seq(("z", 0L)),
-        _ => "zd", b.host, b.port, "zp") == 0L)
+      assert(RelayDriver.once(spark0,
+        RedisRelaySource(a.host, a.port, Seq(("z", 0L))),
+        RedisLedgerDestination(b.host, b.port, "zp", _ => "zd")) == 0L)
     } finally { src.close(); zombie.close(); a.close(); b.close() }
   }
 
@@ -133,15 +139,17 @@ class RedisEosPumpSpec extends AnyFunSuite {
           ()
         } finally rival.close()
       }
-      val moved = RedisEosPump.relayOnce(spark, a.host, a.port,
-        Seq(("nr", 0L)), _ => "nd", b.host, b.port, "np",
-        raceAfterRead = Some("nr-race"))
+      val moved = RelayDriver.once(spark,
+        RedisRelaySource(a.host, a.port, Seq(("nr", 0L))),
+        RedisLedgerDestination(b.host, b.port, "np", _ => "nd",
+          raceAfterRead = Some("nr-race")))
       assert(moved == 4L,
         s"retry must relay exactly the remainder (4), moved $moved")
       assert(values(b, "nd", 0L) == vals,
         "the nil-retry lost, duplicated, or reordered records")
-      assert(RedisEosPump.relayOnce(spark, a.host, a.port,
-        Seq(("nr", 0L)), _ => "nd", b.host, b.port, "np") == 0L)
+      assert(RelayDriver.once(spark,
+        RedisRelaySource(a.host, a.port, Seq(("nr", 0L))),
+        RedisLedgerDestination(b.host, b.port, "np", _ => "nd")) == 0L)
     } finally { src.close(); a.close(); b.close() }
   }
 
@@ -154,9 +162,10 @@ class RedisEosPumpSpec extends AnyFunSuite {
       seed(rc, "m", 0L, Seq((1L, "a0"), (2L, "a1"), (3L, "a2")))
       seed(rc, "m", 1L, Seq((1L, "b0"), (2L, "b1")))
       val spark0 = spark
-      val moved = RedisEosPump.relayAll(spark0, srv.host, srv.port,
-        Seq(("m", 0L), ("m", 1L)), _ + "_mirror",
-        srv.host, srv.port, "mp", cap = 2L)
+      val moved = RelayDriver.all(spark0,
+        RedisRelaySource(srv.host, srv.port, Seq(("m", 0L), ("m", 1L)),
+          cap = 2L),
+        RedisLedgerDestination(srv.host, srv.port, "mp", _ + "_mirror"))
       assert(moved == 5L, s"pumped $moved, expected 5")
       assert(values(srv, "m_mirror", 0L) == Seq("a0", "a1", "a2"))
       assert(values(srv, "m_mirror", 1L) == Seq("b0", "b1"))
@@ -187,9 +196,10 @@ class RedisEosPumpSpec extends AnyFunSuite {
           RedisStreams.shardedKey("fd", 0L, sharded = true), 9000L,
           "foreign".getBytes("UTF-8")): _*); ()
       }
-      val moved = RedisEosPump.relayOnce(spark, a.host, a.port,
-        Seq(("fx", 0L)), _ => "fd", b.host, b.port, "fpx",
-        raceBeforeExec = Some("pump-foreign"))
+      val moved = RelayDriver.once(spark,
+        RedisRelaySource(a.host, a.port, Seq(("fx", 0L))),
+        RedisLedgerDestination(b.host, b.port, "fpx", _ => "fd",
+          raceBeforeExec = Some("pump-foreign")))
       assert(moved == 5L, s"retry must land all 5 entries, moved $moved")
       val entries = b.entries(RedisStreams.shardedKey("fd", 0L, true))
       assert(entries.map(e => new String(e._2.head._2, "UTF-8")) ==
@@ -216,16 +226,18 @@ class RedisEosPumpSpec extends AnyFunSuite {
       // tip itself saturated → the PLAN probe refuses
       xaddExplicit("st:0", "5-65535")
       val e1 = intercept[IllegalStateException](
-        RedisEosPump.relayOnce(spark, a.host, a.port, Seq(("st", 0L)),
-          _ => "sd", b.host, b.port, "sp"))
+        RelayDriver.once(spark,
+          RedisRelaySource(a.host, a.port, Seq(("st", 0L))),
+          RedisLedgerDestination(b.host, b.port, "sp", _ => "sd")))
       assert(e1.getMessage.contains("saturates"), e1.getMessage)
       // saturated entry BEHIND a healthy tip → the task-side per-entry
       // guard refuses (the tip probe alone would miss it)
       xaddExplicit("sm:0", "5-65535")
       xaddExplicit("sm:0", "7-0")
       val e2 = intercept[Exception](
-        RedisEosPump.relayOnce(spark, a.host, a.port, Seq(("sm", 0L)),
-          _ => "sd", b.host, b.port, "sp2"))
+        RelayDriver.once(spark,
+          RedisRelaySource(a.host, a.port, Seq(("sm", 0L))),
+          RedisLedgerDestination(b.host, b.port, "sp2", _ => "sd")))
       assert(e2.getMessage != null && (e2.getMessage.contains("saturates")
         || Option(e2.getCause).exists(_.getMessage.contains("saturates"))),
         s"mid-range saturation must refuse loud: $e2")
@@ -259,9 +271,10 @@ class RedisEosPumpSpec extends AnyFunSuite {
         }
       }
       graft.ops.Failpoints.armHook("pump-contend")(() => hook())
-      val moved = RedisEosPump.relayOnce(spark, a.host, a.port,
-        Seq(("sc", 0L)), _ => "sd", b.host, b.port, "scp",
-        raceBeforeExec = Some("pump-contend"))
+      val moved = RelayDriver.once(spark,
+        RedisRelaySource(a.host, a.port, Seq(("sc", 0L))),
+        RedisLedgerDestination(b.host, b.port, "scp", _ => "sd",
+          raceBeforeExec = Some("pump-contend")))
       assert(moved == 40L, s"all 40 must land despite contention: $moved")
       val vals = b.entries(dstKey)
         .map(e => new String(e._2.head._2, "UTF-8"))
@@ -271,8 +284,9 @@ class RedisEosPumpSpec extends AnyFunSuite {
       val ids = b.entries(dstKey).map(e => RedisStreams.parseEntryId(e._1))
       assert(ids == ids.sorted, s"non-monotone ids: $ids")
       // the cursor reads drained
-      assert(RedisEosPump.relayOnce(spark, a.host, a.port,
-        Seq(("sc", 0L)), _ => "sd", b.host, b.port, "scp") == 0L)
+      assert(RelayDriver.once(spark,
+        RedisRelaySource(a.host, a.port, Seq(("sc", 0L))),
+        RedisLedgerDestination(b.host, b.port, "scp", _ => "sd")) == 0L)
     } finally { src.close(); foreign.close(); a.close(); b.close() }
   }
 }

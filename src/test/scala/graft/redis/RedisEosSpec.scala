@@ -2,6 +2,8 @@ package graft.redis
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.eos.{KafkaRelaySource, RedisLedgerDestination, RelayDriver}
+
 /** Laws of the exactly-once Spark→redis sink — k8's contract rebuilt on
   * the primitive redis actually has (MULTI/EXEC): per-(epoch, slot)
   * atomicity of entries + ledger watermark, idempotent replay, and the
@@ -268,9 +270,10 @@ class RedisEosSpec extends AnyFunSuite {
       }
       val spark0 = spark
       def relay(crash: Option[String]) =
-        RedisEosRelay.relayOnce(spark0, k.host, k.port, Seq("src"),
-          _ => "dst", r.host, r.port, "rel", cap = 6L,
-          crashBeforeCommit = crash)
+        RelayDriver.once(spark0,
+          KafkaRelaySource(k.host, k.port, Seq("src"), cap = 6L),
+          RedisLedgerDestination(r.host, r.port, "rel", _ => "dst",
+            crashBeforeCommit = crash))
       def ledger = r.kvGet("rel:{src/0}").map(new String(_, "UTF-8"))
       def entries = r.entries(RedisStreams.shardedKey("dst", 0L, true))
         .map(e => new String(e._2.head._2, "UTF-8"))
@@ -285,8 +288,9 @@ class RedisEosSpec extends AnyFunSuite {
         "a crashed epoch moved the ledger or leaked entries")
       // drain resumes off the ledger: the crashed range re-relays, then
       // the rest; a further pass moves nothing
-      val moved = RedisEosRelay.relayAll(spark0, k.host, k.port,
-        Seq("src"), _ => "dst", r.host, r.port, "rel", cap = 6L)
+      val moved = RelayDriver.all(spark0,
+        KafkaRelaySource(k.host, k.port, Seq("src"), cap = 6L),
+        RedisLedgerDestination(r.host, r.port, "rel", _ => "dst"))
       assert(moved == 14L, s"drain relayed $moved, expected 14")
       assert(relay(None) == 0L, "a drained source must relay nothing")
       assert(entries == vals,
@@ -325,17 +329,18 @@ class RedisEosSpec extends AnyFunSuite {
           ()
         } finally rival.close()
       }
-      val moved = RedisEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("nsrc"), _ => "ndst", r.host, r.port, "nw",
-        raceAfterRead = Some("nw-race"))
+      val moved = RelayDriver.once(graft.TestSession.spark,
+        KafkaRelaySource(k.host, k.port, Seq("nsrc")),
+        RedisLedgerDestination(r.host, r.port, "nw", _ => "ndst",
+          raceAfterRead = Some("nw-race")))
       assert(moved == 4L,
         s"retry must relay exactly the remainder (4), moved $moved")
       val got = r.entries(RedisStreams.shardedKey("ndst", 0L, true))
         .map(e => new String(e._2.head._2, "UTF-8"))
       assert(got == vals, s"nil-retry lost/duplicated records: $got")
-      assert(RedisEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("nsrc"), _ => "ndst", r.host, r.port,
-        "nw") == 0L)
+      assert(RelayDriver.once(graft.TestSession.spark,
+        KafkaRelaySource(k.host, k.port, Seq("nsrc")),
+        RedisLedgerDestination(r.host, r.port, "nw", _ => "ndst")) == 0L)
     } finally { kc.close(); k.close(); r.close() }
   }
 
@@ -381,8 +386,9 @@ class RedisEosSpec extends AnyFunSuite {
       // offsets [6, 9): committed records the drain must still reach
       (0 until 3).foreach(i => kc.produce("ab", 0,
         Seq((200L + i, null, s"good$i".getBytes("UTF-8")))))
-      val moved = RedisEosRelay.relayAll(spark, k.host, k.port, Seq("ab"),
-        _ + "_out", r.host, r.port, "abl", cap = 6L)
+      val moved = RelayDriver.all(spark,
+        KafkaRelaySource(k.host, k.port, Seq("ab"), cap = 6L),
+        RedisLedgerDestination(r.host, r.port, "abl", _ + "_out"))
       assert(moved == 3L,
         s"drain must reach the committed records past the aborted range: $moved")
       val vals = r.entries(RedisStreams.shardedKey("ab_out", 0L, true))

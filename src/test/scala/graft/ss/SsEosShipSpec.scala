@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSession
 import graft.core.SeaMessage
-import graft.eos.RedisLedgerDestination
+import graft.eos.{FileRelaySource, KafkaTxnDestination,
+  RedisLedgerDestination, RelayDriver}
 import graft.kafka.{EmbeddedKafka, KafkaClient}
 import graft.redis.{EmbeddedRedis, RedisStreams}
 
@@ -60,9 +61,9 @@ class SsEosShipSpec extends AnyFunSuite {
       kc.metadata(Seq("a_out", "b_out"))
       val spark0 = spark
       def ship(cap: Long, crash: Option[String] = None) =
-        SsEosShip.shipKafkaOnce(spark0, Seq(path), _ + "_out",
-          k.host, k.port, "g_ship", "ship", capBytes = cap,
-          crashBeforeCommit = crash)
+        RelayDriver.once(spark0, FileRelaySource(Seq(path), cap, Some(4)),
+          KafkaTxnDestination(k.host, k.port, "g_ship", "ship", _ + "_out",
+            crashBeforeCommit = crash))
       // small byte cap: the first epoch ships a strict prefix
       val first = ship(cap = 200L)
       assert(first > 0L && first < 15L, s"cap must bound the epoch: $first")
@@ -74,8 +75,9 @@ class SsEosShipSpec extends AnyFunSuite {
       assert(committedValues(kc, "a_out") ++ committedValues(kc, "b_out")
         == mid, "a crashed epoch leaked frames past the LSO")
       // drain the rest; a drained file ships zero
-      val total = first + SsEosShip.shipKafkaAll(spark0, Seq(path),
-        _ + "_out", k.host, k.port, "g_ship", "ship", capBytes = 200L)
+      val total = first + RelayDriver.all(spark0,
+        FileRelaySource(Seq(path), 200L, Some(4)),
+        KafkaTxnDestination(k.host, k.port, "g_ship", "ship", _ + "_out"))
       assert(total == 15L, s"shipped $total frames, want 15")
       assert(ship(cap = 1L << 20) == 0L, "a drained file must ship zero")
       // frame order per destination partition survives (a's shard 0 → p0)
@@ -105,15 +107,17 @@ class SsEosShipSpec extends AnyFunSuite {
     try {
       val spark0 = spark
       graft.ops.Failpoints.arm("rship-crash")
-      intercept[Exception](SsEosShip.shipRedisOnce(spark0, Seq(path),
-        identity, r.host, r.port, "shipled",
-        crashBeforeCommit = Some("rship-crash")))
+      intercept[Exception](RelayDriver.once(spark0,
+        FileRelaySource(Seq(path), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "shipled", identity,
+          crashBeforeCommit = Some("rship-crash"))))
       assert(r.entries(RedisStreams.shardedKey("c", 0L, true)).isEmpty &&
         r.kvGet("shipled:{clamp.ss}").isEmpty,
         "a crashed ship moved the ledger or leaked entries")
       // filtered ship: only stream c — skipme frames consume positions
-      val moved = SsEosShip.shipRedisAll(spark0, Seq(path), identity,
-        r.host, r.port, "shipled", onlyStreams = Some(Set("c")))
+      val moved = RelayDriver.all(spark0,
+        FileRelaySource(Seq(path), 64L << 20, onlyStreams = Some(Set("c"))),
+        RedisLedgerDestination(r.host, r.port, "shipled", identity))
       assert(moved == 4L, s"shipped $moved, want 4 (filtered)")
       assert(r.entries(RedisStreams.shardedKey("skipme", 0L, true)).isEmpty,
         "filtered frames must not ship")
@@ -123,8 +127,8 @@ class SsEosShipSpec extends AnyFunSuite {
         s"frame order must survive the ms clamp: $got")
       // the cursor sits at EOF: a re-ship (unfiltered now) ships nothing —
       // skipped positions were consumed, not deferred
-      assert(SsEosShip.shipRedisAll(spark0, Seq(path), identity,
-        r.host, r.port, "shipled") == 0L,
+      assert(RelayDriver.all(spark0, FileRelaySource(Seq(path), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "shipled", identity)) == 0L,
         "consumed positions re-shipped")
     } finally r.close()
   }
@@ -146,8 +150,8 @@ class SsEosShipSpec extends AnyFunSuite {
       // above every frame's ts
       val key = RedisStreams.shardedKey("f", 0L, sharded = true)
       rc.command(RedisStreams.xadd(key, 9999L, "pre".getBytes("UTF-8")): _*)
-      assert(SsEosShip.shipRedisAll(spark, Seq(path), identity,
-        r.host, r.port, "fl") == 4L)
+      assert(RelayDriver.all(spark, FileRelaySource(Seq(path), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "fl", identity)) == 4L)
       val ids = r.entries(key).map(_._1)
       assert(ids.length == 5 && ids.sliding(2).forall {
         case Seq(a, b) => RedisStreams.idCompare(a, b) < 0
@@ -164,8 +168,8 @@ class SsEosShipSpec extends AnyFunSuite {
       w2.close()
       r.failXadds.set(1)
       val thrown = intercept[Exception] {
-        SsEosShip.shipRedisOnce(spark, Seq(path2), identity,
-          r.host, r.port, "fl2")
+        RelayDriver.once(spark, FileRelaySource(Seq(path2), 64L << 20),
+          RedisLedgerDestination(r.host, r.port, "fl2", identity))
       }
       assert(Iterator.iterate(thrown: Throwable)(_.getCause)
         .takeWhile(_ != null).take(8).exists(t =>
@@ -205,8 +209,10 @@ class SsEosShipSpec extends AnyFunSuite {
         inject.command(RedisStreams.xadd("s:0", 9999L,
           "foreign".getBytes("UTF-8")): _*); ()
       }
-      val shipped = SsEosShip.shipRedisOnce(spark, Seq(p1, p2), identity,
-        r.host, r.port, "shrace", raceBeforeExec = Some("ship-race"))
+      val shipped = RelayDriver.once(spark,
+        FileRelaySource(Seq(p1, p2), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "shrace", identity,
+          raceBeforeExec = Some("ship-race")))
       assert(shipped == 16L, s"shipped $shipped frames, want 16 — loss")
       val entries = r.entries("s:0")
       val vals = entries.map(e => new String(e._2.head._2, "UTF-8"))
@@ -220,8 +226,8 @@ class SsEosShipSpec extends AnyFunSuite {
       val ids = entries.map(e => RedisStreams.parseEntryId(e._1))
       assert(ids == ids.sorted, s"non-monotone ids: $ids")
       // both cursors advanced to their file ends — the drain is complete
-      assert(SsEosShip.shipRedisOnce(spark, Seq(p1, p2), identity,
-        r.host, r.port, "shrace") == 0L,
+      assert(RelayDriver.once(spark, FileRelaySource(Seq(p1, p2), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "shrace", identity)) == 0L,
         "drained files must ship zero")
     } finally { inject.close(); r.close() }
   }
@@ -239,8 +245,9 @@ class SsEosShipSpec extends AnyFunSuite {
     val k = new EmbeddedKafka
     try {
       val e = intercept[IllegalArgumentException] {
-        SsEosShip.shipKafkaAll(spark, Seq(s"$d1/part-0.ss", s"$d2/part-0.ss"),
-          identity, k.host, k.port, "gcol", "col")
+        RelayDriver.all(spark, FileRelaySource(
+            Seq(s"$d1/part-0.ss", s"$d2/part-0.ss"), 64L << 20, Some(4)),
+          KafkaTxnDestination(k.host, k.port, "gcol", "col", identity))
       }
       assert(e.getMessage.contains("collide"), e.getMessage)
     } finally k.close()
@@ -263,16 +270,18 @@ class SsEosShipSpec extends AnyFunSuite {
       val torn = new java.io.File(path).length()
       val raf = new java.io.RandomAccessFile(path, "rw")
       try raf.setLength(full + (torn - full) / 2) finally raf.close()
-      assert(SsEosShip.shipKafkaAll(spark0, Seq(path), _ + "_lt",
-        k.host, k.port, "g_lt", "lt") == 15L,
+      assert(RelayDriver.all(spark0,
+        FileRelaySource(Seq(path), 64L << 20, Some(4)),
+        KafkaTxnDestination(k.host, k.port, "g_lt", "lt", _ + "_lt")) == 15L,
         "the torn tail frame must not ship")
       // rewrite the tail frame completely; only it ships
       val w2 = SsWriter.append(path)
       w2.write(SeaMessage("a", 0L, 99L, ts(9999L),
         "tail-complete".getBytes("UTF-8")))
       w2.close()
-      assert(SsEosShip.shipKafkaAll(spark0, Seq(path), _ + "_lt",
-        k.host, k.port, "g_lt", "lt") == 1L,
+      assert(RelayDriver.all(spark0,
+        FileRelaySource(Seq(path), 64L << 20, Some(4)),
+        KafkaTxnDestination(k.host, k.port, "g_lt", "lt", _ + "_lt")) == 1L,
         "completing the tail must unlock exactly the one tail frame")
     } finally { kc.close(); k.close() }
   }
@@ -315,8 +324,9 @@ class SsEosShipSpec extends AnyFunSuite {
     val k = new EmbeddedKafka
     val kc = new KafkaClient(k.host, k.port)
     try {
-      assert(SsEosShip.shipKafkaAll(spark, Seq(path), _ + "_p4",
-        k.host, k.port, "g_map", "map", partitions = 4) == 24L)
+      assert(RelayDriver.all(spark,
+        FileRelaySource(Seq(path), 64L << 20, Some(4)),
+        KafkaTxnDestination(k.host, k.port, "g_map", "map", _ + "_p4")) == 24L)
       (0 until 4).foreach { p =>
         val got = kc.fetchIso("m_p4", p, 0L, readCommitted = true)._3
           .map(r => new String(r.value, "UTF-8"))
@@ -328,8 +338,9 @@ class SsEosShipSpec extends AnyFunSuite {
     val k2 = new EmbeddedKafka(autoCreatePartitions = 2)
     val kc2 = new KafkaClient(k2.host, k2.port)
     try {
-      intercept[Exception](SsEosShip.shipKafkaAll(spark, Seq(path),
-        _ + "_p2", k2.host, k2.port, "g_map2", "map2", partitions = 4))
+      intercept[Exception](RelayDriver.all(spark,
+        FileRelaySource(Seq(path), 64L << 20, Some(4)),
+        KafkaTxnDestination(k2.host, k2.port, "g_map2", "map2", _ + "_p2")))
       assert((0 until 2).forall(p =>
         kc2.fetchIso("m_p2", p, 0L, readCommitted = true)._3.isEmpty),
         "a refused ship must commit no frame")
@@ -342,8 +353,8 @@ class SsEosShipSpec extends AnyFunSuite {
     w2.close()
     val r = new EmbeddedRedis
     try {
-      assert(SsEosShip.shipRedisAll(spark, Seq(big), identity,
-        r.host, r.port, "mapled") == 1L)
+      assert(RelayDriver.all(spark, FileRelaySource(Seq(big), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "mapled", identity)) == 1L)
       assert(r.entries("u:3000000000").map(e =>
         new String(e._2.head._2, "UTF-8")) == Seq("u0"))
     } finally r.close()
@@ -371,10 +382,11 @@ class SsEosShipSpec extends AnyFunSuite {
       graft.ops.Failpoints.armHook("sub-first-exec") { () =>
         graft.ops.Failpoints.arm("sub-crash")
       }
-      intercept[Exception](SsEosShip.shipRedisOnce(spark, Seq(path),
-        identity, r.host, r.port, "subled",
-        crashBeforeCommit = Some("sub-crash"),
-        raceBeforeExec = Some("sub-first-exec")))
+      intercept[Exception](RelayDriver.once(spark,
+        FileRelaySource(Seq(path), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "subled", identity,
+          crashBeforeCommit = Some("sub-crash"),
+          raceBeforeExec = Some("sub-first-exec"))))
       val cursor = r.kvGet("subled:{sub.ss}").map(new String(_, "UTF-8").toLong)
       assert(cursor.exists(c => c > SsFormat.HeaderSize && c < ends.last),
         s"the first sub-epoch must land strictly inside the range: $cursor")
@@ -383,8 +395,9 @@ class SsEosShipSpec extends AnyFunSuite {
       val landed = ends.count(_ <= cursor.get)
       assert(values(r) == (0 until landed),
         s"the destination must hold exactly the first sub-epoch's frames")
-      assert(SsEosShip.shipRedisAll(spark, Seq(path), identity,
-        r.host, r.port, "subled") == 320L - landed)
+      assert(RelayDriver.all(spark, FileRelaySource(Seq(path), 64L << 20),
+        RedisLedgerDestination(r.host, r.port, "subled", identity)) ==
+        320L - landed)
       assert(values(r) == (0 until 320), "the re-run lost or duplicated")
     } finally r.close()
   }
