@@ -7,11 +7,11 @@ import graft.core.{Envelope, SeaStreamErr, StreamUrl, StreamerUri}
 import graft.ops.StdioParser
 
 /** Backend-agnostic facade — the engine's public API layer, mirroring
-  * `sea-streamer-socket`: one `connect(uri)` that dispatches on the URI
-  * scheme at runtime and yields envelope-schema DataFrames
-  * (sea-streamer-socket/src/streamer.rs:21-45; option surface
-  * consumer_options.rs:17-34; validation laws from the per-backend
-  * streamers, e.g. sea-streamer-file/src/streamer.rs:129-189).
+  * `sea-streamer-socket`: one `connect(uri)` that parses the URI scheme
+  * once into a closed [[Backend]] and yields envelope-schema DataFrames
+  * (sea-streamer-socket/src/backend.rs:3, streamer.rs:21-45; option
+  * surface consumer_options.rs:17-34; validation laws from the
+  * per-backend streamers, e.g. sea-streamer-file/src/streamer.rs:129-189).
   */
 object SeaStreamer {
 
@@ -39,83 +39,6 @@ object SeaStreamer {
     }
   }
 
-  /** Kafka's source schema is congruent with the envelope — the consumer
-    * mapping is a pure rename (topic→stream_key, partition→shard_id,
-    * offset→sequence, value→payload), factored out so the law is testable
-    * without a broker (sea-streamer-kafka/src/consumer.rs:591-618).
-    */
-  def kafkaToEnvelope(loaded: DataFrame): DataFrame =
-    loaded.select(
-      col("topic").as("stream_key"),
-      col("partition").cast("long").as("shard_id"),
-      col("offset").as("sequence"),
-      col("timestamp"),
-      col("value").as("payload"))
-
-  /** True when Spark's builtin Kafka connector (spark-sql-kafka-0-10) is on
-    * the classpath. When it is, the facade delegates `kafka://` to it
-    * (broker-side assign pushdown, SASL, the whole connector surface); when
-    * it is not — this zero-egress sandbox, or any cluster without the
-    * connector jars — the facade routes through this library's own wire
-    * client ([[graft.kafka.KafkaClient]], the real public protocol), so
-    * `kafka://` works either way.
-    */
-  lazy val builtinKafkaPresent: Boolean =
-    try {
-      Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider")
-      true
-    } catch { case _: ClassNotFoundException => false }
-
-  /** `Consumer::assign` for kafka: explicit TopicPartitions as the built-in
-    * source's `assign` JSON (`{"topic":[0,2]}`) — pushed to the broker
-    * instead of filtered client-side (sea-streamer-kafka wraps rdkafka's
-    * assign the same way, consumer.rs:425-452).
-    */
-  /** The EXACT option map the builtin-connector branch hands to
-    * `spark.readStream/read.format("kafka")` — pure, so the golden-config
-    * specs can pin it without a live broker (the sandbox can't run one;
-    * KafkaOptionsSpec is the mitigation VERDICT r7 names). `security` is
-    * [[KafkaOptions.securityOptions]] output, passed through verbatim —
-    * the reference's connect-options surface
-    * (sea-streamer-kafka/src/streamer.rs:38-106).
-    */
-  private[facade] def builtinKafkaReadOptions(bootstrap: String,
-      subscribe: String, opts: ConsumerOptions,
-      security: Map[String, String]): Map[String, String] = {
-    // assign (explicit TopicPartitions) and subscribe are mutually
-    // exclusive on the built-in source — assign pushes to the broker
-    val sub: Map[String, String] = opts.assignShards match {
-      case Some(pairs) => Map("assign" -> kafkaAssignJson(pairs))
-      case None => Map("subscribe" -> subscribe)
-    }
-    // seek pushes into Kafka's offsetsForTimes (consumer.rs:295-316
-    // parity); the generic strict-> filter still applies on top
-    val start: Map[String, String] =
-      if (!opts.live) Map.empty
-      else opts.seekTimestamp match {
-        case Some(t) => Map("startingTimestamp" -> t.getTime.toString)
-        case None => Map("startingOffsets" ->
-          (if (opts.autoStreamReset == AutoStreamReset.Earliest) "earliest"
-           else "latest"))
-      }
-    // batchSize maps to the builtin connector's own admission knob
-    val cap: Map[String, String] = opts.batchSize
-      .map(n => Map("maxOffsetsPerTrigger" -> n.toString))
-      .getOrElse(Map.empty)
-    // the group identity passes through as the connector's group id knob
-    // (Resumable/LoadBalanced identity; the connector documents its own
-    // authorization/monitoring caveats for a fixed group id)
-    val grp: Map[String, String] = opts.group
-      .map(g => Map("kafka.group.id" -> g)).getOrElse(Map.empty)
-    Map("kafka.bootstrap.servers" -> bootstrap) ++ sub ++ start ++ cap ++
-      grp ++ security
-  }
-
-  /** Writer twin of [[builtinKafkaReadOptions]]. */
-  private[facade] def builtinKafkaWriteOptions(bootstrap: String,
-      security: Map[String, String]): Map[String, String] =
-    Map("kafka.bootstrap.servers" -> bootstrap) ++ security
-
   /** StreamUrl → the facade's connect string (`scheme://host,host`): the
     * one node/scheme normalization every CLI front-end shares
     * ([[graft.Relay]], the `graft.examples` mains).
@@ -128,21 +51,6 @@ object SeaStreamer {
       .map(_.stripPrefix(proto + "://")).mkString(",")
     s"$proto://$hosts"
   }
-
-  def kafkaAssignJson(pairs: Seq[(String, Long)]): String =
-    pairs.groupBy(_._1).toSeq.sortBy(_._1).map { case (topic, ps) =>
-      s""""$topic":[${ps.map(_._2).sorted.mkString(",")}]"""
-    }.mkString("{", ",", "}")
-
-  /** Producer-side inverse: envelope → kafka sink columns; the sequence
-    * rides as the record key so downstream partitioners and log compaction
-    * see a stable identity (sea-streamer-kafka/src/producer.rs:100-135).
-    */
-  def envelopeToKafka(out: DataFrame): DataFrame =
-    out.select(
-      col("stream_key").as("topic"),
-      col("payload").as("value"),
-      col("sequence").cast("string").cast("binary").as("key"))
 
   sealed trait ConsumerMode
   object ConsumerMode {
@@ -231,148 +139,155 @@ object SeaStreamer {
         */
       batchSize: Option[Long] = None)
 
+  /** The backend a [[Connection]] speaks, parsed once by [[connect]] from
+    * the URI scheme — the reference's closed backend enum
+    * (sea-streamer-socket/src/backend.rs:3). `name` is the scheme as the
+    * typed errors spell it (`rediss` is the redis backend with TLS on).
+    */
+  private[facade] sealed abstract class Backend(val name: String)
+  private[facade] object Backend {
+    /** A `.ss` store directory. */
+    final case class File(path: String) extends Backend("file")
+    /** A line file. `loopback` (StdioConnectOptions, streamer.rs:95-107):
+      * producers on this connection also append their lines to it, so the
+      * connection's consumers see them; default off like the reference.
+      */
+    final case class Stdio(path: String, loopback: Boolean)
+        extends Backend("stdio")
+    /** `security` is the connect-level `kafka.*` map: live reads hand it
+      * to the `kafka-wire` DataSource, and sends read
+      * `kafka.compression.type` from it. `wire` is its parse.
+      */
+    final case class Kafka(host: String, port: Int,
+        security: Map[String, String], wire: graft.kafka.KafkaSecurity.Wire)
+        extends Backend("kafka")
+    /** More than one node is a cluster. */
+    final case class Redis(nodes: Seq[(String, Int)],
+        tls: Option[graft.redis.RedisClient.Tls],
+        auth: Option[graft.redis.RedisClient.Auth]) extends Backend("redis")
+    final case class Iggy(host: String, port: Int, auth: (String, String))
+        extends Backend("iggy")
+  }
+
   /** `security` is the connect-level option surface
-    * ([[KafkaOptions.securityOptions]] output, streamer.rs:38-106): on the
-    * kafka builtin driver it passes through verbatim to every reader and
-    * writer; the wire driver validates it AT CONNECT against what it
-    * actually speaks — all four `security.protocol` modes with
-    * PLAIN/SCRAM-SHA-256/512 credentials or OAUTHBEARER's
-    * unsecured-bearer JAAS ([[graft.kafka.KafkaSecurity]]; GSSAPI has no
-    * inline-JAAS surface and is refused here, exactly as the reference
-    * errors at connect for an unusable security config). `rediss://`
-    * carries its TLS trust material as `redis.ssl.*` keys
-    * ([[graft.redis.RedisSecurity]]); all other backends have no
-    * security surface and refuse a non-empty map rather than silently
-    * dropping it.
+    * ([[KafkaOptions.securityOptions]] output, streamer.rs:38-106). On
+    * `kafka://` it is parsed HERE by [[graft.kafka.KafkaSecurity]] against
+    * what the wire driver speaks — all four `security.protocol` modes
+    * with PLAIN/SCRAM-SHA-256/512 credentials, OAUTHBEARER's
+    * unsecured-bearer JAAS, or GSSAPI from the ambient krb5 environment —
+    * so an unusable config fails at connect, exactly as the reference
+    * errors at connect; the same map then reaches every reader and
+    * writer. `rediss://` carries its TLS trust material as `redis.ssl.*`
+    * keys ([[graft.redis.RedisSecurity]]); the other backends accept only
+    * their own few keys and refuse the rest rather than silently dropping
+    * them. An unknown scheme is refused here too.
     */
   def connect(uri: String, spark: SparkSession,
       security: Map[String, String] = Map.empty): Connection = {
     val streamer = StreamerUri.parse(uri)
-    val rawScheme = streamer.protocol.getOrElse(
+    val scheme = streamer.protocol.getOrElse(
       throw SeaStreamErr.Connect(s"no protocol in '$uri'"))
-    // `rediss` IS the redis backend with the TLS socket layer on
-    // (sea-streamer-redis/src/connection.rs:131-136) — one backend, two
-    // schemes, exactly the reference's dispatch
-    val scheme = if (rawScheme == "rediss") "redis" else rawScheme
-    import graft.redis.RedisSecurity
-    // redis.ssl.* connect keys parse through the ONE shared spelling
-    // (RedisSecurity — also the DataSource's parse side); any malformed
-    // value surfaces as the facade's typed error, never a raw parse
-    // exception
-    val redisTls: Option[graft.redis.RedisClient.Tls] =
-      if (rawScheme != "rediss") None
-      else {
-        val parsed =
-          try RedisSecurity.parse(k =>
-            security.get(RedisSecurity.ConnectPrefix + k))
-          catch { case e: IllegalArgumentException =>
-            throw SeaStreamErr.Unsupported(s"rediss security: ${e.getMessage}")
-          }
-        Some(parsed.getOrElse(throw SeaStreamErr.Unsupported(
-          "rediss requires redis." + RedisSecurity.TruststoreLocation)))
-      }
-    // AUTH credentials — the reference's username/password connect options
-    // (sea-streamer-redis/src/streamer.rs:23-24,140-152), valid on BOTH
-    // redis:// and rediss:// (credentials and encryption are orthogonal)
-    val redisAuth: Option[graft.redis.RedisClient.Auth] =
-      if (scheme != "redis") None
-      else
-        try RedisSecurity.parseAuth(k =>
-          security.get(RedisSecurity.ConnectPrefix + k))
-        catch { case e: IllegalArgumentException =>
-          throw SeaStreamErr.Unsupported(s"redis security: ${e.getMessage}")
-        }
-    // iggy LoginUser credentials — the reference's connection-string
-    // user:pass (sea-streamer-iggy/src/streamer.rs:51); default is the
-    // server's bootstrap root user iggy/iggy
-    val iggyAuth: (String, String) =
-      if (scheme != "iggy") ("iggy", "iggy")
-      else (security.getOrElse("iggy.username", "iggy"),
-        security.getOrElse("iggy.password", "iggy"))
-    if (security.nonEmpty) {
-      if (scheme == "iggy") {
-        val stray = security.keySet -- Set("iggy.username", "iggy.password")
-        if (stray.nonEmpty)
-          throw SeaStreamErr.Unsupported(
-            s"iggy supports only the credential options " +
-              "(iggy.username/iggy.password), got: " +
-              stray.toSeq.sorted.mkString(", "))
-      } else if (scheme == "redis") {
-        val allowed =
-          if (rawScheme == "rediss") RedisSecurity.ConnectKeys
-          else Set(RedisSecurity.ConnectPrefix + RedisSecurity.Username,
-            RedisSecurity.ConnectPrefix + RedisSecurity.Password)
-        val stray = security.keySet -- allowed
-        if (stray.nonEmpty)
-          throw SeaStreamErr.Unsupported(
-            (if (rawScheme == "rediss")
-              s"rediss supports only the redis.ssl.*/credential options"
-            else s"redis supports only the credential options " +
-              "(redis.username/redis.password; TLS needs rediss://)") +
-              s", got: " + stray.toSeq.sorted.mkString(", "))
-      } else if (scheme == "stdio") {
-        // the one stdio connect option: loopback (StdioConnectOptions,
-        // sea-streamer-stdio/src/streamer.rs:14,95-107) — a producer's
-        // sends become visible to this connection's own consumers
-        val stray = security.keySet - "stdio.loopback"
-        if (stray.nonEmpty)
-          throw SeaStreamErr.Unsupported(
-            "stdio supports only the stdio.loopback connect option, got: " +
-              stray.toSeq.sorted.mkString(", "))
-        security.get("stdio.loopback").foreach { v =>
-          if (v != "true" && v != "false")
-            throw SeaStreamErr.Unsupported(
-              s"stdio.loopback must be true or false, got: $v")
-        }
-      } else if (scheme != "kafka")
-        throw SeaStreamErr.Unsupported(
-          s"security options on the '$scheme' backend")
-      else if (!builtinKafkaPresent) {
-        // the wire driver: parse NOW so an unusable config (GSSAPI, a
-        // missing truststore key, protocol/credential mismatch) fails at
-        // connect, not at first read
-        try graft.kafka.KafkaSecurity.parse(security)
-        catch { case e: IllegalArgumentException =>
-          throw SeaStreamErr.Unsupported(
-            s"kafka wire driver security: ${e.getMessage}")
-        }
-      }
-    }
-    new Connection(spark, scheme, streamer, security, redisTls, redisAuth,
-      iggyAuth)
-  }
-
-  final class Connection(
-      spark: SparkSession, scheme: String, streamer: StreamerUri,
-      security: Map[String, String] = Map.empty,
-      redisTls: Option[graft.redis.RedisClient.Tls] = None,
-      redisAuth: Option[graft.redis.RedisClient.Auth] = None,
-      iggyAuth: (String, String) = ("iggy", "iggy")) {
-
-    /** The rediss options for the `redis-stream` DataSource (live path) —
-      * emitted by the same [[graft.redis.RedisSecurity]] spelling the
-      * DataSource parses.
-      */
-    private def redisTlsOptions: Map[String, String] =
-      redisTls.map(graft.redis.RedisSecurity.options).getOrElse(Map.empty) ++
-        redisAuth.map(graft.redis.RedisSecurity.authOptions)
-          .getOrElse(Map.empty)
-
-    private def stripScheme(n: String): String = {
+    val nodes = streamer.nodes.map { n =>
       val i = n.indexOf("://")
       if (i >= 0) n.substring(i + 3) else n
     }
+    def only(allowed: Set[String], what: String): Unit = {
+      val stray = security.keySet -- allowed
+      if (stray.nonEmpty)
+        throw SeaStreamErr.Unsupported(
+          s"$what, got: " + stray.toSeq.sorted.mkString(", "))
+    }
+    val backend: Backend = scheme match {
+      case "file" =>
+        if (security.nonEmpty)
+          throw SeaStreamErr.Unsupported(
+            s"security options on the '$scheme' backend")
+        Backend.File(nodes.head)
+      case "stdio" =>
+        // the one stdio connect option: loopback (StdioConnectOptions,
+        // sea-streamer-stdio/src/streamer.rs:14,95-107) — a producer's
+        // sends become visible to this connection's own consumers
+        only(Set("stdio.loopback"),
+          "stdio supports only the stdio.loopback connect option")
+        Backend.Stdio(nodes.head, security.get("stdio.loopback") match {
+          case None | Some("false") => false
+          case Some("true") => true
+          case Some(v) => throw SeaStreamErr.Unsupported(
+            s"stdio.loopback must be true or false, got: $v")
+        })
+      case "kafka" =>
+        // an unusable config (a missing truststore key, protocol/credential
+        // mismatch) fails at connect, not at first read
+        val wire =
+          try graft.kafka.KafkaSecurity.parse(security)
+          catch { case e: IllegalArgumentException =>
+            throw SeaStreamErr.Unsupported(
+              s"kafka wire driver security: ${e.getMessage}")
+          }
+        val (host, port) = hostPort(nodes.head, 9092)
+        Backend.Kafka(host, port, security, wire)
+      case "redis" | "rediss" =>
+        // `rediss` IS the redis backend with the TLS socket layer on
+        // (sea-streamer-redis/src/connection.rs:131-136) — one backend, two
+        // schemes, exactly the reference's dispatch. redis.ssl.* connect
+        // keys parse through the ONE shared spelling (RedisSecurity — also
+        // the DataSource's parse side); any malformed value surfaces as
+        // the facade's typed error, never a raw parse exception
+        import graft.redis.RedisSecurity
+        val get = (k: String) => security.get(RedisSecurity.ConnectPrefix + k)
+        val tls =
+          if (scheme == "redis") None
+          else {
+            val parsed =
+              try RedisSecurity.parse(get)
+              catch { case e: IllegalArgumentException =>
+                throw SeaStreamErr.Unsupported(
+                  s"rediss security: ${e.getMessage}")
+              }
+            Some(parsed.getOrElse(throw SeaStreamErr.Unsupported(
+              "rediss requires redis." + RedisSecurity.TruststoreLocation)))
+          }
+        // AUTH credentials — the reference's username/password connect
+        // options (sea-streamer-redis/src/streamer.rs:23-24,140-152),
+        // valid on BOTH schemes (credentials and encryption are orthogonal)
+        val auth =
+          try RedisSecurity.parseAuth(get)
+          catch { case e: IllegalArgumentException =>
+            throw SeaStreamErr.Unsupported(s"redis security: ${e.getMessage}")
+          }
+        if (tls.isDefined)
+          only(RedisSecurity.ConnectKeys,
+            "rediss supports only the redis.ssl.*/credential options")
+        else
+          only(Set(RedisSecurity.ConnectPrefix + RedisSecurity.Username,
+            RedisSecurity.ConnectPrefix + RedisSecurity.Password),
+            "redis supports only the credential options " +
+              "(redis.username/redis.password; TLS needs rediss://)")
+        Backend.Redis(nodes.map(hostPort(_, 6379)), tls, auth)
+      case "iggy" =>
+        // LoginUser credentials — the reference's connection-string
+        // user:pass (sea-streamer-iggy/src/streamer.rs:51); default is the
+        // server's bootstrap root user iggy/iggy
+        only(Set("iggy.username", "iggy.password"),
+          "iggy supports only the credential options " +
+            "(iggy.username/iggy.password)")
+        val (host, port) = hostPort(nodes.head, 8090)
+        Backend.Iggy(host, port,
+          (security.getOrElse("iggy.username", "iggy"),
+            security.getOrElse("iggy.password", "iggy")))
+      case other => throw SeaStreamErr.Unsupported(s"backend '$other'")
+    }
+    new Connection(spark, backend, nodes)
+  }
 
-    private def nodeAddr: String = stripScheme(streamer.nodes.head)
-
-    /** Every node in the URI — a multi-node `redis://h1:p1,h2:p2` URI means
-      * a CLUSTER, exactly the reference's `StreamerUri` semantics
-      * (sea-streamer-types/src/streamer.rs:10-39).
-      */
-    private def allNodeAddrs: Seq[String] = streamer.nodes.map(stripScheme)
-
-    private def redisSeeds: Seq[(String, Int)] =
-      allNodeAddrs.map(SeaStreamer.hostPort(_, 6379))
+  /** A connected backend. `nodes` are the URI's node addresses without
+    * the scheme — several name a cluster, exactly the reference's
+    * `StreamerUri` semantics (sea-streamer-types/src/streamer.rs:10-39).
+    */
+  final class Connection private[facade] (
+      private[facade] val spark: SparkSession,
+      private[facade] val backend: Backend,
+      private[facade] val nodes: Seq[String]) {
 
     /** Validation laws shared with the reference backends. */
     private def validate(streams: Seq[String], opts: ConsumerOptions): Unit = {
@@ -391,9 +306,11 @@ object SeaStreamer {
           if (opts.group.isDefined) throw SeaStreamErr.ConsumerGroupIsSet
         case ConsumerMode.LoadBalanced =>
           if (opts.group.isEmpty) throw SeaStreamErr.ConsumerGroupNotSet
-        case ConsumerMode.Resumable =>
-          if (scheme == "file") // file backend does not support Resumable
+        case ConsumerMode.Resumable => backend match {
+          case _: Backend.File => // file backend does not support Resumable
             throw SeaStreamErr.Unsupported("Resumable mode on file backend")
+          case _ => ()
+        }
       }
       opts.batchSize.foreach { n =>
         if (n <= 0)
@@ -402,10 +319,13 @@ object SeaStreamer {
           throw SeaStreamErr.Unsupported(
             "batchSize on a bounded Replay read (admission caps are live " +
               "flow control)")
-        if (scheme == "stdio")
-          throw SeaStreamErr.Unsupported(
-            "batchSize on the stdio backend (the line tail has no " +
-              "admission surface)")
+        backend match {
+          case _: Backend.Stdio =>
+            throw SeaStreamErr.Unsupported(
+              "batchSize on the stdio backend (the line tail has no " +
+                "admission surface)")
+          case _ => ()
+        }
       }
     }
 
@@ -424,8 +344,14 @@ object SeaStreamer {
       // residual filter is needed there; Kafka pushes startingTimestamp but
       // offsetsForTimes is >=-semantics, so the strict-> filter stays on
       // top; the ss source takes the surveyor path plus the same residual
-      // filter.
-      val seekPushed = scheme == "redis" || scheme == "iggy"
+      // filter. assign: redis reads exactly the assigned keys and the
+      // kafka/iggy wire drivers prune their fetch planners; the remaining
+      // backends express the pin as the equivalent (stream, shard) filter.
+      val (seekPushed, assignPushed) = backend match {
+        case _: Backend.Redis | _: Backend.Iggy => (true, true)
+        case _: Backend.Kafka => (false, true)
+        case _: Backend.File | _: Backend.Stdio => (false, false)
+      }
       val sought = opts.seekTimestamp
         .filterNot(_ => seekPushed)
         .map(t => loaded.filter(col("timestamp") > lit(t)))
@@ -433,13 +359,8 @@ object SeaStreamer {
       val rewound = opts.rewindSeqNo
         .map(n => sought.filter(col("sequence") >= n))
         .getOrElse(sought)
-      // assign: redis reads exactly the assigned keys, the builtin kafka
-      // connector pushes the TopicPartition list to the broker, and the
-      // kafka/iggy wire drivers prune their fetch planners; the remaining
-      // backends express the pin as the equivalent (stream, shard) filter
       opts.assignShards
-        .filterNot(_ => scheme == "redis" || scheme == "kafka" ||
-          scheme == "iggy")
+        .filterNot(_ => assignPushed)
         .map(pairs => rewound.filter(
           pairs.map(p => col("stream_key") === p._1 &&
             col("shard_id") === p._2).reduce(_ || _)))
@@ -465,29 +386,26 @@ object SeaStreamer {
         members: Int,
         opts: ConsumerOptions = ConsumerOptions(
           mode = ConsumerMode.LoadBalanced)): Seq[DataFrame] = {
-      if (scheme == "redis" && opts.live) {
+      val member = opts.copy(mode = ConsumerMode.LoadBalanced,
+        group = Some(group))
+      def dispatch(by: String): Seq[DataFrame] = {
+        val base = createConsumer(streams, member)
         (0 until members).map { i =>
-          createConsumer(streams, opts.copy(
-            mode = ConsumerMode.LoadBalanced,
-            group = Some(group),
-            consumerId = Some(opts.consumerId.getOrElse("member") + s"-$i")))
+          base.filter(pmod(col(by), lit(members.toLong)) === i.toLong)
         }
-      } else if (scheme == "iggy") {
+      }
+      backend match {
+        case _: Backend.Redis if opts.live =>
+          (0 until members).map { i =>
+            createConsumer(streams, member.copy(
+              consumerId = Some(opts.consumerId.getOrElse("member") + s"-$i")))
+          }
         // iggy balances GROUPS at partition granularity (member idx owns
         // partition p where p % members == idx — the deterministic
         // assignment JoinConsumerGroup hands out), so the member split is
         // on shard_id, not sequence
-        val base = createConsumer(streams,
-          opts.copy(mode = ConsumerMode.LoadBalanced, group = Some(group)))
-        (0 until members).map { i =>
-          base.filter(pmod(col("shard_id"), lit(members.toLong)) === i.toLong)
-        }
-      } else {
-        val base = createConsumer(streams,
-          opts.copy(mode = ConsumerMode.LoadBalanced, group = Some(group)))
-        (0 until members).map { i =>
-          base.filter(pmod(col("sequence"), lit(members.toLong)) === i.toLong)
-        }
+        case _: Backend.Iggy => dispatch("shard_id")
+        case _ => dispatch("sequence")
       }
     }
 
@@ -498,39 +416,28 @@ object SeaStreamer {
       // live-only above); each backend names the cap differently
       def cap(knob: String): Map[String, String] =
         opts.batchSize.map(n => Map(knob -> n.toString)).getOrElse(Map.empty)
-      scheme match {
-        case "file" =>
-          val reset =
-            if (opts.autoStreamReset == AutoStreamReset.Earliest) "earliest"
-            else "latest"
+      val reset =
+        if (opts.autoStreamReset == AutoStreamReset.Earliest) "earliest"
+        else "latest"
+      // assign pushes into the kafka/iggy wire planners (shard_id =
+      // partition): unassigned partitions are never listed, fetched or
+      // checkpointed — the pin prunes the scan, not the result
+      val assignOpt = opts.assignShards
+        .map(_.map(p => s"${p._1}:${p._2}").mkString(","))
+      backend match {
+        case Backend.File(path) =>
           if (opts.live)
             spark.readStream.format("ss")
               .option("subscribe", subscribe)
               .option("startingOffsets", reset)
               .options(cap("maxMessagesPerTrigger"))
-              .load(nodeAddr)
+              .load(path)
           else
-            spark.read.format("ss").option("subscribe", subscribe).load(nodeAddr)
-        case "kafka" if SeaStreamer.builtinKafkaPresent =>
-          // the exact option map is assembled by the pure builder so the
-          // golden-config specs pin it byte-for-byte (no live broker in
-          // the sandbox)
-          val o = SeaStreamer.builtinKafkaReadOptions(
-            nodeAddr, subscribe, opts, security)
-          val loaded =
-            if (opts.live) spark.readStream.format("kafka").options(o).load()
-            else spark.read.format("kafka").options(o).load()
-          SeaStreamer.kafkaToEnvelope(loaded)
-        case "kafka" => // connector jars absent: this library's wire client
+            spark.read.format("ss").option("subscribe", subscribe).load(path)
+        case Backend.Kafka(host, port, security, sec) =>
           if (streams.contains(Envelope.SeaStreamerWildcard))
             throw SeaStreamErr.Unsupported(
               "kafka wildcard subscribe on the wire driver (name the topics)")
-          val (host, port) = SeaStreamer.hostPort(nodeAddr, 9092)
-          // assign pushes into the wire planner (shard_id = partition):
-          // unassigned partitions are never listed, fetched or
-          // checkpointed — the pin prunes the scan, not the result
-          val assignOpt = opts.assignShards
-            .map(_.map(p => s"${p._1}:${p._2}").mkString(","))
           if (opts.live) {
             // the kafka-wire DataSource parses the same security strings
             // (KafkaSecurity) — pass the connect-level map through
@@ -550,24 +457,21 @@ object SeaStreamer {
             // the generic strict-> residual filter still applies on top
             opts.seekTimestamp
               .map(t => withGroup.option("startingTimestamp", t.getTime.toString))
-              .getOrElse(withGroup.option("startingOffsets",
-                if (opts.autoStreamReset == AutoStreamReset.Earliest)
-                  "earliest" else "latest"))
+              .getOrElse(withGroup.option("startingOffsets", reset))
               .load()
-          } else {
-            val sec = graft.kafka.KafkaSecurity.parse(security)
+          } else
             graft.kafka.KafkaSource.boundedRead(spark, host, port, streams,
               afterMs = opts.seekTimestamp.map(_.getTime),
               fromOffset = opts.rewindSeqNo,
               assign = opts.assignShards,
               sasl = sec.sasl, saslMechanism = sec.saslMechanism,
               tls = sec.tls)
-          }
-        case "redis" =>
+        case Backend.Redis(seeds, tls, auth) =>
           if (streams.contains(Envelope.SeaStreamerWildcard))
             throw SeaStreamErr.Unsupported(
               "redis wildcard subscribe (name the streams; keys are scanned per stream)")
-          val (host, port) = SeaStreamer.hostPort(nodeAddr, 6379)
+          val (host, port) = seeds.head
+          val cluster = seeds.size > 1
           val sharded = opts.redisShards > 1
           // seek (`timestamp > t`) pushes exactly; rewind (`sequence >= n`)
           // pushes its ms FLOOR as a prefix prune (packed seq = (ms<<16)|sub,
@@ -580,12 +484,14 @@ object SeaStreamer {
           if (opts.live) {
             // live micro-batch consumer over the XRANGE offset model
             // (graft.redis.spark.RedisDataSource — validated against an
-            // in-process RESP server; real-broker group delivery untested)
-            val reset =
-              if (opts.autoStreamReset == AutoStreamReset.Earliest) "earliest"
-              else "latest"
+            // in-process RESP server; real-broker group delivery untested);
+            // the rediss/AUTH options are emitted by the same
+            // RedisSecurity spelling the DataSource parses
             val base = spark.readStream.format("redis-stream")
-              .options(redisTlsOptions)
+              .options(tls.map(graft.redis.RedisSecurity.options)
+                .getOrElse(Map.empty))
+              .options(auth.map(graft.redis.RedisSecurity.authOptions)
+                .getOrElse(Map.empty))
               .option("host", host).option("port", port.toString)
               .option("streams", subscribe)
               .option("shards", opts.redisShards.toString)
@@ -598,9 +504,9 @@ object SeaStreamer {
             // multi-node URI = cluster: bootstrap the slot map and route
             // each shard key's partition to its owner node
             val withCluster =
-              if (streamer.nodes.size > 1)
+              if (cluster)
                 base.option("cluster", "true")
-                  .option("nodes", allNodeAddrs.mkString(","))
+                  .option("nodes", nodes.mkString(","))
               else base
             val withGroup = opts.group
               .map(g => withCluster.option("group", g)).getOrElse(withCluster)
@@ -611,14 +517,12 @@ object SeaStreamer {
               .getOrElse(withGroup.option("startingOffsets", reset))
               .load()
           } else {
-            val seeds =
-              if (streamer.nodes.size > 1) Some(redisSeeds) else None
+            val clusterSeeds = if (cluster) Some(seeds) else None
             if (opts.discoverShards && opts.assignShards.isEmpty) {
               // SCAN every master for the streams' shard keys (the slot map
               // usually knows more nodes than the seed list), then read them
-              val sweepNodes = seeds.map { ss =>
-                val cc = new graft.redis.RedisClusterClient(ss, redisTls,
-                  redisAuth)
+              val sweepNodes = clusterSeeds.map { ss =>
+                val cc = new graft.redis.RedisClusterClient(ss, tls, auth)
                 try {
                   val m = try Some(cc.bootstrapSlots())
                           catch { case scala.util.control.NonFatal(_) => None }
@@ -629,15 +533,15 @@ object SeaStreamer {
                 .flatMap { case (h, p) =>
                   graft.redis.RedisClient.retrying() {
                     val c = new graft.redis.RedisClient(h, p,
-                      tls = redisTls, auth = redisAuth)
+                      tls = tls, auth = auth)
                     try streams.flatMap(st =>
                       graft.redis.RedisStreams.discoverShardKeys(c, st))
                     finally c.close()
                   }
                 }.distinct.sortBy(_._1)
               graft.redis.RedisSource.boundedReadKeys(spark, host, port,
-                found, afterMs = pushMs, clusterSeeds = seeds,
-                tls = redisTls, auth = redisAuth)
+                found, afterMs = pushMs, clusterSeeds = clusterSeeds,
+                tls = tls, auth = auth)
             } else
               graft.redis.RedisSource.boundedRead(spark, host, port,
                 opts.assignShards.getOrElse(
@@ -645,10 +549,10 @@ object SeaStreamer {
                     .map(sh => (st, sh)))),
                 sharded = sharded,
                 afterMs = pushMs,
-                clusterSeeds = seeds,
-                tls = redisTls, auth = redisAuth)
+                clusterSeeds = clusterSeeds,
+                tls = tls, auth = auth)
           }
-        case "iggy" =>
+        case Backend.Iggy(host, port, auth) =>
           // stream keys are iggy TOPICS inside the namespace stream; the
           // reference adapter's seek/rewind/assign are Unsupported
           // (sea-streamer-iggy/src/consumer.rs:65-90) — this re-expression
@@ -657,20 +561,12 @@ object SeaStreamer {
           if (streams.contains(Envelope.SeaStreamerWildcard))
             throw SeaStreamErr.Unsupported(
               "iggy wildcard subscribe (name the topics)")
-          val (host, port) = SeaStreamer.hostPort(nodeAddr, 8090)
           val pushMs = opts.seekTimestamp.map(_.getTime)
-          // assign pushes into the planner (shard = iggy partition):
-          // unassigned partitions are never tip-listed or polled
-          val assignOpt = opts.assignShards
-            .map(_.map(p => s"${p._1}:${p._2}").mkString(","))
           if (opts.live) {
-            val reset =
-              if (opts.autoStreamReset == AutoStreamReset.Earliest) "earliest"
-              else "latest"
             val base0 = spark.readStream.format("iggy-stream")
               .option("host", host).option("port", port.toString)
-              .option("username", iggyAuth._1)
-              .option("password", iggyAuth._2)
+              .option("username", auth._1)
+              .option("password", auth._2)
               .option("stream", opts.iggyStream)
               .option("topics", subscribe)
               .options(cap("maxMessagesPerTrigger"))
@@ -698,30 +594,24 @@ object SeaStreamer {
               // pruned scan)
               fromOffset = opts.rewindSeqNo,
               assign = opts.assignShards,
-              auth = iggyAuth)
-        case "stdio" =>
+              auth = auth)
+        case Backend.Stdio(path, _) =>
           // distributed stdin does not exist: the node address is a line
           // FILE — Replay reads it bounded, Live TAILS it (the reference's
           // dedicated stdin thread, streamer.rs:66-79, re-expressed as the
           // stdio-lines micro-batch source whose offsets are byte positions
           // at line boundaries). Keyless lines are the `broadcast` stream
           // (lib.rs:60) and reach every subscriber (consumer_group.rs:81).
-          if (opts.live)
-            spark.readStream.format("stdio-lines")
-              .option("startingOffsets",
-                if (opts.autoStreamReset == AutoStreamReset.Earliest)
-                  "earliest" else "latest")
-              .option("lineBase", opts.stdioLineBase.toString)
-              .option("path", nodeAddr).load()
-              .where(col("stream_key") === "broadcast" ||
-                col("stream_key").isin(streams: _*) ||
-                lit(streams.contains(Envelope.SeaStreamerWildcard)))
-          else StdioParser.toEnvelope(spark.read.text(nodeAddr))
-            .where(col("stream_key") === "broadcast" ||
-              col("stream_key").isin(streams: _*) ||
-              lit(streams.contains(Envelope.SeaStreamerWildcard)))
-        case other =>
-          throw SeaStreamErr.Unsupported(s"backend '$other'")
+          val lines =
+            if (opts.live)
+              spark.readStream.format("stdio-lines")
+                .option("startingOffsets", reset)
+                .option("lineBase", opts.stdioLineBase.toString)
+                .option("path", path).load()
+            else StdioParser.toEnvelope(spark.read.text(path))
+          lines.where(col("stream_key") === "broadcast" ||
+            col("stream_key").isin(streams: _*) ||
+            lit(streams.contains(Envelope.SeaStreamerWildcard)))
       }
     }
 
@@ -758,23 +648,12 @@ object SeaStreamer {
       * scratch; a typed refusal beats that).
       */
     def commitConsumed(group: String, endOffsetJson: Option[String]): Unit =
-      scheme match {
-        case "kafka" =>
-          // the builtin connector's offset JSON is a different shape AND
-          // its resume model is checkpoint-based (kafka.group.id is
-          // identity only, committed offsets never anchor a start) — a
-          // commit here would parse-crash or silently not resume; refuse
-          if (SeaStreamer.builtinKafkaPresent)
-            throw SeaStreamErr.Unsupported(
-              "commitConsumed with the builtin kafka connector (its " +
-                "resume is checkpoint-based; group offsets don't anchor " +
-                "starts there) — use the wire driver or a checkpoint")
+      backend match {
+        case Backend.Kafka(host, port, _, sec) =>
           val offs = endOffsetJson
             .map(graft.core.DenseOffset.fromJson(_).offs)
             .getOrElse(Map.empty)
           if (offs.nonEmpty) {
-            val (host, port) = SeaStreamer.hostPort(nodeAddr, 9092)
-            val sec = graft.kafka.KafkaSecurity.parse(security)
             val c = new graft.kafka.KafkaClient(host, port,
               sasl = sec.sasl, saslMechanism = sec.saslMechanism,
               tls = sec.tls)
@@ -783,7 +662,7 @@ object SeaStreamer {
               c.commitOffsets(group, offs)
             } finally c.close()
           }
-        case "redis" =>
+        case Backend.Redis(seeds, tls, auth) =>
           import graft.redis.{RedisStreams, Resp}
           // the offset map's keys ARE the (sharded) stream keys the query
           // consumed; each value is the highest id that batch emitted
@@ -791,9 +670,9 @@ object SeaStreamer {
             .map(graft.redis.spark.RedisOffset.fromJson(_).ids)
             .getOrElse(Map.empty)
           if (ids.nonEmpty) {
-            val (host, port) = SeaStreamer.hostPort(nodeAddr, 6379)
+            val (host, port) = seeds.head
             val c = new graft.redis.RedisClient(host, port,
-              tls = redisTls, auth = redisAuth)
+              tls = tls, auth = auth)
             try ids.toSeq.sortBy(_._1).foreach { case (k, endId) =>
               if (endId != "0-0") {
                 // summary XPENDING gives the pending window; XRANGE over
@@ -831,31 +710,25 @@ object SeaStreamer {
               }
             } finally c.close()
           }
-        case other => throw SeaStreamErr.Unsupported(
-          s"commitConsumed on backend '$other' (no group offset store " +
-            "— the reference's resumable loop has no commit branch for it)")
+        case other @ (_: Backend.File | _: Backend.Stdio | _: Backend.Iggy) =>
+          throw SeaStreamErr.Unsupported(
+            s"commitConsumed on backend '${other.name}' (no group offset " +
+              "store — the reference's resumable loop has no commit " +
+              "branch for it)")
       }
+
+    private def validateLoopbackNode(): Unit = backend match {
+      case Backend.Stdio(path, true) if path == "-" || path == "." =>
+        throw SeaStreamErr.Unsupported(
+          "stdio.loopback needs a line-file node (stdio://<path>) — " +
+            s"'$path' has no file for consumers to read back")
+      case _ => ()
+    }
 
     /** Anchored producer: writes an envelope DataFrame to one stream.
       * `redisShards` must match the consumers' (keys are `stream:N` when
       * sharded, the bare stream when not).
       */
-    /** The stdio loopback connect option (streamer.rs:95-107): producers
-      * on this connection also dispatch to the connection's consumers —
-      * here, by appending their lines to the node's line file (the
-      * process-local bus the stdio consumers read). Default OFF like the
-      * reference ("these are not looped back", tests/loopback.rs:22-25).
-      */
-    private def stdioLoopback: Boolean =
-      security.get("stdio.loopback").contains("true")
-
-    private def validateLoopbackNode(): Unit =
-      if (scheme == "stdio" && stdioLoopback &&
-          (nodeAddr == "-" || nodeAddr == "."))
-        throw SeaStreamErr.Unsupported(
-          "stdio.loopback needs a line-file node (stdio://<path>) — " +
-            s"'$nodeAddr' has no file for consumers to read back")
-
     def createProducer(stream: String, redisShards: Int = 1,
         iggyPartitions: Int = 4,
         iggyStream: String = graft.iggy.IggySource.DefaultStream,
@@ -864,9 +737,8 @@ object SeaStreamer {
         throw SeaStreamErr.InvalidStreamKey(stream)
       validIggyStream(iggyStream)
       validateLoopbackNode()
-      new Producer(spark, scheme, allNodeAddrs, Some(stream), redisShards,
-        iggyPartitions, iggyStream, security, redisTls, redisAuth, iggyAuth,
-        stdioLoopback, redisClampToTip)
+      new Producer(backend, Some(stream), redisShards, iggyPartitions,
+        iggyStream, redisClampToTip)
     }
 
     /** Generic producer: stream key comes from each row. */
@@ -876,9 +748,8 @@ object SeaStreamer {
         redisClampToTip: Boolean = false): Producer = {
       validIggyStream(iggyStream)
       validateLoopbackNode()
-      new Producer(spark, scheme, allNodeAddrs, None, redisShards,
-        iggyPartitions, iggyStream, security, redisTls, redisAuth, iggyAuth,
-        stdioLoopback, redisClampToTip)
+      new Producer(backend, None, redisShards, iggyPartitions, iggyStream,
+        redisClampToTip)
     }
 
     /** The iggy namespace stream follows the same key grammar as stream
@@ -889,24 +760,12 @@ object SeaStreamer {
     private def validIggyStream(name: String): Unit =
       if (!Envelope.isValidStreamKey(name) || name.isEmpty)
         throw SeaStreamErr.InvalidStreamKey(name)
-
-    // relay-dispatch accessors (read by SeaStreamer.relayExactlyOnce)
-    private[facade] def relayScheme: String = scheme
-    private[facade] def relaySpark: SparkSession = spark
-    private[facade] def relayNodes: Seq[String] = allNodeAddrs
-    private[facade] def relayKafkaSecurity: graft.kafka.KafkaSecurity.Wire =
-      graft.kafka.KafkaSecurity.parse(security)
-    private[facade] def relayRedisTls: Option[graft.redis.RedisClient.Tls] =
-      redisTls
-    private[facade] def relayRedisAuth: Option[graft.redis.RedisClient.Auth] =
-      redisAuth
-    private[facade] def relayIggyAuth: (String, String) = iggyAuth
   }
 
   /** Exactly-once relay between two connected backends — ONE surface over
     * the relay matrix: four sources (kafka, redis, iggy, a `.ss` file
     * directory) × two destinations (a kafka transaction, a redis
-    * WATCH/MULTI ledger). The scheme pair builds a
+    * WATCH/MULTI ledger). The backend pair builds a
     * [[graft.eos.RelaySource]] and a [[graft.eos.RelayDestination]], and
     * [[graft.eos.RelayDriver]] drains the one into the other — a `.ss`
     * directory too ([[graft.eos.FileRelaySource]]: one byte cursor per
@@ -948,110 +807,97 @@ object SeaStreamer {
         * `floorMod(shard_id, filePartitions)` — KafkaEosSink's rule;
         * broker sources carry their partition 1:1 instead). */
       filePartitions: Int = 4): Long = {
-    val (ss, ds) = checkRelayEnds("relayExactlyOnce", source, destination,
-      streams, redisShards)
-    if (ss == "file" && partFiles(source).isEmpty)
-      throw SeaStreamErr.Connect(
-        s"no .ss part files under ${source.relayNodes.head}")
-    graft.eos.RelayDriver.all(source.relaySpark,
-      relaySource(source, streams, redisShards, cap, fileCapBytes,
-        if (ds == "kafka") Some(filePartitions) else None),
-      relayDestination(destination, anchor, rename))
+    val (src, dst) = relayEnds("relayExactlyOnce", source, destination,
+      streams, redisShards, anchor, rename, cap, fileCapBytes,
+      Some(filePartitions))
+    src match {
+      case f: graft.eos.FileRelaySource if f.paths.isEmpty =>
+        throw SeaStreamErr.Connect(
+          s"no .ss part files under ${source.nodes.head}")
+      case _ => ()
+    }
+    graft.eos.RelayDriver.all(source.spark, src, dst)
   }
 
-  private def defaultPort(scheme: String): Int = scheme match {
-    case "kafka" => 9092
-    case "iggy" => 8090
-    case _ => 6379
-  }
-
-  /** The checks [[relayExactlyOnce]] and [[relayLag]] share: stream-key
-    * grammar, the matrix's schemes, single-node endpoints and the
-    * file-only `*` wildcard. Returns the (source, destination) schemes. */
-  private def checkRelayEnds(what: String, source: Connection,
-      destination: Connection, streams: Seq[String],
-      redisShards: Int): (String, String) = {
+  /** The checked source and destination of a relay, shared by
+    * [[relayExactlyOnce]] and [[relayLag]]: stream-key grammar, the
+    * matrix's backends, single-node endpoints and the file-only `*`
+    * wildcard. The caps bound each epoch (the defaults leave a file's tip
+    * unbounded — the lag view), and `filePartitions` folds file shards
+    * into a kafka destination's partitions (None keeps them whole, as
+    * redis keys do).
+    */
+  private def relayEnds(what: String, source: Connection,
+      destination: Connection, streams: Seq[String], redisShards: Int,
+      anchor: String, rename: String => String, cap: Long = 100000L,
+      fileCapBytes: Long = Long.MaxValue,
+      filePartitions: Option[Int] = None)
+      : (graft.eos.RelaySource, graft.eos.RelayDestination) = {
     if (streams.isEmpty) throw SeaStreamErr.StreamKeyEmpty
     streams.foreach { s =>
       if (s != "*" && !Envelope.isValidStreamKey(s))
         throw SeaStreamErr.InvalidStreamKey(s)
     }
     require(redisShards > 0, "redisShards must be positive")
-    val (ss, ds) = (source.relayScheme, destination.relayScheme)
-    if (ss != "kafka" && ss != "redis" && ss != "file" && ss != "iggy")
-      throw SeaStreamErr.Unsupported(
-        s"$what source on the '$ss' backend — no anchored cursor space " +
-          "to resume from")
-    if (ds != "kafka" && ds != "redis")
-      throw SeaStreamErr.Unsupported(
-        s"$what destination on the '$ds' backend — no transactional or " +
-          "compare-and-set primitive to anchor the resume point on")
+    val src: graft.eos.RelaySource = source.backend match {
+      case Backend.Kafka(host, port, _, sec) =>
+        graft.eos.KafkaRelaySource(host, port, streams, cap,
+          sasl = sec.sasl, saslMechanism = sec.saslMechanism, tls = sec.tls)
+      case Backend.Redis(seeds, tls, auth) =>
+        graft.eos.RedisRelaySource(seeds.head._1, seeds.head._2,
+          streams.flatMap(st =>
+            (0L until redisShards.toLong).map(sh => (st, sh))), cap,
+          tls = tls, auth = auth)
+      case Backend.Iggy(host, port, auth) =>
+        graft.eos.IggyRelaySource(host, port,
+          graft.iggy.IggySource.DefaultStream, streams, cap, auth = auth)
+      case Backend.File(dir) =>
+        val parts = Option(new java.io.File(dir).listFiles())
+          .getOrElse(Array.empty).filter(_.getName.endsWith(".ss"))
+          .sortBy(_.getName).map(_.getAbsolutePath).toSeq
+        graft.eos.FileRelaySource(parts, fileCapBytes,
+          filePartitions.filter(_ =>
+            destination.backend.isInstanceOf[Backend.Kafka]),
+          if (streams == Seq("*")) None else Some(streams.toSet))
+      case b: Backend.Stdio =>
+        throw SeaStreamErr.Unsupported(
+          s"$what source on the '${b.name}' backend — no anchored cursor " +
+            "space to resume from")
+    }
+    val dst: graft.eos.RelayDestination = destination.backend match {
+      case Backend.Kafka(host, port, _, sec) =>
+        graft.eos.KafkaTxnDestination(host, port, group = anchor,
+          txnIdPrefix = s"$anchor-txn", topicOf = rename, sasl = sec.sasl,
+          saslMechanism = sec.saslMechanism, tls = sec.tls)
+      case Backend.Redis(seeds, tls, auth) =>
+        graft.eos.RedisLedgerDestination(seeds.head._1, seeds.head._2,
+          ledgerPrefix = anchor, streamOf = rename, tls = tls, auth = auth)
+      case b @ (_: Backend.File | _: Backend.Stdio | _: Backend.Iggy) =>
+        throw SeaStreamErr.Unsupported(
+          s"$what destination on the '${b.name}' backend — no " +
+            "transactional or compare-and-set primitive to anchor the " +
+            "resume point on")
+    }
     Seq("source" -> source, "destination" -> destination).foreach {
       case (end, c) =>
-        if (c.relayNodes.size != 1)
+        if (c.nodes.size != 1)
           throw SeaStreamErr.Unsupported(
             s"$what $end must be a single node, got " +
-              s"${c.relayNodes.mkString(",")} (redis clusters relay via " +
+              s"${c.nodes.mkString(",")} (redis clusters relay via " +
               "RedisSource.writeExactlyOnceCluster's hash-slot form)")
     }
-    if (streams.contains("*") && ss != "file")
-      throw SeaStreamErr.Unsupported(
+    if (streams.contains("*")) src match {
+      case _: graft.eos.FileRelaySource => ()
+      case _ => throw SeaStreamErr.Unsupported(
         s"the '*' wildcard relays only from file directories (their part" +
-          s" files carry every stream); a '$ss' source needs explicit names")
+          s" files carry every stream); a '${source.backend.name}' source " +
+          "needs explicit names")
+    }
     if (streams.contains("*") && streams.size > 1)
       throw SeaStreamErr.Unsupported(
         "'*' mixed with named streams is ambiguous — it would read as a " +
           "LITERAL stream key in the filter; pass '*' alone or only names")
-    (ss, ds)
-  }
-
-  /** A file endpoint's `.ss` part files, by name. */
-  private def partFiles(c: Connection): Seq[java.io.File] =
-    Option(new java.io.File(c.relayNodes.head).listFiles())
-      .getOrElse(Array.empty).filter(_.getName.endsWith(".ss"))
-      .sortBy(_.getName).toSeq
-
-  /** The source end of a checked relay pair; the caps bound each epoch
-    * (the defaults leave a file's tip unbounded — the lag view), and
-    * `filePartitions` folds file shards into a kafka topic's partitions
-    * (None keeps them whole, as redis keys do). */
-  private def relaySource(c: Connection, streams: Seq[String],
-      redisShards: Int, cap: Long = 100000L,
-      fileCapBytes: Long = Long.MaxValue,
-      filePartitions: Option[Int] = None): graft.eos.RelaySource = {
-    val (host, port) = hostPort(c.relayNodes.head, defaultPort(c.relayScheme))
-    c.relayScheme match {
-      case "kafka" =>
-        val sec = c.relayKafkaSecurity
-        graft.eos.KafkaRelaySource(host, port, streams, cap,
-          sasl = sec.sasl, saslMechanism = sec.saslMechanism, tls = sec.tls)
-      case "redis" =>
-        graft.eos.RedisRelaySource(host, port, streams.flatMap(st =>
-          (0L until redisShards.toLong).map(sh => (st, sh))), cap,
-          tls = c.relayRedisTls, auth = c.relayRedisAuth)
-      case "iggy" =>
-        graft.eos.IggyRelaySource(host, port,
-          graft.iggy.IggySource.DefaultStream, streams, cap,
-          auth = c.relayIggyAuth)
-      case _ =>
-        graft.eos.FileRelaySource(partFiles(c).map(_.getAbsolutePath),
-          fileCapBytes, filePartitions,
-          if (streams == Seq("*")) None else Some(streams.toSet))
-    }
-  }
-
-  /** The destination end of a checked relay pair, anchored at `anchor`. */
-  private def relayDestination(c: Connection, anchor: String,
-      rename: String => String): graft.eos.RelayDestination = {
-    val (host, port) = hostPort(c.relayNodes.head, defaultPort(c.relayScheme))
-    if (c.relayScheme == "kafka") {
-      val sec = c.relayKafkaSecurity
-      graft.eos.KafkaTxnDestination(host, port, group = anchor,
-        txnIdPrefix = s"$anchor-txn", topicOf = rename, sasl = sec.sasl,
-        saslMechanism = sec.saslMechanism, tls = sec.tls)
-    } else graft.eos.RedisLedgerDestination(host, port,
-      ledgerPrefix = anchor, streamOf = rename, tls = c.relayRedisTls,
-      auth = c.relayRedisAuth)
+    (src, dst)
   }
 
   /** One coordinate's relay progress, from [[relayLag]]. `tip` and
@@ -1087,17 +933,16 @@ object SeaStreamer {
     * read by the SAME planner the relay plans its epochs with (so
     * isolation rules match: a kafka tip is the LSO, a redis tip the
     * `XREVRANGE … COUNT 1` probe). Driver-side only — no Spark job, no
-    * data movement. Same scheme/endpoint validation and `anchor`
+    * data movement. Same backend/endpoint validation and `anchor`
     * semantics as the relay; coordinates are (stream/topic,
     * shard/partition).
     */
   def relayLag(source: Connection, destination: Connection,
       streams: Seq[String], anchor: String,
       redisShards: Int = 4): Map[(String, Long), RelayLag] = {
-    checkRelayEnds("relayLag", source, destination, streams, redisShards)
-    val src = relaySource(source, streams, redisShards)
-    val points = src.tips(relayDestination(destination, anchor, identity)
-      .cursors(src))
+    val (src, dst) = relayEnds("relayLag", source, destination, streams,
+      redisShards, anchor, identity)
+    val points = src.tips(dst.cursors(src))
     points.zip(src.backlog(points)).map { case (p, b) =>
       (p.coord._1, p.coord._2.toLong) ->
         RelayLag(p.tip, p.cursor, b.records, b.ms, b.bytes)
@@ -1128,39 +973,22 @@ object SeaStreamer {
     }
   }
 
-  final class Producer(
-      spark: SparkSession, scheme: String, nodes: Seq[String],
+  final class Producer private[facade] (
+      backend: Backend,
       anchor: Option[String],
       /** Redis key naming: rows land on `stream:shard_id` keys when > 1
         * (must agree with the consumers' `redisShards`).
         */
-      redisShards: Int = 1,
+      redisShards: Int,
       /** Iggy: partitions per topic at create-if-not-exists
         * (IggyProducerOptions::partitions_count, options.rs:306-318).
         */
-      iggyPartitions: Int = 4,
+      iggyPartitions: Int,
       /** Iggy namespace stream — must match the consumers'
         * `ConsumerOptions.iggyStream` or they will never see this
         * producer's data.
         */
-      iggyStream: String = graft.iggy.IggySource.DefaultStream,
-      /** Kafka builtin driver: connect-level security options, passed
-        * through verbatim ([[KafkaOptions.securityOptions]]).
-        */
-      security: Map[String, String] = Map.empty,
-      /** `rediss://`: TLS client config for every redis connection this
-        * producer opens (None on plain `redis://`).
-        */
-      redisTls: Option[graft.redis.RedisClient.Tls] = None,
-      /** AUTH credentials for every redis connection this producer opens. */
-      redisAuth: Option[graft.redis.RedisClient.Auth] = None,
-      /** LoginUser credentials for every iggy connection. */
-      iggyAuth: (String, String) = ("iggy", "iggy"),
-      /** Stdio loopback (StdioConnectOptions, streamer.rs:95-107): sends
-        * also append to the node's line file so this process's consumers
-        * see them; default off like the reference.
-        */
-      stdioLoopback: Boolean = false,
+      iggyStream: String,
       /** Redis sends floor their ms-packed ids at each key's current tip
         * ([[graft.redis.RedisSource.write]] `clampToTip`) so a re-send of
         * rows at-or-below the tip — a relay restarted mid-batch — lands
@@ -1168,13 +996,16 @@ object SeaStreamer {
         * "equal or smaller" refusal. Default off: first-run producers pay
         * no tip probe and non-monotone sends stay loud.
         */
-      redisClampToTip: Boolean = false) {
+      redisClampToTip: Boolean) {
 
-    private def node: String = nodes.head
     private def redisSharded: Boolean = redisShards > 1
 
     /** An anchored producer can only anchor once (producer.rs:59-65). */
     def anchored: String = anchor.getOrElse(throw SeaStreamErr.NotAnchored)
+
+    /** The rows with this producer's anchor stamped as their stream key. */
+    private def keyed(df: DataFrame): DataFrame =
+      anchor.fold(df)(key => df.withColumn("stream_key", lit(key)))
 
     /** Bounded send assigning per-(stream, shard) sequences that continue
       * from the store's current max — the file producer-registry behavior
@@ -1210,24 +1041,23 @@ object SeaStreamer {
       * returns the persisted assignment.
       */
     private def assignAndWrite(df: DataFrame): DataFrame = {
-      if (scheme != "file")
-        throw SeaStreamErr.Unsupported(s"sendAssignSeq on '$scheme'")
+      val path = backend match {
+        case Backend.File(p) => p
+        case other =>
+          throw SeaStreamErr.Unsupported(s"sendAssignSeq on '${other.name}'")
+      }
       val spark0 = df.sparkSession
       import spark0.implicits._
-      val bases = spark0.read.format("ss").load(node)
+      val bases = spark0.read.format("ss").load(path)
         .groupBy("stream_key", "shard_id")
         .agg(max(col("sequence")).as("__base"))
-      val keyed = anchor match {
-        case Some(key) => df.withColumn("stream_key", lit(key))
-        case None => df
-      }
       // tie-break must be content-derived: a monotonically_increasing_id
       // differs across stage retries, which would let a retried task assign
       // sequences inconsistent with parts already committed by other tasks
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("stream_key"), col("shard_id"))
         .orderBy(col("timestamp"), col("__arrival"))
-      val assigned = keyed
+      val assigned = keyed(df)
         .withColumn("__arrival", xxhash64(col("payload"), col("timestamp")))
         .join(broadcast(bases), Seq("stream_key", "shard_id"), "left")
         .withColumn("sequence",
@@ -1236,7 +1066,7 @@ object SeaStreamer {
         .drop("__base", "__arrival")
         .select("stream_key", "shard_id", "sequence", "timestamp", "payload")
         .localCheckpoint(true) // materialize + sever lineage before writing
-      assigned.write.format("ss").mode("append").save(node)
+      assigned.write.format("ss").mode("append").save(path)
       assigned
     }
 
@@ -1245,11 +1075,7 @@ object SeaStreamer {
       */
     def sendReceipts(df: DataFrame): DataFrame = {
       send(df)
-      val keyed = anchor match {
-        case Some(key) => df.withColumn("stream_key", lit(key))
-        case None => df
-      }
-      keyed.select("stream_key", "shard_id", "sequence", "timestamp")
+      keyed(df).select("stream_key", "shard_id", "sequence", "timestamp")
     }
 
     /** Live (unbounded) producer: every micro-batch of the streaming
@@ -1295,90 +1121,62 @@ object SeaStreamer {
         redisLedgerPrefix: Option[String] = None,
         eosSlots: Int = 8,
         kafkaEosPartitions: Int = 4): org.apache.spark.sql.streaming.StreamingQuery = {
-      scheme match {
-        case "redis" | "kafka" | "file" | "iggy" => ()
-        case other => throw SeaStreamErr.Unsupported(s"live producer on '$other'")
-      }
-      if (kafkaTransactionalId.isDefined && scheme != "kafka")
+      if (backend.isInstanceOf[Backend.Stdio])
+        throw SeaStreamErr.Unsupported(s"live producer on '${backend.name}'")
+      if (kafkaTransactionalId.isDefined && !backend.isInstanceOf[Backend.Kafka])
         throw SeaStreamErr.Unsupported(
-          s"kafkaTransactionalId on '$scheme' (kafka only)")
-      if (redisLedgerPrefix.isDefined && scheme != "redis")
+          s"kafkaTransactionalId on '${backend.name}' (kafka only)")
+      if (redisLedgerPrefix.isDefined && !backend.isInstanceOf[Backend.Redis])
         throw SeaStreamErr.Unsupported(
-          s"redisLedgerPrefix on '$scheme' (redis only)")
+          s"redisLedgerPrefix on '${backend.name}' (redis only)")
       if (Seq(exactlyOnceLedger, kafkaTransactionalId, redisLedgerPrefix)
         .count(_.isDefined) > 1)
         throw SeaStreamErr.Unsupported(
           "choose ONE exactly-once mechanism: the kafka transactional " +
             "producer, the redis WATCH+MULTI sink, or the marker ledger")
       require(eosSlots > 0, "eosSlots must be positive")
-      if (redisLedgerPrefix.isDefined) {
-        val prefix = redisLedgerPrefix.get
-        val slots = eosSlots
-        val sharded = redisSharded
-        val (tls0, auth0) = (redisTls, redisAuth)
-        val out0 = anchor match {
-          case Some(key) => df.withColumn("stream_key", lit(key))
-          case None => df
-        }
-        // multi-node connect = cluster, like every other redis write path:
-        // the sink switches to per-key {hash-tagged} transactions so MULTI
-        // stays single-slot legal on the owning node
-        val body: (DataFrame, Long) => Unit =
-          if (nodes.size > 1) {
-            val seeds = nodes.map(SeaStreamer.hostPort(_, 6379))
-            (batch, epochId) =>
-              graft.redis.RedisSource.writeExactlyOnceCluster(batch, seeds,
-                ledgerPrefix = prefix, epochId = epochId, sharded = sharded,
-                tls = tls0, auth = auth0)
-          } else {
-            val (host, port) = SeaStreamer.hostPort(node, 6379)
-            (batch, epochId) =>
-              graft.redis.RedisSource.writeExactlyOnce(batch, host, port,
-                ledgerPrefix = prefix, epochId = epochId, sharded = sharded,
-                numSlots = slots, tls = tls0, auth = auth0)
-          }
-        return out0.writeStream
+      def eachEpoch(out: DataFrame)(body: (DataFrame, Long) => Unit) =
+        out.writeStream
           .option("checkpointLocation", checkpointLocation)
           .foreachBatch(body).start()
-      }
-      if (kafkaTransactionalId.isDefined) {
-        // transactions are the wire driver's surface — the builtin
-        // connector's sink has no transactional mode to delegate to
-        val (host, port) = SeaStreamer.hostPort(node, 9092)
-        val sec = graft.kafka.KafkaSecurity.parse(security)
-        val compression = security.getOrElse("kafka.compression.type", "none")
-        val txnId = kafkaTransactionalId.get
-        val out0 = anchor match {
-          case Some(key) => df.withColumn("stream_key", lit(key))
-          case None => df
-        }
-        return out0.writeStream
-          .option("checkpointLocation", checkpointLocation)
-          .foreachBatch { (batch: DataFrame, epochId: Long) =>
+      (backend, redisLedgerPrefix, kafkaTransactionalId, exactlyOnceLedger) match {
+        case (Backend.Redis(seeds, tls, auth), Some(prefix), _, _) =>
+          val sharded = redisSharded
+          // multi-node connect = cluster, like every other redis write
+          // path: the sink switches to per-key {hash-tagged} transactions
+          // so MULTI stays single-slot legal on the owning node
+          eachEpoch(keyed(df)) {
+            if (seeds.size > 1)
+              (batch, epochId) =>
+                graft.redis.RedisSource.writeExactlyOnceCluster(batch, seeds,
+                  ledgerPrefix = prefix, epochId = epochId,
+                  sharded = sharded, tls = tls, auth = auth)
+            else
+              (batch, epochId) =>
+                graft.redis.RedisSource.writeExactlyOnce(batch,
+                  seeds.head._1, seeds.head._2, ledgerPrefix = prefix,
+                  epochId = epochId, sharded = sharded, numSlots = eosSlots,
+                  tls = tls, auth = auth)
+          }
+        case (Backend.Kafka(host, port, security, sec), _, Some(txnId), _) =>
+          val compression = security.getOrElse("kafka.compression.type", "none")
+          eachEpoch(keyed(df)) { (batch, epochId) =>
             graft.kafka.KafkaEosSink.writeEpoch(batch, host, port,
               txnIdPrefix = txnId, ledgerGroup = s"$txnId-ledger",
               epochId = epochId, partitions = kafkaEosPartitions,
               numSlots = eosSlots, sasl = sec.sasl,
               saslMechanism = sec.saslMechanism, tls = sec.tls,
               compression = compression)
-          }.start()
-      }
-      if (scheme == "file" && exactlyOnceLedger.isEmpty) {
-        // the ss streaming sink is already exactly-once (epoch-keyed parts)
-        val out = anchor match {
-          case Some(key) => df.withColumn("stream_key", lit(key))
-          case None => df
-        }
-        out.writeStream.format("ss")
-          .option("checkpointLocation", checkpointLocation)
-          .option("path", node).start()
-      } else {
-        val body: (DataFrame, Long) => Unit = (batch, _) => send(batch)
-        val wrapped = exactlyOnceLedger
-          .map(graft.ops.ExactlyOnce.epochOnce(_)(body)).getOrElse(body)
-        df.writeStream
-          .option("checkpointLocation", checkpointLocation)
-          .foreachBatch(wrapped).start()
+          }
+        case (Backend.File(path), _, _, None) =>
+          // the ss streaming sink is already exactly-once (epoch-keyed parts)
+          keyed(df).writeStream.format("ss")
+            .option("checkpointLocation", checkpointLocation)
+            .option("path", path).start()
+        case _ =>
+          val body: (DataFrame, Long) => Unit = (batch, _) => send(batch)
+          eachEpoch(df)(exactlyOnceLedger
+            .map(graft.ops.ExactlyOnce.epochOnce(_)(body)).getOrElse(body))
       }
     }
 
@@ -1405,27 +1203,29 @@ object SeaStreamer {
 
     private def redisTrim(stream: String, shards: Int,
         cmd: String => Seq[Array[Byte]]): Long = {
-      if (scheme != "redis")
-        throw SeaStreamErr.Unsupported(s"stream trim on '$scheme' (use ss.SsAdmin for file stores)")
+      val (seeds, tls, auth) = backend match {
+        case Backend.Redis(seeds, tls, auth) => (seeds, tls, auth)
+        case other => throw SeaStreamErr.Unsupported(
+          s"stream trim on '${other.name}' (use ss.SsAdmin for file stores)")
+      }
       def num(v: graft.redis.Resp.Value): Long = v match {
         case graft.redis.Resp.Num(n) => n
         case other => throw new IllegalArgumentException(s"bad XTRIM reply: $other")
       }
       val keys = (0L until shards.toLong).map(sh =>
         graft.redis.RedisStreams.shardedKey(stream, sh, shards > 1))
-      if (nodes.size > 1) {
+      if (seeds.size > 1) {
         // cluster: route each shard key to its slot owner like the writes do
-        val cc = new graft.redis.RedisClusterClient(
-          nodes.map(SeaStreamer.hostPort(_, 6379)), redisTls, redisAuth)
+        val cc = new graft.redis.RedisClusterClient(seeds, tls, auth)
         try {
           try cc.bootstrapSlots()
           catch { case scala.util.control.NonFatal(_) => () }
           keys.map(key => num(cc.command(key, cmd(key): _*))).sum
         } finally cc.close()
       } else {
-        val (host, port) = SeaStreamer.hostPort(node, 6379)
+        val (host, port) = seeds.head
         val client = new graft.redis.RedisClient(host, port,
-          tls = redisTls, auth = redisAuth)
+          tls = tls, auth = auth)
         try keys.map(key => num(client.command(cmd(key): _*))).sum
         finally client.close()
       }
@@ -1433,49 +1233,34 @@ object SeaStreamer {
 
     /** Bounded send of an envelope DataFrame. */
     def send(df: DataFrame): Unit = {
-      val out = anchor match {
-        case Some(key) => df.withColumn("stream_key", lit(key))
-        case None => df
-      }
-      scheme match {
-        case "file" =>
-          out.write.format("ss").mode("append").save(node)
-        case "kafka" if SeaStreamer.builtinKafkaPresent =>
-          SeaStreamer.envelopeToKafka(out)
-            .write.format("kafka")
-            .options(SeaStreamer.builtinKafkaWriteOptions(
-              nodes.mkString(","), security)).save()
-        case "kafka" => // connector jars absent: this library's wire client
-          val (host, port) = SeaStreamer.hostPort(node, 9092)
-          val sec = graft.kafka.KafkaSecurity.parse(security)
+      val out = keyed(df)
+      backend match {
+        case Backend.File(path) =>
+          out.write.format("ss").mode("append").save(path)
+        case Backend.Kafka(host, port, security, sec) =>
           graft.kafka.KafkaSource.write(out, host, port,
             sasl = sec.sasl, saslMechanism = sec.saslMechanism,
             tls = sec.tls,
             // the reference producer's compression.type option
-            // (sea-streamer-kafka/src/producer.rs:85-86) through the same
-            // kafka.-prefixed passthrough the builtin connector uses
+            // (sea-streamer-kafka/src/producer.rs:85-86) through the
+            // connect-level kafka.-prefixed passthrough
             compression =
               security.getOrElse("kafka.compression.type", "none"))
-        case "redis" =>
-          val (host, port) = SeaStreamer.hostPort(node, 6379)
+        case Backend.Redis(seeds, tls, auth) =>
           // multi-node URI = cluster: keys routed to their slot owners
           // with MOVED replay (the reference producer's redirect loop)
-          graft.redis.RedisSource.write(out, host, port,
+          graft.redis.RedisSource.write(out, seeds.head._1, seeds.head._2,
             sharded = redisSharded,
-            clusterSeeds =
-              if (nodes.size > 1)
-                Some(nodes.map(SeaStreamer.hostPort(_, 6379)))
-              else None,
-            tls = redisTls, auth = redisAuth,
+            clusterSeeds = if (seeds.size > 1) Some(seeds) else None,
+            tls = tls, auth = auth,
             clampToTip = redisClampToTip)
-        case "iggy" =>
+        case Backend.Iggy(host, port, auth) =>
           // topic = stream key, partition = shard % iggyPartitions, topics
           // created on demand (create_stream/topic_if_not_exists defaults,
           // sea-streamer-iggy/src/options.rs:325-330)
-          val (host, port) = SeaStreamer.hostPort(node, 8090)
           graft.iggy.IggySource.write(out, host, port, stream = iggyStream,
-            partitions = iggyPartitions, auth = iggyAuth)
-        case "stdio" =>
+            partitions = iggyPartitions, auth = auth)
+        case Backend.Stdio(path, loopback) =>
           // producer line format. The stdio contract means THIS process's
           // stdout (the reference's singleton stdout thread,
           // sea-streamer-stdio/src/producer.rs:43-151), so the lines are
@@ -1487,10 +1272,10 @@ object SeaStreamer {
           // (producer.rs:93-100) re-expressed on the stdio backend's bus
           // (this connection's consumers read/tail exactly that file)
           val loop =
-            if (stdioLoopback)
+            if (loopback)
               Some(new java.io.OutputStreamWriter(
                 java.nio.file.Files.newOutputStream(
-                  java.nio.file.Paths.get(node),
+                  java.nio.file.Paths.get(path),
                   java.nio.file.StandardOpenOption.CREATE,
                   java.nio.file.StandardOpenOption.APPEND), "UTF-8"))
             else None
@@ -1506,7 +1291,6 @@ object SeaStreamer {
                 loop.foreach { w => w.write(line); w.write('\n') }
               }
           } finally loop.foreach(_.close())
-        case other => throw SeaStreamErr.Unsupported(s"backend '$other'")
       }
     }
   }

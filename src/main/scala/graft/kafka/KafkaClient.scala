@@ -21,9 +21,13 @@ object KafkaClient {
     * the request — [[KafkaWire.Err.retriable]]), re-issue on the live
     * connection. Non-retriable server errors and corrupt-CRC batches
     * ([[KafkaWire.CorruptBatchException]]) surface immediately: re-sending
-    * cannot change either. Callers keep exactly-once by construction —
-    * fetch cursors only advance after a page decodes, and a produce is
-    * only retried when the broker REFUSED it.
+    * cannot change either. Fetches are exactly-once — a fetch cursor only
+    * advances after its page decodes. A plain produce is at-least-once:
+    * a retriable error code means the broker did not append the batch,
+    * but a connection dropped after the broker appended it (a lost ack)
+    * re-sends the batch, and the log holds it twice. Exactly-once writes
+    * go through the transactional sink ([[KafkaEosSink]]) or the engine's
+    * epoch ledger ([[graft.ops.ExactlyOnce]]), not through this retry.
     */
   final class Session(mkClient: () => KafkaClient, maxRetries: Int = 5,
       backoffMs: Long = 20L) extends AutoCloseable {

@@ -9,9 +9,9 @@ import graft.kafka.{KafkaClient, KafkaSource}
 
 /** `spark.readStream.format("kafka-wire")` — live micro-batch consumer over
   * this library's own Kafka wire client ([[graft.kafka.KafkaClient]], the
-  * real public protocol), for clusters where the builtin `format("kafka")`
-  * connector jars aren't present. Options and semantics mirror the builtin
-  * connector's surface where they overlap:
+  * real public protocol) — the facade's one Kafka read path; it needs no
+  * connector jars. Options and semantics mirror Spark's builtin
+  * `format("kafka")` connector's surface where they overlap:
   *
   *   - an offset is the NEXT offset per `topic/partition` (Kafka's native
   *     shape); latestOffset = one ListOffsets sweep, O(#partitions) per

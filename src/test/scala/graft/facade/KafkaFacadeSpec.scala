@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `kafka://` through the facade against the embedded wire-protocol broker —
   * the reference backend's user surface (connect → producer → consumer with
-  * seek/rewind/assign) executed end-to-end over real Kafka bytes. The
-  * builtin connector is absent in this sandbox, so these runs take the
-  * wire-driver branch (SeaStreamer.builtinKafkaPresent == false).
+  * seek/rewind/assign) executed end-to-end over real Kafka bytes through
+  * the wire driver, the facade's one Kafka path.
   */
 class KafkaFacadeSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -25,10 +24,6 @@ class KafkaFacadeSpec extends AnyFunSuite {
     val srv = new EmbeddedKafka
     try f(srv, SeaStreamer.connect(s"kafka://${srv.host}:${srv.port}", spark))
     finally srv.close()
-  }
-
-  test("wire driver is active in this sandbox") {
-    assert(!SeaStreamer.builtinKafkaPresent)
   }
 
   test("kafka produce then replay-consume round-trips the envelope") {

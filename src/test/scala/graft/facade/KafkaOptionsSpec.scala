@@ -5,14 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSession
 import graft.core.SeaStreamErr
 import graft.facade.KafkaOptions._
-import graft.facade.SeaStreamer.{AutoStreamReset, ConsumerMode, ConsumerOptions}
 
-/** Golden-config laws for the kafka builtin-connector branch: the sandbox
-  * cannot run a secured broker, so the mitigation is pinning the EXACT
-  * option maps handed to `format("kafka")` for every security protocol and
-  * SASL mechanism the reference's connect surface exposes
-  * (sea-streamer-kafka/src/streamer.rs:38-106 — security_protocol,
-  * sasl_mechanism, username/password, custom passthrough).
+/** Golden-config laws for the kafka connect-option surface: the EXACT
+  * `kafka.*` maps [[KafkaOptions.securityOptions]] builds for every
+  * security protocol and SASL mechanism the reference's connect surface
+  * exposes (sea-streamer-kafka/src/streamer.rs:38-106 — security_protocol,
+  * sasl_mechanism, username/password, custom passthrough), and the wire
+  * driver's connect-time parse of them and end-to-end runs over them.
   */
 class KafkaOptionsSpec extends AnyFunSuite {
 
@@ -71,7 +70,6 @@ class KafkaOptionsSpec extends AnyFunSuite {
   test("facade over MUTUAL TLS: ssl.keystore.* rides the custom-option " +
       "passthrough into the wire driver") {
     val spark = TestSession.spark
-    assume(!SeaStreamer.builtinKafkaPresent)
     val (server, client) = graft.core.TlsChannel.generateMutual()
     val srv = new graft.kafka.EmbeddedKafka(tls = Some(server))
     try {
@@ -98,7 +96,6 @@ class KafkaOptionsSpec extends AnyFunSuite {
 
   test("facade bounded round-trip over OAUTHBEARER on the wire driver") {
     val spark = TestSession.spark
-    assume(!SeaStreamer.builtinKafkaPresent)
     val srv = new graft.kafka.EmbeddedKafka(
       credentials = Some(("svc-etl", "")))
     try {
@@ -149,63 +146,11 @@ class KafkaOptionsSpec extends AnyFunSuite {
       .contains("/t.p12"))
   }
 
-  test("builtin reader map: live subscribe with reset and security merged") {
-    val sec = securityOptions(SecurityProtocol.SaslSsl,
-      Some(SaslOptions(SaslMechanism.ScramSha512, Some("u"), Some("p"))))
-    val o = SeaStreamer.builtinKafkaReadOptions("broker:9093", "a,b",
-      ConsumerOptions(autoStreamReset = AutoStreamReset.Earliest), sec)
-    assert(o == Map(
-      "kafka.bootstrap.servers" -> "broker:9093",
-      "subscribe" -> "a,b",
-      "startingOffsets" -> "earliest") ++ sec)
-  }
-
-  test("builtin reader map: batchSize and group map to the connector's " +
-      "own knobs (maxOffsetsPerTrigger / kafka.group.id)") {
-    val o = SeaStreamer.builtinKafkaReadOptions("b:9092", "t",
-      ConsumerOptions(mode = ConsumerMode.Resumable, group = Some("g1"),
-        batchSize = Some(500L)), Map.empty)
-    assert(o == Map(
-      "kafka.bootstrap.servers" -> "b:9092",
-      "subscribe" -> "t",
-      "startingOffsets" -> "latest",
-      "maxOffsetsPerTrigger" -> "500",
-      "kafka.group.id" -> "g1"))
-  }
-
-  test("builtin reader map: seek timestamp replaces startingOffsets") {
-    val o = SeaStreamer.builtinKafkaReadOptions("b:9092", "t",
-      ConsumerOptions(seekTimestamp =
-        Some(new java.sql.Timestamp(1234567L))), Map.empty)
-    assert(o == Map(
-      "kafka.bootstrap.servers" -> "b:9092",
-      "subscribe" -> "t",
-      "startingTimestamp" -> "1234567"))
-    assert(!o.contains("startingOffsets"))
-  }
-
-  test("builtin reader map: assign excludes subscribe; bounded read has no reset") {
-    val o = SeaStreamer.builtinKafkaReadOptions("b:9092", "t,u",
-      ConsumerOptions(live = false,
-        assignShards = Some(Seq(("t", 1L), ("t", 0L), ("u", 2L)))), Map.empty)
-    assert(o == Map(
-      "kafka.bootstrap.servers" -> "b:9092",
-      "assign" -> """{"t":[0,1],"u":[2]}"""))
-  }
-
-  test("builtin writer map: bootstrap + security verbatim") {
-    val sec = securityOptions(SecurityProtocol.SaslPlaintext,
-      Some(SaslOptions(SaslMechanism.Plain, Some("u"), Some("p"))))
-    assert(SeaStreamer.builtinKafkaWriteOptions("h1:9092,h2:9092", sec) ==
-      Map("kafka.bootstrap.servers" -> "h1:9092,h2:9092") ++ sec)
-  }
-
   test("wire driver validates security at connect: speaks all four " +
       "protocols, refuses unusable configs loudly") {
     val spark = TestSession.spark
     // connector jars are absent in this sandbox, so scheme kafka runs the
     // wire driver — which now speaks PLAINTEXT/SASL_PLAINTEXT/SSL/SASL_SSL
-    assume(!SeaStreamer.builtinKafkaPresent)
     val sasl = securityOptions(SecurityProtocol.SaslSsl,
       Some(SaslOptions(SaslMechanism.Plain, Some("u"), Some("p"))))
     // SASL_SSL without a truststore is UNUSABLE — refused at connect,
@@ -237,7 +182,6 @@ class KafkaOptionsSpec extends AnyFunSuite {
   test("facade bounded read + send run end-to-end over SASL_SSL on the " +
       "wire driver") {
     val spark = TestSession.spark
-    assume(!SeaStreamer.builtinKafkaPresent)
     val (server, trust) = graft.core.TlsChannel.ephemeral
     val srv = new graft.kafka.EmbeddedKafka(
       credentials = Some(("svc", "pw")), tls = Some(server))

@@ -127,4 +127,10 @@ class SeaStreamerSpec extends AnyFunSuite {
     assert(parsed.select("sequence").as[Long].collect().sorted.toSeq ==
       (0L until 25L))
   }
+
+  test("an unknown scheme is refused at connect, not at first read") {
+    val e = intercept[SeaStreamErr.Unsupported](
+      SeaStreamer.connect("nope://h:1", spark))
+    assert(e.getMessage.contains("backend 'nope'"))
+  }
 }

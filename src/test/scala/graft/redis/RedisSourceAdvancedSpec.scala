@@ -421,15 +421,6 @@ class RedisTrimSpec extends AnyFunSuite {
   }
 }
 
-/** kafkaAssignJson builds the built-in source's assign JSON exactly. */
-class KafkaAssignSpec extends AnyFunSuite {
-  test("assign pairs render as the kafka source's TopicPartition JSON") {
-    import graft.facade.SeaStreamer
-    assert(SeaStreamer.kafkaAssignJson(Seq(("t", 2L), ("t", 0L), ("u", 1L))) ==
-      """{"t":[0,2],"u":[1]}""")
-  }
-}
-
 /** RedisOffset JSON codec: roundtrip over the full key alphabet (stream
   * names with dots/dashes/underscores plus `:shard` suffixes). */
 class RedisOffsetCodecSpec extends AnyFunSuite {
