@@ -78,4 +78,30 @@ object StreamerUri {
     val (protocol, urls) = StreamUrl.splitProtocol(input)
     StreamUrl.parseUrl(protocol, urls, None).streamer
   }
+
+  /** A node's `host[:port]` with a scheme-specific default port — the one
+    * parser of the facade's connect and the `redis-stream` source's
+    * `nodes`. Raw IPv6 addresses must be bracketed to carry a port
+    * (`[::1]:6380`); an unbracketed multi-colon address is treated as a
+    * bare host, and a trailing colon (`h:`) takes the default port.
+    */
+  def hostPort(addr: String, defaultPort: Int): (String, Int) = {
+    if (addr.startsWith("[")) {
+      val close = addr.indexOf(']')
+      if (close < 0) throw SeaStreamErr.Connect(s"unclosed '[' in '$addr'")
+      val host = addr.substring(1, close)
+      val rest = addr.substring(close + 1)
+      if (rest.startsWith(":") && rest.drop(1).nonEmpty &&
+        rest.drop(1).forall(_.isDigit))
+        (host, rest.drop(1).toInt)
+      else (host, defaultPort)
+    } else if (addr.count(_ == ':') > 1) (addr, defaultPort) // raw IPv6
+    else addr.lastIndexOf(':') match {
+      case -1 => (addr, defaultPort)
+      case i if addr.substring(i + 1).nonEmpty &&
+        addr.substring(i + 1).forall(_.isDigit) =>
+        (addr.substring(0, i), addr.substring(i + 1).toInt)
+      case i => (addr.substring(0, i), defaultPort) // trailing colon
+    }
+  }
 }

@@ -1,22 +1,27 @@
 package graft.core
 
-import scala.collection.mutable
-
-/** Per-task resource tracking: a buffer whose contents are closed by a
-  * task-completion listener, so an early-terminating consumer (limit/take)
-  * cannot leak task-opened sockets that a drain-to-exhaustion close never
-  * reaches. Outside a running task (unit code driving iterators directly)
-  * there is no listener — callers keep their eager close-on-exhaustion for
-  * that path, and double-close is safe (socket close is idempotent, and the
-  * listener wraps each close in Try).
-  */
+/** Per-task resource tracking for the bounded readers. */
 object TaskResources {
-  def closeOnTaskCompletion[C <: AutoCloseable](): mutable.ArrayBuffer[C] = {
-    val opened = mutable.ArrayBuffer.empty[C]
+
+  /** `scan(c)` over a task-opened `c`, which closes once the scan is
+    * exhausted — or, when a consumer terminates early (limit, take) and
+    * never drains it, when the task completes. Outside a running task
+    * (unit code driving iterators directly) there is no listener, only
+    * the close on exhaustion; double-close is safe (socket close is
+    * idempotent, and the listener wraps the close in Try).
+    */
+  def closing[C <: AutoCloseable, T](c: C)(scan: C => Iterator[T])
+      : Iterator[T] = {
     Option(org.apache.spark.TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit] { _ =>
-        opened.foreach(c => scala.util.Try(c.close()))
-      })
-    opened
+      _.addTaskCompletionListener[Unit](_ => scala.util.Try(c.close())))
+    val it = scan(c)
+    new Iterator[T] {
+      def hasNext: Boolean = {
+        val h = it.hasNext
+        if (!h) c.close()
+        h
+      }
+      def next(): T = it.next()
+    }
   }
 }

@@ -92,21 +92,20 @@ object Resumable {
     val out = StreamUrl.parse(output)
     val inProto = in.streamer.protocol.getOrElse(
       throw SeaStreamErr.Connect(s"no protocol in '$input'"))
-    if (inProto == "stdio")
+    val src = SeaStreamer.connect(SeaStreamer.connString(in), spark)
+    if (!src.hasGroupOffsets)
       throw SeaStreamErr.Unsupported(
         "resumable needs a broker-side group offset store to continue " +
-          "from (kafka/redis/iggy); a stdio line file has none")
+          s"from (kafka/redis/iggy); '$inProto' has none")
     // the slice's durable resume point is the facade's commitConsumed —
     // the reference's explicit commit branches exist for exactly kafka
     // and redis (resumable.rs:70-86); --take depends on it, so other
     // backends refuse rather than silently restarting from scratch
-    val commitable = inProto == "kafka" || inProto == "redis"
-    if (take.isDefined && !commitable)
+    if (take.isDefined && !src.commitsConsumed)
       throw SeaStreamErr.Unsupported(
         s"--take on '$inProto': the explicit commit surface covers " +
           "kafka/redis (resumable.rs's commit branches); run without " +
           "--take to rely on the engine's own per-epoch commits")
-    val src = SeaStreamer.connect(SeaStreamer.connString(in), spark)
     val sink = SeaStreamer.connect(SeaStreamer.connString(out), spark)
     // kill-anytime means re-delivery (a crash between send and commit
     // re-ships the slice); a redis destination must floor those re-sent
@@ -143,7 +142,7 @@ object Resumable {
     // (foreachBatch's sends finished), so committing its endOffset can
     // mark nothing unprocessed as consumed.
     def commitFinal(): Boolean = {
-      val end = if (commitable)
+      val end = if (src.commitsConsumed)
         Option(q.lastProgress)
           .flatMap(p => p.sources.headOption)
           .flatMap(s => Option(s.endOffset))

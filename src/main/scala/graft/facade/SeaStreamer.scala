@@ -15,29 +15,9 @@ import graft.ops.StdioParser
   */
 object SeaStreamer {
 
-  /** `host[:port]` with a scheme-specific default port. Raw IPv6 addresses
-    * must be bracketed to carry a port (`[::1]:6380`); an unbracketed
-    * multi-colon address is treated as a bare host.
-    */
-  def hostPort(addr: String, defaultPort: Int): (String, Int) = {
-    if (addr.startsWith("[")) {
-      val close = addr.indexOf(']')
-      if (close < 0) throw SeaStreamErr.Connect(s"unclosed '[' in '$addr'")
-      val host = addr.substring(1, close)
-      val rest = addr.substring(close + 1)
-      if (rest.startsWith(":") && rest.drop(1).nonEmpty &&
-        rest.drop(1).forall(_.isDigit))
-        (host, rest.drop(1).toInt)
-      else (host, defaultPort)
-    } else if (addr.count(_ == ':') > 1) (addr, defaultPort) // raw IPv6
-    else addr.lastIndexOf(':') match {
-      case -1 => (addr, defaultPort)
-      case i if addr.substring(i + 1).nonEmpty &&
-        addr.substring(i + 1).forall(_.isDigit) =>
-        (addr.substring(0, i), addr.substring(i + 1).toInt)
-      case i => (addr.substring(0, i), defaultPort) // trailing colon
-    }
-  }
+  /** [[graft.core.StreamerUri.hostPort]], the one `host[:port]` parser. */
+  def hostPort(addr: String, defaultPort: Int): (String, Int) =
+    StreamerUri.hostPort(addr, defaultPort)
 
   /** StreamUrl → the facade's connect string (`scheme://host,host`): the
     * one node/scheme normalization every CLI front-end shares
@@ -621,6 +601,23 @@ object SeaStreamer {
       * the checkpointed epoch; these guards preserve the API contract.
       */
     def committer(opts: ConsumerOptions): Committer = new Committer(opts)
+
+    /** Whether this backend keeps consumer-group offsets that a
+      * Resumable consumer continues from: kafka, redis and iggy do; a
+      * `.ss` store and a stdio line file keep none.
+      */
+    def hasGroupOffsets: Boolean = backend match {
+      case _: Backend.Kafka | _: Backend.Redis | _: Backend.Iggy => true
+      case _: Backend.File | _: Backend.Stdio => false
+    }
+
+    /** Whether [[commitConsumed]] has a commit branch for this backend
+      * (kafka and redis, `rediss` included).
+      */
+    def commitsConsumed: Boolean = backend match {
+      case _: Backend.Kafka | _: Backend.Redis => true
+      case _: Backend.File | _: Backend.Stdio | _: Backend.Iggy => false
+    }
 
     /** The reference resumable processor's EXPLICIT commit surface
       * (examples/src/bin/resumable.rs:70-86 — the loop branches

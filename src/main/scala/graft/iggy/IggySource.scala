@@ -2,7 +2,7 @@ package graft.iggy
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.SeaMessage
+import graft.core.{SeaMessage, TaskResources, WriterPlacement}
 import IggyWire.{Partitioning, PolledMessage, PollStrategy}
 
 /** Spark ↔ iggy integration. Envelope mapping: sea-streamer StreamKey =
@@ -139,34 +139,20 @@ object IggySource {
       case None => PollStrategy.First
     }
     spark.sparkContext.parallelize(parts, math.max(1, parts.size))
-      .mapPartitions { it =>
-        // completion listener: an early-terminating consumer (limit, take)
-        // never drains the iterator, so the eager close below is not enough
-        val opened = graft.core.TaskResources.closeOnTaskCompletion[AutoCloseable]()
-        it.flatMap { case (topic, partition) =>
-          val session = new IggyClient.Session(() =>
-            new IggyClient(host, port, username = auth._1,
-              password = auth._2))
-          opened += session
-          val scan = pagedPoll(session, stream, topic, partition, start,
-            batch, group)
-          new Iterator[SeaMessage] {
-            def hasNext: Boolean = {
-              val h = scan.hasNext
-              if (!h) session.close()
-              h
-            }
-            def next(): SeaMessage = scan.next()
-          }
-        }
-      }.toDF()
+      .mapPartitions(_.flatMap { case (topic, partition) =>
+        TaskResources.closing(new IggyClient.Session(() =>
+          new IggyClient(host, port, username = auth._1,
+            password = auth._2)))(
+          pagedPoll(_, stream, topic, partition, start, batch, group))
+      }).toDF()
   }
 
-  /** Batched send: the frame is hash-partitioned on (topic, shard) and
-    * time-sorted within partitions, so each iggy partition has exactly ONE
-    * writer appending in timestamp order — offsets stay ts-monotone per
-    * partition, which the Timestamp strategy's binary search and the
-    * envelope's seek law rely on. Topics are created on demand
+  /** Batched send. [[graft.core.WriterPlacement]] gives each target iggy
+    * partition — `shard % partitions`, not the raw shard, so two shards
+    * folding onto one partition share its writer — exactly ONE writer task,
+    * appending in timestamp order: offsets stay ts-monotone per partition,
+    * which the Timestamp strategy's binary search and the envelope's seek
+    * law rely on. Topics are created on demand
     * (create_stream/topic_if_not_exists, streamer.rs:86-132).
     *
     * `balanced = true` drops shard fidelity and lets the SERVER round-robin
@@ -177,50 +163,30 @@ object IggySource {
       stream: String = DefaultStream, partitions: Int = 4,
       batchSize: Int = 1000, balanced: Boolean = false,
       auth: (String, String) = ("iggy", "iggy")): Unit = {
-    import df.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    df.select("stream_key", "shard_id", "timestamp", "payload")
-      // partition on the TARGET iggy partition (shard % partitions), not the
-      // raw shard — two shards that fold onto the same iggy partition must
-      // share one writer or per-partition ts-monotonicity breaks
-      .repartition(col("stream_key"), pmod(col("shard_id"), lit(partitions.toLong)))
-      .sortWithinPartitions(col("timestamp"))
-      .as[(String, Long, java.sql.Timestamp, Array[Byte])]
-      .foreachPartition { (rows: Iterator[(String, Long, java.sql.Timestamp, Array[Byte])]) =>
-        if (rows.nonEmpty) {
-          // session: a dropped send retries ITS OWN request after a
-          // reconnect — earlier batches were already acknowledged, so the
-          // known-applied prefix is never replayed (a lost in-flight reply
-          // is at-least-once, as for every request/reply producer)
-          val session = new IggyClient.Session(() =>
-            new IggyClient(host, port, username = auth._1,
-              password = auth._2))
-          val created = scala.collection.mutable.Set.empty[String]
-          try {
-            session.retrying("create-stream")(_.createStreamIfAbsent(stream))
-            rows.grouped(batchSize).foreach { chunk =>
-              // groupBy keeps encounter order inside every group, so the
-              // per-key time sort survives the batching
-              // group on the TARGET partition (not the raw shard) so two
-              // shards folding onto one iggy partition stay in one
-              // ts-ordered send
-              // floorMod, not % — must agree with the repartition's pmod on
-              // negative shard_ids or a task sends PartitionId(-n)
-              chunk.groupBy(r =>
-                (r._1, math.floorMod(r._2, partitions.toLong).toInt)).foreach {
-                case ((topic, part), rs) =>
-                if (created.add(topic))
-                  session.retrying("create-topic")(
-                    _.createTopicIfAbsent(stream, topic, partitions))
-                val p =
-                  if (balanced) Partitioning.Balanced
-                  else Partitioning.PartitionId(part)
-                session.retrying("send")(_.sendMessages(stream, topic, p,
-                  rs.map(r => (r._3.getTime, r._4))))
-              }
-            }
-          } finally session.close()
+    val dests = WriterPlacement.Partitions(partitions)
+    WriterPlacement.foreachTask(df, dests) { rows =>
+      // session: a dropped send retries ITS OWN request after a
+      // reconnect — earlier batches were already acknowledged, so the
+      // known-applied prefix is never replayed (a lost in-flight reply
+      // is at-least-once, as for every request/reply producer)
+      val session = new IggyClient.Session(() =>
+        new IggyClient(host, port, username = auth._1,
+          password = auth._2))
+      val created = scala.collection.mutable.Set.empty[String]
+      try {
+        session.retrying("create-stream")(_.createStreamIfAbsent(stream))
+        WriterPlacement.chunks(rows, batchSize, dests).foreach {
+          case ((topic, part), rs) =>
+            if (created.add(topic))
+              session.retrying("create-topic")(
+                _.createTopicIfAbsent(stream, topic, partitions))
+            val p =
+              if (balanced) Partitioning.Balanced
+              else Partitioning.PartitionId(part.toInt)
+            session.retrying("send")(_.sendMessages(stream, topic, p,
+              rs.map(r => (r._3.getTime, r._4))))
         }
-      }
+      } finally session.close()
+    }
   }
 }

@@ -108,23 +108,9 @@ object KafkaEosSink {
               .getOrElse((ledger, slot), 0L)
             if (committed < epochId + 1) {
               producer.begin()
-              val known = scala.collection.mutable.Set.empty[String]
-              rows.grouped(batchSize).foreach { chunk =>
-                chunk.groupBy(r =>
-                  (r._1, math.floorMod(r._2, partitions.toLong).toInt))
-                  .foreach { case ((topic, part), rs) =>
-                    if (known.add(topic)) {
-                      val parts = client.metadata(Seq(topic))
-                        .getOrElse(topic, Seq.empty)
-                      require(parts.size >= partitions,
-                        s"topic $topic has ${parts.size} partitions, " +
-                          s"need $partitions")
-                    }
-                    producer.send(topic, part,
-                      rs.map(r => (r._3.getTime, null: Array[Byte], r._4)),
-                      codec)
-                  }
-              }
+              KafkaSource.sendRows(rows, partitions, batchSize)(topic =>
+                client.metadata(Seq(topic)).getOrElse(topic, Seq.empty))(
+                producer.send(_, _, _, codec))
               producer.sendOffsetsToTransaction(ledgerGroup,
                 Map((ledger, slot) -> (epochId + 1)))
               if (crashBeforeCommit.exists(fire))

@@ -2,7 +2,8 @@ package graft.kafka
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.SeaMessage
+import graft.core.{SeaMessage, TaskResources, WriterPlacement}
+import graft.core.WriterPlacement.Partitions
 import KafkaWire.KRecord
 
 /** Spark ↔ Kafka integration over [[KafkaClient]]. Envelope mapping is the
@@ -129,34 +130,20 @@ object KafkaSource {
     val ranges = planRanges(host, port, topics, afterMs, fromOffset, assign,
       sasl, saslMechanism, tls, readCommitted)
     spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
-      .mapPartitions { it =>
-        val opened = graft.core.TaskResources
-          .closeOnTaskCompletion[KafkaClient.Session]()
-        it.flatMap { case (topic, partition, from, until) =>
-          val session = new KafkaClient.Session(
-            () => new KafkaClient(host, port, sasl = sasl,
-              saslMechanism = saslMechanism, tls = tls))
-          opened += session
-          val scan = pagedFetch(session, topic, partition, from, until,
-            maxFetchBytes, readCommitted)
-          new Iterator[SeaMessage] {
-            def hasNext: Boolean = {
-              val h = scan.hasNext
-              if (!h) session.close()
-              h
-            }
-            def next(): SeaMessage = scan.next()
-          }
-        }
-      }.toDF()
+      .mapPartitions(_.flatMap { case (topic, partition, from, until) =>
+        TaskResources.closing(new KafkaClient.Session(
+          () => new KafkaClient(host, port, sasl = sasl,
+            saslMechanism = saslMechanism, tls = tls)))(
+          pagedFetch(_, topic, partition, from, until, maxFetchBytes,
+            readCommitted))
+      }).toDF()
   }
 
-  /** Batched produce: the frame is hash-partitioned on (topic, target
-    * partition) and time-sorted within partitions, so each Kafka partition
-    * has exactly ONE writer appending in timestamp order — ListOffsets'
-    * first-ts>=T lookup then matches the seek law exactly (same invariant
-    * as IggySource.write). Topics auto-create at `partitions` via the
-    * broker's Metadata path.
+  /** Batched produce. [[graft.core.WriterPlacement]] gives each target
+    * (topic, partition) exactly ONE writer task, appending in timestamp
+    * order — ListOffsets' first-ts>=T lookup then matches the seek law
+    * exactly (same invariant as IggySource.write). Topics auto-create at
+    * `partitions` via the broker's Metadata path.
     */
   def write(df: DataFrame, host: String, port: Int, partitions: Int = 4,
       batchSize: Int = 1000,
@@ -166,46 +153,24 @@ object KafkaSource {
       compression: String = "none"): Unit = {
     // fail on an unknown/unsupported codec BEFORE any executor work
     val codec = KafkaWire.Codec.of(compression)
-    import df.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    df.select("stream_key", "shard_id", "timestamp", "payload")
-      .repartition(col("stream_key"), pmod(col("shard_id"), lit(partitions.toLong)))
-      .sortWithinPartitions(col("timestamp"))
-      .as[(String, Long, java.sql.Timestamp, Array[Byte])]
-      .foreachPartition { (rows: Iterator[(String, Long, java.sql.Timestamp, Array[Byte])]) =>
-        if (rows.nonEmpty) {
-          // produces retry through the session: a RETRIABLE error code
-          // means the broker refused (did not append) the batch, so the
-          // replay is duplicate-free; a reconnect-after-accept is the
-          // standard at-least-once produce gap (the reference shares it
-          // without idempotent producers) — exactly-once sits in the
-          // engine's epoch ledger (ops.ExactlyOnce), not here
-          val session = new KafkaClient.Session(
-            () => new KafkaClient(host, port, sasl = sasl,
-              saslMechanism = saslMechanism, tls = tls))
-          val known = scala.collection.mutable.Set.empty[String]
-          try {
-            rows.grouped(batchSize).foreach { chunk =>
-              // groupBy keeps encounter order inside every group, so the
-              // per-key time sort survives the batching; floorMod agrees
-              // with the repartition pmod on negative shard_ids
-              chunk.groupBy(r =>
-                (r._1, math.floorMod(r._2, partitions.toLong).toInt)).foreach {
-                case ((topic, part), rs) =>
-                  if (known.add(topic)) {
-                    val parts = session.retrying(s"metadata $topic")(
-                      _.metadata(Seq(topic)).getOrElse(topic, Seq.empty))
-                    require(parts.size >= partitions,
-                      s"topic $topic has ${parts.size} partitions, need $partitions")
-                  }
-                  session.retrying(s"produce $topic/$part")(_.produce(topic,
-                    part, rs.map(r => (r._3.getTime, null: Array[Byte], r._4)),
-                    codec))
-              }
-            }
-          } finally session.close()
-        }
-      }
+    WriterPlacement.foreachTask(df, Partitions(partitions)) { rows =>
+      // produces retry through the session: a RETRIABLE error code
+      // means the broker refused (did not append) the batch, so the
+      // replay is duplicate-free; a reconnect-after-accept is the
+      // standard at-least-once produce gap (the reference shares it
+      // without idempotent producers) — exactly-once sits in the
+      // engine's epoch ledger (ops.ExactlyOnce), not here
+      val session = new KafkaClient.Session(
+        () => new KafkaClient(host, port, sasl = sasl,
+          saslMechanism = saslMechanism, tls = tls))
+      try sendRows(rows, partitions, batchSize)(topic =>
+        session.retrying(s"metadata $topic")(
+          _.metadata(Seq(topic)).getOrElse(topic, Seq.empty))) {
+        (topic, part, recs) =>
+          session.retrying(s"produce $topic/$part")(
+            _.produce(topic, part, recs, codec))
+      } finally session.close()
+    }
   }
 
   /** [[write]] through the KIP-98 transactional producer: each task runs
@@ -225,42 +190,43 @@ object KafkaSource {
       tls: Option[KafkaTls.Client] = None,
       compression: String = "none"): Unit = {
     val codec = KafkaWire.Codec.of(compression)
-    import df.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    df.select("stream_key", "shard_id", "timestamp", "payload")
-      .repartition(col("stream_key"), pmod(col("shard_id"), lit(partitions.toLong)))
-      .sortWithinPartitions(col("timestamp"))
-      .as[(String, Long, java.sql.Timestamp, Array[Byte])]
-      .foreachPartition { (rows: Iterator[(String, Long, java.sql.Timestamp, Array[Byte])]) =>
-        if (rows.nonEmpty) {
-          val client = new KafkaClient(host, port, sasl = sasl,
-            saslMechanism = saslMechanism, tls = tls)
-          try {
-            val txnId = txnIdPrefix + "-" +
-              org.apache.spark.TaskContext.getPartitionId()
-            val producer = new KafkaTxnProducer(client, txnId)
-              .initTransactions()
-            producer.begin()
-            val known = scala.collection.mutable.Set.empty[String]
-            rows.grouped(batchSize).foreach { chunk =>
-              chunk.groupBy(r =>
-                (r._1, math.floorMod(r._2, partitions.toLong).toInt)).foreach {
-                case ((topic, part), rs) =>
-                  if (known.add(topic)) {
-                    val parts = client.metadata(Seq(topic))
-                      .getOrElse(topic, Seq.empty)
-                    require(parts.size >= partitions,
-                      s"topic $topic has ${parts.size} partitions, need $partitions")
-                  }
-                  producer.send(topic, part,
-                    rs.map(r => (r._3.getTime, null: Array[Byte], r._4)),
-                    codec)
-              }
-            }
-            if (commit) producer.commit() else producer.abort()
-            ()
-          } finally client.close()
+    WriterPlacement.foreachTask(df, Partitions(partitions)) { rows =>
+      val client = new KafkaClient(host, port, sasl = sasl,
+        saslMechanism = saslMechanism, tls = tls)
+      try {
+        val txnId = txnIdPrefix + "-" +
+          org.apache.spark.TaskContext.getPartitionId()
+        val producer = new KafkaTxnProducer(client, txnId)
+          .initTransactions()
+        producer.begin()
+        sendRows(rows, partitions, batchSize)(topic =>
+          client.metadata(Seq(topic)).getOrElse(topic, Seq.empty))(
+          producer.send(_, _, _, codec))
+        if (commit) producer.commit() else producer.abort()
+        ()
+      } finally client.close()
+    }
+  }
+
+  /** Sends one writer task's rows ([[WriterPlacement.chunks]]) through
+    * `send`, checking each topic's partition count (`metadata`) before
+    * its first send. The one send loop of the plain, transactional and
+    * exactly-once kafka writers.
+    */
+  private[kafka] def sendRows(rows: Iterator[WriterPlacement.Row],
+      partitions: Int, batchSize: Int)(metadata: String => Seq[Int])
+      (send: (String, Int, Seq[(Long, Array[Byte], Array[Byte])]) => Unit)
+      : Unit = {
+    val known = scala.collection.mutable.Set.empty[String]
+    WriterPlacement.chunks(rows, batchSize, Partitions(partitions)).foreach {
+      case ((topic, part), rs) =>
+        if (known.add(topic)) {
+          val parts = metadata(topic)
+          require(parts.size >= partitions,
+            s"topic $topic has ${parts.size} partitions, need $partitions")
         }
-      }
+        send(topic, part.toInt,
+          rs.map(r => (r._3.getTime, null: Array[Byte], r._4)))
+    }
   }
 }

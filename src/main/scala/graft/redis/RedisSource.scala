@@ -2,7 +2,7 @@ package graft.redis
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.SeaMessage
+import graft.core.{SeaMessage, TaskResources, WriterPlacement}
 
 /** Spark ↔ Redis Streams integration. Scale shape: one Spark partition per
   * (stream, shard) redis key, each task holding its own connection — reads
@@ -88,44 +88,15 @@ object RedisSource {
         val cc = new RedisClusterClient(seeds, tls, auth)
         try cc.bootstrapSlots() finally cc.close()
       }
-      // an early-terminating consumer (limit, take) stops pulling before
-      // exhaustion, so the eager close below never runs — the completion
-      // listener guarantees every task-opened socket closes either way
-      val opened = graft.core.TaskResources.closeOnTaskCompletion[AutoCloseable]()
       it.flatMap { case (key, stream, shard) =>
         val (h, p) = slotMap.flatMap(_.owner(key)).getOrElse((host, port))
-        val session = new RedisClient.Session(
-          () => new RedisClient(h, p, tls = tls, auth = auth))
-        opened += session
-        val scan = pagedScan(session, key, stream, shard, batch,
-          afterId = afterId)
-        new Iterator[SeaMessage] {
-          def hasNext: Boolean = {
-            val h = scan.hasNext
-            if (!h) session.close()
-            h
-          }
-          def next(): SeaMessage = scan.next()
-        }
+        TaskResources.closing(new RedisClient.Session(
+          () => new RedisClient(h, p, tls = tls, auth = auth)))(
+          pagedScan(_, key, stream, shard, batch, afterId = afterId))
       }
     }.toDF()
   }
 
-  /** Pipelined XADD write: each partition opens one connection and flushes
-    * command batches of `pipelineSize`. The frame is hash-partitioned on
-    * the REDIS KEY — (stream, shard) when sharded, stream alone when not
-    * (unsharded rows share the bare key regardless of shard_id) — and
-    * time-sorted within partitions first, so every redis key has exactly
-    * ONE writer appending in timestamp order: redis rejects non-monotonic
-    * explicit `<ms>-*` ids, and the reference keeps the same
-    * single-producer-per-key model (one producer actor per connection).
-    *
-    * `clusterSeeds` switches each task to cluster routing: the slot→node
-    * map is bootstrapped once per task (`CLUSTER SLOTS`), every key's
-    * pipeline goes straight to its owner, and MOVED bounces replay the
-    * batch against the new owner (the reference producer's redirect loop,
-    * producer.rs:428-507).
-    */
   /** One slot-epoch commit attempt: WATCH the ledger, read the epoch
     * watermark, queue the slot's commands plus the bumped watermark SET in
     * one MULTI, EXEC. Returns true iff THIS attempt's EXEC landed; false
@@ -306,24 +277,14 @@ object RedisSource {
           // those inside the EXEC while the watermark SET still landed.
           // Memory note: the MULTI queue already holds the whole slot
           // server-side, so this buffer does not change the sizing rule.
-          val byKey = new java.util.LinkedHashMap[
-            String, scala.collection.mutable.ArrayBuffer[(Long, Array[Byte])]]()
-          rows.foreach { r =>
-            byKey.computeIfAbsent(RedisStreams.shardedKey(r._1, r._2, sharded),
-              _ => scala.collection.mutable.ArrayBuffer.empty) +=
-              ((r._3.getTime, r._4))
-          }
-          val keys = {
-            val b = Seq.newBuilder[String]
-            byKey.forEach((k, _) => b += k)
-            b.result()
-          }
+          val byKey = rowsByKey(rows, sharded)
+          val keys = byKey.keys.toSeq
           val client = new RedisClient(host, port, tls = tls, auth = auth)
           // landed-or-skipped is irrelevant here: both are success states
           try { commitSlotEpoch(client, ledger, epochId, keys,
             floorOf => keys.iterator.flatMap { k =>
               var last = floorOf(k)
-              byKey.get(k).iterator.map { case (ms, payload) =>
+              byKey(k).iterator.map { case (ms, payload) =>
                 last = math.max(ms, last)
                 RedisStreams.xadd(k, last, payload)
               }
@@ -347,10 +308,10 @@ object RedisSource {
     * the bare key), and the stream key's public name is untouched, so
     * consumers read exactly what the single-node sink writes.
     *
-    * The batch repartitions on the redis key (deterministic across epoch
-    * replays), each task groups its rows by key in time order and runs
-    * the same WATCH-fenced [[commitSlotEpoch]] per key against the key's
-    * owner node. A MOVED bounce (slot migrated) refreshes the routing and
+    * [[WriterPlacement]] gives each redis key one writer task (a pure
+    * function of the key, so the same across epoch replays); each task
+    * groups its rows by key in time order and runs the same WATCH-fenced
+    * [[commitSlotEpoch]] per key against the key's owner node. A MOVED bounce (slot migrated) refreshes the routing and
     * retries the WHOLE key-transaction on a fresh connection — safe
     * because nothing applies until EXEC, and the bounced connection is
     * quarantined in case it holds an open MULTI queue. Replay skips
@@ -368,74 +329,67 @@ object RedisSource {
       tls: Option[RedisClient.Tls] = None,
       auth: Option[RedisClient.Auth] = None,
       crashBeforeCommit: Option[String] = None): Unit = {
-    import df.sparkSession.implicits._
-    import org.apache.spark.sql.functions.col
-    val keyCols =
-      if (sharded) Seq(col("stream_key"), col("shard_id"))
-      else Seq(col("stream_key"))
-    df.select("stream_key", "shard_id", "timestamp", "payload")
-      .repartition(keyCols: _*)
-      .sortWithinPartitions(col("timestamp"))
-      .as[(String, Long, java.sql.Timestamp, Array[Byte])]
-      .foreachPartition { (rows: Iterator[(String, Long, java.sql.Timestamp, Array[Byte])]) =>
-        if (rows.nonEmpty) {
-          val cc = new RedisClusterClient(seeds, tls, auth)
-          try {
-            try cc.bootstrapSlots()
-            catch { case scala.util.control.NonFatal(_) => () } // lazy MOVED fallback
-            // group this task's rows by redis key; iterator order (time
-            // within the partition) survives into each key's buffer
-            val byKey = new java.util.LinkedHashMap[
-              String, scala.collection.mutable.ArrayBuffer[(Long, Array[Byte])]]()
-            rows.foreach { r =>
-              val key = RedisStreams.shardedKey(r._1, r._2, sharded)
-              byKey.computeIfAbsent(key,
-                _ => scala.collection.mutable.ArrayBuffer.empty) +=
-                ((r._3.getTime, r._4))
+    WriterPlacement.foreachTask(df, destinationsOf(sharded)) { rows =>
+      val cc = new RedisClusterClient(seeds, tls, auth)
+      try {
+        try cc.bootstrapSlots()
+        catch { case scala.util.control.NonFatal(_) => () } // lazy MOVED fallback
+        rowsByKey(rows, sharded).foreach { case (key, rs) =>
+          val ledger = s"$ledgerPrefix:{$key}"
+          var attempts = 0
+          var done = false
+          while (!done) {
+            val client = cc.connectionFor(key)
+            try {
+              // key + ledger share a slot by construction, so the
+              // floor-aware WATCH (ledger AND the data key) is legal
+              // on a cluster node; ids clamp to the watched tip ms —
+              // late data across epochs can never be refused in-EXEC
+              commitSlotEpoch(client, ledger, epochId, Seq(key),
+                floorOf => {
+                  var last = floorOf(key)
+                  rs.iterator.map { case (ms, payload) =>
+                    last = math.max(ms, last)
+                    RedisStreams.xadd(key, last, payload)
+                  }
+                },
+                beforeExec = () =>
+                  if (crashBeforeCommit.exists(graft.ops.Failpoints.fire))
+                    throw new IllegalStateException(
+                      s"injected crash: redis key $key epoch $epochId " +
+                        "queued, not EXECed"))
+              done = true
+            } catch {
+              case e: RedisClient.RedisError
+                  if e.msg.startsWith("MOVED") && attempts < 5 =>
+                attempts += 1
+                cc.quarantineConnectionOf(key)
+                if (!cc.noteMoved(key, e.msg))
+                  try cc.bootstrapSlots()
+                  catch { case scala.util.control.NonFatal(_) => () }
             }
-            byKey.forEach { (key, rs) =>
-              val ledger = s"$ledgerPrefix:{$key}"
-              var attempts = 0
-              var done = false
-              while (!done) {
-                val client = cc.connectionFor(key)
-                try {
-                  // key + ledger share a slot by construction, so the
-                  // floor-aware WATCH (ledger AND the data key) is legal
-                  // on a cluster node; ids clamp to the watched tip ms —
-                  // late data across epochs can never be refused in-EXEC
-                  commitSlotEpoch(client, ledger, epochId, Seq(key),
-                    floorOf => {
-                      var last = floorOf(key)
-                      rs.iterator.map { case (ms, payload) =>
-                        last = math.max(ms, last)
-                        RedisStreams.xadd(key, last, payload)
-                      }
-                    },
-                    beforeExec = () =>
-                      if (crashBeforeCommit.exists(graft.ops.Failpoints.fire))
-                        throw new IllegalStateException(
-                          s"injected crash: redis key $key epoch $epochId " +
-                            "queued, not EXECed"))
-                  done = true
-                } catch {
-                  case e: RedisClient.RedisError
-                      if e.msg.startsWith("MOVED") && attempts < 5 =>
-                    attempts += 1
-                    cc.quarantineConnectionOf(key)
-                    if (!cc.noteMoved(key, e.msg))
-                      try cc.bootstrapSlots()
-                      catch { case scala.util.control.NonFatal(_) => () }
-                }
-              }
-            }
-          } finally cc.close()
+          }
         }
-      }
+      } finally cc.close()
+    }
   }
 
-  /** `clampToTip`: floor each row's packed ms at the destination key's
-    * last-GENERATED id (one `XINFO STREAM` probe per key per partition,
+  /** Pipelined XADD write: each writer task opens one connection and
+    * flushes command batches of `pipelineSize`. [[WriterPlacement]] gives
+    * every REDIS KEY — (stream, shard) when sharded, the stream alone when
+    * not (unsharded rows share the bare key regardless of shard_id) —
+    * exactly ONE writer task, appending in timestamp order: redis rejects
+    * non-monotonic explicit `<ms>-*` ids, and the reference keeps the same
+    * single-producer-per-key model (one producer actor per connection).
+    *
+    * `clusterSeeds` switches each task to cluster routing: the slot→node
+    * map is bootstrapped once per task (`CLUSTER SLOTS`), every key's
+    * pipeline goes straight to its owner, and MOVED bounces replay the
+    * batch against the new owner (the reference producer's redirect loop,
+    * producer.rs:428-507).
+    *
+    * `clampToTip`: floor each row's packed ms at the destination key's
+    * last-GENERATED id (one `XINFO STREAM` probe per key per task,
     * on the session's own connection — the EOS sinks' floor idiom, minus
     * the WATCH fence; `last_id` rather than the visible tip, because
     * XTRIM/XDEL do not lower the XADD refusal bar and a tip probe on a
@@ -463,139 +417,123 @@ object RedisSource {
       tls: Option[RedisClient.Tls] = None,
       auth: Option[RedisClient.Auth] = None,
       clampToTip: Boolean = false): Unit = {
-    import df.sparkSession.implicits._
-    import org.apache.spark.sql.functions.col
-    val keyCols =
-      if (sharded) Seq(col("stream_key"), col("shard_id"))
-      else Seq(col("stream_key"))
-    df.select("stream_key", "shard_id", "timestamp", "payload")
-      .repartition(keyCols: _*)
-      .sortWithinPartitions(col("timestamp"))
-      .as[(String, Long, java.sql.Timestamp, Array[Byte])]
-      .foreachPartition { (rows: Iterator[(String, Long, java.sql.Timestamp, Array[Byte])]) =>
-        if (rows.nonEmpty) {
-          def keyOf(r: (String, Long, java.sql.Timestamp, Array[Byte])) =
-            RedisStreams.shardedKey(r._1, r._2, sharded)
-          // rows arrive ts-sorted and one redis key per partition (the
-          // repartition above), so a single running floor per key keeps
-          // clamped ids monotone within this task. The probe reads the
-          // stream's last-GENERATED id (XINFO STREAM), not the visible
-          // tip: `last_id` outlives XTRIM/XDEL of every entry, so a
-          // re-send onto a trimmed-empty stream converges instead of
-          // re-refusing forever. atFloor counts entries at the current
-          // floor ms for the sub-seq spill, SEEDED from the server's own
-          // sub-seq so entries it already holds at that ms count too.
-          val floor = scala.collection.mutable.Map.empty[String, Long]
-          val atFloor = scala.collection.mutable.Map.empty[String, Long]
-          def clamp(key: String, ms: Long,
-              probe: String => (Long, Long)): Long =
-            if (!clampToTip) ms
-            else {
-              if (!floor.contains(key)) {
-                val (fm, fs) = probe(key)
-                floor(key) = fm
-                atFloor(key) = fs + 1
-              }
-              var f = floor(key)
-              if (ms > f) {
-                floor(key) = ms
-                atFloor(key) = 1L
-                ms
-              } else {
-                val n = atFloor.getOrElse(key, 0L) + 1L
-                if (n >= ClampSpillRows) {
-                  f += 1 // spill to the next ms before sub-seq saturates
-                  floor(key) = f
-                  atFloor(key) = 1L
-                } else atFloor(key) = n
-                f
-              }
-            }
-          def cmdWith(probe: String => (Long, Long))
-              : ((String, Long, java.sql.Timestamp, Array[Byte])) => Seq[Array[Byte]] =
-            r => {
-              val key = keyOf(r)
-              RedisStreams.xadd(key, clamp(key, r._3.getTime, probe), r._4)
-            }
-          // "no such key" = the stream does not exist yet: floor 0, first
-          // append mints sub-seq 0
-          def decodeProbe(f: => graft.redis.Resp.Value): (Long, Long) =
-            try RedisStreams.lastGeneratedId(f)
-            catch {
-              case e: RedisClient.RedisError
-                  if e.msg.contains("no such key") => (0L, -1L)
-            }
-          clusterSeeds match {
-            case Some(seeds) =>
-              val cc = new RedisClusterClient(seeds, tls, auth)
-              try {
-                try cc.bootstrapSlots()
-                catch { case scala.util.control.NonFatal(_) => () } // lazy MOVED fallback
-                val cmd = cmdWith(k => decodeProbe(
-                  cc.command(k, RedisStreams.xinfoStream(k): _*)))
-                rows.grouped(pipelineSize).foreach { chunk =>
-                  // time order within each key survives: Seq.groupBy keeps
-                  // encounter order inside every group
-                  chunk.groupBy(keyOf).foreach { case (key, rs) =>
-                    var attempts = 0
-                    var done = false
-                    while (!done) {
-                      try {
-                        cc.pipelineFor(key, rs.map(cmd))
-                        done = true
-                      } catch {
-                        // same rival-advance recovery as the single-node
-                        // path below — the cluster client surfaces the
-                        // refusal as a RedisError
-                        case e: RedisClient.RedisError
-                            if clampToTip && attempts < 3 &&
-                              e.msg.contains("equal or smaller") =>
-                          attempts += 1
-                          floor.clear()
-                          atFloor.clear()
-                      }
-                    }
-                  }
-                }
-              } finally cc.close()
-            case None =>
-              // resumable session: a drop mid-pipeline replays only the
-              // unacknowledged tail (producer.rs:464-507's requeue law) —
-              // blind batch replay would duplicate already-acked ms-* ids.
-              // The probe rides the SAME session (reconnect-protected, no
-              // extra connection).
-              val session = new RedisClient.Session(
-                () => new RedisClient(host, port, tls = tls, auth = auth))
-              try {
-                val probe: String => (Long, Long) = k =>
-                  decodeProbe(session.retrying("tip probe")(c =>
-                    c.command(RedisStreams.xinfoStream(k): _*)))
-                val cmd = cmdWith(probe)
-                rows.grouped(pipelineSize).foreach { chunk =>
-                  var attempts = 0
-                  var done = false
-                  while (!done) {
-                    try {
-                      session.pipelineAcked(chunk.map(cmd))
-                      done = true
-                    } catch {
-                      // a concurrent writer advanced the tip between our
-                      // probe and this send: forget the stale floors,
-                      // re-probe, re-clamp, resend the chunk (its applied
-                      // tail may duplicate — at-least-once, documented)
-                      case e: RedisClient.FatalReply
-                          if clampToTip && attempts < 3 &&
-                            e.getMessage.contains("equal or smaller") =>
-                        attempts += 1
-                        floor.clear()
-                        atFloor.clear()
-                    }
-                  }
-                }
-              } finally session.close()
+    val dests = destinationsOf(sharded)
+    WriterPlacement.foreachTask(df, dests) { rows =>
+      // rows arrive ts-sorted and each redis key has this one writer task,
+      // so a single running floor per key keeps clamped ids monotone. The
+      // probe reads the stream's last-GENERATED id (XINFO STREAM), not the
+      // visible tip: `last_id` outlives XTRIM/XDEL of every entry, so a
+      // re-send onto a trimmed-empty stream converges instead of
+      // re-refusing forever. atFloor counts entries at the current floor
+      // ms for the sub-seq spill, SEEDED from the server's own sub-seq so
+      // entries it already holds at that ms count too.
+      val floor = scala.collection.mutable.Map.empty[String, Long]
+      val atFloor = scala.collection.mutable.Map.empty[String, Long]
+      def clamp(key: String, ms: Long,
+          probe: String => (Long, Long)): Long =
+        if (!clampToTip) ms
+        else {
+          if (!floor.contains(key)) {
+            val (fm, fs) = probe(key)
+            floor(key) = fm
+            atFloor(key) = fs + 1
+          }
+          var f = floor(key)
+          if (ms > f) {
+            floor(key) = ms
+            atFloor(key) = 1L
+            ms
+          } else {
+            val n = atFloor.getOrElse(key, 0L) + 1L
+            if (n >= ClampSpillRows) {
+              f += 1 // spill to the next ms before sub-seq saturates
+              floor(key) = f
+              atFloor(key) = 1L
+            } else atFloor(key) = n
+            f
           }
         }
+      def cmdWith(probe: String => (Long, Long))
+          : WriterPlacement.Row => Seq[Array[Byte]] =
+        r => {
+          val key = RedisStreams.shardedKey(r._1, r._2, sharded)
+          RedisStreams.xadd(key, clamp(key, r._3.getTime, probe), r._4)
+        }
+      // a concurrent writer advanced the tip between our probe and this
+      // send (the session surfaces the refusal as a FatalReply, the
+      // cluster client as a RedisError): forget the stale floors,
+      // re-probe, re-clamp, resend the chunk (its applied tail may
+      // duplicate — at-least-once, documented)
+      def reclamping(send: => Unit, attempts: Int = 0): Unit =
+        try send
+        catch {
+          case e @ (_: RedisClient.FatalReply | _: RedisClient.RedisError)
+              if clampToTip && attempts < 3 &&
+                e.getMessage.contains("equal or smaller") =>
+            floor.clear()
+            atFloor.clear()
+            reclamping(send, attempts + 1)
+        }
+      // "no such key" = the stream does not exist yet: floor 0, first
+      // append mints sub-seq 0
+      def decodeProbe(f: => graft.redis.Resp.Value): (Long, Long) =
+        try RedisStreams.lastGeneratedId(f)
+        catch {
+          case e: RedisClient.RedisError
+              if e.msg.contains("no such key") => (0L, -1L)
+        }
+      clusterSeeds match {
+        case Some(seeds) =>
+          val cc = new RedisClusterClient(seeds, tls, auth)
+          try {
+            try cc.bootstrapSlots()
+            catch { case scala.util.control.NonFatal(_) => () } // lazy MOVED fallback
+            val cmd = cmdWith(k => decodeProbe(
+              cc.command(k, RedisStreams.xinfoStream(k): _*)))
+            WriterPlacement.chunks(rows, pipelineSize, dests).foreach {
+              case ((stream, shard), rs) =>
+                val key = RedisStreams.shardedKey(stream, shard, sharded)
+                reclamping(cc.pipelineFor(key, rs.map(cmd)))
+            }
+          } finally cc.close()
+        case None =>
+          // resumable session: a drop mid-pipeline replays only the
+          // unacknowledged tail (producer.rs:464-507's requeue law) —
+          // blind batch replay would duplicate already-acked ms-* ids.
+          // The probe rides the SAME session (reconnect-protected, no
+          // extra connection). Pipelines mix the task's keys.
+          val session = new RedisClient.Session(
+            () => new RedisClient(host, port, tls = tls, auth = auth))
+          try {
+            val cmd = cmdWith(k => decodeProbe(session.retrying("tip probe")(
+              _.command(RedisStreams.xinfoStream(k): _*))))
+            rows.grouped(pipelineSize).foreach { chunk =>
+              reclamping(session.pipelineAcked(chunk.map(cmd)))
+            }
+          } finally session.close()
       }
+    }
+  }
+
+  /** The plain writers' redis destinations: one key per (stream, shard)
+    * when sharded, one per stream when not.
+    */
+  private def destinationsOf(sharded: Boolean): WriterPlacement.Destinations =
+    if (sharded) WriterPlacement.Shards else WriterPlacement.Streams
+
+  /** A writer task's rows per redis key, keys in encounter order; each
+    * key's (ms, payload) buffer keeps the task's time order.
+    */
+  private def rowsByKey(rows: Iterator[WriterPlacement.Row], sharded: Boolean)
+      : scala.collection.mutable.LinkedHashMap[
+        String, scala.collection.mutable.ArrayBuffer[(Long, Array[Byte])]] = {
+    val byKey = scala.collection.mutable.LinkedHashMap.empty[
+      String, scala.collection.mutable.ArrayBuffer[(Long, Array[Byte])]]
+    rows.foreach { r =>
+      byKey.getOrElseUpdate(RedisStreams.shardedKey(r._1, r._2, sharded),
+        scala.collection.mutable.ArrayBuffer.empty) += ((r._3.getTime, r._4))
+    }
+    byKey
   }
 
   /** Rows landed at one floor ms before the clamp spills to the next ms —

@@ -4,7 +4,8 @@ import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{BrokerStream, LiveSource, MessageReaders, SeaMessage}
+import graft.core.{BrokerStream, LiveSource, MessageReaders, SeaMessage,
+  StreamerUri}
 import graft.redis.{RedisClient, RedisClusterClient, RedisSecurity, RedisSlotMap, RedisSource, RedisStreams, Resp}
 
 /** `spark.readStream.format("redis-stream")` — live micro-batch consumer
@@ -127,10 +128,8 @@ class RedisMicroBatchStream(options: CaseInsensitiveStringMap)
   private val seeds: Seq[(String, Int)] = {
     val ns = options.get("nodes")
     if (ns == null || ns.isEmpty) Seq((host, port))
-    else ns.split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { n =>
-      val i = n.lastIndexOf(':')
-      if (i < 0) (n, 6379) else (n.substring(0, i), n.substring(i + 1).toInt)
-    }
+    else ns.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+      .map(StreamerUri.hostPort(_, 6379))
   }
 
   /** Slot→node map, bootstrapped once per stream start (driver-side,

@@ -82,4 +82,12 @@ class StreamUrlSpec extends AnyFunSuite {
     assert(Envelope.isValidStreamKey("a" * 249))
     assert(!Envelope.isValidStreamKey("a" * 250))
   }
+
+  test("hostPort: one parser for connect strings and source node lists") {
+    assert(StreamerUri.hostPort("h:7000", 6379) == ("h", 7000))
+    assert(StreamerUri.hostPort("[::1]:7000", 6379) == ("::1", 7000))
+    assert(StreamerUri.hostPort("h:", 6379) == ("h", 6379))
+    assert(StreamerUri.hostPort("fe80::2", 6379) == ("fe80::2", 6379))
+    assertThrows[SeaStreamErr.Connect](StreamerUri.hostPort("[::1", 6379))
+  }
 }

@@ -193,4 +193,26 @@ class ExamplesSpec extends AnyFunSuite {
     intercept[SeaStreamErr.Unsupported](conn.createConsumer(Seq("s"),
       ConsumerOptions(live = true, batchSize = Some(0L))))
   }
+
+  test("resumable decides its checks from the connected backend: --take " +
+      "passes on rediss (commitConsumed covers it) and is refused on iggy") {
+    // rediss gets past the --take check; what stops it here is the
+    // missing trust material, refused by connect
+    val e = intercept[SeaStreamErr.Unsupported](Resumable.run(spark,
+      "rediss://127.0.0.1:1/s", "stdio:///b", group = "g", take = Some(1L)))
+    assert(!e.getMessage.contains("--take"), e.getMessage)
+    assert(e.getMessage.contains("rediss requires"), e.getMessage)
+    val iggy = intercept[SeaStreamErr.Unsupported](Resumable.run(spark,
+      "iggy://127.0.0.1:1/s", "stdio:///b", group = "g", take = Some(1L)))
+    assert(iggy.getMessage.contains("--take on 'iggy'"), iggy.getMessage)
+    import graft.facade.SeaStreamer
+    val (_, trust) = graft.core.TlsChannel.ephemeral
+    val rediss = SeaStreamer.connect("rediss://127.0.0.1:1", spark,
+      Map("redis.ssl.truststore.location" -> trust.truststore,
+        "redis.ssl.truststore.password" -> trust.password))
+    assert(rediss.hasGroupOffsets && rediss.commitsConsumed)
+    val stdio = SeaStreamer.connect("stdio://.", spark)
+    assert(!stdio.hasGroupOffsets && !stdio.commitsConsumed)
+  }
 }
+
