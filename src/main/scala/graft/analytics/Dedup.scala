@@ -10,28 +10,27 @@ import org.apache.spark.sql.functions._
   * bit-for-bit (no engine-specific hash functions).
   *
   * Scale notes (100 TB):
-  *   - shingling/explode is map-side; the only shuffles are the
-  *     groupBy(doc_id) signature builds and the shingle/bucket equi-joins —
-  *     all on keys Catalyst hash-partitions;
-  *   - the LSH candidate join is the point: candidates ≪ n², so the exact
-  *     Jaccard verification join touches only colliding pairs (band join ≈
-  *     O(collisions), never O(n²));
+  *   - the MinHash family (d3, d10, d11, d12, d14) reads ONE signature
+  *     table, [[signatures]]: one row per document — its sorted shingle
+  *     set and its 8 permutation minima — built by a map-only pass of the
+  *     native kernels in [[graft.functions.DedupKernels]], no explode and
+  *     no per-document aggregation;
+  *   - the LSH candidate join is the point: candidates ≪ n², and each
+  *     candidate is verified by attaching both documents' signature rows
+  *     (two doc-keyed shuffled joins) and merging their sorted shingle
+  *     sets — one unit of work per candidate, never candidate × shingles
+  *     rows through a join and a regroup;
+  *   - the all-pairs Jaccard family (d2, d6, d9, d13, p21) explodes the
+  *     same shingle kernel; its only shuffles are the df cap and the
+  *     shingle/size equi-joins — all on keys Catalyst hash-partitions;
   *   - SimHash is a pure per-row map + one aggregation, no joins at all.
   */
 object Dedup {
 
-  /** 60-bit integer from the first 15 hex chars of md5 — deterministic and
-    * identical in Spark and DuckDB.
-    */
-  private[analytics] def md5long(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
-
-  private[analytics] val Prime = 1000000007L
+  private[analytics] val Prime = graft.functions.DedupKernels.Prime
 
   /** (a, b) parameters of the 8 minhash permutations h_i = (a*h+b) mod p. */
-  private[analytics] val MinhashParams: Seq[(Int, Int)] = Seq(
-    (387, 1031), (1049, 2477), (2503, 4099), (4111, 8221),
-    (8231, 16411), (16417, 32771), (32779, 65537), (65539, 131071))
+  private[analytics] val MinhashParams = graft.functions.DedupKernels.MinhashParams
 
   private[analytics] val JaccardThreshold = 0.5
 
@@ -64,39 +63,73 @@ object Dedup {
     */
   private[analytics] val SubstringDfCap = 64L
 
-  /** doc_id + distinct word-3gram shingles. Distinctness is DOC-LOCAL
-    * (array_distinct before the explode): duplicate (doc_id, s) rows can
-    * only arise within one document's own window list, so the per-row set
-    * is exactly the global-distinct set — t20's streaming gate has always
-    * relied on this law — and the map-side form removes the full
-    * (doc_id, s) exchange + hash-aggregate a global `.distinct()` pays
-    * (guide §2.4: the corpus-sized shingle table is the largest
-    * intermediate every dedup operator shares).
+  /** doc_id + distinct word-3gram shingles, one row each: the explode of
+    * the shingle kernel ([[graft.functions.DedupKernels.shingleArray]]).
+    * Distinctness is DOC-LOCAL: duplicate (doc_id, s) rows can only arise
+    * within one document's own window list, so the per-row set is exactly
+    * the global-distinct set — t20's streaming gate has always relied on
+    * this law — and no (doc_id, s) exchange is needed. The kernel caps
+    * pathological documents at the oracle's range(1, 1024): at most the
+    * first 1023 shingle positions.
     */
   private[analytics] def shingles(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("tok"))
-      .filter(size(col("tok")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        // cap matches the oracle's range(1, 1024): both sides consider at
-        // most the first 1023 shingle positions of pathological documents
-        "array_distinct(transform(sequence(0, least(size(tok)-3, 1022)), i -> concat_ws(' ', slice(tok, i+1, 3))))"))
-        .as("s"))
+    docs.select(col("doc_id"),
+      explode(graft.functions.DedupKernels.wordShingles(col("text"))).as("s"))
 
-  /** All 8 permutation minima in ONE aggregation over hashed shingle rows
-    * (doc_id, hm), unpivoted to (doc_id, i, mh) — shuffles |shingles| rows
-    * once instead of 8× blown up through a crossJoin with the parameter
-    * table. Shared by d3 / d10 / d11.
+  /** The signature table of the MinHash family: one row per document with
+    * at least one shingle — `(doc_id, ss, mh0..mh7)`, `ss` its distinct
+    * shingles in ascending binary order (the merge order of
+    * `sea_sorted_intersect_size`), `mhK` the K-th permutation minimum
+    * (`sea_minhash`, bit-identical to the DuckDB twin [[minhashSigSql]]).
+    * One map-only pass over the documents, persisted once (MEMORY_AND_DISK
+    * — executors spill, not OOM): the band join, both verify attaches and
+    * every index write read it. A document signs iff it has ≥ 3 tokens,
+    * i.e. its text holds two spaces; that test runs on the raw text
+    * because a filter over the kernels' output would be pushed below the
+    * projection and run the kernels twice.
     */
-  private[analytics] def minhashStack(sh: DataFrame): DataFrame = {
-    val minCols = MinhashParams.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a.toLong) * col("hm") + lit(b.toLong)) % Prime).as(s"mh$i")
-    }
-    val stackArgs = MinhashParams.indices.map(i => s"$i, mh$i").mkString(", ")
-    sh.groupBy("doc_id")
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("doc_id"),
-        expr(s"stack(${MinhashParams.size}, $stackArgs) AS (i, mh)"))
+  private[graft] def signatures(docs: DataFrame): DataFrame = {
+    val k = graft.functions.DedupKernels
+    docs
+      .filter(expr("locate(' ', text, locate(' ', text) + 1) > 0"))
+      .select(col("doc_id"), k.wordShingles(col("text")).as("sh"))
+      .select(col("doc_id"), sort_array(col("sh")).as("ss"),
+        k.minhash(col("sh")).as("mh"))
+      .select(col("doc_id") +: col("ss") +:
+        MinhashParams.indices.map(i => col("mh")(i).as(s"mh$i")): _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** A signature table's minima as (doc_id, i, mh) rows, 8 per document —
+    * the layout the band joins key on. `unpivot` plans as one Expand over
+    * the signature rows (no generator).
+    */
+  private[graft] def stackedMinhash(sig: DataFrame): DataFrame =
+    sig.unpivot(Array(col("doc_id")),
+        MinhashParams.indices.map(i => col(s"mh$i").as(i.toString)).toArray,
+        "i", "mh")
+      .select(col("doc_id"), col("i").cast("int").as("i"), col("mh"))
+
+  /** Exact Jaccard of signature-table pairs: `pairs` (left, right) doc ids
+    * joined to both documents' signature rows (doc-keyed shuffled joins —
+    * the signature table is corpus-sized, never broadcast), the shared
+    * shingles counted by one merge of the two sorted sets. Adds `common`,
+    * `na`, `nb`, `jaccard` and both sides' minima as `a_mhK` / `b_mhK`.
+    */
+  private def verifiedPairs(pairs: DataFrame, left: String, right: String,
+      sig: DataFrame): DataFrame = {
+    def side(id: String, p: String) = sig.select(col("doc_id").as(id) +:
+      col("ss").as(s"${p}ss") +:
+      MinhashParams.indices.map(i => col(s"mh$i").as(s"${p}mh$i")): _*)
+    pairs
+      .join(side(left, "a_").hint("shuffle_hash"), left)
+      .join(side(right, "b_").hint("shuffle_hash"), right)
+      .withColumn("common", graft.functions.DedupKernels
+        .sortedIntersectSize(col("a_ss"), col("b_ss")))
+      .withColumn("na", size(col("a_ss")))
+      .withColumn("nb", size(col("b_ss")))
+      .withColumn("jaccard",
+        col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
   }
 
   /** LSH band-join candidates at band size `r` — THE selectivity knob the
@@ -128,10 +161,11 @@ object Dedup {
       .distinct()
   }
 
-  /** LSH band-join candidate pairs at band size 1 over a minhash signature
-    * table (doc_id, i, mh) — the shared candidate scheme behind d3's
-    * Jaccard verify and d12's edit-distance verify (d10 runs the same join
-    * across the batch/reference split). Equality on (i, mh) —
+  /** LSH band-join candidate pairs at band size 1 over the stacked minima
+    * (doc_id, i, mh) of [[stackedMinhash]] — the shared candidate scheme
+    * behind d3's Jaccard verify, d11's recall curve and d12's
+    * edit-distance verify (d10 runs the same join across the
+    * batch/reference split). Equality on (i, mh) —
     * O(collisions), never the all-pairs signature comparison;
     * shuffle-hinted because the signature table is corpus-sized (8
     * rows/doc — never broadcastable). Band size r > 1 goes through
@@ -511,10 +545,7 @@ object Dedup {
     * [[queries]] applies the single-byte replay gate to the output only.
     */
   def editDistanceDedup(docs: DataFrame): DataFrame = {
-    val sh = shingles(docs).withColumn("hm", md5long(col("s")) % Prime)
-    val mh = minhashStack(sh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = lshBandCandidates(mh)
+    val cand = lshBandCandidates(stackedMinhash(signatures(docs)))
     val texts = docs.select(col("doc_id"), col("text"))
     cand
       .join(texts.toDF("doc_a", "ta").hint("shuffle_hash"), "doc_a")
@@ -548,8 +579,11 @@ object Dedup {
     */
   private[graft] val D14BandR = 2
 
-  /** The banded signature of a (doc_id, i, mh) minhash stack at band size
-    * `r`, keyed for bucketing by ONE packed long. r=1: bk = i·P + mh
+  /** The banded signature of a signature table (doc_id, mh0..mh7 — see
+    * [[signatures]]) at band size `r`, keyed for bucketing by ONE packed
+    * long: one row per (document, band), read off the document's own row —
+    * a map-only pass (one Expand), no per-band aggregation, so a write
+    * keeps the signature table's partitioning. r=1: bk = i·P + mh
     * (mh < P makes it injective). r=2: band b holds the minima of
     * permutations 2b/2b+1 and bk = ((b·P + m₀)·P + m₁) — bounded by
     * 4P² ≈ 4.1e18 < 2⁶³, injective because both minima are < P. Packing
@@ -576,38 +610,26 @@ object Dedup {
     * closes an odd r's half-empty final k2 pair. (The oracle twin is
     * null-safe minima equality in bandJoinCondSql.)
     */
-  private[graft] def d14BandKeys(mh: DataFrame, idOut: String,
+  private[graft] def d14BandKeys(sig: DataFrame, idOut: String,
       r: Int = D14BandR): DataFrame = {
-    require(r >= 1 && r <= MinhashParams.size,
-      s"band size $r must be in 1..${MinhashParams.size}")
-    if (r == 1)
-      mh.select((col("i") * Prime + col("mh")).as("bk"),
-        col("doc_id").as(idOut))
-    else {
-      val mins = (0 until r).map(k =>
-        min(when(col("i") % r === k, col("mh"))).as(s"m$k"))
-      // a ragged band's missing minima (and an odd r's missing final pair
-      // partner) pad as 0 — see the pad-position argument above. When r
-      // DIVIDES the permutation count no band rags and no position is
-      // absent, so the pad collapses to the plain column — the pre-lift
-      // divisor plan, byte-identical expressions (the isolated d20
-      // median-of-3 receipt in BENCH_LOCAL.md shows the coalesce cost
-      // was ~nil anyway; this keeps the plan provably unchanged)
-      def mc(k: Int) =
-        if (k >= r) lit(0L)
-        else if (MinhashParams.size % r == 0) col(s"m$k")
-        else coalesce(col(s"m$k"), lit(0L))
-      val packed = mh.withColumn("b", (col("i") / r).cast("long"))
-        .groupBy(col("doc_id"), col("b"))
-        .agg(mins.head, mins.tail: _*)
-        .withColumn("bk", (col("b") * Prime + col("m0")) * Prime + mc(1))
-      val tail = (2 until r by 2).map(k => mc(k) * Prime + mc(k + 1))
-      if (tail.isEmpty)
-        packed.select(col("bk"), col("doc_id").as(idOut))
-      else
-        packed.select(col("bk"), array(tail: _*).as("k2"),
-          col("doc_id").as(idOut))
-    }
+    val n = MinhashParams.size
+    require(r >= 1 && r <= n, s"band size $r must be in 1..$n")
+    // position o of band b: the minimum b·r + o, or the 0 pad past the
+    // band's width or the signature's end
+    def m(b: Int, o: Int): Column =
+      if (o < r && b * r + o < n) col(s"mh${b * r + o}") else lit(0L)
+    def bk(b: Int): Column =
+      if (r == 1) lit(b.toLong * Prime) + m(b, 0)
+      else (lit(b.toLong * Prime) + m(b, 0)) * Prime + m(b, 1)
+    def k2(b: Int): Column =
+      array((2 until r by 2).map(o => m(b, o) * Prime + m(b, o + 1)): _*)
+    val bands = (0 until (n + r - 1) / r).map(b =>
+      (if (r <= 2) bk(b) else struct(bk(b).as("bk"), k2(b).as("k2")))
+        .as(b.toString))
+    val rows = sig.unpivot(Array(col("doc_id")), bands.toArray, "b", "v")
+    if (r <= 2) rows.select(col("v").as("bk"), col("doc_id").as(idOut))
+    else rows.select(col("v.bk").as("bk"), col("v.k2").as("k2"),
+      col("doc_id").as(idOut))
   }
 
   /** Candidate join of two [[d14BandKeys]] frames/tables at band size r:
@@ -782,7 +804,12 @@ object Dedup {
                 (col("b") * rOld + col("p.o")).cast("int").as("i"),
                 col("p.mh").as("mh"))
           }
-        d14BandKeys(stack, "ref_id", rNew)
+        // back to one signature row per document, then re-band
+        val sig = stack.groupBy("doc_id").agg(
+          min(when(col("i") === 0, col("mh"))).as("mh0"),
+          MinhashParams.indices.tail.map(k =>
+            min(when(col("i") === k, col("mh"))).as(s"mh$k")): _*)
+        d14BandKeys(sig, "ref_id", rNew)
       }
       d14WriteMeta(s, dir, rNew)
     }
@@ -897,11 +924,9 @@ object Dedup {
       dir: String): Unit = {
     val docs = Tables(s, dir).documents
     val ref = docs.filter(!col("source").isin(BatchSources: _*))
-    val shR = shingles(ref).withColumn("hm", md5long(col("s")) % Prime)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mhR = minhashStack(shR)
+    val sigR = signatures(ref)
     // the three DATA-table writes are independent consumers of the ONE
-    // persisted shingle frame (block-level locks serialize the first
+    // persisted signature table (block-level locks serialize the first
     // materialization; every later read is a cache hit) — submit them
     // concurrently so 8-task bucket writes and driver-side commits
     // overlap instead of queueing (guide §2.6). The one-row meta commits
@@ -912,16 +937,25 @@ object Dedup {
     // the wrong key scheme — meta-last keeps meta a commit marker.
     graft.ops.Bucketing.concurrently(Seq(
       () => graft.ops.Bucketing.writeBucketed(
-        d14BandKeys(mhR, "ref_id"), d14Table("d14_ref_bands", dir), "bk", 8),
-      () => graft.ops.Bucketing.writeBucketed(
-        shR.select(col("doc_id").as("ref_id"), col("s")),
+        d14BandKeys(sigR, "ref_id"),
+        d14Table("d14_ref_bands", dir), "bk", 8),
+      () => graft.ops.Bucketing.writeBucketed(indexShingles(sigR),
         d14Table("d14_ref_shingles", dir), "ref_id", 8),
-      () => graft.ops.Bucketing.writeBucketed(
-        shR.groupBy(col("doc_id").as("ref_id")).agg(count(lit(1)).as("nb")),
+      () => graft.ops.Bucketing.writeBucketed(indexSizes(sigR),
         d14Table("d14_ref_sizes", dir), "ref_id", 8)))
     d14WriteMeta(s, dir, D14BandR)
-    shR.unpersist()
+    sigR.unpersist()
   }
+
+  /** The index's (ref_id, s) shingle rows and (ref_id, nb) sizes, read off
+    * a signature table — the layouts d14Query's and t20's verify joins
+    * read.
+    */
+  private def indexShingles(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id").as("ref_id"), explode(col("ss")).as("s"))
+
+  private def indexSizes(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id").as("ref_id"), size(col("ss")).cast("long").as("nb"))
 
   /** d14 index APPEND — the incremental half that makes the persisted
     * index live: the ACCEPTED (novel) documents of a just-deduped batch
@@ -948,24 +982,20 @@ object Dedup {
     // accepted ids are batch-sized but corpus-unbounded — shuffled
     // semi-join, never a broadcast of an id set that grows with ingest
     val acc = docs.join(ids.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-    val shA = shingles(acc).withColumn("hm", md5long(col("s")) % Prime)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mhA = minhashStack(shA)
+    val sigA = signatures(acc)
     // read the stored banding ONCE on the calling thread (it is a catalog +
     // head() lookup), then run the three independent appends concurrently —
     // same §2.6 overlap as d14Build; each append targets a different table
     val rStored = d14IndexR(s, dir)
     graft.ops.Bucketing.concurrently(Seq(
       () => graft.ops.Bucketing.appendBucketed(
-        d14BandKeys(mhA, "ref_id", rStored),
+        d14BandKeys(sigA, "ref_id", rStored),
         d14Table("d14_ref_bands", dir), "bk", 8),
-      () => graft.ops.Bucketing.appendBucketed(
-        shA.select(col("doc_id").as("ref_id"), col("s")),
+      () => graft.ops.Bucketing.appendBucketed(indexShingles(sigA),
         d14Table("d14_ref_shingles", dir), "ref_id", 8),
-      () => graft.ops.Bucketing.appendBucketed(
-        shA.groupBy(col("doc_id").as("ref_id")).agg(count(lit(1)).as("nb")),
+      () => graft.ops.Bucketing.appendBucketed(indexSizes(sigA),
         d14Table("d14_ref_sizes", dir), "ref_id", 8)))
-    shA.unpersist()
+    sigA.unpersist()
   }
 
   /** d14 index COMPACTION — the lifecycle pass between [[d14Append]] waves:
@@ -1040,44 +1070,16 @@ object Dedup {
       sources: Seq[String] = BatchSources): org.apache.spark.sql.DataFrame = {
     val docs = Tables(s, dir).documents
     val batchDocs = docs.filter(col("source").isin(sources: _*))
-    val batch = batchDocs.select(col("doc_id"), col("source"))
-    val shB = shingles(batchDocs)
-      .withColumn("hm", md5long(col("s")) % Prime)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mhB = minhashStack(shB)
+    val sigB = signatures(batchDocs)
     val r = d14IndexR(s, dir)
     graft.ops.Bucketing.writeBucketed(
-      d14BandKeys(mhB, "doc_id", r),
+      d14BandKeys(sigB, "doc_id", r),
       d14Table("d14_batch_bands", dir), "bk", 8)
     val cand = bandCandJoin(
       s.table(d14Table("d14_batch_bands", dir)).hint("merge"),
       s.table(d14Table("d14_ref_bands", dir)).hint("merge"), r)
       .select(col("doc_id"), col("ref_id")).distinct()
-    val sizesB = shB.groupBy("doc_id").agg(count(lit(1)).as("na"))
-    val common = cand
-      .join(shB.select(col("doc_id"), col("s")).hint("shuffle_hash"),
-        "doc_id")
-      .join(s.table(d14Table("d14_ref_shingles", dir)).hint("shuffle_hash"),
-        Seq("ref_id", "s"))
-      .groupBy("doc_id", "ref_id").agg(count(lit(1)).as("common"))
-    val dups = common
-      .join(sizesB.hint("shuffle_hash"), "doc_id")
-      .join(s.table(d14Table("d14_ref_sizes", dir)).hint("shuffle_hash"),
-        "ref_id")
-      .withColumn("jaccard",
-        col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
-    // best match per doc in ONE keyed agg (d14QueryFrame's rule, guide
-    // §2.4 — one exchange instead of agg + re-join + agg): lexicographic
-    // max over (jaccard, −ref_id) IS (max jaccard, then min ref_id)
-    val best = dups.groupBy("doc_id")
-      .agg(max(struct(col("jaccard"), (-col("ref_id")).as("nref"))).as("m"))
-      .select(col("doc_id"), (-col("m.nref")).as("match_id"),
-        round(col("m.jaccard"), 6).as("match_jaccard"))
-    batch.join(best.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        col("match_id").isNull.as("novel"),
-        col("match_id"), col("match_jaccard"))
+    d14Verdict(s, dir, batchDocs, sigB, cand)
   }
 
   /** [[d14Query]]'s verify cascade over an IN-MEMORY batch frame — the
@@ -1092,58 +1094,64 @@ object Dedup {
     */
   private[graft] def d14QueryFrame(s: org.apache.spark.sql.SparkSession,
       dir: String, batchDocs: DataFrame): DataFrame = {
-    val batch = batchDocs.select(col("doc_id"), col("source"))
-    val shB = shingles(batchDocs)
-      .withColumn("hm", md5long(col("s")) % Prime)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mhB = minhashStack(shB)
+    val sigB = signatures(batchDocs)
     val r = d14IndexR(s, dir)
-    val cand = bandCandJoin(d14BandKeys(mhB, "doc_id", r),
+    val cand = bandCandJoin(d14BandKeys(sigB, "doc_id", r),
       s.table(d14Table("d14_ref_bands", dir)).hint("merge"), r)
       .select(col("doc_id"), col("ref_id")).distinct()
-    val sizesB = shB.groupBy("doc_id").agg(count(lit(1)).as("na"))
+    // materialize the batch-sized verdict HERE (it gets checkpointed by
+    // every caller anyway — the t22 body needs the lineage severed before
+    // the append mutates the tables it read) so sigB can unpersist NOW:
+    // leaving one cached signature table per micro-batch for the session's
+    // life is an unbounded leak in the production ingest loop (ADVICE r12)
+    val verdict = d14Verdict(s, dir, batchDocs, sigB, cand).localCheckpoint(true)
+    sigB.unpersist()
+    verdict
+  }
+
+  /** The verify + best-match tail [[d14Query]] and [[d14QueryFrame]]
+    * share: the candidates' batch shingles (exploded from the batch
+    * signature table) against the stored shingle and size tables — the
+    * index keeps its (ref_id, s) row layout, which t20's streaming gate
+    * reads too — then the best match per doc in ONE keyed agg (guide §2.4
+    * — one exchange instead of agg + re-join + agg): lexicographic max
+    * over (jaccard, −ref_id) IS (max jaccard, then min ref_id).
+    */
+  private def d14Verdict(s: org.apache.spark.sql.SparkSession, dir: String,
+      batchDocs: DataFrame, sigB: DataFrame, cand: DataFrame): DataFrame = {
     val common = cand
-      .join(shB.select(col("doc_id"), col("s")).hint("shuffle_hash"),
-        "doc_id")
+      .join(sigB.select(col("doc_id"), explode(col("ss")).as("s"))
+        .hint("shuffle_hash"), "doc_id")
       .join(s.table(d14Table("d14_ref_shingles", dir)).hint("shuffle_hash"),
         Seq("ref_id", "s"))
       .groupBy("doc_id", "ref_id").agg(count(lit(1)).as("common"))
     val dups = common
-      .join(sizesB.hint("shuffle_hash"), "doc_id")
+      .join(sigB.select(col("doc_id"), size(col("ss")).as("na"))
+        .hint("shuffle_hash"), "doc_id")
       .join(s.table(d14Table("d14_ref_sizes", dir)).hint("shuffle_hash"),
         "ref_id")
       .withColumn("jaccard",
         col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
       .filter(col("jaccard") >= JaccardThreshold)
-    // best match per doc in ONE keyed agg (t20's rule): lexicographic max
-    // over (jaccard, −ref_id) IS (max jaccard, then min ref_id)
     val best = dups.groupBy("doc_id")
       .agg(max(struct(col("jaccard"), (-col("ref_id")).as("nref"))).as("m"))
       .select(col("doc_id"), (-col("m.nref")).as("match_id"),
         round(col("m.jaccard"), 6).as("match_jaccard"))
-    // materialize the batch-sized verdict HERE (it gets checkpointed by
-    // every caller anyway — the t22 body needs the lineage severed before
-    // the append mutates the tables it read) so shB can unpersist NOW:
-    // leaving one cached shingle frame per micro-batch for the session's
-    // life is an unbounded leak in the production ingest loop (ADVICE r12)
-    val verdict = batch
+    batchDocs.select(col("doc_id"), col("source"))
       .join(best.hint("shuffle_hash"), Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),
         col("match_id").isNull.as("novel"),
         col("match_id"), col("match_jaccard"))
-      .localCheckpoint(true)
-    shB.unpersist()
-    verdict
   }
 
-  /** d10's shared front half: the batch spine, the persisted capped-free
-    * shingle/signature tables, and the batch×reference candidate stage
+  /** d10's shared front half: the batch spine, the persisted signature
+    * table ([[signatures]]), and the batch×reference candidate stage
     * with the LSH banding knob `r` (rows per band). r = 1 is the direct
     * (i, mh) equi-join — d10_cross_corpus's exact plan; r > 1 groups each
     * signature into 8/r sorted band keys, thinning the collision stream
     * at the S-curve-priced recall cost d11 measures (the production
     * instrument for the collision-amplifier superlinearity the sf10
-    * analyses name). Returns (batch spine, persisted shingles, candidates).
+    * analyses name). Returns (batch spine, signatures, candidates).
     */
   private def d10Parts(s: org.apache.spark.sql.SparkSession, dir: String,
       r: Int): (DataFrame, DataFrame, DataFrame) = {
@@ -1156,11 +1164,8 @@ object Dedup {
         .isin("src0", "src1", "src2", "src3", "src4"))
       .select(col("doc_id"), col("source"))
     val batchIds = batch.select(col("doc_id"))
-    val sh = shingles(docs)
-      .withColumn("hm", md5long(col("s")) % Prime)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mh = minhashStack(sh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sig = signatures(docs)
+    val mh = stackedMinhash(sig)
     // membership split: batch ids are corpus-fraction-sized — shuffled
     // semi/anti joins, never a broadcast of the id set
     val mhB = mh.join(batchIds.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
@@ -1186,25 +1191,16 @@ object Dedup {
           .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("ref_id"))
           .distinct()
       }
-    (batch, sh, cand)
+    (batch, sig, cand)
   }
 
   /** d10 with the banding knob surfaced — r = 1 IS d10_cross_corpus. */
   private[graft] def d10With(s: org.apache.spark.sql.SparkSession,
       dir: String, r: Int): DataFrame = {
-    val (batch, sh, cand) = d10Parts(s, dir, r)
-    // exact-Jaccard verification restricted to the candidates (d3's shape)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = cand
-      .join(sh.select(col("doc_id"), col("s")).hint("shuffle_hash"), "doc_id")
-      .join(sh.select(col("doc_id").as("ref_id"), col("s"))
-        .hint("shuffle_hash"), Seq("ref_id", "s"))
-      .groupBy("doc_id", "ref_id").agg(count(lit(1)).as("common"))
-    val dups = common
-      .join(sizes.toDF("doc_id", "na").hint("shuffle_hash"), "doc_id")
-      .join(sizes.toDF("ref_id", "nb").hint("shuffle_hash"), "ref_id")
-      .withColumn("jaccard",
-        col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
+    val (batch, sig, cand) = d10Parts(s, dir, r)
+    // exact-Jaccard verification restricted to the candidates — d3's
+    // shape: both signature rows attached, one sorted-set merge per pair
+    val dups = verifiedPairs(cand, "doc_id", "ref_id", sig)
       .filter(col("jaccard") >= JaccardThreshold)
     // best match per batch doc in ONE keyed hash agg (no window; guide
     // §2.4 — one exchange instead of agg + re-join + agg): lexicographic
@@ -1509,50 +1505,28 @@ object Dedup {
     // MinHash (8 perms) + LSH band join (band size 1) → candidates →
     // exact-Jaccard verification. est_sim = matching minhashes / 8.
     "d3_minhash_lsh" -> { (s, dir) =>
-      val sh = shingles(Tables(s, dir).documents)
-        .withColumn("hm", md5long(col("s")) % Prime)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the signature table is tiny (8 rows/doc) and feeds four join
-      // branches — persist it so the aggregation runs once, not per branch
-      val mh = minhashStack(sh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // LSH band join (shared scheme — [[lshBandCandidates]])
-      val cand = lshBandCandidates(mh)
-      // exact-Jaccard verification restricted to the CANDIDATES: attach each
-      // side's shingle set by doc key and count matches per pair — at corpus
-      // scale this touches |cand| × shingles-per-doc rows, never the full
-      // shingle self-join's all-co-occurring-pairs blowup (that full form is
-      // d2's job — it IS the exact all-pairs op)
-      // shuffle-hinted: the candidate set is tiny locally but UNBOUNDED at
-      // corpus scale — AQE would happily broadcast it here and hide the
-      // shape that matters (the same trap d5's vector re-attach guards
-      // against); hash-partitioned joins on the doc/pair keys scale linearly
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val common = cand
-        .join(sh.select(col("doc_id").as("doc_a"), col("s"))
-          .hint("shuffle_hash"), "doc_a")
-        .join(sh.select(col("doc_id").as("doc_b"), col("s"))
-          .hint("shuffle_hash"), Seq("doc_b", "s"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
-      val kept = common
-        .join(sizes.toDF("doc_a", "na").hint("shuffle_hash"), "doc_a")
-        .join(sizes.toDF("doc_b", "nb").hint("shuffle_hash"), "doc_b")
-        .withColumn("jaccard",
-          col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
+      val sig = signatures(Tables(s, dir).documents)
+      // LSH band join over the stacked minima (shared scheme —
+      // [[lshBandCandidates]])
+      val cand = lshBandCandidates(stackedMinhash(sig))
+      // exact-Jaccard verification restricted to the CANDIDATES: attach
+      // both documents' signature rows by doc key and merge their sorted
+      // shingle sets — one unit of work per candidate, where a join of
+      // each candidate to its shingle rows builds |cand| × shingles-per-doc
+      // rows (4.9M at sf0.1) only to regroup them. The all-co-occurring
+      // form is d2's job — it IS the exact all-pairs op. Shuffle-hinted:
+      // the candidate set is tiny locally but UNBOUNDED at corpus scale —
+      // AQE would happily broadcast it here and hide the shape that
+      // matters (the same trap d5's vector re-attach guards against)
+      verifiedPairs(cand, "doc_a", "doc_b", sig)
         .filter(col("jaccard") >= JaccardThreshold)
-      // est_sim only for the SURVIVORS: the threshold filter runs before
-      // the signature re-attach, so the 8-row-per-doc double join prices
-      // |kept| pairs (the duplicates), not every band collision — at
-      // corpus scale collisions outnumber survivors by orders of magnitude
-      kept
-        .join(mh.as("x").hint("shuffle_hash"), col("doc_a") === col("x.doc_id"))
-        .join(mh.as("y").hint("shuffle_hash"),
-          col("doc_b") === col("y.doc_id") && col("x.i") === col("y.i"))
-        .groupBy(col("doc_a"), col("doc_b"),
+        // the minima rode along on the attached rows, so est_sim is a
+        // per-survivor comparison, no re-attach join
+        .select(col("doc_a"), col("doc_b"),
+          (MinhashParams.indices
+            .map(i => when(col(s"a_mh$i") === col(s"b_mh$i"), 1).otherwise(0))
+            .reduce(_ + _) / 8.0).as("est_sim"),
           round(col("jaccard"), 6).as("jaccard"))
-        .agg((sum(when(col("x.mh") === col("y.mh"), 1).otherwise(0)) / 8.0)
-          .as("est_sim"))
-        .select(col("doc_a"), col("doc_b"), col("est_sim"), col("jaccard"))
     },
 
     // Character-level edit-distance verification of LSH candidates — the
@@ -1595,14 +1569,15 @@ object Dedup {
     // is the batch form). Batch = src0-src4 (p18's target-domain split,
     // reused); every batch doc reports whether it is NOVEL w.r.t. the
     // reference corpus, plus its best reference match. Shapes at 100 TB:
-    // ONE minhash signature pass over both corpora together (the d3 agg —
-    // signatures are 8 rows/doc), membership split by a shuffled semi/anti
-    // join against the batch-id set (corpus-sized, never broadcast), the
-    // batch×ref band join is O(cross collisions) — strictly cheaper than
-    // d3's full self-join because one side is the (much smaller) batch —
-    // and exact-Jaccard verification touches candidates only. Best-match
-    // selection is two keyed hash aggs (max jaccard, then min ref id at
-    // that jaccard), never a window over the candidate stream.
+    // ONE signature table over both corpora together (d3's map-only pass,
+    // one row per doc), membership split of its stacked minima by a
+    // shuffled semi/anti join against the batch-id set (corpus-sized,
+    // never broadcast), the batch×ref band join is O(cross collisions) —
+    // strictly cheaper than d3's full self-join because one side is the
+    // (much smaller) batch — and exact-Jaccard verification is d3's: both
+    // signature rows attached, one sorted-set merge per candidate. Best
+    // match is one keyed hash agg (max jaccard, then min ref id at that
+    // jaccard), never a window over the candidate stream.
     "d10_cross_corpus" -> { (s, dir) => d10With(s, dir, 1) },
 
     // Persisted incremental-dedup INDEX — s12's build/serve amortization +
@@ -1739,20 +1714,10 @@ object Dedup {
     // production runs this on a SAMPLE, and the compare join is
     // pair-keyed and shuffled (truth sets are unbounded at 100 TB).
     "d11_lsh_recall" -> { (s, dir) =>
-      val sh = shingles(Tables(s, dir).documents)
-        .withColumn("hm", md5long(col("s")) % Prime)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // both sides of the band self-join consume the signatures — persist
-      // so the aggregation over the shingle table runs once (d3's rule)
-      val mh = minhashStack(sh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = mh.as("x").hint("shuffle_hash")
-        .join(mh.as("y"),
-          col("x.i") === col("y.i") && col("x.mh") === col("y.mh") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+      val sig = signatures(Tables(s, dir).documents)
+      val cand = lshBandCandidates(stackedMinhash(sig))
+      val sh = sig.select(col("doc_id"), explode(col("ss")).as("s"))
+      val sizes = sig.select(col("doc_id"), size(col("ss")).as("n"))
       val common = sh.as("a")
         .join(sh.as("b").hint("shuffle_hash"),
           col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -1849,7 +1814,7 @@ object Dedup {
   }
 
   /** The minhash signature CTE block (consts → hashed → mh) — the SQL twin
-    * of [[minhashStack]], shared by the d3/d10/d12 oracles. Expects an `sh`
+    * of [[signatures]]' minima, shared by the d3/d10/d12 oracles. Expects an `sh`
     * CTE (doc_id, s) in scope.
     */
   private def minhashSigSql: String = {
@@ -1871,8 +1836,9 @@ object Dedup {
       |         FROM mh x JOIN mh y ON x.i = y.i AND x.mh = y.mh
       |           AND x.doc_id < y.doc_id)""".stripMargin
 
-  /** Uncapped form — d3 only (its candidates-only verify join is keyed by
-    * (doc, s), so the hot-shingle hazard the cap exists for never applies).
+  /** Uncapped form — the MinHash family (its verify merges two documents'
+    * sets per candidate, so the hot-shingle hazard the cap exists for never
+    * applies).
     */
   private def jaccardOracleCte: String =
     s"""$shinglesSql,

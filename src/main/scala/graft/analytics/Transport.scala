@@ -44,12 +44,11 @@ object Transport {
     * LSH-bucket state itself is hash-partitioned across executors, which
     * is where the scale lives.
     *
-    * Signatures are computed per-ROW as array expressions (Spark allows one
-    * stateful op per stream, so no pre-state aggregation): shingles as an
-    * array column, each of the 8 permutations an array_min. Same
-    * md5-derived hashes as d3, so the DuckDB oracle replays them
-    * bit-for-bit. Documents under 3 tokens sign nothing and always
-    * survive.
+    * Signatures are computed per-ROW (Spark allows one stateful op per
+    * stream, so no pre-state aggregation) by the same kernels as d3's
+    * signature table — `sea_minhash(sea_word_shingles(text))` — so the
+    * DuckDB oracle replays them bit-for-bit. Documents under 3 tokens sign
+    * nothing (null minima explode to no rows) and always survive.
     *
     * @return distinct doc_ids flagged as duplicates (keepers absent)
     */
@@ -69,9 +68,7 @@ object Transport {
       to_json(struct(col("doc_id"), col("text"))).cast("binary").as("payload"))
       .orderBy(xxhash64(col("doc_id")))
       .write.format("ss").mode("overwrite").save(out)
-    val sigExprs = Dedup.MinhashParams.map { case (a, b) =>
-      s"array_min(transform(hm, h -> (${a}L * h + ${b}L) % ${Dedup.Prime}L))"
-    }.mkString(", ")
+    val k = graft.functions.DedupKernels
     val sigRows = s.readStream.format("ss")
       .option("maxMessagesPerTrigger", cap.toString)
       .load(out)
@@ -79,18 +76,8 @@ object Transport {
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id LONG, text STRING")))
       .select(col("j.doc_id").as("doc_id"),
-        split(col("j.text"), " ").as("tok"))
-      .withColumn("sh", expr(
-        "CASE WHEN size(tok) >= 3 THEN " +
-          "transform(sequence(0, least(size(tok)-3, 1022)), " +
-          "i -> concat_ws(' ', slice(tok, i+1, 3))) " +
-          "ELSE array() END"))
-      .withColumn("hm", expr(
-        "transform(sh, x -> cast(conv(substring(md5(cast(x AS binary)), " +
-          s"1, 15), 16, 10) AS bigint) % ${Dedup.Prime}L)"))
-      .select(col("doc_id"),
-        posexplode(expr(s"array($sigExprs)")).as(Seq("band", "mh")))
-      .filter(col("mh").isNotNull) // docs under 3 tokens sign nothing
+        posexplode(k.minhash(k.wordShingles(col("j.text"))))
+          .as(Seq("band", "mh")))
       .as[(Long, Int, Long)]
     val dups = sigRows.groupByKey(r => (r._2, r._3))
       .flatMapGroupsWithState(OM.Append(), GroupStateTimeout.NoTimeout())(
@@ -197,31 +184,19 @@ object Transport {
       .head().getAs[Array[Byte]]("bf")
     // ~4 micro-batches at any scale (the t15–t19 no-floor discipline)
     val cap = math.max(1L, batchDocs.count() / 4)
-    val sigExprs = Dedup.MinhashParams.map { case (a, b) =>
-      s"array_min(transform(hm, h -> (${a}L * h + ${b}L) % ${Dedup.Prime}L))"
-    }.mkString(", ")
+    val k = graft.functions.DedupKernels
     val enriched = s.readStream.format("ss")
       .option("maxMessagesPerTrigger", cap.toString)
       .load(out)
       .select(from_json(col("payload").cast("string"),
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id LONG, source STRING, text STRING")).as("j"))
+      // the signature table's kernels, per row (d14's band keys at the
+      // index's OWN banding follow — the stream side MUST sign with the
+      // stored table's exact key scheme); empty docs sign nothing (null
+      // minima propagate to null keys)
       .select(col("j.doc_id").as("doc_id"), col("j.source").as("source"),
-        split(col("j.text"), " ").as("tok"))
-      // doc-local distinct (t18's rule): same (doc, s) set as
-      // Dedup.shingles' global distinct, no streaming-side state
-      .withColumn("sh", expr(
-        "CASE WHEN size(tok) >= 3 THEN " +
-          "array_distinct(transform(sequence(0, least(size(tok)-3, 1022)), " +
-          "i -> concat_ws(' ', slice(tok, i+1, 3)))) " +
-          "ELSE array() END"))
-      .withColumn("hm", expr(
-        "transform(sh, x -> cast(conv(substring(md5(cast(x AS binary)), " +
-          s"1, 15), 16, 10) AS bigint) % ${Dedup.Prime}L)"))
-      // d14's band keys at the index's OWN banding (the stream side MUST
-      // sign with the stored table's exact key scheme); empty docs sign
-      // nothing (array_min of empty = null, which propagates to null keys)
-      .withColumn("sig", expr(s"array($sigExprs)"))
+        k.minhash(k.wordShingles(col("j.text"))).as("sig"))
     val probed =
       if (idxR <= 2)
         enriched
@@ -279,11 +254,7 @@ object Transport {
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id LONG, source STRING, text STRING")).as("j"))
       .select(col("j.doc_id").as("doc_id"),
-        split(col("j.text"), " ").as("tok"))
-      .filter(size(col("tok")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        "transform(sequence(0, least(size(tok)-3, 1022)), " +
-          "i -> concat_ws(' ', slice(tok, i+1, 3)))"))).as("s"))
+        explode(k.wordShingles(col("j.text"))).as("s"))
       .join(candDocs.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizesC = shC.groupBy("doc_id").agg(count(lit(1)).as("na"))
@@ -1332,14 +1303,11 @@ object Transport {
         .select(from_json(col("payload").cast("string"),
           org.apache.spark.sql.types.StructType.fromDDL(
             "doc_id LONG, lang STRING, text STRING")).as("j"))
-        .select(col("j.doc_id"), col("j.lang"),
-          split(col("j.text"), " ").as("tok"))
-        .filter(size(col("tok")) >= 3)
-        // doc-local distinct via array_distinct — same (doc_id, s) set as
-        // Dedup.shingles' global distinct, without streaming-side state
-        .select(col("doc_id"), col("lang"), explode(array_distinct(expr(
-          "transform(sequence(0, least(size(tok)-3, 1022)), " +
-            "i -> concat_ws(' ', slice(tok, i+1, 3)))"))).as("s"))
+        // Dedup.shingles' kernel per row: doc-local distinct, so the same
+        // (doc_id, s) set without streaming-side state
+        .select(col("j.doc_id").as("doc_id"), col("j.lang").as("lang"),
+          explode(graft.functions.DedupKernels.wordShingles(col("j.text")))
+            .as("s"))
         .filter(graft.functions.BloomFunctions
           .mightContain(lit(blob), xxhash64(col("s"))))
         // exact confirm: stream-static semi-join; the bench side is

@@ -313,6 +313,27 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("d3 verifies candidates off one signature table: no Generate, no " +
+      "broadcast, exactly one band self-join") {
+    // the signature table is one map-only kernel pass (a shingle explode
+    // would show as Generate), both verify attaches shuffle (the table is
+    // corpus-sized), and the (i, mh) band self-join runs exactly once: the
+    // verify is a sorted-set merge per candidate, never a join through the
+    // shingle rows or a re-attach of the stacked minima
+    val p = planOf("d3_minhash_lsh")
+    val blocks = nodeBlocks(p)
+    assert(!blocks.exists(_._1 == "Generate"), "d3 plans a Generate")
+    assert(!blocks.exists(_._1.startsWith("Broadcast")),
+      "d3 broadcasts a corpus-sized side")
+    val bandJoins = blocks.filter { case (n, b) =>
+      n.endsWith("Join") &&
+        b.linesIterator.exists(l => l.contains("keys") && l.contains(" mh#"))
+    }
+    assert(bandJoins.size == 1, s"${bandJoins.size} (i, mh) band joins in d3")
+    assert(p.contains("sea_sorted_intersect_size"),
+      "d3's verify lost its sorted-set merge")
+  }
+
   test("d12's candidate and text-attach joins shuffle; the edit distance " +
       "is threshold-bounded") {
     // same discipline as d3 (signatures and texts are corpus-sized — no

@@ -179,10 +179,8 @@ class DedupSpec extends AnyFunSuite {
     //     threshold — recall survives the selectivity gain.
     import org.apache.spark.sql.functions._
     val docs = graft.analytics.Tables(spark, TestSession.sfDir).documents
-    val sh = Dedup.shingles(docs)
-      .withColumn("hm", Dedup.md5long(col("s")) % Dedup.Prime)
-      .persist()
-    val mh = Dedup.minhashStack(sh).persist()
+    val sh = Dedup.signatures(docs)
+    val mh = Dedup.stackedMinhash(sh).persist()
     try {
       val pairs = (df: org.apache.spark.sql.DataFrame) =>
         df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -214,13 +212,11 @@ class DedupSpec extends AnyFunSuite {
     // yield exactly the pairs the exact struct-key band join yields
     import org.apache.spark.sql.functions._
     val docs = graft.analytics.Tables(spark, TestSession.sfDir).documents
-    val sh = Dedup.shingles(docs)
-      .withColumn("hm", Dedup.md5long(col("s")) % Dedup.Prime)
-      .persist()
-    val mh = Dedup.minhashStack(sh).persist()
+    val sh = Dedup.signatures(docs)
+    val mh = Dedup.stackedMinhash(sh).persist()
     try {
-      val viaPacked = Dedup.d14BandKeys(mh, "doc_a").as("x")
-        .join(Dedup.d14BandKeys(mh, "doc_b").as("y"),
+      val viaPacked = Dedup.d14BandKeys(sh, "doc_a").as("x")
+        .join(Dedup.d14BandKeys(sh, "doc_b").as("y"),
           col("x.bk") === col("y.bk") && col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b").distinct()
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -295,9 +291,8 @@ class DedupSpec extends AnyFunSuite {
     // scratch — the unpack∘repack roundtrip loses nothing
     val ref = Tables(spark, dir).documents
       .filter(!col("source").isin("src0", "src1", "src2", "src3", "src4"))
-    val sh = Dedup.shingles(ref)
-      .withColumn("hm", Dedup.md5long(col("s")) % Dedup.Prime)
-    val fresh = Dedup.d14BandKeys(Dedup.minhashStack(sh), "ref_id", 4)
+    val sh = Dedup.signatures(ref)
+    val fresh = Dedup.d14BandKeys(sh, "ref_id", 4)
       .collect().map(_.toSeq.map {
         case a: scala.collection.Seq[_] => a.toList
         case v => v
@@ -305,10 +300,10 @@ class DedupSpec extends AnyFunSuite {
     assert(rows() == fresh, "rebuild(4) diverged from a fresh r=4 signing")
     // (bk, k2) equality at r=4 IS the exact struct band join — the
     // escalated oracle's tuple law, not a hash approximation
-    val mh = Dedup.minhashStack(sh).persist()
+    val mh = Dedup.stackedMinhash(sh).persist()
     try {
-      val viaSplit = Dedup.d14BandKeys(mh, "doc_a", 4).as("x")
-        .join(Dedup.d14BandKeys(mh, "doc_b", 4).as("y"),
+      val viaSplit = Dedup.d14BandKeys(sh, "doc_a", 4).as("x")
+        .join(Dedup.d14BandKeys(sh, "doc_b", 4).as("y"),
           col("x.bk") === col("y.bk") && col("x.k2") === col("y.k2") &&
             col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b").distinct()
@@ -322,7 +317,7 @@ class DedupSpec extends AnyFunSuite {
     // one band of all 8 minima (near-exact dup detection), k2 three wide
     Dedup.d14Rebuild(spark, dir, 8)
     assert(Dedup.d14IndexR(spark, dir) == 8)
-    val fresh8 = Dedup.d14BandKeys(Dedup.minhashStack(sh), "ref_id", 8)
+    val fresh8 = Dedup.d14BandKeys(sh, "ref_id", 8)
       .collect().map(_.toSeq.map {
         case a: scala.collection.Seq[_] => a.toList
         case v => v
