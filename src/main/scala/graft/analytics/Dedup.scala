@@ -101,8 +101,8 @@ object Dedup {
   }
 
   /** A signature table's minima as (doc_id, i, mh) rows, 8 per document —
-    * the layout the band joins key on. `unpivot` plans as one Expand over
-    * the signature rows (no generator).
+    * the layout of the struct-key reference [[bandCandidates]].
+    * `unpivot` plans as one Expand over the signature rows (no generator).
     */
   private[graft] def stackedMinhash(sig: DataFrame): DataFrame =
     sig.unpivot(Array(col("doc_id")),
@@ -110,20 +110,22 @@ object Dedup {
         "i", "mh")
       .select(col("doc_id"), col("i").cast("int").as("i"), col("mh"))
 
-  /** Exact Jaccard of signature-table pairs: `pairs` (left, right) doc ids
-    * joined to both documents' signature rows (doc-keyed shuffled joins —
-    * the signature table is corpus-sized, never broadcast), the shared
-    * shingles counted by one merge of the two sorted sets. Adds `common`,
-    * `na`, `nb`, `jaccard` and both sides' minima as `a_mhK` / `b_mhK`.
+  /** Exact Jaccard of signature-table pairs — THE verify of the MinHash
+    * family (d3, d10, d14, t20): `pairs` (left, right) doc ids joined to
+    * the left id's row of `sigL` and the right id's row of `sigR`
+    * (doc-keyed shuffled joins — signature tables are corpus-sized, never
+    * broadcast), the shared shingles counted by one merge of the two
+    * sorted sets. A self-join passes one table twice. Adds `common`, `na`,
+    * `nb`, `jaccard` and both sides' minima as `a_mhK` / `b_mhK`.
     */
   private def verifiedPairs(pairs: DataFrame, left: String, right: String,
-      sig: DataFrame): DataFrame = {
-    def side(id: String, p: String) = sig.select(col("doc_id").as(id) +:
-      col("ss").as(s"${p}ss") +:
-      MinhashParams.indices.map(i => col(s"mh$i").as(s"${p}mh$i")): _*)
+      sigL: DataFrame, sigR: DataFrame): DataFrame = {
+    def side(sig: DataFrame, id: String, p: String) =
+      sig.select(col("doc_id").as(id) +: col("ss").as(s"${p}ss") +:
+        MinhashParams.indices.map(i => col(s"mh$i").as(s"${p}mh$i")): _*)
     pairs
-      .join(side(left, "a_").hint("shuffle_hash"), left)
-      .join(side(right, "b_").hint("shuffle_hash"), right)
+      .join(side(sigL, left, "a_").hint("shuffle_hash"), left)
+      .join(side(sigR, right, "b_").hint("shuffle_hash"), right)
       .withColumn("common", graft.functions.DedupKernels
         .sortedIntersectSize(col("a_ss"), col("b_ss")))
       .withColumn("na", size(col("a_ss")))
@@ -132,18 +134,38 @@ object Dedup {
         col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
   }
 
-  /** LSH band-join candidates at band size `r` — THE selectivity knob the
-    * sf10 gate's analysis names (BENCH_SF1.md): the 8 permutation minima
-    * split into 8/r bands of r consecutive rows, and a pair is a candidate
-    * iff some band matches on ALL r minhashes. P(candidate) for a pair at
-    * Jaccard j is 1−(1−j^r)^(8/r): r=1 (d3/d10/d11's oracle-mirrored
-    * default, ≈8j for small j) maximizes recall; r=2 drops background
-    * collisions to ≈4j² — two orders of magnitude at j≈0.03 — while
-    * keeping ≥96% recall at the 0.5 dedup threshold. At 10⁹ documents the
-    * sub-threshold candidate stream is the verify stage's whole cost, so
-    * production picks r from the measured d11 S-curve. Plan shape is
-    * r-invariant: one keyed aggregation to the band key, one shuffled
-    * equi-join on (band, key). Output: (doc_a, doc_b) distinct.
+  /** The admission verdict of d10, d14 and t20: `cand` (doc_id, ref_id)
+    * verified by [[verifiedPairs]] against the batch signatures `sigB` and
+    * the reference signatures `sigR`, then the best match per batch doc in
+    * ONE keyed hash agg (no window; guide §2.4 — one exchange instead of
+    * agg + re-join + agg): lexicographic max over (jaccard, −ref_id) IS
+    * (max jaccard, then min ref_id). Every `spine` (doc_id, source) row
+    * reports `novel`, `match_id` and `match_jaccard`.
+    */
+  private[analytics] def matchVerdict(spine: DataFrame, cand: DataFrame,
+      sigB: DataFrame, sigR: DataFrame): DataFrame = {
+    val best = verifiedPairs(cand, "doc_id", "ref_id", sigB, sigR)
+      .filter(col("jaccard") >= JaccardThreshold)
+      .groupBy("doc_id")
+      .agg(max(struct(col("jaccard"), (-col("ref_id")).as("nref"))).as("m"))
+      .select(col("doc_id"), (-col("m.nref")).as("match_id"),
+        round(col("m.jaccard"), 6).as("match_jaccard"))
+    spine.select(col("doc_id"), col("source"))
+      .join(best.hint("shuffle_hash"), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"),
+        col("match_id").isNull.as("novel"),
+        col("match_id"), col("match_jaccard"))
+  }
+
+  /** LSH band-join candidates at band size `r` in the exact struct-key
+    * form — the reference DedupSpec checks the packed keys of
+    * [[d14BandKeys]] against (no production path calls it). The 8
+    * permutation minima of [[stackedMinhash]] split into 8/r bands of r
+    * consecutive rows, and a pair is a candidate iff some band matches on
+    * ALL r minhashes: P(candidate) at Jaccard j is 1−(1−j^r)^(8/r) — r=1
+    * (≈8j for small j) maximizes recall, r=2 drops background collisions
+    * to ≈4j² while keeping ≥96% recall at the 0.5 dedup threshold (the
+    * banding knob BENCH_SF1.md prices). Output: (doc_a, doc_b) distinct.
     */
   private[analytics] def bandCandidates(mh: DataFrame, r: Int): DataFrame = {
     require(r >= 1 && MinhashParams.size % r == 0, s"bad band size $r")
@@ -161,22 +183,19 @@ object Dedup {
       .distinct()
   }
 
-  /** LSH band-join candidate pairs at band size 1 over the stacked minima
-    * (doc_id, i, mh) of [[stackedMinhash]] — the shared candidate scheme
-    * behind d3's Jaccard verify, d11's recall curve and d12's
-    * edit-distance verify (d10 runs the same join across the
-    * batch/reference split). Equality on (i, mh) —
-    * O(collisions), never the all-pairs signature comparison;
-    * shuffle-hinted because the signature table is corpus-sized (8
-    * rows/doc — never broadcastable). Band size r > 1 goes through
-    * [[bandCandidates]] (r=1 equivalence law-tested in DedupSpec).
+  /** LSH band-1 candidate pairs of one signature table — the candidate
+    * scheme behind d3's Jaccard verify, d11's recall curve and d12's
+    * edit-distance verify: [[d14BandKeys]] at r=1 (bk = i·P + mh, injective,
+    * so bk equality IS (i, mh) equality) self-joined by [[bandCandJoin]],
+    * each pair once as doc_a < doc_b. O(collisions), never the all-pairs
+    * signature comparison; shuffle-hinted because the band rows are
+    * corpus-sized (8 per doc — never broadcastable).
     */
-  private def lshBandCandidates(mh: DataFrame): DataFrame =
-    mh.as("x").hint("shuffle_hash")
-      .join(mh.as("y"),
-        col("x.i") === col("y.i") && col("x.mh") === col("y.mh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+  private def selfBandCandidates(sig: DataFrame): DataFrame =
+    bandCandJoin(d14BandKeys(sig, "doc_a", 1).hint("shuffle_hash"),
+        d14BandKeys(sig, "doc_b", 1), 1)
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"))
       .distinct()
 
   /** One capped-shingle frame per (session, shingle plan, input files).
@@ -545,7 +564,7 @@ object Dedup {
     * [[queries]] applies the single-byte replay gate to the output only.
     */
   def editDistanceDedup(docs: DataFrame): DataFrame = {
-    val cand = lshBandCandidates(stackedMinhash(signatures(docs)))
+    val cand = selfBandCandidates(signatures(docs))
     val texts = docs.select(col("doc_id"), col("text"))
     cand
       .join(texts.toDF("doc_a", "ta").hint("shuffle_hash"), "doc_a")
@@ -580,8 +599,11 @@ object Dedup {
   private[graft] val D14BandR = 2
 
   /** The banded signature of a signature table (doc_id, mh0..mh7 — see
-    * [[signatures]]) at band size `r`, keyed for bucketing by ONE packed
-    * long: one row per (document, band), read off the document's own row —
+    * [[signatures]]) at band size `r` — the MinHash family's ONE band-key
+    * rule (d3/d11/d12 at r=1, d10 at its knob, the d14 index and t20's
+    * stream at the stored r), joined only through [[bandCandJoin]]. Keyed
+    * for bucketing by ONE packed long: one row per (document, band), read
+    * off the document's own row —
     * a map-only pass (one Expand), no per-band aggregation, so a write
     * keeps the signature table's partitioning. r=1: bk = i·P + mh
     * (mh < P makes it injective). r=2: band b holds the minima of
@@ -641,51 +663,12 @@ object Dedup {
     * plan shape; the intermediate is the bk-prefix collision stream,
     * which the filter thins before the verify stage.
     */
-  private def bandCandJoin(batch: DataFrame, ref: DataFrame,
+  private[analytics] def bandCandJoin(batch: DataFrame, ref: DataFrame,
       r: Int): DataFrame =
     if (r > 2)
       batch.withColumnRenamed("k2", "k2b").join(ref, Seq("bk"))
         .filter(col("k2b") === col("k2"))
     else batch.join(ref, Seq("bk"))
-
-  /** SQL-expression form of [[d14BandKeys]] over an ALREADY-computed
-    * signature array (the 8 permutation minima in i-order) — the
-    * streaming ingest gate (t20) signs each arriving doc statelessly and
-    * must produce byte-identical band keys to the stored table. Null
-    * minima (an empty doc) propagate to null keys, which the caller
-    * filters.
-    */
-  /** [[bandKeySqlExpr]]'s escalated-index form: the banded signature at
-    * r > 2 as an array of (bk, k2) structs — byte-identical keys to
-    * [[d14BandKeys]]' split scheme, for the streaming gate to probe an
-    * index that [[d14Rebuild]] escalated. Null minima (an empty doc)
-    * propagate into null bk, which the caller filters.
-    */
-  private[graft] def bandStructsSqlExpr(sigArray: String, r: Int): String = {
-    require(r >= 3 && r <= MinhashParams.size,
-      s"struct band keys are the r > 2 form, got $r")
-    val nb = (MinhashParams.size + r - 1) / r // ragged last band when 8 % r != 0
-    val nK2 = (r - 1) / 2
-    // d14BandKeys' 0 pad for positions past the signature (ragged band)
-    // or past r (an odd r's half-empty final pair) — try_element_at
-    // covers the former, the CASE guard the latter
-    def el(idx: String) = s"coalesce(try_element_at($sigArray, $idx), 0L)"
-    s"transform(sequence(0, ${nb - 1}), b -> named_struct(" +
-      s"'bk', (cast(b AS bigint) * ${Prime}L + " +
-      s"element_at($sigArray, $r*b+1)) * ${Prime}L + ${el(s"$r*b+2")}, " +
-      s"'k2', transform(sequence(1, $nK2), " +
-      s"j -> ${el(s"$r*b+2*j+1")} * ${Prime}L + " +
-      s"(CASE WHEN 2*j+1 < $r THEN ${el(s"$r*b+2*j+2")} ELSE 0L END))))"
-  }
-
-  private[graft] def bandKeySqlExpr(sigArray: String): String =
-    if (D14BandR == 1)
-      s"transform($sigArray, (m, i) -> cast(i AS bigint) * ${Prime}L + m)"
-    else
-      s"transform(sequence(0, ${MinhashParams.size / 2 - 1}), " +
-        s"b -> (cast(b AS bigint) * ${Prime}L + " +
-        s"element_at($sigArray, 2*b+1)) * ${Prime}L + " +
-        s"element_at($sigArray, 2*b+2))"
 
   /** DuckDB twin of [[d14BandKeys]]' banding: the `bnd` CTE over the `mh`
     * signature CTE at rows-per-band r — bnd(doc_id, b, m0..m_{r-1}). Every
@@ -735,6 +718,16 @@ object Dedup {
     name + "_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + h
   }
 
+  /** The d14 index's stored signature table, read in [[signatures]]'
+    * layout (`doc_id, ss, mh0..mh7` — stored as `ref_id`, the key every
+    * index table is bucketed and forgotten on): what the verify,
+    * [[d14Rebuild]] and t20's finish read.
+    */
+  private[analytics] def refSignatures(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    s.table(d14Table("d14_ref_signatures", dir))
+      .withColumnRenamed("ref_id", "doc_id")
+
   /** The persisted index's OWN band size — one-row metadata written by
     * [[d14Build]]/[[d14Rebuild]] so every family member (append, query,
     * census, the streaming gates) signs arriving docs with the STORED
@@ -757,59 +750,26 @@ object Dedup {
   /** d14 index RE-BAND — the pass that makes [[d18Decide]]'s
     * `escalateBanding` verdict EXECUTABLE (VERDICT r13 #2): rewrite the
     * persisted band table at a new band size without touching the corpus.
-    * The stored keys are injective packs of the original 8 permutation
-    * minima, so the (doc, i, mh) minhash stack is RECOVERED from the index
-    * itself — unpack bk (and k2 when present) back into minima, re-band
-    * with [[d14BandKeys]] at the new r — and the rewrite costs O(index
-    * bytes) + one band-sized shuffle. At 100 TB that is the difference
-    * between turning the knob (a few % of corpus bytes, shingle/size
-    * tables untouched) and re-signing the whole reference corpus.
+    * The index's signature table already holds every reference document's
+    * 8 permutation minima, so the band table is re-derived from it with
+    * [[d14BandKeys]] at the new r: a scan that parquet prunes to the
+    * `ref_id, mh0..mh7` columns (the shingle sets are never read), then
+    * one band-sized shuffle into the bk buckets (one file per bucket, like
+    * a compaction) — O(index). At 100 TB that is the difference
+    * between turning the knob and re-signing the whole reference corpus.
+    * Band rows with no signature row behind them do not survive it.
     * Exactly-once via [[graft.ops.Bucketing.rewriteBucketed]]'s
     * write-then-swap, same as compaction and takedown.
     */
   private[graft] def d14Rebuild(s: org.apache.spark.sql.SparkSession,
       dir: String, rNew: Int): Unit = {
-    val rOld = d14IndexR(s, dir)
     require(rNew >= 1 && rNew <= MinhashParams.size,
       s"band size $rNew must be in 1..${MinhashParams.size}")
-    if (rOld != rNew) {
-      val P = Prime
+    if (d14IndexR(s, dir) != rNew) {
       graft.ops.Bucketing.rewriteBucketed(
         s, d14Table("d14_ref_bands", dir), "bk", 8) { bands =>
-        val stack =
-          if (rOld == 1)
-            bands.select(col("ref_id").as("doc_id"),
-              expr(s"CAST(bk DIV ${P}L AS INT)").as("i"),
-              expr(s"bk % ${P}L").as("mh"))
-          else {
-            // bk = (b·P + m0)·P + m1; k2[j] = m_{2j+2}·P + m_{2j+3} —
-            // unpacked per band POSITION `o` (0-based offset within the
-            // band); positions past rOld (an odd rOld's final pair pad)
-            // or past the 8 permutations (a ragged last band's pads) are
-            // 0 pads, not minima, and are filtered out below
-            val head = s"array(" +
-              s"named_struct('o', 0, 'mh', (bk DIV ${P}L) % ${P}L), " +
-              s"named_struct('o', 1, 'mh', bk % ${P}L))"
-            val pairs =
-              if (!bands.columns.contains("k2")) head
-              else s"concat($head, flatten(transform(k2, (e, j) -> array(" +
-                s"named_struct('o', 2*j + 2, 'mh', e DIV ${P}L), " +
-                s"named_struct('o', 2*j + 3, 'mh', e % ${P}L)))))"
-            bands.select(col("ref_id").as("doc_id"),
-                expr(s"bk DIV ${P * P}L").as("b"),
-                explode(expr(pairs)).as("p"))
-              .filter(col("p.o") < rOld &&
-                col("b") * rOld + col("p.o") < MinhashParams.size)
-              .select(col("doc_id"),
-                (col("b") * rOld + col("p.o")).cast("int").as("i"),
-                col("p.mh").as("mh"))
-          }
-        // back to one signature row per document, then re-band
-        val sig = stack.groupBy("doc_id").agg(
-          min(when(col("i") === 0, col("mh"))).as("mh0"),
-          MinhashParams.indices.tail.map(k =>
-            min(when(col("i") === k, col("mh"))).as(s"mh$k")): _*)
-        d14BandKeys(sig, "ref_id", rNew)
+        d14BandKeys(refSignatures(bands.sparkSession, dir), "ref_id", rNew)
+          .repartition(8, col("bk"))
       }
       d14WriteMeta(s, dir, rNew)
     }
@@ -896,7 +856,7 @@ object Dedup {
     */
   private[graft] def d14Maintain(s: org.apache.spark.sql.SparkSession,
       dir: String): D14Maintenance = {
-    val nDocs = s.table(d14Table("d14_ref_sizes", dir)).count()
+    val nDocs = s.table(d14Table("d14_ref_signatures", dir)).count()
     val files = graft.ops.Bucketing.tableDataFileCount(
       s, d14Table("d14_ref_bands", dir))
     val dec = d18Decide(d18Census(s, dir), nDocs, files / 8.0)
@@ -912,20 +872,22 @@ object Dedup {
     dec
   }
 
-  /** d14 index BUILD: the reference corpus's dedup index persisted once —
-    * the minhash band table written BUCKETED on the composite band key
-    * (bk = i·Prime + mh; mh < Prime makes it injective, so a bk equi-join
-    * IS the (i, mh) band join), plus the ref shingle set and per-doc sizes
-    * the verify stage needs. s12's amortization applied to dedup: d10
-    * re-signs the whole reference corpus on EVERY batch; after this build,
-    * a batch pays only for itself.
+  /** d14 index BUILD: the reference corpus's dedup index persisted once as
+    * TWO bucketed tables — the band table `d14_ref_bands` (ref_id, bk[,
+    * k2]) bucketed on the packed band key (bk = i·Prime + mh at r=1; mh <
+    * Prime makes it injective, so a bk equi-join IS the band join), and
+    * the signature table `d14_ref_signatures` (ref_id, ss, mh0..mh7 — the
+    * reference rows of [[signatures]]) bucketed on ref_id, which the
+    * verify merges against and [[d14Rebuild]] re-bands from. s12's
+    * amortization applied to dedup: d10 re-signs the whole reference
+    * corpus on EVERY batch; after this build, a batch pays only for itself.
     */
   private[graft] def d14Build(s: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     val docs = Tables(s, dir).documents
     val ref = docs.filter(!col("source").isin(BatchSources: _*))
     val sigR = signatures(ref)
-    // the three DATA-table writes are independent consumers of the ONE
+    // the two DATA-table writes are independent consumers of the ONE
     // persisted signature table (block-level locks serialize the first
     // materialization; every later read is a cache hit) — submit them
     // concurrently so 8-task bucket writes and driver-side commits
@@ -935,45 +897,42 @@ object Dedup {
     // ahead of the bands (e.g. rebuilding at r=2 over an index previously
     // escalated to r=4) would make d14Query silently sign batches with
     // the wrong key scheme — meta-last keeps meta a commit marker.
-    graft.ops.Bucketing.concurrently(Seq(
-      () => graft.ops.Bucketing.writeBucketed(
-        d14BandKeys(sigR, "ref_id"),
-        d14Table("d14_ref_bands", dir), "bk", 8),
-      () => graft.ops.Bucketing.writeBucketed(indexShingles(sigR),
-        d14Table("d14_ref_shingles", dir), "ref_id", 8),
-      () => graft.ops.Bucketing.writeBucketed(indexSizes(sigR),
-        d14Table("d14_ref_sizes", dir), "ref_id", 8)))
+    graft.ops.Bucketing.concurrently(indexWrites(dir, sigR, D14BandR,
+      graft.ops.Bucketing.writeBucketed))
     d14WriteMeta(s, dir, D14BandR)
     sigR.unpersist()
   }
 
-  /** The index's (ref_id, s) shingle rows and (ref_id, nb) sizes, read off
-    * a signature table — the layouts d14Query's and t20's verify joins
-    * read.
+  /** The two index-table writes of a signature table at band size `r`:
+    * its band keys into `d14_ref_bands` (bucketed on bk) and its rows,
+    * id renamed to ref_id, into `d14_ref_signatures` (bucketed on ref_id)
+    * — [[d14Build]] overwrites, [[d14Append]] appends.
     */
-  private def indexShingles(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id").as("ref_id"), explode(col("ss")).as("s"))
-
-  private def indexSizes(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id").as("ref_id"), size(col("ss")).cast("long").as("nb"))
+  private def indexWrites(dir: String, sig: DataFrame, r: Int,
+      write: (DataFrame, String, String, Int) => Unit): Seq[() => Unit] = Seq(
+    () => write(d14BandKeys(sig, "ref_id", r),
+      d14Table("d14_ref_bands", dir), "bk", 8),
+    () => write(sig.withColumnRenamed("doc_id", "ref_id"),
+      d14Table("d14_ref_signatures", dir), "ref_id", 8))
 
   /** d14 index APPEND — the incremental half that makes the persisted
     * index live: the ACCEPTED (novel) documents of a just-deduped batch
-    * are signed and written into the same three bucket layouts with
-    * append mode, so the NEXT batch dedups against this batch's survivors
-    * too. Cost is O(accepted batch): one shingle pass over the accepted
-    * docs only — the existing index bytes are never read or rewritten
-    * (new files land inside the same buckets; reads group files by bucket
-    * id, so the band join stays exchange-free). This is s12's
-    * exactly-once-append discipline applied to dedup: at 100 TB it is the
-    * difference between re-signing the whole reference corpus per crawl
-    * batch (d10) and paying only for the ingest.
+    * are signed and written into both bucket layouts (band keys at the
+    * stored r, signature rows) with append mode, so the NEXT batch dedups
+    * against this batch's survivors too. Cost is O(accepted batch): one
+    * signature pass over the accepted docs only — the existing index bytes
+    * are never read or rewritten (new files land inside the same buckets;
+    * reads group files by bucket id, so the band join stays
+    * exchange-free). This is s12's exactly-once-append discipline applied
+    * to dedup: at 100 TB it is the difference between re-signing the
+    * whole reference corpus per crawl batch (d10) and paying only for the
+    * ingest.
     */
   private[graft] def d14Append(s: org.apache.spark.sql.SparkSession,
       dir: String, acceptedIds: org.apache.spark.sql.DataFrame): Unit = {
     val docs = Tables(s, dir).documents
     // the accepted set is usually DERIVED from the index tables this
-    // append writes into (d14Query's novel flag reads all three) — an
+    // append writes into (d14Query's novel flag reads both) — an
     // unsevered plan would make each append job read its own target.
     // localCheckpoint materializes the batch-sized id list eagerly and
     // truncates the lineage, exactly what a production pipeline holds at
@@ -983,54 +942,48 @@ object Dedup {
     // semi-join, never a broadcast of an id set that grows with ingest
     val acc = docs.join(ids.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
     val sigA = signatures(acc)
-    // read the stored banding ONCE on the calling thread (it is a catalog +
-    // head() lookup), then run the three independent appends concurrently —
+    // the stored banding is read ONCE on the calling thread (a catalog +
+    // head() lookup), then the two independent appends run concurrently —
     // same §2.6 overlap as d14Build; each append targets a different table
-    val rStored = d14IndexR(s, dir)
-    graft.ops.Bucketing.concurrently(Seq(
-      () => graft.ops.Bucketing.appendBucketed(
-        d14BandKeys(sigA, "ref_id", rStored),
-        d14Table("d14_ref_bands", dir), "bk", 8),
-      () => graft.ops.Bucketing.appendBucketed(indexShingles(sigA),
-        d14Table("d14_ref_shingles", dir), "ref_id", 8),
-      () => graft.ops.Bucketing.appendBucketed(indexSizes(sigA),
-        d14Table("d14_ref_sizes", dir), "ref_id", 8)))
+    graft.ops.Bucketing.concurrently(indexWrites(dir, sigA, d14IndexR(s, dir),
+      graft.ops.Bucketing.appendBucketed))
     sigA.unpersist()
   }
+
+  /** The index's two tables with the key each is bucketed on. */
+  private val IndexTables = Seq(("d14_ref_bands", "bk"),
+    ("d14_ref_signatures", "ref_id"))
 
   /** d14 index COMPACTION — the lifecycle pass between [[d14Append]] waves:
     * each append lands batch-sized files inside the bucket layouts, so
     * after N waves every bucket holds N small files and the exchange-free
     * band join degrades into a small-files scan (N file-opens per bucket
-    * per query). Compaction rewrites each index table back to one file per
-    * bucket under the SAME (key, numBuckets) spec — O(index bytes) read +
-    * write, no re-signing, no corpus scan — and must be invisible to the
-    * recurring query: compact-then-query ≡ query (the d16 oracle reuses
-    * the upsert cascade's SQL verbatim).
+    * per query). Compaction rewrites both index tables back to one file
+    * per bucket under the SAME (key, numBuckets) spec — O(index bytes)
+    * read + write, no re-signing, no corpus scan — and must be invisible
+    * to the recurring query: compact-then-query ≡ query (the d16 oracle
+    * reuses the upsert cascade's SQL verbatim).
     */
   private[graft] def d14Compact(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    // the three table rewrites are independent (distinct tables, distinct
+      dir: String): Unit =
+    // the two table rewrites are independent (distinct tables, distinct
     // scratch names) and each runs its forceBucketedScan toggle in its own
     // child session (rewriteBucketed), so they overlap safely — r19 kept
     // them sequential only because the toggle was session-global
     // (guide §2.6; VERDICT r19 #5)
-    graft.ops.Bucketing.concurrently(Seq(
-      () => graft.ops.Bucketing.compactBucketed(
-        s, d14Table("d14_ref_bands", dir), "bk", 8),
-      () => graft.ops.Bucketing.compactBucketed(
-        s, d14Table("d14_ref_shingles", dir), "ref_id", 8),
-      () => graft.ops.Bucketing.compactBucketed(
-        s, d14Table("d14_ref_sizes", dir), "ref_id", 8)))
-  }
+    graft.ops.Bucketing.concurrently(
+      for ((t, k) <- IndexTables) yield { () =>
+        graft.ops.Bucketing.compactBucketed(s, d14Table(t, dir), k, 8)
+      })
 
   /** d14 index FORGET — the takedown half of the lifecycle: remove every
-    * indexed document of the named sources from all three bucket layouts,
-    * so the recurring query can never again match against them. This is
-    * the operation a training-data pipeline owes its sources (a licensing
-    * withdrawal, a right-to-be-forgotten order, a poisoned-crawl
-    * rollback): the forgotten docs must stop being dedup witnesses — a
-    * batch doc whose ONLY near-match was forgotten must re-admit as novel.
+    * indexed document of the named sources from both bucket layouts (its
+    * band rows and its signature row), so the recurring query can never
+    * again match against them. This is the operation a training-data
+    * pipeline owes its sources (a licensing withdrawal, a
+    * right-to-be-forgotten order, a poisoned-crawl rollback): the
+    * forgotten docs must stop being dedup witnesses — a batch doc whose
+    * ONLY near-match was forgotten must re-admit as novel.
     *
     * Cost is O(index bytes): one anti-join rewrite per table through the
     * same write-then-swap machinery as compaction (exactly-once, bucket
@@ -1046,23 +999,21 @@ object Dedup {
     val gone = Tables(s, dir).documents
       .filter(col("source").isin(sources: _*))
       .select(col("doc_id").as("ref_id")).localCheckpoint(true)
-    // three independent anti-join rewrites over ONE checkpointed takedown
+    // two independent anti-join rewrites over ONE checkpointed takedown
     // set — overlapped like d14Compact's (rewriteBucketed's child-session
     // conf isolation makes the forceBucketedScan toggle thread-safe)
     graft.ops.Bucketing.concurrently(
-      for ((t, k) <- Seq(("d14_ref_bands", "bk"),
-          ("d14_ref_shingles", "ref_id"), ("d14_ref_sizes", "ref_id")))
-        yield { () =>
-          graft.ops.Bucketing.rewriteBucketed(s, d14Table(t, dir), k, 8)(
-            _.join(gone.hint("shuffle_hash"), Seq("ref_id"), "left_anti"))
-        })
+      for ((t, k) <- IndexTables) yield { () =>
+        graft.ops.Bucketing.rewriteBucketed(s, d14Table(t, dir), k, 8)(
+          _.join(gone.hint("shuffle_hash"), Seq("ref_id"), "left_anti"))
+      })
   }
 
   /** d14 recurring QUERY: the arriving batch against the STORED index. The
     * batch's (batch-sized) band table drops into the SAME bucket layout, so
     * the candidate join plans with NO exchange on either side — the q22
-    * trick; the verify stage touches only candidate-keyed slices of the
-    * stored shingle table (shuffled joins — index sides are corpus-sized).
+    * trick; the verify attaches only candidate-keyed rows of the stored
+    * signature table (shuffled joins — index sides are corpus-sized).
     * Result must equal d10's full recompute exactly.
     */
   private[graft] def d14Query(s: org.apache.spark.sql.SparkSession,
@@ -1079,7 +1030,7 @@ object Dedup {
       s.table(d14Table("d14_batch_bands", dir)).hint("merge"),
       s.table(d14Table("d14_ref_bands", dir)).hint("merge"), r)
       .select(col("doc_id"), col("ref_id")).distinct()
-    d14Verdict(s, dir, batchDocs, sigB, cand)
+    matchVerdict(batchDocs, cand, sigB, refSignatures(s, dir))
   }
 
   /** [[d14Query]]'s verify cascade over an IN-MEMORY batch frame — the
@@ -1104,116 +1055,54 @@ object Dedup {
     // the append mutates the tables it read) so sigB can unpersist NOW:
     // leaving one cached signature table per micro-batch for the session's
     // life is an unbounded leak in the production ingest loop (ADVICE r12)
-    val verdict = d14Verdict(s, dir, batchDocs, sigB, cand).localCheckpoint(true)
+    val verdict = matchVerdict(batchDocs, cand, sigB, refSignatures(s, dir))
+      .localCheckpoint(true)
     sigB.unpersist()
     verdict
   }
 
-  /** The verify + best-match tail [[d14Query]] and [[d14QueryFrame]]
-    * share: the candidates' batch shingles (exploded from the batch
-    * signature table) against the stored shingle and size tables — the
-    * index keeps its (ref_id, s) row layout, which t20's streaming gate
-    * reads too — then the best match per doc in ONE keyed agg (guide §2.4
-    * — one exchange instead of agg + re-join + agg): lexicographic max
-    * over (jaccard, −ref_id) IS (max jaccard, then min ref_id).
-    */
-  private def d14Verdict(s: org.apache.spark.sql.SparkSession, dir: String,
-      batchDocs: DataFrame, sigB: DataFrame, cand: DataFrame): DataFrame = {
-    val common = cand
-      .join(sigB.select(col("doc_id"), explode(col("ss")).as("s"))
-        .hint("shuffle_hash"), "doc_id")
-      .join(s.table(d14Table("d14_ref_shingles", dir)).hint("shuffle_hash"),
-        Seq("ref_id", "s"))
-      .groupBy("doc_id", "ref_id").agg(count(lit(1)).as("common"))
-    val dups = common
-      .join(sigB.select(col("doc_id"), size(col("ss")).as("na"))
-        .hint("shuffle_hash"), "doc_id")
-      .join(s.table(d14Table("d14_ref_sizes", dir)).hint("shuffle_hash"),
-        "ref_id")
-      .withColumn("jaccard",
-        col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
-    val best = dups.groupBy("doc_id")
-      .agg(max(struct(col("jaccard"), (-col("ref_id")).as("nref"))).as("m"))
-      .select(col("doc_id"), (-col("m.nref")).as("match_id"),
-        round(col("m.jaccard"), 6).as("match_jaccard"))
-    batchDocs.select(col("doc_id"), col("source"))
-      .join(best.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        col("match_id").isNull.as("novel"),
-        col("match_id"), col("match_jaccard"))
-  }
-
   /** d10's shared front half: the batch spine, the persisted signature
     * table ([[signatures]]), and the batch×reference candidate stage
-    * with the LSH banding knob `r` (rows per band). r = 1 is the direct
-    * (i, mh) equi-join — d10_cross_corpus's exact plan; r > 1 groups each
-    * signature into 8/r sorted band keys, thinning the collision stream
-    * at the S-curve-priced recall cost d11 measures (the production
-    * instrument for the collision-amplifier superlinearity the sf10
-    * analyses name). Returns (batch spine, signatures, candidates).
+    * with the LSH banding knob `r` (rows per band, any r in 1..8): the
+    * corpus's [[d14BandKeys]] split into batch and reference rows and
+    * joined by [[bandCandJoin]] — r = 1 is d10_cross_corpus's exact plan;
+    * r > 1 thins the collision stream at the S-curve-priced recall cost
+    * d11 measures (the production instrument for the collision-amplifier
+    * superlinearity the sf10 analyses name). Returns (batch spine,
+    * signatures, candidates).
     */
   private def d10Parts(s: org.apache.spark.sql.SparkSession, dir: String,
       r: Int): (DataFrame, DataFrame, DataFrame) = {
-    require(r >= 1 && MinhashParams.size % r == 0, s"bad band size $r")
     val docs = Tables(s, dir).documents
     // one stats-pruned scan (source predicate pushed) yields both the
     // id set for the splits and the output spine — never a second
     // corpus scan semi-joined against its own filter
-    val batch = docs.filter(col("source")
-        .isin("src0", "src1", "src2", "src3", "src4"))
+    val batch = docs.filter(col("source").isin(BatchSources: _*))
       .select(col("doc_id"), col("source"))
     val batchIds = batch.select(col("doc_id"))
     val sig = signatures(docs)
-    val mh = stackedMinhash(sig)
+    val bands = d14BandKeys(sig, "doc_id", r)
     // membership split: batch ids are corpus-fraction-sized — shuffled
     // semi/anti joins, never a broadcast of the id set
-    val mhB = mh.join(batchIds.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-    val mhR = mh.join(batchIds.hint("shuffle_hash"), Seq("doc_id"), "left_anti")
-    // cross band join only: batch signatures vs reference signatures
-    val cand =
-      if (r == 1)
-        mhB.as("x").hint("shuffle_hash")
-          .join(mhR.as("y"),
-            col("x.i") === col("y.i") && col("x.mh") === col("y.mh"))
-          .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("ref_id"))
-          .distinct()
-      else {
-        // bandCandidates' key scheme across the corpus split: r (i, mh)
-        // rows per sorted band key, equality on (band, key)
-        def banded(m: DataFrame): DataFrame = m
-          .withColumn("b", (col("i") / r).cast("int"))
-          .groupBy("doc_id", "b")
-          .agg(sort_array(collect_list(struct(col("i"), col("mh")))).as("key"))
-        banded(mhB).as("x").hint("shuffle_hash")
-          .join(banded(mhR).as("y"),
-            col("x.b") === col("y.b") && col("x.key") === col("y.key"))
-          .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("ref_id"))
-          .distinct()
-      }
+    val bandsB = bands.join(batchIds.hint("shuffle_hash"), Seq("doc_id"),
+      "left_semi")
+    val bandsR = bands.join(batchIds.hint("shuffle_hash"), Seq("doc_id"),
+      "left_anti").withColumnRenamed("doc_id", "ref_id")
+    // cross band join only: batch band keys vs reference band keys
+    val cand = bandCandJoin(bandsB.hint("shuffle_hash"), bandsR, r)
+      .select(col("doc_id"), col("ref_id")).distinct()
     (batch, sig, cand)
   }
 
-  /** d10 with the banding knob surfaced — r = 1 IS d10_cross_corpus. */
+  /** d10 with the banding knob surfaced — r = 1 IS d10_cross_corpus.
+    * Exact-Jaccard verification restricted to the candidates is d3's
+    * (both signature rows attached, one sorted-set merge per pair), and
+    * the verdict is d14's ([[matchVerdict]]).
+    */
   private[graft] def d10With(s: org.apache.spark.sql.SparkSession,
       dir: String, r: Int): DataFrame = {
     val (batch, sig, cand) = d10Parts(s, dir, r)
-    // exact-Jaccard verification restricted to the candidates — d3's
-    // shape: both signature rows attached, one sorted-set merge per pair
-    val dups = verifiedPairs(cand, "doc_id", "ref_id", sig)
-      .filter(col("jaccard") >= JaccardThreshold)
-    // best match per batch doc in ONE keyed hash agg (no window; guide
-    // §2.4 — one exchange instead of agg + re-join + agg): lexicographic
-    // max over (jaccard, −ref_id) IS (max jaccard, then min ref_id)
-    val best = dups.groupBy("doc_id")
-      .agg(max(struct(col("jaccard"), (-col("ref_id")).as("nref"))).as("m"))
-      .select(col("doc_id"), (-col("m.nref")).as("match_id"),
-        round(col("m.jaccard"), 6).as("match_jaccard"))
-    batch
-      .join(best.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        col("match_id").isNull.as("novel"),
-        col("match_id"), col("match_jaccard"))
+    matchVerdict(batch, cand, sig, sig)
   }
 
   /** The candidate-stream size at band size r — the collision receipt for
@@ -1506,9 +1395,9 @@ object Dedup {
     // exact-Jaccard verification. est_sim = matching minhashes / 8.
     "d3_minhash_lsh" -> { (s, dir) =>
       val sig = signatures(Tables(s, dir).documents)
-      // LSH band join over the stacked minima (shared scheme —
-      // [[lshBandCandidates]])
-      val cand = lshBandCandidates(stackedMinhash(sig))
+      // LSH band-1 self-join over the packed band keys (shared scheme —
+      // [[selfBandCandidates]])
+      val cand = selfBandCandidates(sig)
       // exact-Jaccard verification restricted to the CANDIDATES: attach
       // both documents' signature rows by doc key and merge their sorted
       // shingle sets — one unit of work per candidate, where a join of
@@ -1518,7 +1407,7 @@ object Dedup {
       // the candidate set is tiny locally but UNBOUNDED at corpus scale —
       // AQE would happily broadcast it here and hide the shape that
       // matters (the same trap d5's vector re-attach guards against)
-      verifiedPairs(cand, "doc_a", "doc_b", sig)
+      verifiedPairs(cand, "doc_a", "doc_b", sig, sig)
         .filter(col("jaccard") >= JaccardThreshold)
         // the minima rode along on the attached rows, so est_sim is a
         // per-survivor comparison, no re-attach join
@@ -1570,7 +1459,7 @@ object Dedup {
     // reused); every batch doc reports whether it is NOVEL w.r.t. the
     // reference corpus, plus its best reference match. Shapes at 100 TB:
     // ONE signature table over both corpora together (d3's map-only pass,
-    // one row per doc), membership split of its stacked minima by a
+    // one row per doc), membership split of its band keys by a
     // shuffled semi/anti join against the batch-id set (corpus-sized,
     // never broadcast), the batch×ref band join is O(cross collisions) —
     // strictly cheaper than d3's full self-join because one side is the
@@ -1581,8 +1470,8 @@ object Dedup {
     "d10_cross_corpus" -> { (s, dir) => d10With(s, dir, 1) },
 
     // Persisted incremental-dedup INDEX — s12's build/serve amortization +
-    // q22's bucketing applied to d10: the reference corpus's signatures,
-    // shingles and sizes are written ONCE ([[d14Build]]); every arriving
+    // q22's bucketing applied to d10: the reference corpus's band keys
+    // and signature rows are written ONCE ([[d14Build]]); every arriving
     // batch then dedups against the stored index ([[d14Query]]) paying
     // only for itself — d10 re-signs the whole reference corpus per batch.
     // The band join is exchange-free (both band tables bucketed on the
@@ -1612,9 +1501,9 @@ object Dedup {
     // d18's escalation verdict EXECUTED (VERDICT r13 #2): build the index
     // at the default banding, then RE-BAND it to r=4 — the knob turn
     // d18Decide recommends when the collision census says the verify toll
-    // dominates. The rebuild unpacks the stored injective keys back into
-    // the original minhash minima and re-packs at the new width — an
-    // O(index) rewrite that never touches the corpus (the 100 TB
+    // dominates. The rebuild re-bands the index's stored signature rows
+    // at the new width — an O(index) rewrite that never touches the
+    // corpus (the 100 TB
     // difference between a knob turn and a full re-sign). The oracle is
     // d10's SQL body AT r=4: rebuilt index ≡ from-scratch recompute at
     // the new banding — threshold truth at the escalated key scheme,
@@ -1715,7 +1604,7 @@ object Dedup {
     // pair-keyed and shuffled (truth sets are unbounded at 100 TB).
     "d11_lsh_recall" -> { (s, dir) =>
       val sig = signatures(Tables(s, dir).documents)
-      val cand = lshBandCandidates(stackedMinhash(sig))
+      val cand = selfBandCandidates(sig)
       val sh = sig.select(col("doc_id"), explode(col("ss")).as("s"))
       val sizes = sig.select(col("doc_id"), size(col("ss")).as("n"))
       val common = sh.as("a")
@@ -1829,7 +1718,7 @@ object Dedup {
   }
 
   /** The band-1 self-join candidate CTE — the SQL twin of
-    * [[lshBandCandidates]], shared by the d3/d12 oracles.
+    * [[selfBandCandidates]], shared by the d3/d12 oracles.
     */
   private val lshCandSql: String =
     """cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b

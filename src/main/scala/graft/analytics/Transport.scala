@@ -131,28 +131,31 @@ object Transport {
     * or an append-grown layout): near-dup admission AT INGEST against the
     * PERSISTED dedup index.
     *
-    * Per arriving doc the 8 minhash band keys are computed STATELESSLY
-    * (t14's expression scheme — a permutation min over the raw shingle
-    * list equals the min over the distinct set), thinned by a bloom built
-    * over the STORED band keys (index-sized, no false negatives — a key
-    * the bloom rejects is definitively absent from the index), and
-    * left-joined stream-static against the bucketed band table: the static
-    * side reads its bucket layout with NO exchange (PlanShapeSpec law —
-    * only the stream side repartitions, into the bucket count). The
-    * streaming stage carries ZERO state (stateless projection + join,
-    * append mode): a doc is one message, so its collision rows are final
-    * within its own micro-batch and a clean doc emits exactly one
-    * null-candidate spine row — and every sink row is the bounded-width
-    * triple (doc_id, source, ref_id), never payload-derived data (the
-    * sf10 lesson: shipping shingle arrays through the sink is a driver-
-    * heap bomb). The Jaccard verify + best-match finish runs batch-side:
-    * the collision docs' shingle rows are RE-READ from the log restricted
-    * to the sliver (the bytes are at rest; an object-store re-read of the
-    * hit sliver is what a production admission gate does), then joined
-    * against the stored shingle/size tables in exactly [[Dedup.d14Query]]'s
-    * verify shape — and the result must equal d14Query bit-for-bit: the
-    * oracle is d14_dedup_index's SQL verbatim (the t15–t18 streaming ≡
-    * batch discipline).
+    * Per arriving doc the 8 permutation minima are computed STATELESSLY by
+    * the signature table's kernels and banded by [[Dedup.d14BandKeys]] at
+    * the stored index's own r (the meta table [[Dedup.d14Rebuild]]
+    * maintains) — the one band-key rule, so the stream's keys are the
+    * stored table's keys by construction. They are thinned by a bloom
+    * built over the STORED band keys (index-sized, no false negatives — a
+    * key the bloom rejects is definitively absent from the index) and
+    * joined stream-static against the bucketed band table through
+    * [[Dedup.bandCandJoin]]: the static side reads its bucket layout with
+    * NO exchange (PlanShapeSpec law — only the stream side repartitions,
+    * into the bucket count). The streaming stage carries ZERO state
+    * (stateless projection + join, append mode): a doc is one message, so
+    * its collision rows are final within its own micro-batch, and every
+    * sink row is a bounded-width candidate pair (doc_id, ref_id), never
+    * payload-derived data (the sf10 lesson: shipping shingle arrays
+    * through the sink is a driver-heap bomb).
+    *
+    * The verify + verdict finish runs batch-side and is d14Query's own
+    * ([[Dedup.matchVerdict]]): the candidate docs' signature rows are
+    * computed from the log restricted to the sliver (the bytes are at
+    * rest; an object-store re-read of the hit sliver is what a production
+    * admission gate does) and merged against the index's stored signature
+    * table, and the spine is every doc of the log. The result must equal
+    * d14Query bit-for-bit: the oracle is d14_dedup_index's SQL verbatim
+    * (the t15–t18 streaming ≡ batch discipline).
     */
   private[graft] def t20IndexDedupStream(s: SparkSession, dir: String,
       inspect: org.apache.spark.sql.streaming.StreamingQuery => Unit =
@@ -170,9 +173,6 @@ object Transport {
           .cast("binary").as("payload"))
       .write.format("ss").mode("overwrite").save(out)
     val bandsTable = Dedup.d14Table("d14_ref_bands", dir)
-    // the stream signs arriving docs at the STORED index's own banding
-    // (the meta table d14Rebuild maintains): packed-long keys at r ≤ 2,
-    // (bk, k2) split keys when the index was escalated past the packing
     val idxR = Dedup.d14IndexR(s, dir)
     // bloom over the STORED band keys — one aggregation over the bucket
     // layout (index-sized, not corpus-sized); the blob rides the stream
@@ -185,101 +185,42 @@ object Transport {
     // ~4 micro-batches at any scale (the t15–t19 no-floor discipline)
     val cap = math.max(1L, batchDocs.count() / 4)
     val k = graft.functions.DedupKernels
-    val enriched = s.readStream.format("ss")
-      .option("maxMessagesPerTrigger", cap.toString)
-      .load(out)
+    def parsed(log: DataFrame) = log
       .select(from_json(col("payload").cast("string"),
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id LONG, source STRING, text STRING")).as("j"))
-      // the signature table's kernels, per row (d14's band keys at the
-      // index's OWN banding follow — the stream side MUST sign with the
-      // stored table's exact key scheme); empty docs sign nothing (null
-      // minima propagate to null keys)
       .select(col("j.doc_id").as("doc_id"), col("j.source").as("source"),
-        k.minhash(k.wordShingles(col("j.text"))).as("sig"))
-    val probed =
-      if (idxR <= 2)
-        enriched
-          .withColumn("bks", expr(Dedup.bandKeySqlExpr("sig")))
-          .withColumn("cand_bks", org.apache.spark.sql.functions.filter(
-            col("bks"), x => x.isNotNull && graft.functions.BloomFunctions
-              .mightContain(lit(blob), xxhash64(x))))
-          .select(col("doc_id"), col("source"),
-            explode_outer(col("cand_bks")).as("bk"))
-      else
-        // escalated index: (bk, k2) split keys — bloom still thins on the
-        // bk prefix; the k2 remainder rides to the join as an equality
-        enriched
-          .withColumn("bands", expr(Dedup.bandStructsSqlExpr("sig", idxR)))
-          .withColumn("cand_bands", org.apache.spark.sql.functions.filter(
-            col("bands"), x => x("bk").isNotNull &&
-              graft.functions.BloomFunctions
-                .mightContain(lit(blob), xxhash64(x("bk")))))
-          .select(col("doc_id"), col("source"),
-            explode_outer(col("cand_bands")).as("band"))
-          .select(col("doc_id"), col("source"),
-            col("band.bk").as("bk"), col("band.k2").as("k2b"))
-    val bands = s.table(bandsTable).hint("merge")
-    // the sink carries ONLY (doc_id, source, ref_id) — bounded-width rows
-    // at any scale (a first cut shipped each collision row's shingle
-    // ARRAY to the sink and died on driver heap at sf10; the verify stage
-    // re-reads the sliver docs' payloads from the log instead — the bytes
-    // are already at rest, and an object-store re-read of the hit sliver
-    // is exactly what a production admission gate does)
-    val joinCond =
-      if (idxR <= 2) col("x.bk") === col("y.bk")
-      else col("x.bk") === col("y.bk") && col("x.k2b") === col("y.k2")
-    val joined = probed.as("x")
-      .join(bands.as("y"), joinCond, "left_outer")
-      .select(col("x.doc_id"), col("x.source"), col("y.ref_id"))
-    val q = joined.writeStream.outputMode("append")
+        col("j.text").as("text"))
+    // the signature table's minima, per row; an empty doc signs nothing
+    // (null minima → null band keys, dropped before the probe)
+    val sig = parsed(s.readStream.format("ss")
+        .option("maxMessagesPerTrigger", cap.toString)
+        .load(out))
+      .select(col("doc_id"), k.minhash(k.wordShingles(col("text"))).as("mh"))
+      .select(col("doc_id") +: Dedup.MinhashParams.indices
+        .map(i => col("mh")(i).as(s"mh$i")): _*)
+    val probed = Dedup.d14BandKeys(sig, "doc_id", idxR)
+      .filter(col("bk").isNotNull && graft.functions.BloomFunctions
+        .mightContain(lit(blob), xxhash64(col("bk"))))
+    val cand = Dedup.bandCandJoin(probed, s.table(bandsTable).hint("merge"),
+        idxR)
+      .select(col("doc_id"), col("ref_id"))
+    val q = cand.writeStream.outputMode("append")
       .format("memory").queryName("t20_idx_sink").start()
     try { q.processAllAvailable(); inspect(q) } finally q.stop()
-    // batch-side finish over the hit sliver: EXACTLY d14Query's verify
-    // shape, with the batch side's shingle rows re-read from the ss log
-    // restricted to the collision docs (shuffled semi-join — the sliver
-    // is batch-fraction-sized but corpus-unbounded). localCheckpoint
-    // severs the finished stream's MemoryPlan out of the lineage: the
-    // sink view is read by TWO branches (spine + pairs) that re-join on
-    // doc_id, and MemoryPlan is not self-join-deduplicable the way table
-    // relations are (conflicting-reference analysis failure)
-    val sink = s.table("t20_idx_sink").localCheckpoint(true)
-    val spine = sink.select("doc_id", "source").distinct()
-    val pairs = sink.filter(col("ref_id").isNotNull)
-      .select("doc_id", "ref_id").distinct()
-    val candDocs = pairs.select("doc_id").distinct()
-    // the sliver docs' distinct shingle rows, straight from the log bytes
-    val shC = s.read.format("ss").load(out)
-      .select(from_json(col("payload").cast("string"),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id LONG, source STRING, text STRING")).as("j"))
-      .select(col("j.doc_id").as("doc_id"),
-        explode(k.wordShingles(col("j.text"))).as("s"))
-      .join(candDocs.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizesC = shC.groupBy("doc_id").agg(count(lit(1)).as("na"))
-    val common = pairs
-      .join(shC.hint("shuffle_hash"), "doc_id")
-      .join(s.table(Dedup.d14Table("d14_ref_shingles", dir))
-        .hint("shuffle_hash"), Seq("ref_id", "s"))
-      .groupBy("doc_id", "ref_id").agg(count(lit(1)).as("common"))
-    val dups = common
-      .join(sizesC.hint("shuffle_hash"), "doc_id")
-      .join(s.table(Dedup.d14Table("d14_ref_sizes", dir))
-        .hint("shuffle_hash"), "ref_id")
-      .withColumn("jaccard",
-        col("common") * lit(1.0) / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= Dedup.JaccardThreshold)
-    // best match per doc in ONE keyed agg: lexicographic max over
-    // (jaccard, −ref_id) IS d14Query's (max jaccard, then min ref id) rule
-    val best = dups.groupBy("doc_id")
-      .agg(max(struct(col("jaccard"), (-col("ref_id")).as("nref"))).as("m"))
-      .select(col("doc_id"), (-col("m.nref")).as("match_id"),
-        round(col("m.jaccard"), 6).as("match_jaccard"))
-    spine.join(best.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"),
-        col("match_id").isNull.as("novel"),
-        col("match_id"), col("match_jaccard"))
+    // batch-side finish: localCheckpoint severs the finished stream's
+    // MemoryPlan out of the lineage — the pairs are read by TWO branches
+    // (the sliver filter and the verify) that re-join on doc_id, and
+    // MemoryPlan is not self-join-deduplicable the way table relations
+    // are (conflicting-reference analysis failure)
+    val pairs = s.table("t20_idx_sink").localCheckpoint(true).distinct()
+    val log = parsed(s.read.format("ss").load(out))
+    // the sliver docs' signatures, straight from the log bytes (shuffled
+    // semi-join — the sliver is batch-fraction-sized but corpus-unbounded)
+    val sigC = Dedup.signatures(log.join(
+      pairs.select("doc_id").distinct().hint("shuffle_hash"),
+      Seq("doc_id"), "left_semi"))
+    Dedup.matchVerdict(log, pairs, sigC, Dedup.refSignatures(s, dir))
   }
 
   /** t21 — streaming ANN SERVE against the persisted IVF index: t20 is

@@ -317,19 +317,20 @@ class PlanShapeSpec extends AnyFunSuite {
       "broadcast, exactly one band self-join") {
     // the signature table is one map-only kernel pass (a shingle explode
     // would show as Generate), both verify attaches shuffle (the table is
-    // corpus-sized), and the (i, mh) band self-join runs exactly once: the
-    // verify is a sorted-set merge per candidate, never a join through the
-    // shingle rows or a re-attach of the stacked minima
+    // corpus-sized), and the band self-join on the packed key (bk = i·P +
+    // mh) runs exactly once: the verify is a sorted-set merge per
+    // candidate, never a join through the shingle rows or a re-attach of
+    // the minima
     val p = planOf("d3_minhash_lsh")
     val blocks = nodeBlocks(p)
     assert(!blocks.exists(_._1 == "Generate"), "d3 plans a Generate")
     assert(!blocks.exists(_._1.startsWith("Broadcast")),
       "d3 broadcasts a corpus-sized side")
     val bandJoins = blocks.filter { case (n, b) =>
-      n.endsWith("Join") &&
-        b.linesIterator.exists(l => l.contains("keys") && l.contains(" mh#"))
+      n.endsWith("Join") && b.linesIterator.exists(l =>
+        l.contains("keys") && "\\bbk#".r.findFirstIn(l).isDefined)
     }
-    assert(bandJoins.size == 1, s"${bandJoins.size} (i, mh) band joins in d3")
+    assert(bandJoins.size == 1, s"${bandJoins.size} bk band joins in d3")
     assert(p.contains("sea_sorted_intersect_size"),
       "d3's verify lost its sorted-set merge")
   }
@@ -431,29 +432,46 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("d14 append grows the index by each accepted doc exactly once") {
     // the s12 exactly-once-append law applied to the dedup index: build +
-    // one wave's append must leave exactly one sizes row per reference doc
-    // plus one per accepted survivor — a re-run that re-wrote existing
-    // rows would duplicate, a dropped bucket file would lose docs. The
-    // appended batch must also SERVE: wave two's query over the grown
-    // index still plans its band join exchange-free.
+    // one wave's append must leave exactly one signature row per reference
+    // doc plus one per accepted survivor — a re-run that re-wrote existing
+    // rows would duplicate, a dropped bucket file would lose docs — and
+    // the appended rows must BE the accepted docs' signatures, shingle
+    // set and minima bit for bit. The appended batch must also SERVE:
+    // wave two's query over the grown index still plans its band join
+    // exchange-free.
     import org.apache.spark.sql.functions.col
     val dir = TestSession.sfDir
     analytics.Dedup.d14Build(spark, dir)
-    val before = spark.table(
-      analytics.Dedup.d14Table("d14_ref_sizes", dir)).count()
+    val sigT = analytics.Dedup.d14Table("d14_ref_signatures", dir)
+    val before = spark.table(sigT).count()
     val wave1 = analytics.Dedup.d14Query(spark, dir, Seq("src0", "src1"))
+    // severed: re-evaluated after the append, the verdict would read the
+    // grown index and accept nothing
     val accepted = wave1.filter(col("novel")).select("doc_id")
+      .localCheckpoint(true)
     val nAccepted = accepted.count()
     assert(nAccepted > 0, "fixture must accept at least one wave-1 doc")
     analytics.Dedup.d14Append(spark, dir, accepted)
-    val sizes = spark.table(analytics.Dedup.d14Table("d14_ref_sizes", dir))
-    assert(sizes.count() == before + nAccepted,
-      "append must add exactly one sizes row per accepted doc")
-    assert(sizes.select("ref_id").distinct().count() == before + nAccepted,
+    val sigs = spark.table(sigT)
+    assert(sigs.count() == before + nAccepted,
+      "append must add exactly one signature row per accepted doc")
+    assert(sigs.select("ref_id").distinct().count() == before + nAccepted,
       "every indexed doc must appear exactly once")
-    assert(accepted.join(sizes,
-      accepted("doc_id") === sizes("ref_id"), "left_anti").count() == 0,
-      "every accepted doc must be present in the grown index")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).toSet
+    val stored = sigs.join(accepted.withColumnRenamed("doc_id", "ref_id"),
+      Seq("ref_id"), "left_semi")
+    val signed = analytics.Dedup.signatures(analytics.Tables(spark, dir)
+      .documents.join(accepted, Seq("doc_id"), "left_semi"))
+    assert(stored.columns.toSeq ==
+      signed.withColumnRenamed("doc_id", "ref_id").columns.toSeq,
+      "the signature table lost signatures' column layout")
+    assert(rows(stored) == rows(signed),
+      "the appended rows must equal the accepted docs' signatures")
+    signed.unpersist()
     val p2 = analytics.Dedup.d14Query(spark, dir, Seq("src2", "src3", "src4"))
       .queryExecution.explainString(FormattedMode)
     assert(!nodeBlocks(p2).exists { case (n, b) =>
@@ -479,7 +497,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .d14Query(spark, dir, Seq("src2", "src3", "src4"))
       .orderBy("doc_id").collect().toSeq
     analytics.Dedup.d14Compact(spark, dir)
-    for (t <- Seq("d14_ref_bands", "d14_ref_shingles", "d14_ref_sizes")) {
+    for (t <- Seq("d14_ref_bands", "d14_ref_signatures")) {
       val n = graft.ops.Bucketing.tableDataFileCount(
         spark, analytics.Dedup.d14Table(t, dir))
       assert(n == 8, s"$t holds $n data files after compaction, want 8")
@@ -1092,7 +1110,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("d17 forget removes the forgotten docs from every layout, keeps " +
       "the survivors bit-exact, and the recurring query stays exchange-free") {
     // the takedown law: after d14Forget, (a) no forgotten ref_id survives
-    // in any of the three index tables, (b) every OTHER indexed doc's rows
+    // in either index table, (b) every OTHER indexed doc's rows
     // are untouched, (c) the rewrite preserved the bucket spec — one file
     // per bucket (it doubles as a compaction) and the band join plans
     // with no exchange (the d17 oracle pins forget ≡ rebuild-without;
@@ -1104,13 +1122,13 @@ class PlanShapeSpec extends AnyFunSuite {
       .filter(col("source").isin(analytics.Dedup.ForgottenSources: _*))
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(gone.nonEmpty, "fixture must index at least one forgotten doc")
-    val sizesT = analytics.Dedup.d14Table("d14_ref_sizes", dir)
-    val beforeIds = spark.table(sizesT).select("ref_id")
+    val sigT = analytics.Dedup.d14Table("d14_ref_signatures", dir)
+    val beforeIds = spark.table(sigT).select("ref_id")
       .collect().map(_.getLong(0)).toSet
     assert(gone.subsetOf(beforeIds), "forgotten docs must start indexed")
     analytics.Dedup.d14Forget(spark, dir,
       analytics.Dedup.ForgottenSources)
-    for (t <- Seq("d14_ref_bands", "d14_ref_shingles", "d14_ref_sizes")) {
+    for (t <- Seq("d14_ref_bands", "d14_ref_signatures")) {
       val table = analytics.Dedup.d14Table(t, dir)
       assert(spark.table(table)
         .filter(col("ref_id").isin(gone.toSeq: _*)).count() == 0,
@@ -1118,7 +1136,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(graft.ops.Bucketing.tableDataFileCount(spark, table) == 8,
         s"$t lost its one-file-per-bucket layout in the rewrite")
     }
-    val afterIds = spark.table(sizesT).select("ref_id")
+    val afterIds = spark.table(sigT).select("ref_id")
       .collect().map(_.getLong(0)).toSet
     assert(afterIds == beforeIds -- gone,
       "forget must remove exactly the forgotten docs, nothing else")

@@ -170,8 +170,8 @@ class DedupSpec extends AnyFunSuite {
     // bandCandidates is the selectivity knob BENCH_SF1's sf10 analysis
     // names: at band size r a pair at Jaccard j is a candidate with
     // probability 1-(1-j^r)^(8/r). Laws on the real sf0.001 corpus:
-    // (1) r=1 reproduces EXACTLY the (i, mh) equality join d3/d10/d11 use
-    //     (the oracle-mirrored default);
+    // (1) r=1 reproduces EXACTLY the (i, mh) equality join the oracles
+    //     mirror, and so does the packed-key (bk) self-join d3/d11/d12 run;
     // (2) r=2 shrinks the candidate set (the whole point — the shrinkage
     //     is the sub-threshold background, which at corpus scale is the
     //     verify stage's entire cost);
@@ -192,6 +192,11 @@ class DedupSpec extends AnyFunSuite {
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
         .distinct())
       assert(r1 == direct, "r=1 must equal the (i, mh) equality join")
+      val packed = pairs(Dedup.d14BandKeys(sh, "doc_a", 1)
+        .join(Dedup.d14BandKeys(sh, "doc_b", 1), "bk")
+        .filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").distinct())
+      assert(packed == r1, "the r=1 bk self-join must equal the (i, mh) join")
       val r2 = pairs(Dedup.bandCandidates(mh, 2))
       assert(r2.subsetOf(r1), "an r=2 band match implies two r=1 matches")
       assert(r2.size < r1.size,
@@ -288,7 +293,7 @@ class DedupSpec extends AnyFunSuite {
     Dedup.d14Rebuild(spark, dir, 4)
     assert(Dedup.d14IndexR(spark, dir) == 4, "meta must record the new r")
     // the rebuilt table equals signing the reference corpus at r=4 from
-    // scratch — the unpack∘repack roundtrip loses nothing
+    // scratch — re-banding the stored signature rows loses nothing
     val ref = Tables(spark, dir).documents
       .filter(!col("source").isin("src0", "src1", "src2", "src3", "src4"))
     val sh = Dedup.signatures(ref)
@@ -329,6 +334,21 @@ class DedupSpec extends AnyFunSuite {
     assert(rows() == orig, "rebuild back did not restore the r=2 table")
   }
 
+  test("d10 runs at any band size: after a re-band to r=3 (ragged last " +
+      "band) d14Query equals d10With at r=3 row for row") {
+    val dir = TestSession.sfDir
+    Dedup.d14Build(spark, dir)
+    Dedup.d14Rebuild(spark, dir, 3)
+    try {
+      val got = Dedup.d14Query(spark, dir)
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+      val want = Dedup.d10With(spark, dir, 3)
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(got.nonEmpty, "d14Query returned no rows at r=3")
+      assert(got == want, "the r=3 index diverged from d10's r=3 recompute")
+    } finally Dedup.d14Rebuild(spark, dir, Dedup.D14BandR)
+  }
+
   test("escalation actually rewrites: a hot-banded index flips d18's " +
       "verdict and d14Maintain re-bands it — queries against the " +
       "escalated index equal the r=4 recompute") {
@@ -338,10 +358,11 @@ class DedupSpec extends AnyFunSuite {
     Dedup.d14Build(spark, dir)
     val bandsT = Dedup.d14Table("d14_ref_bands", dir)
     // poison the band table with 200 synthetic docs colliding in EVERY
-    // band (valid r=2 packs, so the rebuild can unpack them): the census
-    // goes from healthy to ~100 cand-pairs/doc, far past the budget.
-    // They exist only in the bands table — the verify stage's shingle
-    // join drops them, so answers stay pure.
+    // band: the census goes from healthy to ~100 cand-pairs/doc, far past
+    // the budget. They exist only in the bands table, with no signature
+    // row behind them — the verify's signature attach drops them, so
+    // answers stay pure, and the re-band (which derives the band table
+    // from the stored signatures) leaves them behind.
     val P = Dedup.Prime
     val hot = (0 until 200).flatMap(i => (0 until 4).map(b =>
       ((b.toLong * P + 10 + b) * P + 20 + b, 5000000L + i)))
@@ -354,6 +375,8 @@ class DedupSpec extends AnyFunSuite {
       "d14Maintain must have re-banded the index to the next r")
     assert(spark.table(bandsT).columns.contains("k2"),
       "the escalated table must carry the k2 key remainder")
+    assert(spark.table(bandsT).filter(col("ref_id") >= 5000000L).isEmpty,
+      "the re-band from signatures must drop the band-only synthetic docs")
     // the escalated index answers exactly the r=4 from-scratch recompute
     val got = Dedup.d14Query(spark, dir)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq

@@ -67,4 +67,22 @@ class StreamIndexDedupSpec extends AnyFunSuite {
         "escalated-index ingest gate diverged from the batch query")
     } finally Dedup.d14Rebuild(spark, dir, Dedup.D14BandR)
   }
+
+  test("t20 against a RAGGED (r=3) index equals the batch query — the " +
+      "stream pads the last band exactly like the stored keys") {
+    // 8 % 3 != 0: the last band holds two minima and a 0 pad, and its k2
+    // pair is half-empty; the stream must sign those pads as the stored
+    // table did or a near-dup in the last band would be missed
+    Dedup.d14Build(spark, dir)
+    Dedup.d14Rebuild(spark, dir, 3)
+    try {
+      val streamRows = Transport.t20IndexDedupStream(spark, dir)
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+      val batchRows = Dedup.d14Query(spark, dir)
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(streamRows.nonEmpty, "t20 returned no rows at r=3")
+      assert(streamRows == batchRows,
+        "ragged-index ingest gate diverged from the batch query")
+    } finally Dedup.d14Rebuild(spark, dir, Dedup.D14BandR)
+  }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the ingest loop must equal the batch two-wave cascade bit-for-bit
   * after end-of-log — wave 1's verdicts against the original index, wave
   * 2's against the index GROWN by wave 1's survivors — and the growth
-  * must be observable: the sizes table gains exactly wave 1's accepted
+  * must be observable: the signature table gains exactly wave 1's accepted
   * docs between the triggers, and at least one wave-2 doc matches a
   * wave-1 survivor (the admission t20's non-growing loop cannot make).
   * Runs on the real sf0.001 corpus with genuine arrival-time wave
@@ -21,8 +21,8 @@ class StreamIndexGrowSpec extends AnyFunSuite {
   test("t22 ingest loop == d14_upsert batch cascade; the index grows by " +
       "wave 1's survivors; wave 2 can match them") {
     Dedup.d14Build(spark, dir)
-    val sizesT = Dedup.d14Table("d14_ref_sizes", dir)
-    val refCount = spark.table(sizesT).count()
+    val sigT = Dedup.d14Table("d14_ref_signatures", dir)
+    val refCount = spark.table(sigT).count()
     // t22 runs one checkpointed query PER WAVE (the t29 mid-publish-race
     // fix), so inspect fires once per run — accumulate across runs
     var batches = 0
@@ -51,7 +51,7 @@ class StreamIndexGrowSpec extends AnyFunSuite {
     // growth law: the index gained exactly wave 1's accepted docs
     val accepted1 = w1Stream.count(r => r(2) == true)
     assert(accepted1 > 0, "fixture must accept at least one wave-1 doc")
-    assert(spark.table(sizesT).count() == refCount + accepted1,
+    assert(spark.table(sigT).count() == refCount + accepted1,
       "the live index must grow by exactly wave 1's survivors")
     // the loop's point: at least one wave-2 doc matched a WAVE-1 doc (a
     // match_id that is itself a batch doc, impossible for t20's
