@@ -1,132 +1,40 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
+import scala.util.Using
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR, plus
   * the reference's transport workload (100k messages × 256-byte payloads,
-  * benchmark/src/bin/producer.rs:29-37) through the `.ss` sink and source.
-  * Prints ONE JSON line.
+  * benchmark/src/bin/producer.rs:29-37) through `.ss` and the embedded
+  * redis, iggy and kafka brokers. Writes the per-entry map to
+  * BENCH_QUERIES.json and prints ONE compact JSON line.
+  *
+  * One protocol for every entry ([[measure]]): the entry's body runs once
+  * as a discarded warmup, then [[Runs]] timed times, each run on fresh
+  * state — the body redoes its own setup (an index build, a fresh embedded
+  * server) and the session's caches are dropped after every run. Each
+  * timed part records the median of its runs; the raw runs go under the
+  * artifact's `_runs` key.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (dataset), SPARK_GRAFT_BENCH_ONLY (comma list of
+  * query names or recorded xp names), SPARK_GRAFT_BENCH_JSON (artifact
+  * path).
   */
 object Bench {
-  /** Self-contained per-query artifact (VERDICT r8 #4): the driver's
-    * captured stdout line has been truncated two rounds running, so the
-    * bench also WRITES the full per-query map — sorted keys, one file the
-    * judge can diff without BENCH_LOCAL.md.
+  /** Timed runs per entry, after one discarded warmup. */
+  val Runs = 3
+
+  /** One run of an entry's body. Untimed setup runs inline; [[part]] and
+    * [[forced]] time the named pieces the artifact records.
     */
-  private def writeQueriesJson(results: collection.Map[String, Double],
-      sfDir: String, tide: (Double, Long)): Unit = {
-    // a SPARK_GRAFT_BENCH_ONLY subset run must not clobber the committed
-    // full-map artifact — unless the caller named an output path explicitly
-    if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY") &&
-        !sys.env.contains("SPARK_GRAFT_BENCH_JSON")) return
-    val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "BENCH_QUERIES.json")
-    def q(s: String): String = graft.core.JsonText.quote(s)
-    // self-declare the query-set size so tools/check.py can pin the
-    // entry-count invariant against the artifact (VERDICT r12 #6)
-    val lines = s"""  "_sf": ${q(sfDir)}""" +:
-      s"""  "_nqueries": ${SparkEntry.queries.size}""" +:
-      s"""  "_load1_start": ${tide._1}""" +:
-      s"""  "_load1_end": ${load1()}""" +:
-      s"""  "_tide_wait_sec": ${tide._2}""" +:
-      results.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"""  ${q(k)}: $v""" }
-    val body = lines.mkString("{\n", ",\n", "\n}\n")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      body.getBytes("UTF-8"))
-    catch { case _: java.io.IOException => () } // artifact is best-effort
-  }
+  final class Run {
+    private[graft] val parts =
+      mutable.LinkedHashMap.empty[String, (Double, Long)]
 
-  /** Host-tide telemetry (VERDICT r17 #2): round-17's driver regen ran in
-    * a vCPU-steal window and published transport numbers 1.6× under the
-    * same-day calm-window medians. The guard samples ambient load BEFORE
-    * the timed section (this JVM is idle then, so a high load1 is outside
-    * steal — the r17 tide signature was guest load 5+ with zero in-guest
-    * CPU), waits up to SPARK_GRAFT_TIDE_WAIT_SEC (default 300 s, 0 to
-    * disable) for a calm window, then proceeds either way and ANNOTATES
-    * the artifact — a steal-corrupted regen can no longer masquerade as
-    * calm-window truth.
-    */
-  private def load1(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.mkString.split(" ")(0).toDouble finally src.close()
-    } catch { case _: Exception => -1.0 }
-
-  private def tideGuard(): (Double, Long) = {
-    // the 2.0 default is calibrated to THIS rig, not normalized by cores:
-    // the bench box idles at ~0.3 and the r17 steal windows read 4-5, so
-    // 2.0 splits them cleanly. On a host with legitimate multi-core
-    // background load, set SPARK_GRAFT_TIDE_LOAD1 higher (or
-    // SPARK_GRAFT_TIDE_WAIT_SEC=0 to disable the wait) — receipt scripts
-    // that manage their own calm windows should do the latter.
-    val threshold = sys.env.get("SPARK_GRAFT_TIDE_LOAD1")
-      .map(_.toDouble).getOrElse(2.0)
-    val capSec = sys.env.get("SPARK_GRAFT_TIDE_WAIT_SEC")
-      .map(_.toLong).getOrElse(300L)
-    var waited = 0L
-    var l = load1()
-    while (l > threshold && waited < capSec) {
-      System.err.println(f"[bench] tide guard: ambient load1 $l%.2f > " +
-        f"$threshold%.1f before the timed section, waiting (${waited}s)")
-      Thread.sleep(15000L)
-      waited += 15L
-      l = load1()
-    }
-    if (waited > 0)
-      System.err.println(f"[bench] tide guard: proceeding at load1 $l%.2f " +
-        f"after ${waited}s wait")
-    (l, waited)
-  }
-
-  /** The driver captures only the TAIL (~2000 chars) of the bench stdout
-    * and parses the last JSON object out of it — with ~200 per-query
-    * doubles the full one-line map runs >5000 chars, so its head gets
-    * truncated out of the window (sbt's `[success]` epilogue eats the
-    * tail too) and the driver records `parsed: null` (it did in r14 AND
-    * r15). The PRINTED line therefore compacts `queries` to the
-    * transport entries (`xp_*` — the ones BASELINE.md prices) plus
-    * per-family totals, ~1 kB; the full per-query map is the committed
-    * BENCH_QUERIES.json artifact, which `detail` points at.
-    */
-  private def printCompactLine(results: collection.Map[String, Double],
-      sfDir: String, tide: (Double, Long)): Unit = {
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val (xp, rest) = results.toSeq.partition(_._1.startsWith("xp_"))
-    val families = rest
-      .groupBy { case (k, _) => k.split('_')(0).takeWhile(!_.isDigit) }
-      .toSeq.sortBy(_._1)
-      .map { case (f, kvs) =>
-        s""""${f}_family_total":${r3(kvs.map(_._2).filter(_ >= 0).sum)}"""
-      }
-    val qs = (xp.sortBy(_._1).map { case (k, v) => s""""$k":${r3(v)}""" }
-      ++ families).mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-      s""""queries":$qs,"nqueries":${results.size},""" +
-      s""""load1_start":${r3(tide._1)},"load1_end":${r3(load1())},""" +
-      s""""tide_wait_sec":${tide._2},""" +
-      s""""detail":"BENCH_QUERIES.json","sf":"$sfDir"}""")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // BEFORE the session spins up 32 worker threads: a high load1 here is
-    // someone else's steal, not ours
-    val tide = tideGuard()
-    val spark = GraftSession.get()
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-
-    def timed(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      // a failed entry records -1 but must NOT fail silently: the -1 is
-      // an artifact-of-record datum and needs its cause on stderr
-      try f catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: $e")
-        results(name) = -1.0; return
-      }
-      results(name) = (System.nanoTime() - t0) / 1e9
-    }
+    def part(name: String)(f: => Unit): Unit = counted(name) { f; -1L }
 
     /** Materialize the FULL result — `df.count()` is not a valid price:
       * Catalyst optimizes the count plan, eliminating any work the row
@@ -137,466 +45,363 @@ object Bench {
       * (a1-a4, p16) similarly counted scan rows without ever computing
       * their output columns. Executing the query's own physical plan via
       * toRdd prices every column of every row — what a user's write()
-      * would pay (minus the output format).
+      * would pay (minus the output format). The row count is kept for
+      * the loop's fresh-state check.
       */
-    def force(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.queryExecution.toRdd.count(); ()
+    def forced(name: String)(df: => DataFrame): Unit =
+      counted(name)(df.queryExecution.toRdd.count())
+
+    /** Time a piece that yields its row count. */
+    private[graft] def counted(name: String)(f: => Long): Unit = {
+      val t0 = System.nanoTime()
+      val rows = f
+      parts(name) = ((System.nanoTime() - t0) / 1e9, rows)
     }
 
-    /** Embedded-server queries (each spins its own in-process broker) swing
-      * ±0.5–1.6 s between clean runs — broker thread scheduling and socket
-      * accepts, not plan cost. Time those 3× and report the MEDIAN so
-      * round-over-round comparison carries signal (method documented in
-      * BENCH_LOCAL.md). The uncapped-jac dedup family (d3/d10/d11 — the
-      * repo's most expensive entries) gets the same treatment for a
-      * different noise source: BENCH_LOCAL.md documents an 8–13 s
-      * page-cache/GC variance band for d10 on byte-identical code, and a
-      * single-shot reading from that band is what made round 9's committed
-      * artifact contradict its own documentation (VERDICT r9 #1).
-      * Everything else stays single-shot.
-      */
-    val medianOf3 = Set(
-      "i1_iggy_roundtrip", "i2_iggy_admission", "i3_iggy_seek",
-      "i5_iggy_kafka_eos", "i6_iggy_redis_eos",
-      "k1_kafka_roundtrip", "k2_kafka_seek",
-      "k4_kafka_group_resume", "k5_kafka_zstd_roundtrip", "k6_kafka_txn",
-      "k8_kafka_eos_sink", "k9_kafka_eos_relay",
-      "k10_kafka_eos_pipeline", "k11_redis_kafka_eos", "k12_ss_kafka_eos",
-      "r1_redis_roundtrip", "r2_redis_latest", "r3_redis_sharding",
-      "r9_redis_eos_cluster", "r10_kafka_redis_eos",
-      "r11_redis_redis_eos", "r12_ss_redis_eos", "r13_relay_lag",
-      "r4_redis_seek", "r5_redis_admission", "r6_redis_group_recovery",
-      "r7_relay", "t2_ss_stream",
-      "d3_minhash_lsh", "d10_cross_corpus", "d11_lsh_recall")
+    private[graft] def rows: Map[String, Long] =
+      parts.map { case (p, (_, n)) => p -> n }.toMap
+  }
 
-    /** The DOCUMENTED noise-class cells (BENCH_LOCAL.md: k3/k7 swing 2×
-      * across days on byte-identical code; r8 read 5.3–8.5 within one
-      * hour in round 18) get the structural treatment VERDICT r18 #2
-      * asked for: one DISCARDED warmup pass (the first run pays broker
-      * thread spawn, socket accept ramp and JIT of the txn/EOS paths)
-      * and a median of FIVE timed runs — so one swung run moves the
-      * reported median far less than it moves a median of three.
-      */
-    val medianOf5 = Set(
-      "k3_kafka_admission", "k7_kafka_txn_stream", "r8_redis_eos_sink")
+  /** A recorded part: the median of the timed runs (-1 when the entry
+    * failed) and the raw runs.
+    */
+  private[graft] final case class Reading(name: String, median: Double,
+      runs: Seq[Double])
 
-    def timedMedian(name: String, n: Int = 3, warmup: Boolean = false)
-        (f: => Unit): Unit =
-      timedMedianRuns(name, n, warmup)(_ => f)
-
-    /** [[timedMedian]] whose body sees the RUN INDEX (−1 = the discarded
-      * warmup, 0..n−1 = the timed runs) — the r20 treatment for the xp
-      * produce cells, whose repeated runs must each write a FRESH stream
-      * key so the paired consume cell still reads exactly 100k messages.
-      */
-    def timedMedianRuns(name: String, n: Int, warmup: Boolean)
-        (f: Int => Unit): Unit = {
-      if (warmup) {
-        // discarded: identical work, never recorded (not even on failure —
-        // the timed runs will fail the same way and record the -1)
-        try f(-1) catch { case e: Throwable =>
-          System.err.println(s"[bench] $name warmup FAILED: $e")
-        }
-        GraftSession.releaseCaches(spark)
-        System.gc()
+  /** The bench protocol: `body` once as a discarded warmup, then [[Runs]]
+    * timed runs, `fresh` after every run. A throwing run, or a forced part
+    * whose row count differs from the warmup's (the body did not reset its
+    * state), records -1 for every part the entry has reached and stops the
+    * entry, with the cause on stderr.
+    */
+  private[graft] def measure(entry: String, body: Run => Unit,
+      fresh: () => Unit): Seq[Reading] = {
+    var all = Vector.empty[Run]
+    try {
+      while (all.size <= Runs) {
+        val r = new Run
+        all :+= r
+        try body(r) finally fresh()
+        if (r.rows != all.head.rows)
+          throw new IllegalStateException(s"rows per part ${r.rows} " +
+            s"differ from the warmup's ${all.head.rows}")
       }
-      val runs = (0 until n).map { i =>
-        val t0 = System.nanoTime()
-        try f(i) catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: $e")
-          results(name) = -1.0; return
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        GraftSession.releaseCaches(spark)
-        System.gc()
-        dt
-      }
-      // raw readings to stderr: the variance-band receipts BENCH_LOCAL.md's
-      // method needs (the JSON carries only the median)
-      System.err.println(f"[bench] $name median-of-$n raw: " +
-        runs.map(r => f"$r%.2f").mkString(" / "))
-      results(name) = runs.sorted.apply(n / 2)
+    } catch { case e: Throwable =>
+      // a -1 is a datum of record: it needs its cause on stderr
+      System.err.println(s"[bench] $entry FAILED: $e")
+      val reached = all.flatMap(_.parts.keys).distinct
+      return (if (reached.isEmpty) Seq(entry) else reached)
+        .map(Reading(_, -1.0, Nil))
     }
+    all.head.parts.keys.toSeq.map { p =>
+      val runs = all.tail.map(_.parts(p)._1)
+      System.err.println(f"[bench] $p runs: " +
+        runs.map(t => f"$t%.2f").mkString(" / "))
+      Reading(p, runs.sorted.apply(Runs / 2), runs)
+    }
+  }
 
-    /** Stream key for run `i` of a repeated xp produce — the LAST timed
-      * run writes the canonical "bench" key the downstream consume/relay
-      * cells read (exactly 100k messages); earlier runs land on disjoint
-      * keys (identical byte work, separate streams).
-      */
-    def xpKey(i: Int, n: Int): String = if (i == n - 1) "bench" else s"bw$i"
+  /** Entries whose timed parts differ from "force the registry query":
+    * the one-time build (an index, a layout) is untimed setup or its own
+    * part, and the recurring cost is priced apart from it (the Verify /
+    * oracle path still runs the combined query). Each body redoes its
+    * setup, so every run times the same work on the same state.
+    */
+  private def splitEntries(spark: SparkSession, dir: String)
+      : Map[String, Run => Unit] = {
+    import analytics.{Dedup, Relational, Similarity, Transport}
+    // d14's wave 1 admitted against a fresh index: the state d14_upsert
+    // and d16 start from. Materialized here so the timed append is not
+    // charged wave 1's band join and verify.
+    def wave1Accepted(): DataFrame = {
+      Dedup.d14Build(spark, dir)
+      Dedup.d14Query(spark, dir, Seq("src0", "src1"))
+        .filter(col("novel")).select(col("doc_id")).localCheckpoint(true)
+    }
+    val wave2 = Seq("src2", "src3", "src4")
+    Map(
+      "q22_bucketed_join" -> { r =>
+        r.part("q22_layout")(Relational.q22Layout(spark, dir))
+        r.forced("q22_join")(Relational.q22Join(spark))
+      },
+      "s7_ann_ivf_indexed" -> { r =>
+        r.part("s7_layout")(Similarity.s7Layout(spark, dir))
+        r.forced("s7_query")(Similarity.s7Query(spark, dir))
+      },
+      "d14_dedup_index" -> { r =>
+        r.part("d14_build")(Dedup.d14Build(spark, dir))
+        r.forced("d14_query")(Dedup.d14Query(spark, dir))
+      },
+      // the recurring costs of the incremental loop: the append of wave
+      // 1's survivors and wave 2's query against the grown index
+      "d14_upsert" -> { r =>
+        val accepted = wave1Accepted()
+        r.part("d14_append")(Dedup.d14Append(spark, dir, accepted))
+        r.forced("d14_grown_query")(Dedup.d14Query(spark, dir, wave2))
+      },
+      // the compaction rewrite (O(index bytes), no re-signing) and the
+      // query over the one-file-per-bucket layout
+      "d16_index_compact" -> { r =>
+        Dedup.d14Append(spark, dir, wave1Accepted())
+        r.part("d16_compact")(Dedup.d14Compact(spark, dir))
+        r.forced("d16_compacted_query")(Dedup.d14Query(spark, dir, wave2))
+      },
+      // the takedown rewrite (anti-join through the compaction swap) and
+      // the query over the reduced index
+      "d17_index_forget" -> { r =>
+        Dedup.d14Build(spark, dir)
+        r.part("d17_forget")(
+          Dedup.d14Forget(spark, dir, Dedup.ForgottenSources))
+        r.forced("d17_post_query")(Dedup.d14Query(spark, dir))
+      },
+      "s14_index_forget" -> { r =>
+        Similarity.s14Setup(spark, dir)
+        r.part("s14_forget")(
+          Similarity.s14Forget(spark, Similarity.s14IndexPath(spark, dir)))
+        r.forced("s14_post_serve")(Similarity.s14Serve(spark, dir))
+      },
+      "d18_band_stats" -> { r =>
+        Dedup.d14Build(spark, dir)
+        r.forced("d18_census")(Dedup.d18Census(spark, dir))
+      },
+      "s15_index_stats" -> { r =>
+        Similarity.s7Layout(spark, dir)
+        r.forced("s15_census")(Similarity.s15Stats(spark, dir))
+      },
+      "t20_stream_index_dedup" -> { r =>
+        Dedup.d14Build(spark, dir)
+        r.forced("t20_stream_index_dedup")(
+          Transport.t20IndexDedupStream(spark, dir))
+      },
+      // per-wave admission plus the O(accepted) appends that grow the index
+      "t22_stream_index_grow" -> { r =>
+        Dedup.d14Build(spark, dir)
+        r.forced("t22_stream_index_grow")(
+          Transport.t22IndexGrowStream(spark, dir))
+      },
+      "t21_stream_query_serve" -> { r =>
+        Similarity.s7Layout(spark, dir)
+        r.forced("t21_stream_query_serve")(
+          Transport.t21QueryServeStream(spark, dir))
+      },
+      "s13_mmr_indexed" -> { r =>
+        Similarity.s7Layout(spark, dir)
+        r.forced("s13_indexed_serve")(Similarity.s13IndexedServe(spark, dir))
+      },
+      // the base build is the pre-existing index; the batch append and
+      // the probe are the recurring costs
+      "s12_ann_index_upsert" -> { r =>
+        r.part("s12_base")(Similarity.s12Base(spark, dir))
+        r.part("s12_upsert")(Similarity.s12Upsert(spark, dir))
+        r.forced("s12_query")(Similarity.s12Probe(spark, dir))
+      })
+  }
 
-    // JVM/codegen/scan warmup so the first timed query isn't charged for
-    // session spin-up (the driver compares per-query numbers)
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    spark.range(1000000).selectExpr("sum(id)").collect()
+  /** The reference's transport envelope: 100k messages of 256-byte
+    * lorem-ipsum payloads (≈30 MB) on stream key "bench", 4 shards.
+    */
+  private val Messages = 100000L
 
-    // Optional comma-separated allowlist for local iteration
-    // (e.g. SPARK_GRAFT_BENCH_ONLY=t5_ss_sessions,t7_stream_dedup_watermarked)
+  private def envelope(spark: SparkSession): DataFrame = {
+    val payload = ("lorem ipsum dolor sit amet " * 10).take(256)
+    spark.range(Messages).select(
+      lit("bench").as("stream_key"),
+      (col("id") % 4).as("shard_id"),
+      col("id").as("sequence"),
+      timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
+      lit(payload.getBytes("UTF-8")).as("payload"))
+  }
+
+  /** A transport cell: every run opens a fresh `E` (an embedded broker —
+    * so each produce starts from the same empty state), produces the
+    * envelope through it, consumes it back, then runs the cell's relays
+    * (the reference benchmark's third workload, consume + produce). Each
+    * step is one timed part.
+    */
+  private final case class Cell[E <: AutoCloseable](name: String,
+      open: () => E, produce: (E, DataFrame) => Unit, consume: E => Long,
+      relays: Seq[(String, E => Unit)] = Nil) {
+    def names: Seq[String] =
+      Seq(s"xp_${name}_produce_100k", s"xp_${name}_consume_100k") ++
+        relays.map(_._1)
+
+    def body(spark: SparkSession)(r: Run): Unit =
+      Using.resource(open()) { e =>
+        val df = envelope(spark)
+        r.part(names(0))(produce(e, df))
+        r.part(names(1)) {
+          val n = consume(e)
+          require(n == Messages, s"expected $Messages $name messages, got $n")
+        }
+        relays.foreach { case (relay, f) => r.part(relay)(f(e)) }
+      }
+  }
+
+  private def relayed(n: Long): Unit =
+    require(n == Messages, s"expected $Messages relayed, got $n")
+
+  private def cells(spark: SparkSession): Seq[Cell[_ <: AutoCloseable]] = {
+    import graft.eos.{KafkaRelaySource, KafkaTxnDestination,
+      RedisLedgerDestination, RelayDriver}
+    import graft.kafka.{EmbeddedKafka, KafkaSource}
+    import graft.redis.{EmbeddedRedis, RedisSource}
+    val ssDir = "/tmp/graft/bench_ss"
+    lazy val (tlsServer, tlsClient) = graft.core.TlsChannel.ephemeral
+    def kafkaRead(k: EmbeddedKafka, tls: Boolean = false) =
+      KafkaSource.boundedRead(spark, k.host, k.port, Seq("bench"),
+        tls = if (tls) Some(tlsClient) else None).count()
+    Seq(
+      // no broker: the cell's state is the overwritten directory
+      Cell[AutoCloseable]("ss", () => () => (),
+        (_, df) => df.write.format("ss").mode("overwrite").save(ssDir),
+        _ => spark.read.format("ss").load(ssDir).count(),
+        Seq("xp_ss_relay_100k" -> ((_: AutoCloseable) =>
+          spark.read.format("ss").load(ssDir)
+            .write.format("ss").mode("overwrite").save(ssDir + "_relay")))),
+      // client AND server are this library's: the whole RESP stack
+      Cell[EmbeddedRedis]("redis", () => new EmbeddedRedis,
+        (s, df) => RedisSource.write(df, s.host, s.port, pipelineSize = 500),
+        s => RedisSource.boundedRead(spark, s.host, s.port,
+          (0L until 4L).map(sh => ("bench", sh))).count()),
+      Cell[graft.iggy.EmbeddedIggy]("iggy", () => new graft.iggy.EmbeddedIggy,
+        (s, df) => graft.iggy.IggySource.write(df, s.host, s.port),
+        s => graft.iggy.IggySource.boundedRead(spark, s.host, s.port,
+          Seq("bench")).count()),
+      // real v2 record batches + CRC32C per message; the relays drain the
+      // same 100k through the exactly-once matrix — kafka→kafka in KIP-98
+      // transactions, then kafka→redis through the WATCH-fenced ledger
+      Cell[EmbeddedKafka]("kafka", () => new EmbeddedKafka,
+        (s, df) => KafkaSource.write(df, s.host, s.port), kafkaRead(_),
+        Seq(
+          "xp_eos_relay_kafka_100k" -> ((s: EmbeddedKafka) =>
+            relayed(RelayDriver.all(spark,
+              KafkaRelaySource(s.host, s.port, Seq("bench")),
+              KafkaTxnDestination(s.host, s.port, "g_xp_relay", "xprelay",
+                _ + "_out")))),
+          "xp_eos_relay_redis_100k" -> ((s: EmbeddedKafka) =>
+            Using.resource(new EmbeddedRedis) { d =>
+              relayed(RelayDriver.all(spark,
+                KafkaRelaySource(s.host, s.port, Seq("bench")),
+                RedisLedgerDestination(d.host, d.port, "xprled",
+                  _ => "bench_r")))
+            }))),
+      // the bulk-encryption + per-connection handshake price
+      Cell[EmbeddedKafka]("kafka_tls",
+        () => new EmbeddedKafka(tls = Some(tlsServer)),
+        (s, df) => KafkaSource.write(df, s.host, s.port, tls = Some(tlsClient)),
+        kafkaRead(_, tls = true)),
+      // the codecs' CPU price against the wire bytes they save (the
+      // repetitive payload compresses ~10×); zstd is KIP-110's default
+      Cell[EmbeddedKafka]("kafka_gzip", () => new EmbeddedKafka,
+        (s, df) => KafkaSource.write(df, s.host, s.port, compression = "gzip"),
+        kafkaRead(_)),
+      Cell[EmbeddedKafka]("kafka_zstd", () => new EmbeddedKafka,
+        (s, df) => KafkaSource.write(df, s.host, s.port, compression = "zstd"),
+        kafkaRead(_)))
+  }
+
+  private def load1(): Double =
+    try {
+      val src = scala.io.Source.fromFile("/proc/loadavg")
+      try src.mkString.split(" ")(0).toDouble finally src.close()
+    } catch { case _: Exception => -1.0 }
+
+  /** Where the artifact goes: SPARK_GRAFT_BENCH_JSON, else the committed
+    * BENCH_QUERIES.json — except that a SPARK_GRAFT_BENCH_ONLY subset run
+    * without an explicit path writes nothing, so it cannot clobber the
+    * full map.
+    */
+  private[graft] def artifactPath(env: Map[String, String]): Option[String] =
+    env.get("SPARK_GRAFT_BENCH_JSON").orElse(
+      if (env.contains("SPARK_GRAFT_BENCH_ONLY")) None
+      else Some("BENCH_QUERIES.json"))
+
+  /** The per-entry artifact: a flat sorted `name → median` map with the
+    * meta keys (`_sf`, `_nqueries` — which tools/check.py pins against
+    * the query set — the load1 annotations and `_runs`, the raw runs).
+    */
+  private[graft] def artifact(readings: Seq[Reading], sfDir: String,
+      load1Start: Double, load1End: Double): String = {
+    def q(s: String): String = graft.core.JsonText.quote(s)
+    val sorted = readings.sortBy(_.name)
+    val runs = sorted.map(r => s"""    ${q(r.name)}: """ +
+      r.runs.mkString("[", ", ", "]")).mkString("{\n", ",\n", "\n  }")
+    val lines = Seq(
+      s"""  "_sf": ${q(sfDir)}""",
+      s"""  "_nqueries": ${SparkEntry.queries.size}""",
+      s"""  "_load1_start": $load1Start""",
+      s"""  "_load1_end": $load1End""",
+      s"""  "_runs": $runs""") ++
+      sorted.map(r => s"""  ${q(r.name)}: ${r.median}""")
+    lines.mkString("{\n", ",\n", "\n}\n")
+  }
+
+  /** The driver captures only the TAIL (~2000 chars) of the bench stdout
+    * and parses the last JSON object out of it — with ~200 per-query
+    * doubles the full one-line map runs >5000 chars, so its head gets
+    * truncated out of the window (sbt's `[success]` epilogue eats the
+    * tail too) and the driver records `parsed: null` (it did in r14 AND
+    * r15). The PRINTED line therefore compacts `queries` to the
+    * transport entries (`xp_*` — the ones BASELINE.md prices) plus
+    * per-family totals, ~1 kB; the full per-query map is the
+    * BENCH_QUERIES.json artifact, which `detail` points at.
+    */
+  private def printCompactLine(results: Seq[Reading], sfDir: String,
+      load1Start: Double, load1End: Double): Unit = {
+    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val (xp, rest) = results.map(r => r.name -> r.median)
+      .partition(_._1.startsWith("xp_"))
+    val families = rest
+      .groupBy { case (k, _) => k.split('_')(0).takeWhile(!_.isDigit) }
+      .toSeq.sortBy(_._1)
+      .map { case (f, kvs) =>
+        s""""${f}_family_total":${r3(kvs.map(_._2).filter(_ >= 0).sum)}"""
+      }
+    val qs = (xp.sortBy(_._1).map { case (k, v) => s""""$k":${r3(v)}""" }
+      ++ families).mkString("{", ",", "}")
+    val total = results.map(_.median).filter(_ >= 0).sum
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
+      s""""queries":$qs,"nqueries":${results.size},""" +
+      s""""load1_start":${r3(load1Start)},"load1_end":${r3(load1End)},""" +
+      s""""detail":"BENCH_QUERIES.json","sf":"$sfDir"}""")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // ambient load before the session's own threads start: an annotation
+    // that tells a steal-window run from a calm one
+    val load1Start = load1()
+    val spark = GraftSession.get()
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-
+    val splits = splitEntries(spark, sfDir)
     // fixed alphabetical order: per-query numbers stay comparable across
-    // rounds (Map iteration order would shuffle who pays shared warmup
-    // whenever a query is added)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        // q22's number would otherwise be ~90% one-time bucketed-table
-        // layout; price layout and join separately (the Verify/oracle path
-        // still runs the combined query).
-        if (name == "q22_bucketed_join") {
-          timed("q22_layout")(analytics.Relational.q22Layout(spark, sfDir))
-          timed("q22_join")(force(analytics.Relational.q22Join(spark)))
-        } else if (name == "s7_ann_ivf_indexed") {
-          // same split: the index build is one-time, the probe is the
-          // recurring cost (the Verify/oracle path runs the combined query)
-          timed("s7_layout")(analytics.Similarity.s7Layout(spark, sfDir))
-          timed("s7_query")(force(analytics.Similarity.s7Query(spark, sfDir)))
-        } else if (name == "d14_dedup_index") {
-          // same split as s7/q22: the index build is one-time, the batch
-          // query is the recurring cost the operator exists to shrink
-          timed("d14_build")(analytics.Dedup.d14Build(spark, sfDir))
-          timed("d14_query")(force(analytics.Dedup.d14Query(spark, sfDir)))
-        } else if (name == "d14_upsert") {
-          // the build is setup (priced under d14_build) and wave 1 is
-          // d14_query's already-priced shape; the incremental loop's OWN
-          // recurring costs are the append of wave 1's survivors and wave
-          // 2's query against the grown index
-          analytics.Dedup.d14Build(spark, sfDir)
-          // materialize wave 1's admission verdict BEFORE the timed append:
-          // d14Query returns a lazy plan, and d14Append's own checkpoint of
-          // the accepted ids would otherwise charge wave 1's whole band
-          // join + Jaccard verify to the append receipt
-          val w1Accepted = analytics.Dedup
-            .d14Query(spark, sfDir, Seq("src0", "src1"))
-            .filter(col("novel")).select(col("doc_id")).localCheckpoint(true)
-          timed("d14_append")(
-            analytics.Dedup.d14Append(spark, sfDir, w1Accepted))
-          timed("d14_grown_query")(force(
-            analytics.Dedup.d14Query(spark, sfDir, Seq("src2", "src3", "src4"))))
-        } else if (name == "d16_index_compact") {
-          // build/append are d14's already-priced shapes; the op's OWN
-          // recurring costs are the compaction rewrite — O(index bytes),
-          // no re-signing — and the recurring query over the compacted
-          // one-file-per-bucket layout
-          analytics.Dedup.d14Build(spark, sfDir)
-          val w1acc = analytics.Dedup
-            .d14Query(spark, sfDir, Seq("src0", "src1"))
-            .filter(col("novel")).select(col("doc_id")).localCheckpoint(true)
-          analytics.Dedup.d14Append(spark, sfDir, w1acc)
-          timed("d16_compact")(analytics.Dedup.d14Compact(spark, sfDir))
-          timed("d16_compacted_query")(force(
-            analytics.Dedup.d14Query(spark, sfDir, Seq("src2", "src3", "src4"))))
-        } else if (name == "d17_index_forget") {
-          // the build is d14's already-priced one-time job; the op's OWN
-          // cost is the takedown rewrite — O(index bytes) anti-join through
-          // the compaction swap, NO re-signing — plus the recurring query
-          // over the reduced index (which must read like d14_query)
-          analytics.Dedup.d14Build(spark, sfDir)
-          timed("d17_forget")(analytics.Dedup.d14Forget(spark, sfDir,
-            analytics.Dedup.ForgottenSources))
-          timed("d17_post_query")(force(analytics.Dedup.d14Query(spark, sfDir)))
-        } else if (name == "s14_index_forget") {
-          // the build is s7_layout's already-priced one-time job; the op's
-          // OWN cost is the takedown rewrite — O(index bytes), no
-          // re-assignment — plus the recurring DPP serve over the reduced
-          // index (which must read like s7_query)
-          analytics.Similarity.s14Setup(spark, sfDir)
-          timed("s14_forget")(analytics.Similarity.s14Forget(spark,
-            analytics.Similarity.s14IndexPath(spark, sfDir)))
-          timed("s14_post_serve")(force(
-            analytics.Similarity.s14Serve(spark, sfDir)))
-        } else if (name == "d18_band_stats") {
-          // the index build is d14_build's already-priced one-time job;
-          // the op's OWN recurring cost is the census — an index agg,
-          // never a dedup run
-          analytics.Dedup.d14Build(spark, sfDir)
-          timed("d18_census")(force(
-            analytics.Dedup.d18Census(spark, sfDir)))
-        } else if (name == "s15_index_stats") {
-          // the index build is s7_layout's already-priced one-time job;
-          // the op's OWN recurring cost is the census — which must read
-          // the layout (partition column only), never the corpus
-          analytics.Similarity.s7Layout(spark, sfDir)
-          timed("s15_census")(force(
-            analytics.Similarity.s15Stats(spark, sfDir)))
-        } else if (name == "t20_stream_index_dedup") {
-          // the index build is d14_build's already-priced one-time job; the
-          // op's OWN recurring cost is the ingest stream + batch-side finish
-          analytics.Dedup.d14Build(spark, sfDir)
-          timed("t20_stream_index_dedup")(force(
-            analytics.Transport.t20IndexDedupStream(spark, sfDir)))
-        } else if (name == "t22_stream_index_grow") {
-          // the index build is d14_build's already-priced one-time job; the
-          // op's OWN recurring cost is the ingest loop — per-wave admission
-          // (d14QueryFrame) PLUS the O(accepted) appends that grow the index
-          analytics.Dedup.d14Build(spark, sfDir)
-          timed("t22_stream_index_grow")(force(
-            analytics.Transport.t22IndexGrowStream(spark, sfDir)))
-        } else if (name == "t24_stream_media_ingest") {
-          // one timed number: the media ingest stream (synthesis + decode
-          // ride per-batch executor work; no separate one-time build)
-          timed("t24_stream_media_ingest")(force(
-            analytics.Transport.t24MediaIngestStream(spark, sfDir)))
-        } else if (name == "t23_stream_quality_gate") {
-          // one timed number: train + model persist + the scoring stream
-          // (training is vocabulary-sized — part of the op's honest price,
-          // unlike d14/s7's corpus-sized index builds)
-          timed("t23_stream_quality_gate")(force(
-            analytics.Transport.t23QualityGateStream(spark, sfDir)))
-        } else if (name == "t21_stream_query_serve") {
-          // the layout build is s7's one-time job (priced as s7_layout);
-          // the op's OWN recurring cost is the request stream + per-batch
-          // DPP serve + MMR
-          analytics.Similarity.s7Layout(spark, sfDir)
-          timed("t21_stream_query_serve")(force(
-            analytics.Transport.t21QueryServeStream(spark, sfDir)))
-        } else if (name == "s13_mmr_indexed") {
-          // the layout build is s7's one-time job (priced as s7_layout);
-          // the recurring cost is the serving path: DPP probe + MMR
-          analytics.Similarity.s7Layout(spark, sfDir)
-          timed("s13_indexed_serve")(force(
-            analytics.Similarity.s13IndexedServe(spark, sfDir)))
-        } else if (name == "s12_ann_index_upsert") {
-          // the base build is the PRE-EXISTING index (setup); the op's
-          // recurring costs — the whole point of incremental maintenance —
-          // are the batch append and the probe, priced separately
-          timed("s12_base")(analytics.Similarity.s12Base(spark, sfDir))
-          timed("s12_upsert")(analytics.Similarity.s12Upsert(spark, sfDir))
-          timed("s12_query")(force(analytics.Similarity.s12Probe(spark, sfDir)))
-        } else if (medianOf5.contains(name))
-          timedMedian(name, n = 5, warmup = true)(force(fn(spark, sfDir)))
-        else if (medianOf3.contains(name))
-          timedMedian(name)(force(fn(spark, sfDir)))
-        else
-          timed(name)(force(fn(spark, sfDir)))
-        // queries persist intermediates (e.g. the dedup shingle set); free
-        // the blocks outside the timed region so one query's cache can't
-        // squeeze the next one's memory, then a driver GC so the
-        // ContextCleaner drains the dropped shuffles/broadcasts NOW — its
-        // per-ref cleanup is blocking by default and would otherwise stall
-        // the NEXT query's job scheduling mid-measurement.
-        GraftSession.releaseCaches(spark)
-        System.gc()
-        Thread.sleep(200)
+    // rounds; the transport cells run last
+    val entries: Seq[(Seq[String], Run => Unit)] =
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        Seq(name) -> splits.getOrElse(name,
+          (r: Run) => r.forced(name)(fn(spark, sfDir)))
+      } ++ cells(spark).map(c => c.names -> c.body(spark) _)
+    // queries persist intermediates (e.g. the dedup signature table); a
+    // driver GC after dropping them lets the ContextCleaner drain the
+    // dropped shuffles and broadcasts before the next run schedules jobs
+    val fresh = () => { GraftSession.releaseCaches(spark); System.gc() }
+    val readings = entries
+      .filter { case (names, _) => only.forall(o => names.exists(o.contains)) }
+      .flatMap { case (names, body) => measure(names.head, body, fresh) }
+    val load1End = load1()
+    val written = artifactPath(sys.env).map { path =>
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(path),
+          artifact(readings, sfDir, load1Start, load1End).getBytes("UTF-8"))
+        true
+      } catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] writing $path FAILED: $e")
+        false
       }
-
-    // Transport path: the reference's benchmark shape — 100k messages of
-    // 256-byte lorem-ipsum payloads (≈30 MB dump), produce then consume.
-    // Skippable for sf-scaling runs (the xp_ workloads are sf-independent).
-    if (sys.env.contains("SPARK_GRAFT_BENCH_SKIP_XP")) {
-      writeQueriesJson(results, sfDir, tide)
-      printCompactLine(results, sfDir, tide)
-      spark.stop()
-      return
     }
-    val benchDir = "/tmp/graft/bench_ss"
-    val payload = ("lorem ipsum dolor sit amet " * 10).take(256)
-    timed("xp_ss_produce_100k") {
-      spark.range(100000)
-        .select(
-          lit("bench").as("stream_key"),
-          (col("id") % 4).as("shard_id"),
-          col("id").as("sequence"),
-          timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
-          lit(payload.getBytes("UTF-8")).as("payload"))
-        .write.format("ss").mode("overwrite").save(benchDir)
-    }
-    timed("xp_ss_consume_100k") {
-      val n = spark.read.format("ss").load(benchDir).count()
-      require(n == 100000L, s"expected 100k messages, got $n")
-    }
-    // the reference benchmark's third workload: relay = consume + produce
-    timed("xp_ss_relay_100k") {
-      spark.read.format("ss").load(benchDir)
-        .write.format("ss").mode("overwrite").save(benchDir + "_relay")
-    }
-
-    // same workload through the redis wire path (client AND server are this
-    // library's — the reference's redis bench talks to a real broker, so
-    // this number prices the whole RESP stack, target ~100k msg/s)
-    {
-      val srv = new graft.redis.EmbeddedRedis
-      try {
-        def env(key: String) = spark.range(100000)
-          .select(
-            lit(key).as("stream_key"),
-            (col("id") % 4).as("shard_id"),
-            col("id").as("sequence"),
-            timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
-            lit(payload.getBytes("UTF-8")).as("payload"))
-        // the produce paths are the documented noise class (BENCH_LOCAL:
-        // zstd produce read 0.90→1.80 s across rounds on byte-identical
-        // code) — r18's k3/k7/r8 treatment applied: discarded warmup +
-        // median of FIVE, each run writing a fresh stream key so the
-        // consume cell still reads exactly 100k (VERDICT r19 #3)
-        timedMedianRuns("xp_redis_produce_100k", 5, warmup = true) { i =>
-          graft.redis.RedisSource.write(env(xpKey(i, 5)), srv.host, srv.port,
-            pipelineSize = 500)
-        }
-        timed("xp_redis_consume_100k") {
-          val n = graft.redis.RedisSource.boundedRead(spark, srv.host,
-            srv.port, (0L until 4L).map(sh => ("bench", sh))).count()
-          require(n == 100000L, s"expected 100k redis messages, got $n")
-        }
-      } finally srv.close()
-    }
-
-    // same workload through the iggy wire path (client and embedded broker
-    // both this library's, like the redis pair above)
-    {
-      val srv = new graft.iggy.EmbeddedIggy
-      try {
-        val env = spark.range(100000)
-          .select(
-            lit("bench").as("stream_key"),
-            (col("id") % 4).as("shard_id"),
-            col("id").as("sequence"),
-            timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
-            lit(payload.getBytes("UTF-8")).as("payload"))
-        timed("xp_iggy_produce_100k") {
-          graft.iggy.IggySource.write(env, srv.host, srv.port)
-        }
-        timed("xp_iggy_consume_100k") {
-          val n = graft.iggy.IggySource.boundedRead(spark, srv.host,
-            srv.port, Seq("bench")).count()
-          require(n == 100000L, s"expected 100k iggy messages, got $n")
-        }
-      } finally srv.close()
-    }
-
-    // same workload through the kafka wire path (client and embedded broker
-    // both this library's — real v2 record batches + CRC32C per message,
-    // like the redis pair prices the whole RESP stack)
-    {
-      val srv = new graft.kafka.EmbeddedKafka
-      try {
-        def env(key: String) = spark.range(100000)
-          .select(
-            lit(key).as("stream_key"),
-            (col("id") % 4).as("shard_id"),
-            col("id").as("sequence"),
-            timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
-            lit(payload.getBytes("UTF-8")).as("payload"))
-        // noise-class produce path: warmup + median-of-5 on fresh stream
-        // keys (see the redis produce cell's note; VERDICT r19 #3)
-        timedMedianRuns("xp_kafka_produce_100k", 5, warmup = true) { i =>
-          graft.kafka.KafkaSource.write(env(xpKey(i, 5)), srv.host, srv.port)
-        }
-        timed("xp_kafka_consume_100k") {
-          val n = graft.kafka.KafkaSource.boundedRead(spark, srv.host,
-            srv.port, Seq("bench")).count()
-          require(n == 100000L, s"expected 100k kafka messages, got $n")
-        }
-        // the reference benchmark's RELAY workload (consume + produce,
-        // benchmark/README.md) priced through the EXACTLY-ONCE matrix:
-        // the same 100k messages drain kafka→kafka transactionally
-        // (KIP-98 txn per epoch, offsets staged in-txn) and then
-        // kafka→redis (WATCH-fenced destination ledger) — the full EOS
-        // machinery, not a bare forward, is what a production relay pays
-        timed("xp_eos_relay_kafka_100k") {
-          val n = graft.eos.RelayDriver.all(spark,
-            graft.eos.KafkaRelaySource(srv.host, srv.port, Seq("bench")),
-            graft.eos.KafkaTxnDestination(srv.host, srv.port, "g_xp_relay",
-              "xprelay", _ + "_out"))
-          require(n == 100000L, s"expected 100k relayed, got $n")
-        }
-        locally {
-          val rsrv = new graft.redis.EmbeddedRedis
-          try timed("xp_eos_relay_redis_100k") {
-            val n = graft.eos.RelayDriver.all(spark,
-              graft.eos.KafkaRelaySource(srv.host, srv.port, Seq("bench")),
-              graft.eos.RedisLedgerDestination(rsrv.host, rsrv.port, "xprled",
-                _ => "bench_r"))
-            require(n == 100000L, s"expected 100k relayed, got $n")
-          } finally rsrv.close()
-        }
-      } finally srv.close()
-    }
-
-    // the SAME kafka workload over TLS — the receipt behind BENCH_SF1's
-    // "encryption rides AES-GCM at memory speed" note: the delta vs the
-    // plaintext pair above is the whole bulk-encryption + per-connection
-    // handshake price at 100k × 256 B
-    {
-      val (tlsServer, tlsClient) = graft.core.TlsChannel.ephemeral
-      val srv = new graft.kafka.EmbeddedKafka(tls = Some(tlsServer))
-      try {
-        val env = spark.range(100000)
-          .select(
-            lit("bench").as("stream_key"),
-            (col("id") % 4).as("shard_id"),
-            col("id").as("sequence"),
-            timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
-            lit(payload.getBytes("UTF-8")).as("payload"))
-        timed("xp_kafka_tls_produce_100k") {
-          graft.kafka.KafkaSource.write(env, srv.host, srv.port,
-            tls = Some(tlsClient))
-        }
-        timed("xp_kafka_tls_consume_100k") {
-          val n = graft.kafka.KafkaSource.boundedRead(spark, srv.host,
-            srv.port, Seq("bench"), tls = Some(tlsClient)).count()
-          require(n == 100000L, s"expected 100k kafka TLS messages, got $n")
-        }
-      } finally srv.close()
-    }
-
-    // the SAME kafka workload with gzip batch compression — the codec's
-    // CPU price vs the plaintext pair, and the wire-byte saving that buys
-    // at 100 TB (the 256-B repetitive payload compresses ~10×; cross-rack
-    // replication and long-haul mirroring pay bytes, not CPU)
-    {
-      val srv = new graft.kafka.EmbeddedKafka
-      try {
-        def env(key: String) = spark.range(100000)
-          .select(
-            lit(key).as("stream_key"),
-            (col("id") % 4).as("shard_id"),
-            col("id").as("sequence"),
-            timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
-            lit(payload.getBytes("UTF-8")).as("payload"))
-        // noise-class produce path: warmup + median-of-5 on fresh stream
-        // keys (see the redis produce cell's note; VERDICT r19 #3)
-        timedMedianRuns("xp_kafka_gzip_produce_100k", 5, warmup = true) { i =>
-          graft.kafka.KafkaSource.write(env(xpKey(i, 5)), srv.host, srv.port,
-            compression = "gzip")
-        }
-        timed("xp_kafka_gzip_consume_100k") {
-          val n = graft.kafka.KafkaSource.boundedRead(spark, srv.host,
-            srv.port, Seq("bench")).count()
-          require(n == 100000L, s"expected 100k kafka gzip messages, got $n")
-        }
-      } finally srv.close()
-    }
-
-    // and with zstd — the codec modern pipelines default to (KIP-110):
-    // near-gzip ratio at a fraction of the compress CPU
-    {
-      val srv = new graft.kafka.EmbeddedKafka
-      try {
-        def env(key: String) = spark.range(100000)
-          .select(
-            lit(key).as("stream_key"),
-            (col("id") % 4).as("shard_id"),
-            col("id").as("sequence"),
-            timestamp_millis(lit(1700000000000L) + col("id")).as("timestamp"),
-            lit(payload.getBytes("UTF-8")).as("payload"))
-        // noise-class produce path: warmup + median-of-5 on fresh stream
-        // keys (see the redis produce cell's note; VERDICT r19 #3)
-        timedMedianRuns("xp_kafka_zstd_produce_100k", 5, warmup = true) { i =>
-          graft.kafka.KafkaSource.write(env(xpKey(i, 5)), srv.host, srv.port,
-            compression = "zstd")
-        }
-        timed("xp_kafka_zstd_consume_100k") {
-          val n = graft.kafka.KafkaSource.boundedRead(spark, srv.host,
-            srv.port, Seq("bench")).count()
-          require(n == 100000L, s"expected 100k kafka zstd messages, got $n")
-        }
-      } finally srv.close()
-    }
-
-    writeQueriesJson(results, sfDir, tide)
-    printCompactLine(results, sfDir, tide)
+    printCompactLine(readings, sfDir, load1Start, load1End)
     spark.stop()
+    if (written.contains(false)) sys.exit(1)
   }
 }

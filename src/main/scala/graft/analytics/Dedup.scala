@@ -358,20 +358,21 @@ object Dedup {
 
   private def checkpointSevered(df: DataFrame): Severed = {
     val cp = df.localCheckpoint(true)
-    // The MEMORY_AND_DISK blocks backing the checkpoint belong to the
-    // internal RDD inside the LogicalRDD plan node; calling unpersist on
-    // the REBUILT frame is a cache-manager lookup that never finds them,
-    // so a long contraction run would accumulate one materialized edge set
-    // per round until GC. Hand the caller the actual RDD handle instead.
-    // Only release once nothing can re-read the round's edges: the
-    // checkpoint IS the data (lineage is truncated), so a post-release
-    // read would fail rather than recompute.
-    val internal = cp.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
     Severed(cp.sparkSession.createDataFrame(cp.rdd, cp.schema),
-      () => internal.foreach(_.unpersist(blocking = false)))
+      () => releaseCheckpoint(cp))
   }
+
+  /** Free the blocks behind a `localCheckpoint`ed frame. They belong to
+    * the internal RDD inside its LogicalRDD plan node; `unpersist` on the
+    * frame is a cache-manager lookup that never finds them, so they would
+    * stay until GC. Only release once nothing can re-read the frame: the
+    * checkpoint IS the data (lineage is truncated), so a post-release read
+    * would fail rather than recompute.
+    */
+  private[analytics] def releaseCheckpoint(cp: DataFrame): Unit =
+    cp.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.foreach(_.unpersist(blocking = false))
 
   /** Connected components over an undirected pair graph by LARGE-STAR /
     * SMALL-STAR alternation (Kiveris et al., "Connected Components in
@@ -532,9 +533,6 @@ object Dedup {
       edgesS.release() // frees the superseded round's checkpoint blocks
       edgesS = nextS
       iter += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $iter edges=$edgeCount " +
-          f"at ${System.nanoTime() / 1e9}%.1f")
     }
     // silent non-convergence would split a component across cluster ids
     require(converged,

@@ -213,14 +213,23 @@ object Transport {
     // (the sliver filter and the verify) that re-join on doc_id, and
     // MemoryPlan is not self-join-deduplicable the way table relations
     // are (conflicting-reference analysis failure)
-    val pairs = s.table("t20_idx_sink").localCheckpoint(true).distinct()
+    val sunk = s.table("t20_idx_sink").localCheckpoint(true)
+    val pairs = sunk.distinct()
     val log = parsed(s.read.format("ss").load(out))
     // the sliver docs' signatures, straight from the log bytes (shuffled
     // semi-join — the sliver is batch-fraction-sized but corpus-unbounded)
     val sigC = Dedup.signatures(log.join(
       pairs.select("doc_id").distinct().hint("shuffle_hash"),
       Seq("doc_id"), "left_semi"))
-    Dedup.matchVerdict(log, pairs, sigC, Dedup.refSignatures(s, dir))
+    // d14QueryFrame's pattern: materialize the verdict so the sink's
+    // checkpoint and the sliver's signature table can go NOW — a caller
+    // that runs t20 once per wave would otherwise keep both for the
+    // session's life
+    val verdict = Dedup.matchVerdict(log, pairs, sigC,
+      Dedup.refSignatures(s, dir)).localCheckpoint(true)
+    sigC.unpersist()
+    Dedup.releaseCheckpoint(sunk)
+    verdict
   }
 
   /** t21 — streaming ANN SERVE against the persisted IVF index: t20 is

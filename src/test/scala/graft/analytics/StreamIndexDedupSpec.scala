@@ -85,4 +85,27 @@ class StreamIndexDedupSpec extends AnyFunSuite {
         "ragged-index ingest gate diverged from the batch query")
     } finally Dedup.d14Rebuild(spark, dir, Dedup.D14BandR)
   }
+
+  test("t20 leaves no persisted RDD behind but its returned verdict's " +
+      "checkpoint") {
+    // an ingest loop calls t20 once per wave: anything else it persists
+    // (the sink's checkpoint, the sliver's signature table) would pile up
+    // for the session's life
+    Dedup.d14Build(spark, dir)
+    val sc = spark.sparkContext
+    def checkpointId(df: org.apache.spark.sql.DataFrame): Option[Int] =
+      df.queryExecution.analyzed match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd.id)
+        case _ => None
+      }
+    val before = sc.getPersistentRDDs.keySet
+    val v1 = Transport.t20IndexDedupStream(spark, dir)
+    val v2 = Transport.t20IndexDedupStream(spark, dir)
+    assert(v1.count() == v2.count())
+    val left = sc.getPersistentRDDs.keySet -- before
+    val allowed = (checkpointId(v1) ++ checkpointId(v2)).toSet
+    assert(left.subsetOf(allowed),
+      s"two t20 calls left persisted RDDs ${left.toSeq.sorted}; only the " +
+        s"verdict checkpoints ${allowed.toSeq.sorted} may stay")
+  }
 }

@@ -2,7 +2,7 @@
 """Compose the artifact of record from N same-day full bench passes:
 per-entry MEDIAN across the passes (BENCH_LOCAL.md's round-13 rule for
 tide-resistant regens). Meta keys (_sf, _nqueries) are copied from the
-last pass; the load/tide annotations record each pass's values so the
+last pass; the load1 annotations record each pass's values so the
 artifact carries its own calm-window evidence.
 
 ADVICE r19: an entry that errored (recorded negative) in a subset of
@@ -47,7 +47,6 @@ def main(out_path, *passes):
         "_nqueries": runs[-1].get("_nqueries"),
         "_load1_start": runs[-1].get("_load1_start"),
         "_load1_end": runs[-1].get("_load1_end"),
-        "_tide_wait_sec": runs[-1].get("_tide_wait_sec"),
         "_composed_of": len(runs),
         "_pass_load1": [[r.get("_load1_start"), r.get("_load1_end")]
                         for r in runs],
